@@ -33,6 +33,21 @@ import org.apache.spark.sql.SparkSession
   *     code, without re-deriving it from untouched queries.
   */
 object Bench {
+  /** `v` trimmed, if it is a positive size in Spark's byte-string
+    * syntax (`64k`, `1m`, `512b`, plain bytes). */
+  private[graft] def byteSize(v: String): Option[String] =
+    scala.util.Try(org.apache.spark.network.util.JavaUtils
+      .byteStringAsBytes(v.trim)).toOption.filter(_ > 0).map(_ => v.trim)
+
+  /** A JSON string literal of `s`. */
+  private[graft] def jsonString(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => "\\u%04x".format(c.toInt)
+      case c => c.toString
+    } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // r18 (ADVICE r17): parse to Int at entry, fail fast — a
@@ -83,8 +98,11 @@ object Bench {
     // are 100s of MB and never near either floor). Parameterised, not
     // a local constant: SPARK_GRAFT_AQE_MIN_PARTITION_SIZE overrides;
     // production guidance in OPTIMIZATION_r19.md.
-    val aqeMinPartitionSize =
-      sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k")
+    val aqeMinPartitionSize = sys.env
+      .get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE").map(v => byteSize(v)
+        .getOrElse(sys.error("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE must be" +
+          s" a positive byte size (e.g. 64k, 1m), got '$v'")))
+      .getOrElse("64k")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
@@ -402,7 +420,7 @@ object Bench {
     // heap rounded to NEAREST GiB (ADVICE r17: truncating division
     // reported 47 for -Xmx48g on collectors that reserve heap,
     // defeating the env-equality check between runs)
-    val env = s"""{"cpus":$cpus,"shuffle_partitions":$shufflePartitions,"aqe_min_partition_size":"$aqeMinPartitionSize","max_heap_gb":${
+    val env = s"""{"cpus":$cpus,"shuffle_partitions":$shufflePartitions,"aqe_min_partition_size":${jsonString(aqeMinPartitionSize)},"max_heap_gb":${
       (Runtime.getRuntime.maxMemory + (1L << 29)) / (1L << 30)}}"""
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"runs":$passes,"spread_sec":$spread,"shuffle_read_bytes":$shufRd,"shuffle_write_bytes":$shufWr,"anchor":$anchor,"pass_anchors":$passAnchors,"gate":$gateJson,"env":$env,"sf":"$sfDir"}"""
     println(line)

@@ -96,16 +96,22 @@ private[graft] object BandedJoins {
     * query at sf0.1, and a full extra index pass at 100 TB. The fit
     * already pays a corpus pass, so it computes the hot set once,
     * persists it inside the index directory, and probes pass it to
-    * [[emitOnce]] instead of re-aggregating. Returns the hot-bucket
-    * count for the fit's loud marker. */
+    * [[emitOnce]] instead of re-aggregating. The banded relation is
+    * the index's `sigsCol` array exploded to (band, `keyCol`). Returns
+    * the hot-bucket count for the fit's loud marker. */
   def publishHotSet(spark: org.apache.spark.sql.SparkSession,
-    banded: DataFrame, bandCol: String, keyCol: String,
-    indexPath: String): Long = {
-    hotBuckets(banded, bandCol, keyCol)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$indexPath/$hotSetDirName")
+    indexPath: String, sigsCol: String, keyCol: String): Long = {
+    writeHotSet(spark, indexPath, sigsCol, keyCol)
     graft.sources.Pq.read(spark, s"$indexPath/$hotSetDirName").count()
   }
+
+  /** [[publishHotSet]] without the count job — for publishers that
+    * record no hot-bucket marker. */
+  def writeHotSet(spark: org.apache.spark.sql.SparkSession,
+    indexPath: String, sigsCol: String, keyCol: String): Unit =
+    graft.sources.Pq.write(hotBuckets(graft.sources.Pq.read(spark, indexPath)
+        .select(posexplode(col(sigsCol)).as(Seq("band", keyCol))),
+      "band", keyCol).coalesce(1), s"$indexPath/$hotSetDirName")
 
   /** The published hot set of an index directory. */
   def loadHotSet(spark: org.apache.spark.sql.SparkSession,

@@ -184,7 +184,7 @@ object Bpe {
       path: String, numMerges: Int = 160,
       maxVocab: Int = 50000): Seq[(String, String)] = {
     val wordsRoot = wordsRootOf(path)
-    wordCounts(docs).write.mode("overwrite").parquet(s"$wordsRoot/v0")
+    graft.sources.Pq.write(wordCounts(docs), s"$wordsRoot/v0")
     graft.sources.Markers.write(spark, wordsRoot, wordsCurrentMarker, "v0")
     val capped = cappedWords(graft.sources.Pq.read(spark, s"$wordsRoot/v0"),
       maxVocab)
@@ -271,7 +271,7 @@ object Bpe {
             "batch refresh cannot extend a streaming-managed root")
       s"v${v.stripPrefix("v").toLong + 1L}"
     }
-    updated.write.mode("overwrite").parquet(s"$wordsRoot/$next")
+    graft.sources.Pq.write(updated, s"$wordsRoot/$next")
     graft.sources.Markers.write(spark, wordsRoot, wordsCurrentMarker,
       next)
     Curation.retireVersions(spark, wordsRoot, next, retainVersions = 2)
@@ -317,11 +317,10 @@ object Bpe {
   private[graft] def publishTokenizer(spark: SparkSession,
       merges: Seq[(String, String)], path: String): Unit = {
     import spark.implicits._
-    merges.zipWithIndex
+    graft.sources.Pq.write(merges.zipWithIndex
       .map { case ((a, b), r) => (r, a, b) }
       .toDF("rank", "left", "right")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(path)
+      .coalesce(1), path)
     graft.sources.Markers.write(spark, path, "_graft_bpe",
       merges.size.toString)
   }

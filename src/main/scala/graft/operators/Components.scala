@@ -287,7 +287,7 @@ object Components {
   private[graft] def publishLabels(spark: org.apache.spark.sql.SparkSession,
     labels: DataFrame, root: String, version: String,
     retainVersions: Int = 0): Unit = {
-    labels.write.mode("overwrite").parquet(s"$root/$version")
+    graft.sources.Pq.write(labels, s"$root/$version")
     graft.sources.Markers.write(spark, root, labelsCurrentMarker,
       version)
     Curation.retireVersions(spark, root, version, retainVersions)

@@ -878,7 +878,7 @@ object Curation {
   private[graft] def publishSnapshot(spark: SparkSession,
       snap: DataFrame, root: String, version: String,
       retainVersions: Int = 0): Unit = {
-    snap.write.mode("overwrite").parquet(s"$root/$version")
+    graft.sources.Pq.write(snap, s"$root/$version")
     graft.sources.Markers.write(spark, root, snapshotCurrentMarker,
       version)
     retireVersions(spark, root, version, retainVersions)
@@ -930,8 +930,8 @@ object Curation {
   private[graft] def publishEpoch(spark: SparkSession, root: String,
       version: String, snap: DataFrame, mv: DataFrame,
       retainVersions: Int = 0): Unit = {
-    snap.write.mode("overwrite").parquet(s"$root/$version/snapshot")
-    mv.write.mode("overwrite").parquet(s"$root/$version/mv")
+    graft.sources.Pq.write(snap, s"$root/$version/snapshot")
+    graft.sources.Pq.write(mv, s"$root/$version/mv")
     graft.sources.Markers.write(spark, root, epochCurrentMarker, version)
     retireVersions(spark, root, version, retainVersions)
   }

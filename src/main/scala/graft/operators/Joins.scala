@@ -380,7 +380,7 @@ object Joins {
     * distributed fixed-point form, now the fallback for edge sets past
     * the driver budget. Emptiness-checked per hop; trips
     * [[closureMaxDepth]] loudly on a cycle. */
-  private def loopClosure(u0: DataFrame): DataFrame = {
+  private[graft] def loopClosure(u0: DataFrame): DataFrame = {
     val up = broadcast(u0
       .select(col("child").as("u_child"), col("parent").as("u_parent")))
     var frontier = u0
@@ -414,29 +414,38 @@ object Joins {
   /** Driver-side upper closure (r19): the exact row multiset the hop
     * loop emits — one (descendant, ancestor, depth) row per PATH, no
     * dedup, matching the join semantics on multi-parent DAGs — built
-    * by a breadth-first walk over the collected edges. Returns None
-    * when the path fan-out exceeds [[closureDriverMaxRows]] (the
-    * distributed loop then runs instead); throws the same loud cycle
-    * error past [[closureMaxDepth]]. */
-  private def driverClosure(u0: DataFrame,
-      edges: Array[org.apache.spark.sql.Row]): Option[DataFrame] = {
+    * by a breadth-first walk over the collected edges; null keys never
+    * match, as in the loop's equi-join. Returns None as soon as the
+    * emitted rows plus the level being built pass `maxRows` (the
+    * distributed loop then runs instead) — mid-level, before a fan-out
+    * blow-up allocates; throws the loop's cycle error past
+    * [[closureMaxDepth]]. */
+  private[graft] def driverClosure(u0: DataFrame,
+      edges: Array[org.apache.spark.sql.Row],
+      maxRows: Int = closureDriverMaxRows): Option[DataFrame] = {
     val parentsOf = new scala.collection.mutable.HashMap[Any,
       scala.collection.mutable.ArrayBuffer[Any]]()
-    edges.foreach { r =>
+    edges.filter(!_.isNullAt(0)).foreach { r =>
       parentsOf.getOrElseUpdate(r.get(0),
         scala.collection.mutable.ArrayBuffer.empty[Any]) += r.get(1)
     }
     val out = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
     // frontier rows mirror the loop's: (descendant, ancestor, depth)
-    var frontier: Seq[(Any, Any)] = edges.map(r => (r.get(0), r.get(1)))
+    var frontier = scala.collection.mutable.ArrayBuffer
+      .from(edges.map(r => (r.get(0), r.get(1))))
     var depth = 1
     while (frontier.nonEmpty) {
       frontier.foreach { case (d, a) =>
         out += org.apache.spark.sql.Row(d, a, depth) }
-      if (out.length > closureDriverMaxRows) return None
-      val next = frontier.flatMap { case (d, a) =>
-        parentsOf.getOrElse(a, Nil).map(p => (d, p)) }
+      if (out.length > maxRows) return None
+      val next = scala.collection.mutable.ArrayBuffer.empty[(Any, Any)]
+      frontier.foreach { case (d, a) =>
+        if (a != null) parentsOf.getOrElse(a, Nil).foreach { p =>
+          next += ((d, p))
+          if (out.length + next.length > maxRows) return None
+        }
+      }
       if (next.nonEmpty) {
         depth += 1
         if (depth > closureMaxDepth) {

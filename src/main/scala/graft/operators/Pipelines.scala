@@ -1,5 +1,8 @@
 package graft.operators
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.FiniteDuration
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -575,6 +578,11 @@ object Pipelines {
   // ------------------------------------------------------- gated publish
 
   private[graft] val silverCurrentMarker = "_graft_silver_current"
+
+  /** [[landThenPublish]]'s shard digests outlived their bound; the
+    * publish was abandoned before any version byte landed. */
+  final class DigestTimeoutException(msg: String)
+    extends java.util.concurrent.TimeoutException(msg)
   private[graft] val shardSourcesMarker = "_graft_shard_sources"
   private[graft] val shardDigestsMarker = "_graft_shard_digests"
 
@@ -691,16 +699,24 @@ object Pipelines {
     * @return true iff the drop was published. */
   def landThenPublish(spark: SparkSession, landed: DataFrame,
       gate: DataFrame, root: String, version: String, key: String,
-      shards: Int = 8, retainVersions: Int = 0): Boolean = {
+      shards: Int = 8, retainVersions: Int = 0,
+      digestTimeout: FiniteDuration = FiniteDuration(30, "min"))
+      : Boolean = {
     // r19 (guide §2.6 — overlap independent jobs): the shard digests
     // depend only on the landed drop, not on the gate verdict, and
     // computing them writes nothing — so they run CONCURRENTLY with
-    // the gate's checks instead of serially after them. The publish
-    // decision still strictly precedes the first published byte; a
-    // failing gate merely discards an in-flight read-only aggregate.
-    val digestsF = scala.concurrent.Future {
-      shardDigests(landed, key, shards)
-    }(scala.concurrent.ExecutionContext.global)
+    // the gate's checks instead of serially after them, in their own
+    // job group. The publish decision still strictly precedes the
+    // first published byte; a failing gate cancels the in-flight
+    // read-only aggregate, and a digest that outlives `digestTimeout`
+    // is cancelled and fails the publish loudly.
+    val digestGroup = s"graft-digest-${java.util.UUID.randomUUID()}"
+    val sc = spark.sparkContext
+    val digestsF = Future {
+      sc.setJobGroup(digestGroup, s"shard digests of $root/$version",
+        interruptOnCancel = true)
+      try shardDigests(landed, key, shards) finally sc.clearJobGroup()
+    }(ExecutionContext.global)
     val checks = gate.collect()
     val failing = checks.filter(r => !r.getAs[Boolean]("pass"))
     if (failing.isEmpty) {
@@ -737,8 +753,13 @@ object Pipelines {
           .getOrElse(prevDigests.keys.map(k =>
             k -> s"$d/key_shard=$k").toMap)
       }.getOrElse(Map.empty)
-      val digests = scala.concurrent.Await.result(digestsF,
-        scala.concurrent.duration.Duration.Inf)
+      val digests = try Await.result(digestsF, digestTimeout) catch {
+        case _: java.util.concurrent.TimeoutException =>
+          sc.cancelJobGroup(digestGroup)
+          throw new DigestTimeoutException(s"landThenPublish($root, " +
+            s"$version): shard digests did not finish within " +
+            s"$digestTimeout; nothing was published")
+      }
       // r17 (ADVICE r16): a zero-row drop would publish a markers-only
       // version with an EMPTY shard manifest, which currentSilver's
       // nonEmpty guard then misreads as a pre-manifest version — a
@@ -796,6 +817,7 @@ object Pipelines {
       }
       true
     } else {
+      if (!digestsF.isCompleted) sc.cancelJobGroup(digestGroup)
       import scala.jdk.CollectionConverters._
       landed.write.mode("overwrite")
         .parquet(s"$root/quarantine/$version/drop")

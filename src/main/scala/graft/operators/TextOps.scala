@@ -244,9 +244,8 @@ object TextOps {
   private[graft] def minhashFit(spark: SparkSession, docs: DataFrame,
     outPath: String): MinHashIndex = {
     fitInvocations.incrementAndGet()
-    withSigs(shingled(docs))
-      .withColumn("n_sh", size(col("shash")))
-      .write.mode("overwrite").parquet(outPath)
+    graft.sources.Pq.write(withSigs(shingled(docs))
+      .withColumn("n_sh", size(col("shash"))), outPath)
     val r = graft.sources.Pq.read(spark, outPath).agg(avg(col("n_sh"))).collect()(0)
     val jb = !r.isNullAt(0) && joinBackWinsOnBytes(r.getDouble(0))
     graft.sources.Markers.write(spark, outPath, "_graft_layout",
@@ -259,10 +258,7 @@ object TextOps {
     // and a full extra index pass at 100 TB), and publishes the count
     // as a marker so a curator sees a boilerplate mega-cluster at fit
     // time, not as a mystery skew at probe time
-    val nHot = BandedJoins.publishHotSet(spark,
-      graft.sources.Pq.read(spark, outPath)
-        .select(posexplode(col("bsigs")).as(Seq("band", "bhash"))),
-      "band", "bhash", outPath)
+    val nHot = BandedJoins.publishHotSet(spark, outPath, "bsigs", "bhash")
     graft.sources.Markers.write(spark, outPath, "_graft_hot_buckets",
       nHot.toString)
     MinHashIndex(jb, outPath)
@@ -700,8 +696,8 @@ object TextOps {
       else pairsCarriedStaged(stagedFrame(s, idx), Some(hotSetOf(s, idx)))
     val lp = graft.sources.TempDirs
       .scratchDir("graft_dedup_base_labels").toString
-    Components.labelComponents(basePairs.select(col("id_a"), col("id_b")))
-      .write.mode("overwrite").parquet(lp)
+    graft.sources.Pq.write(Components.labelComponents(
+      basePairs.select(col("id_a"), col("id_b"))), lp)
     DedupState(idx, lp)
   })
   private[graft] def dedupStateFor(spark: SparkSession,
@@ -821,13 +817,14 @@ object TextOps {
   // 6 — the one streaming asymmetry left: every family had streaming
   // intake but compaction ran batch-only) ──
 
-  /** Marker naming the current version of a [[publishDedupState]]
+  /** Marker naming the current version of a [[publishWaveState]]
     * root. */
   private[graft] val dedupCurrentMarker = "_graft_dedup_current"
 
-  /** Transactional tri-artifact publication for the streaming
-    * compaction loop: the staged signature index (with its hot set
-    * recomputed over exactly the published rows — the next wave's
+  /** Transactional one-flip publication shared by every streaming
+    * compaction root (MinHash, SimHash, edit distance, embedding): the
+    * index under `indexName`, its `sidecar` (a hot set or edit stats,
+    * recomputed over exactly the published rows so the next wave's
     * probe set is exact, not the seed's drifting superset), the
     * verified pair set, and the label map land under ONE version
     * directory and ONE marker flip — the [[Curation.publishEpoch]]
@@ -836,23 +833,30 @@ object TextOps {
     * wave's retirement would then anti-join against rows that were
     * never republished.
     *
-    * Cost posture, stated honestly: each wave rewrites the full index
-    * and label map (the [[Components.publishLabels]] per-batch price,
-    * one artifact over). At 100 TB the rewrite becomes a partitioned
-    * one — retire/union only the doc_id-range partitions the wave
-    * touches — and the hot-set recompute becomes a delta-maintained
-    * bucket-count table; both swaps change this publication function
-    * only, not the wave semantics. */
-  private[graft] def publishDedupState(spark: SparkSession,
-    root: String, version: String, staged: DataFrame, pairs: DataFrame,
-    labels: DataFrame, retainVersions: Int = 0): Unit = {
-    staged.write.mode("overwrite").parquet(s"$root/$version/staged")
-    BandedJoins.publishHotSet(spark,
-      graft.sources.Pq.read(spark, s"$root/$version/staged")
-        .select(posexplode(col("bsigs")).as(Seq("band", "bhash"))),
-      "band", "bhash", s"$root/$version/staged")
-    pairs.write.mode("overwrite").parquet(s"$root/$version/pairs")
-    labels.write.mode("overwrite").parquet(s"$root/$version/labels")
+    * Cost posture: the wave's pair plan executes ONCE — its write —
+    * and the labels are [[Components.labelComponents]] over the
+    * PUBLISHED `<version>/pairs` (the same function over the same edge
+    * set, so the same map), never a second run of the bloom-pruned
+    * probe. Every artifact goes through [[graft.sources.Pq.write]], so
+    * no read-back pays a schema-inference job. What still rewrites in
+    * full per wave is the index and its hot set; at 100 TB that
+    * becomes a partitioned rewrite of the doc_id ranges the wave
+    * touches plus a delta-maintained bucket-count table — both swaps
+    * change this function only, not the wave semantics. SimHash
+    * passes `labelEdges`: its pairs are signature-level, so its labels
+    * come from the wave's id-level edges instead. `pairs` is by-name,
+    * so a seed can derive it from the index and sidecar just written. */
+  private[graft] def publishWaveState(spark: SparkSession, root: String,
+    version: String, indexName: String, index: DataFrame,
+    pairs: => DataFrame, retainVersions: Int,
+    sidecar: String => Unit = _ => (),
+    labelEdges: Option[DataFrame] = None): Unit = {
+    val dir = s"$root/$version"
+    graft.sources.Pq.write(index, s"$dir/$indexName")
+    sidecar(s"$dir/$indexName")
+    graft.sources.Pq.write(pairs, s"$dir/pairs")
+    graft.sources.Pq.write(Components.labelComponents(labelEdges
+      .getOrElse(graft.sources.Pq.read(spark, s"$dir/pairs"))), s"$dir/labels")
     graft.sources.Markers.write(spark, root, dedupCurrentMarker, version)
     Curation.retireVersions(spark, root, version, retainVersions)
   }
@@ -869,33 +873,29 @@ object TextOps {
       if (idx.joinBack) "joinback" else "carried")
     val staged = stagedFrame(spark, idx)
     val hot = Some(hotSetOf(spark, idx))
-    (if (idx.joinBack) pairsJoinBackStaged(staged, hot)
-     else pairsCarriedStaged(staged, hot))
-      .select(col("id_a"), col("id_b"))
-      .write.mode("overwrite").parquet(s"$root/seed/pairs")
-    Components.labelComponents(
-        graft.sources.Pq.read(spark, s"$root/seed/pairs"))
-      .write.mode("overwrite").parquet(s"$root/seed/labels")
+    graft.sources.Pq.write((if (idx.joinBack) pairsJoinBackStaged(staged, hot)
+      else pairsCarriedStaged(staged, hot)).select(col("id_a"), col("id_b")),
+      s"$root/seed/pairs")
+    graft.sources.Pq.write(Components.labelComponents(
+      graft.sources.Pq.read(spark, s"$root/seed/pairs")), s"$root/seed/labels")
     graft.sources.Markers.write(spark, root, dedupCurrentMarker, "seed")
   }
 
   /** One re-crawl wave applied to the CURRENT state of a dedup root —
     * the batch [[compactState]] core reading its inputs from the
     * served artifact: retire the wave's ids, probe their new text
-    * against the retained index, relabel the repaired pair graph.
-    * Returns the three frames for [[publishDedupState]]. */
+    * against the retained index. Returns (staged index, pairs) for
+    * [[publishWaveState]], which derives the labels. */
   private[graft] def compactWaveState(spark: SparkSession, root: String,
-    recrawled: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    recrawled: DataFrame): (DataFrame, DataFrame) = {
     val v = graft.sources.Markers.read(spark, root, dedupCurrentMarker)
     val joinBack = graft.sources.Markers.read(spark, root,
       "_graft_layout") == "joinback"
     val staged = graft.sources.Pq.read(spark, s"$root/$v/staged")
     val hot = Some(BandedJoins.loadHotSet(spark, s"$root/$v/staged"))
-    val (staged2, pairs2) = compactState(staged,
-      graft.sources.Pq.read(spark, s"$root/$v/pairs"),
+    compactState(staged, graft.sources.Pq.read(spark, s"$root/$v/pairs"),
       recrawled.select(col("doc_id")),
       stageDocs(recrawled).localCheckpoint(true), joinBack, hot)
-    (staged2, pairs2, Components.labelComponents(pairs2))
   }
 
   // ── SIMHASH STREAMING COMPACTION ROOT (r16, r15 verdict item 3 —
@@ -923,8 +923,7 @@ object TextOps {
     * replace content, they do not re-decide plans mid-stream). */
   private[graft] def seedSimhashRoot(spark: SparkSession,
       docs: DataFrame, root: String): Unit = {
-    simhashMd5Halves(docs).write.mode("overwrite")
-      .parquet(s"$root/seed/sigs")
+    graft.sources.Pq.write(simhashMd5Halves(docs), s"$root/seed/sigs")
     val sigs = graft.sources.Pq.read(spark, s"$root/seed/sigs")
     val reps = sigs.groupBy(col("sig_hi"), col("sig_lo"))
       .agg(min(col("doc_id")).as("doc_id"))
@@ -933,14 +932,14 @@ object TextOps {
     val b = simhashAutoPlan(reps, reps.count())
     graft.sources.Markers.write(spark, root, "_graft_simhash_b",
       b.toString)
-    sigLevel(simhashSigPairs(reps, b), reps, reps)
-      .write.mode("overwrite").parquet(s"$root/seed/pairs")
+    graft.sources.Pq.write(sigLevel(simhashSigPairs(reps, b), reps, reps),
+      s"$root/seed/pairs")
     val identity = sigs.join(reps
         .select(col("sig_hi"), col("sig_lo"), col("doc_id").as("rep")),
         Seq("sig_hi", "sig_lo"))
       .filter(col("doc_id") =!= col("rep"))
       .select(col("doc_id").as("id_a"), col("rep").as("id_b"))
-    Components.labelComponents(identity.unionByName(
+    graft.sources.Pq.write(Components.labelComponents(identity.unionByName(
         graft.sources.Pq.read(spark, s"$root/seed/pairs")
           .join(reps.select(col("sig_hi").as("hi_a"),
             col("sig_lo").as("lo_a"), col("doc_id").as("id_a")),
@@ -948,15 +947,15 @@ object TextOps {
           .join(reps.select(col("sig_hi").as("hi_b"),
             col("sig_lo").as("lo_b"), col("doc_id").as("id_b")),
             Seq("hi_b", "lo_b"))
-          .select(col("id_a"), col("id_b"))))
-      .write.mode("overwrite").parquet(s"$root/seed/labels")
+          .select(col("id_a"), col("id_b")))), s"$root/seed/labels")
     graft.sources.Markers.write(spark, root, dedupCurrentMarker, "seed")
   }
 
   /** One re-crawl wave applied to the CURRENT state of a SimHash
     * root — [[qSimhashCompact]]'s retire → re-elect → map → probe →
-    * relabel steps reading the served artifact, returning the three
-    * frames to republish: (per-doc sigs, sig-level pairs, labels). */
+    * relabel steps reading the served artifact, returning (per-doc
+    * sigs, sig-level pairs, id-level label edges) for
+    * [[publishWaveState]]. */
   private[graft] def simhashWaveState(spark: SparkSession, root: String,
       batch: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val v = graft.sources.Markers.read(spark, root, dedupCurrentMarker)
@@ -1007,20 +1006,7 @@ object TextOps {
       .unionByName(sigLevel(
         within.select(col("doc_id_a"), col("doc_id_b")),
         newReps, newReps))
-    (sigs2, pairs2, Components.labelComponents(edges))
-  }
-
-  /** Tri-artifact one-flip publication for a SimHash streaming root
-    * ([[publishDedupState]]'s discipline — one version directory, one
-    * marker flip, no crash window between artifacts). */
-  private[graft] def publishSimhashState(spark: SparkSession,
-    root: String, version: String, sigs: DataFrame, pairs: DataFrame,
-    labels: DataFrame, retainVersions: Int = 0): Unit = {
-    sigs.write.mode("overwrite").parquet(s"$root/$version/sigs")
-    pairs.write.mode("overwrite").parquet(s"$root/$version/pairs")
-    labels.write.mode("overwrite").parquet(s"$root/$version/labels")
-    graft.sources.Markers.write(spark, root, dedupCurrentMarker, version)
-    Curation.retireVersions(spark, root, version, retainVersions)
+    (sigs2, pairs2, edges)
   }
 
   // ── EDIT-DISTANCE STREAMING COMPACTION ROOT (r16 — the same shape
@@ -1030,50 +1016,28 @@ object TextOps {
     * build-row segment index, the verified (id_a, id_b) pair set, and
     * the label map under version `seed`. */
   private[graft] def seedEditRoot(spark: SparkSession, docs: DataFrame,
-      root: String, d: Int = 3): Unit = {
-    editBuildRows(editKeyedHeads(docs, 30), d)
-      .select(col("doc_id"), col("lang"), col("head"), col("len"),
-        col("kseg.idx").as("idx"), col("kseg.seg").as("seg"))
-      .write.mode("overwrite").parquet(s"$root/seed/index")
-    publishEditIndexStats(spark, s"$root/seed/index", d)
-    editDistancePairs(docs, 30, d)
-      .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b"))
-      .write.mode("overwrite").parquet(s"$root/seed/pairs")
-    Components.labelComponents(
-        graft.sources.Pq.read(spark, s"$root/seed/pairs"))
-      .write.mode("overwrite").parquet(s"$root/seed/labels")
-    graft.sources.Markers.write(spark, root, dedupCurrentMarker, "seed")
-  }
+      root: String, d: Int = 3): Unit =
+    publishWaveState(spark, root, "seed", "index",
+      editBuildRows(editKeyedHeads(docs, 30), d)
+        .select(col("doc_id"), col("lang"), col("head"), col("len"),
+          col("kseg.idx").as("idx"), col("kseg.seg").as("seg")),
+      editDistancePairs(docs, 30, d)
+        .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b")),
+      0, writeEditIndexStats(spark, _))
 
   /** One re-crawl wave applied to the CURRENT state of an
     * edit-distance root — [[editWaveRepair]] reading the served
-    * artifact, returning (repaired index, repaired pairs, labels). */
+    * artifact, returning (repaired index, repaired pairs) for
+    * [[publishWaveState]]. */
   private[graft] def editWaveState(spark: SparkSession, root: String,
-      batch: DataFrame, d: Int = 3)
-      : (DataFrame, DataFrame, DataFrame) = {
+      batch: DataFrame, d: Int = 3): (DataFrame, DataFrame) = {
     val v = graft.sources.Markers.read(spark, root, dedupCurrentMarker)
     val (edges, index2) = editWaveRepair(spark,
       graft.sources.Pq.read(spark, s"$root/$v/index"),
       graft.sources.Pq.read(spark, s"$root/$v/pairs"), batch, d,
       loadEditHotSet(spark, s"$root/$v/index"),
       loadEditLens(spark, s"$root/$v/index"))
-    (index2, edges, Components.labelComponents(edges))
-  }
-
-  /** Tri-artifact one-flip publication for an edit-distance streaming
-    * root. */
-  private[graft] def publishEditState(spark: SparkSession, root: String,
-    version: String, index: DataFrame, pairs: DataFrame,
-    labels: DataFrame, retainVersions: Int = 0, d: Int = 3): Unit = {
-    index.write.mode("overwrite").parquet(s"$root/$version/index")
-    // each published version re-derives its own hot-cell sidecar —
-    // the wave's fresh build rows are folded in here, so the
-    // streaming-cap caveat never loosens the SALT bound across waves
-    publishEditIndexStats(spark, s"$root/$version/index", d)
-    pairs.write.mode("overwrite").parquet(s"$root/$version/pairs")
-    labels.write.mode("overwrite").parquet(s"$root/$version/labels")
-    graft.sources.Markers.write(spark, root, dedupCurrentMarker, version)
-    Curation.retireVersions(spark, root, version, retainVersions)
+    (index2, edges)
   }
 
   /** The deterministic re-crawl subset the declared compaction query
@@ -2758,19 +2722,27 @@ object TextOps {
     * every later wave at the same distance bound. */
   private[graft] def publishEditIndexStats(spark: SparkSession,
       indexPath: String, d: Int): (Long, Long) = {
-    val idx = editIndexFrame(spark, indexPath)
-    editBuildLens(idx).coalesce(1).write.mode("overwrite")
-      .parquet(s"$indexPath/$editLensDirName")
-    editHotCells(idx)
-      .select(col("h_lang"), col("h_kseg.idx").as("idx"),
-        col("h_kseg.seg").as("seg"), col("h_kseg.blen").as("blen"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$indexPath/$editHotSetDirName")
+    writeEditIndexStats(spark, indexPath)
     val hotN = graft.sources.Pq
       .read(spark, s"$indexPath/$editHotSetDirName").count()
     val shortN = graft.sources.Pq.read(spark, indexPath)
       .filter(col("len") <= d).count()
     (hotN, shortN)
+  }
+
+  /** [[publishEditIndexStats]] without its two counts — the sidecar of
+    * every streaming edit root version: each version re-derives its
+    * own stats, so a wave's fresh build rows are folded in and the
+    * streaming-cap caveat never loosens the SALT bound across waves. */
+  private[graft] def writeEditIndexStats(spark: SparkSession,
+      indexPath: String): Unit = {
+    val idx = editIndexFrame(spark, indexPath)
+    graft.sources.Pq.write(editBuildLens(idx).coalesce(1),
+      s"$indexPath/$editLensDirName")
+    graft.sources.Pq.write(editHotCells(idx)
+      .select(col("h_lang"), col("h_kseg.idx").as("idx"),
+        col("h_kseg.seg").as("seg"), col("h_kseg.blen").as("blen"))
+      .coalesce(1), s"$indexPath/$editHotSetDirName")
   }
 
   /** The published key-length population of an index directory (None
@@ -2914,18 +2886,17 @@ object TextOps {
     val keyed = editKeyedBase(base, 30)
     val ip = graft.sources.TempDirs
       .scratchDir(scratchTag + "_index").toString
-    editBuildRows(keyed, 3, shortsCap)
+    graft.sources.Pq.write(editBuildRows(keyed, 3, shortsCap)
       .select(col("doc_id"), col("lang"), col("head"), col("len"),
-        col("kseg.idx").as("idx"), col("kseg.seg").as("seg"))
-      .write.mode("overwrite").parquet(ip)
+        col("kseg.idx").as("idx"), col("kseg.seg").as("seg")), ip)
     // r17: the hot-cell set is FIT output, not query work — warm
     // probes read the KB sidecar instead of re-aggregating the index
     val (hotN, shortN) = publishEditIndexStats(s, ip, 3)
     val lp = graft.sources.TempDirs
       .scratchDir(scratchTag + "_labels").toString
-    Components.labelComponents(editDistancePairsKeyed(keyed, 3, shortsCap)
-        .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b")))
-      .write.mode("overwrite").parquet(lp)
+    graft.sources.Pq.write(Components.labelComponents(
+      editDistancePairsKeyed(keyed, 3, shortsCap).select(
+        col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b"))), lp)
     EditState(ip, lp, hotN, shortN)
   }
 
@@ -3004,17 +2975,15 @@ object TextOps {
     val keyed = editKeyedBase(staleDocs, 30)
     val ip = graft.sources.TempDirs
       .scratchDir("graft_edit_compact_index").toString
-    editBuildRows(keyed, d, shortsCap)
+    graft.sources.Pq.write(editBuildRows(keyed, d, shortsCap)
       .select(col("doc_id"), col("lang"), col("head"), col("len"),
-        col("kseg.idx").as("idx"), col("kseg.seg").as("seg"))
-      .write.mode("overwrite").parquet(ip)
+        col("kseg.idx").as("idx"), col("kseg.seg").as("seg")), ip)
     val (hotN, shortN) =
       publishEditIndexStats(staleDocs.sparkSession, ip, d)
     val pp = graft.sources.TempDirs
       .scratchDir("graft_edit_compact_pairs").toString
-    editDistancePairsKeyed(keyed, d, shortsCap)
-      .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b"))
-      .write.mode("overwrite").parquet(pp)
+    graft.sources.Pq.write(editDistancePairsKeyed(keyed, d, shortsCap)
+      .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b")), pp)
     EditCompactState(ip, pp, hotN, shortN)
   }
 
@@ -3758,8 +3727,7 @@ object TextOps {
         .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b")))
     val lp = graft.sources.TempDirs
       .scratchDir("graft_simhash_base_labels").toString
-    Components.labelComponents(edges)
-      .write.mode("overwrite").parquet(lp)
+    graft.sources.Pq.write(Components.labelComponents(edges), lp)
     SimhashState(rp, lp, b)
   })
 

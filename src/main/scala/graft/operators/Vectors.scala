@@ -847,22 +847,17 @@ object Vectors {
     embedFitInvocations.incrementAndGet()
     val sp = graft.sources.TempDirs
       .scratchDir("graft_embed_base_index").toString
-    stageVectors(unit(s, d).filter(!isIncrementVec))
-      .write.mode("overwrite").parquet(sp)
+    graft.sources.Pq.write(stageVectors(unit(s, d).filter(!isIncrementVec)), sp)
     // hot-set publication, same as the text fit: persisted inside the
     // index, count published as the loud marker, probes read it instead
     // of re-aggregating per query
-    val nHot = BandedJoins.publishHotSet(s,
-      graft.sources.Pq.read(s, sp)
-        .select(posexplode(col("sigs")).as(Seq("band", "band_sig"))),
-      "band", "band_sig", sp)
+    val nHot = BandedJoins.publishHotSet(s, sp, "sigs", "band_sig")
     graft.sources.Markers.write(s, sp, "_graft_hot_buckets", nHot.toString)
     val lp = graft.sources.TempDirs
       .scratchDir("graft_embed_base_labels").toString
-    Components.labelComponents(lshVerifiedPairsStaged(graft.sources.Pq.read(s, sp),
-      Some(BandedJoins.loadHotSet(s, sp)))
-      .select(col("id_a"), col("id_b")))
-      .write.mode("overwrite").parquet(lp)
+    graft.sources.Pq.write(Components.labelComponents(lshVerifiedPairsStaged(
+      graft.sources.Pq.read(s, sp), Some(BandedJoins.loadHotSet(s, sp)))
+      .select(col("id_a"), col("id_b"))), lp)
     EmbedDedupState(sp, lp)
   })
   private[graft] def embedDedupStateFor(spark: SparkSession,
@@ -953,16 +948,12 @@ object Vectors {
       val staleU = prepUnit(stale)
       val sp = graft.sources.TempDirs
         .scratchDir("graft_embed_compact_index").toString
-      stageVectors(staleU).write.mode("overwrite").parquet(sp)
-      BandedJoins.publishHotSet(s,
-        graft.sources.Pq.read(s, sp)
-          .select(posexplode(col("sigs")).as(Seq("band", "band_sig"))),
-        "band", "band_sig", sp)
+      graft.sources.Pq.write(stageVectors(staleU), sp)
+      BandedJoins.writeHotSet(s, sp, "sigs", "band_sig")
       val pp = graft.sources.TempDirs
         .scratchDir("graft_embed_compact_pairs").toString
-      lshVerifiedPairsStaged(graft.sources.Pq.read(s, sp),
-        Some(BandedJoins.loadHotSet(s, sp)))
-        .write.mode("overwrite").parquet(pp)
+      graft.sources.Pq.write(lshVerifiedPairsStaged(
+        graft.sources.Pq.read(s, sp), Some(BandedJoins.loadHotSet(s, sp))), pp)
       EmbedCompactState(sp, pp)
     })
   private[graft] def embedCompactStateFor(spark: SparkSession,
@@ -983,31 +974,23 @@ object Vectors {
     * set), verified pairs, and labels under version `seed`. */
   private[graft] def seedEmbedRoot(spark: SparkSession,
       vectors: DataFrame, root: String): Unit = {
-    stageVectors(vectors
-        .select(col("vec_id"), graft.functions.VectorFunctions
-          .unitv(col("embedding")).as("u")))
-      .write.mode("overwrite").parquet(s"$root/seed/staged")
-    BandedJoins.publishHotSet(spark,
-      graft.sources.Pq.read(spark, s"$root/seed/staged")
-        .select(posexplode(col("sigs")).as(Seq("band", "band_sig"))),
-      "band", "band_sig", s"$root/seed/staged")
-    lshVerifiedPairsStaged(graft.sources.Pq.read(spark, s"$root/seed/staged"),
-        Some(BandedJoins.loadHotSet(spark, s"$root/seed/staged")))
-      .select(col("id_a"), col("id_b"))
-      .write.mode("overwrite").parquet(s"$root/seed/pairs")
-    graft.operators.Components.labelComponents(
-        graft.sources.Pq.read(spark, s"$root/seed/pairs"))
-      .write.mode("overwrite").parquet(s"$root/seed/labels")
-    graft.sources.Markers.write(spark, root,
-      graft.operators.TextOps.dedupCurrentMarker, "seed")
+    val sp = s"$root/seed/staged"
+    graft.operators.TextOps.publishWaveState(spark, root, "seed", "staged",
+      stageVectors(vectors.select(col("vec_id"),
+        graft.functions.VectorFunctions.unitv(col("embedding")).as("u"))),
+      lshVerifiedPairsStaged(graft.sources.Pq.read(spark, sp),
+          Some(BandedJoins.loadHotSet(spark, sp)))
+        .select(col("id_a"), col("id_b")),
+      0, BandedJoins.writeHotSet(spark, _, "sigs", "band_sig"))
   }
 
   /** One re-embed wave applied to the CURRENT state of an embedding
     * root — retire, probe ([[embedIncrementPairs]] against the served
-    * hot set), relabel; returns (staged, pairs, labels) for
-    * [[publishEmbedState]]. `batch` is raw (vec_id, embedding). */
+    * hot set); returns (staged, pairs) for
+    * [[graft.operators.TextOps.publishWaveState]]. `batch` is raw
+    * (vec_id, embedding). */
   private[graft] def embedWaveState(spark: SparkSession, root: String,
-      batch: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+      batch: DataFrame): (DataFrame, DataFrame) = {
     val v = graft.sources.Markers.read(spark, root,
       graft.operators.TextOps.dedupCurrentMarker)
     val staged = graft.sources.Pq.read(spark, s"$root/$v/staged")
@@ -1024,30 +1007,8 @@ object Vectors {
         Seq("id_a"), "left_anti")
       .join(broadcast(ids.select(col("vec_id").as("id_b"))),
         Seq("id_b"), "left_anti")
-    val pairs2 = kept.select(col("id_a"), col("id_b"))
-      .unionByName(fresh.select(col("id_a"), col("id_b")))
-    (retained.unionByName(newStaged), pairs2,
-      graft.operators.Components.labelComponents(pairs2))
-  }
-
-  /** Tri-artifact one-flip publication for an embedding streaming
-    * root, recomputing the hot set over the repaired index so the
-    * next wave probes an EXACT set ([[graft.operators.TextOps
-    * .publishDedupState]]'s discipline). */
-  private[graft] def publishEmbedState(spark: SparkSession,
-    root: String, version: String, staged: DataFrame, pairs: DataFrame,
-    labels: DataFrame, retainVersions: Int = 0): Unit = {
-    staged.write.mode("overwrite").parquet(s"$root/$version/staged")
-    BandedJoins.publishHotSet(spark,
-      graft.sources.Pq.read(spark, s"$root/$version/staged")
-        .select(posexplode(col("sigs")).as(Seq("band", "band_sig"))),
-      "band", "band_sig", s"$root/$version/staged")
-    pairs.write.mode("overwrite").parquet(s"$root/$version/pairs")
-    labels.write.mode("overwrite").parquet(s"$root/$version/labels")
-    graft.sources.Markers.write(spark, root,
-      graft.operators.TextOps.dedupCurrentMarker, version)
-    graft.operators.Curation.retireVersions(spark, root, version,
-      retainVersions)
+    (retained.unionByName(newStaged), kept.select(col("id_a"), col("id_b"))
+      .unionByName(fresh.select(col("id_a"), col("id_b"))))
   }
 
   /** Declared embedding compaction: the base index holds reversed

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Schema-cached parquet reads for published artifacts (r19
   * optimization round — the [[Tables]] cache generalized): every bare
@@ -8,16 +9,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * DataFrame construction (~20–45 ms), and the warm lifecycle queries
   * (compact / incremental / nightly, model probes, silver readers) pay
   * it for each published index / pairs / model path they open — up to
-  * 8 such jobs per invocation. Artifact schemas are fixed by their
-  * writers for a JVM's lifetime (versioned dirs are written once;
-  * republished roots keep their schema), so the first read's inferred
-  * schema is handed to every later read of the same path. Metadata
-  * caching only — the planned scan, pruning and DPP are byte-identical
-  * to the inferred-schema read; never data or results.
+  * 8 such jobs per invocation. The first read's inferred schema is
+  * handed to every later read of the same path. Metadata caching only —
+  * the planned scan, pruning and DPP are byte-identical to the
+  * inferred-schema read; never data or results.
+  *
+  * Staleness: a path a publisher OVERWRITES must be written through
+  * [[write]], which replaces the cached entry with the schema it just
+  * wrote — so a republished root with a changed schema reads its new
+  * columns, and a read right after a publish skips the inference job
+  * altogether. Versioned directories are written once, so their entry
+  * never moves.
   */
 object Pq {
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+    String, StructType]()
 
   def read(spark: SparkSession, path: String): DataFrame = {
     val known = schemaCache.get(path)
@@ -27,5 +33,22 @@ object Pq {
       schemaCache.put(path, df.schema)
       df
     }
+  }
+
+  /** Overwrite `path` with `df` and record the written schema as a
+    * parquet read returns it: every field nullable, recursively (a
+    * file source never trusts the writer's non-null claims). */
+  def write(df: DataFrame, path: String): Unit = {
+    df.write.mode("overwrite").parquet(path)
+    schemaCache.put(path, nullable(df.schema).asInstanceOf[StructType])
+  }
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), true)
+    case m: MapType =>
+      MapType(nullable(m.keyType), nullable(m.valueType), true)
+    case other => other
   }
 }

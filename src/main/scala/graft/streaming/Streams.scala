@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode}
 
+import graft.operators.{BandedJoins, TextOps, Vectors}
+
 /** Input/output/state records for the custom stateful sessionizer.
   * [[SessionState]] start/end are epoch MICROSECONDS — `Timestamp
   * .getTime` milliseconds would silently truncate the testdata's
@@ -492,8 +494,7 @@ object Streams {
     */
   def classifyIntake(spark: org.apache.spark.sql.SparkSession,
       docs: DataFrame, modelPath: String): DataFrame = {
-    val classes =
-      graft.operators.TextOps.loadClassifier(spark, modelPath)
+    val classes = TextOps.loadClassifier(spark, modelPath)
     val best = graft.functions.TextFunctions.classifyScore(
       split(col("text"), " "), classes)
     docs.select(col("doc_id"), best.as("r"))
@@ -511,7 +512,7 @@ object Streams {
     * runs continuously between nightly compactions. */
   def nearDupIntake(baseStaged: DataFrame, docs: DataFrame,
     baseHot: Option[DataFrame] = None): DataFrame =
-    graft.operators.TextOps.intakePairs(baseStaged, docs, baseHot)
+    TextOps.intakePairs(baseStaged, docs, baseHot)
 
   /** Streaming SimHash near-dup flagging (r13 verdict item 6 — the
     * family's stream dual, completing the [[nearDupIntake]] symmetry):
@@ -530,7 +531,7 @@ object Streams {
     * [[nearDupIntake]] scope contract verbatim. */
   def simhashIntake(keyedReps: DataFrame, b: Int,
     docs: DataFrame): DataFrame =
-    graft.operators.TextOps.simhashIntakePairs(keyedReps, docs, b)
+    TextOps.simhashIntakePairs(keyedReps, docs, b)
 
   /** Streaming EDIT-DISTANCE intake (r14 — completes the intake
     * symmetry: MinHash, SimHash, and now PassJoin each run their
@@ -552,8 +553,7 @@ object Streams {
     // AQE never runs inside it, so the hot-cell partition pin would
     // only demote the broadcast join to a per-batch shuffle (measured
     // 2.4x intake throughput loss); the salt spread itself stays on
-    graft.operators.TextOps.editCrossFlags(baseBuild,
-      graft.operators.TextOps.editKeyedHeads(docs, 30), 3,
+    TextOps.editCrossFlags(baseBuild, TextOps.editKeyedHeads(docs, 30), 3,
       pinPartitions = false)
 
   /** Streaming LABEL EXTENSION (r8 verdict item 4): [[nearDupIntake]]
@@ -832,8 +832,7 @@ object Streams {
         if (!graft.sources.Markers.readOption(s, labelsRoot,
             graft.operators.Components.labelsCurrentMarker)
             .contains(version)) {
-          val pairs = graft.operators.TextOps
-            .intakePairs(baseStaged, batch, baseHot)
+          val pairs = TextOps.intakePairs(baseStaged, batch, baseHot)
             .select(col("doc_id").as("id_a"), col("dup_of").as("id_b"))
           // materialize BEFORE publishing: the plan reads the current
           // version's parquet, and lazy evaluation during the write of
@@ -875,8 +874,7 @@ object Streams {
         if (!graft.sources.Markers.readOption(s, labelsRoot,
             graft.operators.Components.labelsCurrentMarker)
             .contains(version)) {
-          val pairs = graft.operators.TextOps
-            .simhashIntakePairs(keyedReps, batch, b)
+          val pairs = TextOps.simhashIntakePairs(keyedReps, batch, b)
             .select(col("doc_id").as("id_a"), col("dup_of").as("id_b"))
           val next = graft.operators.Components
             .extendLabels(graft.operators.Components
@@ -906,9 +904,8 @@ object Streams {
         if (!graft.sources.Markers.readOption(s, labelsRoot,
             graft.operators.Components.labelsCurrentMarker)
             .contains(version)) {
-          val pairs = graft.operators.TextOps
-            .editCrossFlags(baseBuild,
-              graft.operators.TextOps.editKeyedHeads(batch, 30), 3)
+          val pairs = TextOps
+            .editCrossFlags(baseBuild, TextOps.editKeyedHeads(batch, 30), 3)
             .select(col("doc_id").as("id_a"), col("dup_of").as("id_b"))
           val next = graft.operators.Components
             .extendLabels(graft.operators.Components
@@ -929,10 +926,10 @@ object Streams {
     * RE-CRAWLED documents (doc_id, text): the wave retires its ids
     * from the served index, probes the new text against the retained
     * rows through the exact [[graft.operators.TextOps.incrementPairs]]
-    * shape, relabels the repaired dup-set-sized pair graph, and
-    * republishes index + pairs + labels under ONE version directory
-    * and ONE marker flip
-    * ([[graft.operators.TextOps.publishDedupState]]).
+    * shape, and republishes index + pairs + labels (relabelled from
+    * the published dup-set-sized pair graph) under ONE version
+    * directory and ONE marker flip
+    * ([[graft.operators.TextOps.publishWaveState]]).
     *
     * Exactly-once is the [[cdcApplySink]] argument on a tri-artifact
     * state: every read is from the CURRENT version's directories and
@@ -959,10 +956,9 @@ object Streams {
     checkpointDir: String, retainVersions: Int = 0)
     : org.apache.spark.sql.streaming.StreamingQuery =
     compactWaveSink(root, recrawls, checkpointDir) { (s, batch, v) =>
-      val (staged2, pairs2, labels2) = graft.operators.TextOps
-        .compactWaveState(s, root, batch)
-      graft.operators.TextOps.publishDedupState(s, root, v,
-        staged2, pairs2, labels2, retainVersions)
+      val (staged2, pairs2) = TextOps.compactWaveState(s, root, batch)
+      TextOps.publishWaveState(s, root, v, "staged", staged2, pairs2,
+        retainVersions, BandedJoins.writeHotSet(s, _, "bsigs", "bhash"))
     }
 
   /** The retire → probe → relabel → ONE-FLIP wave shape shared by
@@ -983,8 +979,7 @@ object Streams {
         val s = batch.sparkSession
         val version = sinkVersion(s, checkpointDir, batchId)
         if (!graft.sources.Markers.readOption(s, root,
-            graft.operators.TextOps.dedupCurrentMarker)
-            .contains(version)) {
+            TextOps.dedupCurrentMarker).contains(version)) {
           applyWave(s, batch, version)
         }
       }
@@ -1001,10 +996,9 @@ object Streams {
     checkpointDir: String, retainVersions: Int = 0)
     : org.apache.spark.sql.streaming.StreamingQuery =
     compactWaveSink(root, recrawls, checkpointDir) { (s, batch, v) =>
-      val (sigs2, pairs2, labels2) = graft.operators.TextOps
-        .simhashWaveState(s, root, batch)
-      graft.operators.TextOps.publishSimhashState(s, root, v,
-        sigs2, pairs2, labels2, retainVersions)
+      val (sigs2, pairs2, edges) = TextOps.simhashWaveState(s, root, batch)
+      TextOps.publishWaveState(s, root, v, "sigs", sigs2, pairs2,
+        retainVersions, labelEdges = Some(edges))
     }
 
   /** Streaming re-crawl compaction, EDIT-DISTANCE modality: waves of
@@ -1017,10 +1011,9 @@ object Streams {
     checkpointDir: String, retainVersions: Int = 0)
     : org.apache.spark.sql.streaming.StreamingQuery =
     compactWaveSink(root, recrawls, checkpointDir) { (s, batch, v) =>
-      val (index2, pairs2, labels2) = graft.operators.TextOps
-        .editWaveState(s, root, batch)
-      graft.operators.TextOps.publishEditState(s, root, v,
-        index2, pairs2, labels2, retainVersions)
+      val (index2, pairs2) = TextOps.editWaveState(s, root, batch)
+      TextOps.publishWaveState(s, root, v, "index", index2, pairs2,
+        retainVersions, TextOps.writeEditIndexStats(s, _))
     }
 
   /** Streaming re-embed compaction, EMBEDDING modality: waves of
@@ -1032,10 +1025,9 @@ object Streams {
     checkpointDir: String, retainVersions: Int = 0)
     : org.apache.spark.sql.streaming.StreamingQuery =
     compactWaveSink(root, waves, checkpointDir) { (s, batch, v) =>
-      val (staged2, pairs2, labels2) = graft.operators.Vectors
-        .embedWaveState(s, root, batch)
-      graft.operators.Vectors.publishEmbedState(s, root, v,
-        staged2, pairs2, labels2, retainVersions)
+      val (staged2, pairs2) = Vectors.embedWaveState(s, root, batch)
+      TextOps.publishWaveState(s, root, v, "staged", staged2, pairs2,
+        retainVersions, BandedJoins.writeHotSet(s, _, "sigs", "band_sig"))
     }
 
   /** Nightly-cadence BPE tokenizer refresh as a STREAMING leg (r12

@@ -578,6 +578,76 @@ class CurationStreamSpec extends SparkTestBase {
     assert(servedPairs == scratchPairs && servedPairs.nonEmpty)
   }
 
+  test("each compaction wave executes its pair plan once and labels " +
+      "the version from its published pairs") {
+    import spark.implicits._
+    // base: five docs, 1 ~ 2 and 3 ~ 4 near-dups, 5 alone; the waves
+    // re-crawl 5 as a near-dup of 1, 4 as unrelated text, and 6 (new)
+    // as a near-dup of 3
+    val a = words(200, 51)
+    val c = words(200, 53).map("z" + _)
+    def doc(base: Seq[String], keep: Int, seed: Int, tag: String) =
+      (base.take(keep) ++ words(200 - keep, seed).map(tag + _))
+        .mkString(" ")
+    val root = tmp("graft_wave_once_root")
+    TextOps.seedDedupState(spark, Seq(
+      (1L, a.mkString(" ")), (2L, doc(a, 190, 61, "q")),
+      (3L, c.mkString(" ")), (4L, doc(c, 190, 62, "r")),
+      (5L, words(200, 63).map("s" + _).mkString(" ")))
+      .toDF("doc_id", "text"), root)
+    val waves = Seq(
+      Seq((5L, doc(a, 188, 64, "t"))),
+      Seq((4L, words(200, 65).map("u" + _).mkString(" "))),
+      Seq((6L, doc(c, 189, 66, "v"))))
+    // every executed plan (actions, checkpoints, writes) that carries
+    // the emit-once band predicate — the wave's pair plan
+    val pairPlans = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit =
+        if (qe.optimizedPlan.exists(_.expressions.exists(_.exists(
+            _.isInstanceOf[graft.functions.EarlierBandCollision]))))
+          pairPlans.incrementAndGet()
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)](spark)
+    // registered BEFORE the start: the stream runs on a clone of the
+    // session, which copies the listeners it has at that moment
+    spark.listenerManager.register(listener)
+    val q = Streams.dedupCompactSink(root,
+      input.toDS().toDF("doc_id", "text"), tmp("graft_wave_once_cp"))
+    val sc = spark.sparkContext
+    val versions = try {
+      waves.map { w =>
+        org.apache.spark.GraftTestBridge.drainListeners(sc)
+        pairPlans.set(0)
+        input.addData(w)
+        q.processAllAvailable()
+        org.apache.spark.GraftTestBridge.drainListeners(sc)
+        assert(pairPlans.get == 1,
+          s"wave ${w.map(_._1)} executed its pair plan ${pairPlans.get} times")
+        graft.sources.Markers.read(spark, root, TextOps.dedupCurrentMarker)
+      }
+    } finally {
+      q.stop()
+      spark.listenerManager.unregister(listener)
+    }
+    assert(versions.distinct.size == 3)
+    def set(df: DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    versions.foreach { v =>
+      assert(set(spark.read.parquet(s"$root/$v/labels")) ==
+        set(Components.labelComponents(
+          spark.read.parquet(s"$root/$v/pairs"))), v)
+    }
+    assert(set(spark.read.parquet(s"$root/${versions.last}/labels")) ==
+      Set((1L, 1L), (2L, 1L), (5L, 1L), (3L, 3L), (6L, 3L)))
+  }
+
   test("simhash streaming compaction survives kill + restart and " +
       "equals the full recompute after every wave") {
     import spark.implicits._

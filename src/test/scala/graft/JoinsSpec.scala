@@ -374,6 +374,46 @@ class JoinsSpec extends SparkTestBase {
     assert(e.getMessage.contains("cycle"))
   }
 
+  private def closureRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().toSeq.map(r =>
+      (Option(r.get(0)), Option(r.get(1)), r.getInt(2))).sortBy(_.toString)
+
+  test("driver closure falls back as soon as a dense level passes the " +
+      "row bound, before the level is appended") {
+    import spark.implicits._
+    // a → b1..b10, every b_i → c1..c10: 110 depth-1 rows, then a
+    // 100-path depth-2 level; a bound of 150 admits level 1 and trips
+    // 41 rows into level 2
+    val edges = (1 to 10).map(i => ("a", s"b$i")) ++
+      (for (i <- 1 to 10; j <- 1 to 10) yield (s"b$i", s"c$j"))
+    val u0 = edges.toDF("child", "parent")
+    val rows = u0.collect()
+    assert(Joins.driverClosure(u0, rows, maxRows = 150).isEmpty)
+    // exactly at the bound the walk completes and equals the loop
+    val full = Joins.driverClosure(u0, rows, maxRows = 210)
+    assert(full.isDefined)
+    assert(closureRows(full.get) == closureRows(Joins.loopClosure(u0)))
+    assert(full.get.count() == 210)
+  }
+
+  test("driver closure skips null keys exactly as the SQL loop does") {
+    import spark.implicits._
+    val u0 = Seq[(String, String)](("x", "y"), ("y", null), (null, "z"),
+      ("z", "w"), ("w", null), ("q", "z"))
+      .toDF("child", "parent")
+    val driver = Joins.driverClosure(u0, u0.collect())
+    assert(driver.isDefined)
+    val got = closureRows(driver.get)
+    assert(got == closureRows(Joins.loopClosure(u0)))
+    // a null parent ends the path: (y, null) never meets the null
+    // child of (null, z), so neither x nor y reaches z
+    assert(got.contains((Some("x"), None, 2)))
+    assert(!got.exists { case (d, a, _) =>
+      (d.contains("x") || d.contains("y")) && a.contains("z") })
+    // a null child still walks up through its non-null parent
+    assert(got.contains((None, Some("w"), 2)))
+  }
+
   test("q_ri_audit reports all six relations clean on the generated data") {
     val rows = Joins.qRiAudit(spark, sfDir).collect()
       .map(r => (r.getAs[String]("relation"), r.getAs[Long]("n_child"),

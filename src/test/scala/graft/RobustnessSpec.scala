@@ -291,6 +291,17 @@ class RobustnessSpec extends SparkTestBase {
         "driving the round count again")
   }
 
+  test("bench env: AQE partition size takes Spark byte sizes only and " +
+      "lands escaped in the JSON line") {
+    assert(Bench.byteSize("64k").contains("64k"))
+    assert(Bench.byteSize(" 1m ").contains("1m"))
+    assert(Bench.byteSize("1048576").contains("1048576"))
+    Seq("", "0", "-1k", "64q", "lots", "64k\"}").foreach(v =>
+      assert(Bench.byteSize(v).isEmpty, v))
+    assert(Bench.jsonString("64k") == "\"64k\"")
+    assert(Bench.jsonString("a\"b\\c\n") == "\"a\\\"b\\\\c\\u000a\"")
+  }
+
   test("clustered point lookup on an absent key returns empty, not error") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_point_miss")

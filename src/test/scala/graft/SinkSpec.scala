@@ -213,6 +213,27 @@ class SinkSpec extends SparkTestBase {
     assert(new java.io.File(s"$root/quarantine/v2/drop").exists())
   }
 
+  test("a shard digest that outlives its bound fails the publish " +
+      "loudly, cancelled, before any version byte lands") {
+    import graft.operators.Pipelines
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_publish_spec").toString
+    val slow = udf { (x: Long) => Thread.sleep(2000); x }
+    val landed = landedFrame(8).withColumn("id", slow(col("id")))
+    val t0 = System.nanoTime()
+    val e = intercept[Pipelines.DigestTimeoutException] {
+      Pipelines.landThenPublish(spark, landed,
+        gateFrame(Seq(("nulls:id", 0.0, 0.0))), root, "v1", key = "id",
+        digestTimeout = scala.concurrent.duration.FiniteDuration(
+          200, "ms"))
+    }
+    assert(e.getMessage.contains("v1"))
+    assert((System.nanoTime() - t0) / 1e9 < 10.0)
+    assert(ls(root).isEmpty, ls(root).toString)
+    assert(graft.sources.Markers.readOption(spark, root,
+      Pipelines.silverCurrentMarker).isEmpty)
+  }
+
   /** A drop whose every row differs per `tag` — every shard digest
     * moves, so copy-on-write degenerates to a full rewrite and no
     * version references an earlier one. */
