@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** The emit-once banded LSH join — the one candidate-generation shape
   * shared by every banded modality (r5 verdict item 3: the MinHash
@@ -113,11 +114,50 @@ private[graft] object BandedJoins {
         .select(posexplode(col(sigsCol)).as(Seq("band", keyCol))),
       "band", keyCol).coalesce(1), s"$indexPath/$hotSetDirName")
 
-  /** The published hot set of an index directory. */
+  /** Row bound of a hot set held as a driver-side local relation
+    * ([[loadHotSet]]): checked by the pull itself (it stops at
+    * bound + 1 rows), so the driver never holds more. A healthy index
+    * publishes an empty set; 100k (band, key) rows is a few MB and
+    * far past any set a 64-cap guard leaves on a real corpus. */
+  val maxLocalHotSet = 100000
+
+  /** The published hot set of an index directory, pulled once to the
+    * driver and served as a LOCAL relation — so Catalyst sees its
+    * rows while planning: an empty set (every healthy index) folds
+    * [[emitOnce]]'s anti-joins and star branch away before any job
+    * runs (PropagateEmptyRelation), instead of AQE pruning them only
+    * after their broadcast and `min_by` jobs ran. A set over
+    * [[maxLocalHotSet]] stays the parquet read (the broadcast plan). */
   def loadHotSet(spark: org.apache.spark.sql.SparkSession,
-    indexPath: String): DataFrame =
-    graft.sources.Pq.read(spark, s"$indexPath/$hotSetDirName")
+    indexPath: String): DataFrame = {
+    val published = graft.sources.Pq.read(spark, s"$indexPath/$hotSetDirName")
       .select(col("hot_band"), col("hot_key"))
+    val rows = published.limit(maxLocalHotSet + 1).collect()
+    if (rows.length > maxLocalHotSet) published
+    else localHotSet(spark, published.schema, rows.toSeq)
+  }
+
+  /** [[hotBuckets]] of banded rows already on the driver — the rows of
+    * a [[ProbeFilters.pullKeys]] pull carrying (band, key) in columns
+    * 1 and 2 — counted there and returned as a local relation: no job,
+    * and an empty set plans no guard at all (see [[loadHotSet]]).
+    * `banded` is the pulled relation; it supplies the column types. */
+  def pulledHotSet(banded: DataFrame, bandCol: String, keyCol: String,
+    rows: Array[Row], cap: Int = defaultHotBucketCap): DataFrame = {
+    val counts = scala.collection.mutable.HashMap.empty[(Any, Any), Int]
+    rows.foreach { r =>
+      val k = (r.get(1), r.get(2))
+      counts.update(k, counts.getOrElse(k, 0) + 1)
+    }
+    localHotSet(banded.sparkSession, StructType(Seq(
+      StructField("hot_band", banded.schema(bandCol).dataType),
+      StructField("hot_key", banded.schema(keyCol).dataType))),
+      counts.collect { case ((b, k), n) if n > cap => Row(b, k) }.toSeq)
+  }
+
+  private def localHotSet(spark: org.apache.spark.sql.SparkSession,
+    schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** Emit-once join of banded relations `left` (aliased `x`) and
     * `right` (aliased `y`) on (`bandCol`, `keyCol`), with the
@@ -134,10 +174,14 @@ private[graft] object BandedJoins {
     * corpus/base side in every probe shape; the increment side's own
     * self-join guards itself), whose count aggregate shuffles only
     * per-bucket partials and whose surviving hot set is broadcast —
-    * UNLESS the caller passes `hotOpt`, the index's fit-time published
-    * hot set ([[publishHotSet]]), which skips the per-call aggregation
-    * entirely. Any hot set that is a superset of the current left
-    * side's true hot buckets is CORRECT (a bucket flagged hot that has
+    * UNLESS the caller passes `hotOpt`, which skips the per-call
+    * aggregation entirely: the index's published hot set
+    * ([[loadHotSet]]) on an index-served probe, or the increment's own
+    * set counted on the driver ([[pulledHotSet]]) on the increment's
+    * self-join. Both are local relations when small, so an EMPTY set
+    * plans neither the anti-joins nor the star branch. Any hot set
+    * that is a superset of the current left side's true hot buckets
+    * is CORRECT (a bucket flagged hot that has
     * since shrunk — e.g. after compaction retirement — is merely
     * star-reduced conservatively; exclusivity only needs the one set
     * used consistently within the call). */

@@ -89,9 +89,12 @@ object Components {
 
   /** Label map (node_id, cluster_id) for every node of the (id_a, id_b)
     * pair graph — nodes NOT in any pair are absent (callers default
-    * singletons to themselves on the final corpus join). */
-  private[graft] def labelComponents(pairs: DataFrame): DataFrame =
-    labelComponentsCounted(pairs)._1
+    * singletons to themselves on the final corpus join). `rereadable`
+    * marks an input that is cheap to run twice (a published parquet
+    * scan): see [[labelComponentsCounted]]. */
+  private[graft] def labelComponents(pairs: DataFrame,
+    rereadable: Boolean = false): DataFrame =
+    labelComponentsCounted(pairs, rereadable = rereadable)._1
 
   /** Exact driver-side solve of a bounded canonical edge set:
     * union-find with path compression and attach-larger-root-under-
@@ -135,19 +138,26 @@ object Components {
     * convergence diff), so without lineage truncation the logical plan
     * tree doubles per round — the standard Spark iterative-algorithm
     * shape (GraphX/Pregel materializes per superstep for exactly this
-    * reason); the materialized frame is dup-set-sized.
+    * reason); the materialized frame is dup-set-sized. The canonical
+    * edge set is materialized BEFORE the local-path probe, so a costly
+    * `pairs` plan runs once on either path — unless the caller marks
+    * `pairs` `rereadable`: then the probe reads the plan directly (one
+    * job fewer on the local path) and only a graph past the local
+    * budget materializes it, re-reading the input once more.
     */
   private[graft] def labelComponentsCounted(
     pairs: DataFrame,
-    localMaxEdges: Long = localSolveMaxEdges): (DataFrame, Int) = {
+    localMaxEdges: Long = localSolveMaxEdges,
+    rereadable: Boolean = false): (DataFrame, Int) = {
     // canonical directed edges (u > v), self-loops dropped, parallel
     // edges merged — the representation both star operations emit
-    val edges0 = pairs
+    val canonical = pairs
       .filter(col("id_a") =!= col("id_b"))
       .select(greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
       .distinct()
-      .localCheckpoint(true)
+    val probed =
+      if (rereadable) canonical else canonical.localCheckpoint(true)
     // SIZE-GATED LOCAL FAST PATH (see [[localSolveMaxEdges]]): a
     // bounded long-keyed graph is solved exactly on the driver; pass
     // localMaxEdges = 0 to force the alternation (round-count pins).
@@ -160,16 +170,17 @@ object Components {
     // graph past the budget pays the count that the distributed
     // loop's convergence carry needs.
     if (localMaxEdges > 0 &&
-        edges0.schema.fields.forall(_.dataType ==
+        probed.schema.fields.forall(_.dataType ==
           org.apache.spark.sql.types.LongType)) {
-      val probe = edges0
+      val probe = probed
         .limit(math.min(localMaxEdges + 1, Int.MaxValue.toLong).toInt)
         .collect()
       if (probe.length <= localMaxEdges) {
-        return (localLabels(edges0.sparkSession,
+        return (localLabels(probed.sparkSession,
           probe.map(r => (r.getLong(0), r.getLong(1)))), 0)
       }
     }
+    val edges0 = if (rereadable) canonical.localCheckpoint(true) else probed
     var edges = edges0
     var edgeCount = edges0.count()
     // node universe: every endpoint of the input graph must appear in

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain,
   Literal}
 import org.apache.spark.sql.functions._
@@ -27,19 +27,28 @@ import org.apache.spark.util.sketch.BloomFilter
   * candidates for the exact verify stage, and false negatives cannot
   * exist (every true partner's key was inserted).
   *
-  * Build cost is two increment-side jobs (a count to size/guard, then
-  * the filter aggregation) and a driver-held sketch of
-  * ~1.2 bytes/key at the default fpp — the same bounded-model-pull
-  * contract as the IVF centroid fit. When the increment outgrows
-  * `maxKeys` (a driver bloom would stop being broadcast-small), the
-  * prune SKIPS and returns the index branch unchanged — the exact
-  * posture of Spark's own `runtimeFilter.creationSideThreshold`.
+  * Build cost is ONE increment-side job: a bounded pull of the
+  * probe's key hashes to the driver (`maxKeys + 1` rows at most, so
+  * the guard is checked before the driver holds more than the bound)
+  * and a driver-held sketch of ~1.2 bytes/key at the default fpp —
+  * the same bounded-model-pull contract as the IVF centroid fit. A
+  * caller that needs more of the increment than its hashes (the
+  * banded probes count the increment's own hot buckets) carries the
+  * key columns in the same pull ([[pullKeys]]). When the
+  * increment outgrows `maxKeys` (a driver bloom would stop being
+  * broadcast-small), the prune SKIPS and returns the index branch
+  * unchanged — the exact posture of Spark's own
+  * `runtimeFilter.creationSideThreshold`.
   */
 private[graft] object ProbeFilters {
 
   /** 8M keys ≈ 9.2 MiB sketch at fpp 0.01 — the broadcast-small bound;
     * above it the prune skips rather than ship a fat literal into
-    * every task. */
+    * every task. It also bounds the driver pull that builds the
+    * sketch ([[pullKeys]]): at most 8M + 1 rows, a few hundred MB of
+    * driver rows at the very top of the range, where today's
+    * increments (320 banded keys per 20-document wave) sit five
+    * orders of magnitude below it. */
   val defaultMaxKeys: Long = 8L * 1000 * 1000
 
   /** Shared key shape for build and probe sides: xxhash64 of the join
@@ -59,23 +68,47 @@ private[graft] object ProbeFilters {
       Literal(bos.toByteArray), ColumnBridge.expression(value)))
   }
 
-  /** `big` restricted to rows whose (keyCols) join key MIGHT appear in
-    * `probe` — a map-side semi-join sketch, no shuffle on either side
-    * (the bloom build is a scan-side aggregation of the probe; sizing
-    * uses the probe's raw row count, an upper bound on distinct keys,
-    * so no distinct shuffle either). Returns `big` unchanged when the
-    * probe is empty (nothing can join — but the zero-row case only
-    * arises in degenerate fixtures; keeping the plan shape uniform
-    * costs nothing there) or exceeds `maxKeys` (skip-guard). */
-  def bloomSemi(big: DataFrame, probe: DataFrame, keyCols: Seq[String],
-    fpp: Double = 0.01, maxKeys: Long = defaultMaxKeys): DataFrame = {
-    val kh = keyHash(keyCols)
-    val n = probe.count()
-    if (n == 0 || n > maxKeys) big
-    else {
-      val bf = probe.select(kh.as("kh")).stat
-        .bloomFilter("kh", math.max(n, 1L), fpp)
-      big.filter(mightContain(bf, kh))
-    }
+  /** `probe`'s rows as (xxhash64 of `keyCols`, then the `carry`
+    * columns), pulled to the driver in one bounded job — or None when
+    * the probe holds more than `maxKeys` rows (the skip-guard; the
+    * pull stops at `maxKeys + 1`, so the driver never holds more than
+    * the bound plus one row). Column 0 is the sketch key
+    * ([[sketch]]); a caller that reads nothing but the sketch carries
+    * nothing. */
+  def pullKeys(probe: DataFrame, keyCols: Seq[String],
+    carry: Seq[String] = Nil,
+    maxKeys: Long = defaultMaxKeys): Option[Array[Row]] = {
+    val rows = probe.select(keyHash(keyCols).as("kh") +: carry.map(col): _*)
+      .limit(math.min(maxKeys + 1, Int.MaxValue.toLong).toInt).collect()
+    if (rows.length > maxKeys) None else Some(rows)
   }
+
+  /** The bloom sketch of pulled key rows ([[pullKeys]]): `putLong` of
+    * each row's xxhash64, the pair of the probe side's
+    * `might_contain(bloom, xxhash64(…))` — parity pinned in
+    * ProbeFilterSpec. Sized by the row count, an upper bound on
+    * distinct keys. */
+  def sketch(rows: Array[Row], fpp: Double = 0.01): BloomFilter = {
+    val bf = BloomFilter.create(math.max(rows.length, 1L), fpp)
+    rows.foreach(r => bf.putLong(r.getLong(0)))
+    bf
+  }
+
+  /** `big` restricted to rows whose (keyCols) join key MIGHT appear in
+    * the pulled probe keys — a map-side semi-join sketch, no shuffle
+    * on either side. Returns `big` unchanged when the pull skipped
+    * (None: over the bound) or is empty (nothing can join — but the
+    * zero-row case only arises in degenerate fixtures; keeping the
+    * plan shape uniform costs nothing there). */
+  def pruneBy(big: DataFrame, keyCols: Seq[String],
+    pulled: Option[Array[Row]], fpp: Double = 0.01): DataFrame =
+    pulled.filter(_.nonEmpty)
+      .fold(big)(rows => big.filter(mightContain(sketch(rows, fpp),
+        keyHash(keyCols))))
+
+  /** [[pruneBy]] over a fresh pull of `probe`'s keys: the bloom prune
+    * for callers that need nothing else from the probe side. */
+  def bloomSemi(big: DataFrame, probe: DataFrame, keyCols: Seq[String],
+    fpp: Double = 0.01, maxKeys: Long = defaultMaxKeys): DataFrame =
+    pruneBy(big, keyCols, pullKeys(probe, keyCols, maxKeys = maxKeys), fpp)
 }

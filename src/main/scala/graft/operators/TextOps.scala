@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.concurrent.duration.FiniteDuration
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -606,16 +608,18 @@ object TextOps {
         Seq(col("y.doc_id").as("id_a"), col("x.doc_id").as("id_b"),
           col("y.shash").as("sa"), col("x.shash").as("sb"))
     val newBanded = bandedRows(newStaged, carry = !joinBack)
-    // bloom prune (ProbeFilters): the corpus-sized index branch drops
-    // its partnerless banded rows BEFORE its exchange, keyed by the
-    // increment's (band, bhash) set — parity- and prune-pinned in
-    // ProbeFilterSpec; false positives only add verify work
+    // ONE bounded driver pull of the increment's (band, bhash) keys
+    // feeds the bloom prune (ProbeFilters: the corpus-sized index
+    // branch drops its partnerless banded rows BEFORE its exchange —
+    // parity- and prune-pinned in ProbeFilterSpec; false positives
+    // only add verify work) AND the within self-join's hot set, counted
+    // on the driver instead of by a per-call aggregate; an increment
+    // over the pull bound skips the prune and counts inline
+    val keys = Seq("band", "bhash")
+    val pulled = ProbeFilters.pullKeys(newBanded, keys, carry = keys)
     val baseBanded = {
       val b = bandedRows(baseStaged, carry = !joinBack)
-      if (bloomPrune)
-        ProbeFilters.bloomSemi(b,
-          newBanded.select(col("band"), col("bhash")), Seq("band", "bhash"))
-      else b
+      if (bloomPrune) ProbeFilters.pruneBy(b, keys, pulled) else b
     }
     val crossCands = BandedJoins.emitOnce(
       baseBanded, newBanded,
@@ -629,9 +633,11 @@ object TextOps {
           .join(baseStaged.select(col("doc_id").as("id_b"),
             col("shash").as("sb")), "id_b"))
       else verifyJaccard(crossCands)
+    val newHot = pulled.map(BandedJoins.pulledHotSet(newBanded, "band",
+      "bhash", _))
     val within =
-      if (joinBack) pairsJoinBackStaged(newStaged)
-      else pairsCarriedStaged(newStaged)
+      if (joinBack) pairsJoinBackStaged(newStaged, newHot)
+      else pairsCarriedStaged(newStaged, newHot)
     cross.unionByName(within)
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"), col("jaccard"))
@@ -821,6 +827,28 @@ object TextOps {
     * root. */
   private[graft] val dedupCurrentMarker = "_graft_dedup_current"
 
+  /** How long [[publishWaveState]] waits for its index branch. A
+    * benchmark-scale wave finishes it in well under a second; the
+    * bound turns a wedged write into a loud micro-batch failure
+    * instead of a hung stream. */
+  private[graft] val waveBranchTimeout: FiniteDuration =
+    FiniteDuration(30, "min")
+
+  /** [[publishWaveState]]'s index branch outlived its bound; its jobs
+    * were cancelled and the marker was not flipped. */
+  final class WaveBranchTimeoutException(msg: String)
+    extends java.util.concurrent.TimeoutException(msg)
+
+  /** Daemon threads for [[publishWaveState]]'s index branch, made on
+    * demand (one per concurrently publishing wave) and reclaimed when
+    * idle. */
+  private lazy val waveBranchPool =
+    java.util.concurrent.Executors.newCachedThreadPool { r =>
+      val t = new Thread(r, "graft-wave-index-branch")
+      t.setDaemon(true)
+      t
+    }
+
   /** Transactional one-flip publication shared by every streaming
     * compaction root (MinHash, SimHash, edit distance, embedding): the
     * index under `indexName`, its `sidecar` (a hot set or edit stats,
@@ -833,30 +861,98 @@ object TextOps {
     * wave's retirement would then anti-join against rows that were
     * never republished.
     *
-    * Cost posture: the wave's pair plan executes ONCE — its write —
-    * and the labels are [[Components.labelComponents]] over the
-    * PUBLISHED `<version>/pairs` (the same function over the same edge
-    * set, so the same map), never a second run of the bloom-pruned
-    * probe. Every artifact goes through [[graft.sources.Pq.write]], so
-    * no read-back pays a schema-inference job. What still rewrites in
+    * Cost posture: the artifacts form two independent chains, and
+    * they run CONCURRENTLY — index → sidecar on a branch thread, pairs
+    * → labels on the caller's — so a wave pays the longer chain, not
+    * the sum, on an otherwise idle executor pool. The marker flips
+    * once, after both chains finish. The wave's pair plan executes
+    * ONCE — its write — and the labels are
+    * [[Components.labelComponents]] over the PUBLISHED
+    * `<version>/pairs` (the same function over the same edge set, so
+    * the same map), never a second run of the bloom-pruned probe.
+    * Every artifact goes through [[graft.sources.Pq.write]], so no
+    * read-back pays a schema-inference job. What still rewrites in
     * full per wave is the index and its hot set; at 100 TB that
     * becomes a partitioned rewrite of the doc_id ranges the wave
     * touches plus a delta-maintained bucket-count table — both swaps
     * change this function only, not the wave semantics. SimHash
     * passes `labelEdges`: its pairs are signature-level, so its labels
-    * come from the wave's id-level edges instead. `pairs` is by-name,
-    * so a seed can derive it from the index and sidecar just written. */
+    * come from the wave's id-level edges instead. `pairs` must not
+    * read the index or sidecar this call writes: the two chains race.
+    *
+    * The branch runs with the caller's local properties (job group,
+    * streaming query and batch ids — its jobs count in the
+    * micro-batch, and a query stop cancels them with the caller's)
+    * under a job tag of its own, and it is JOINED before this call
+    * returns or throws, so no write lands in `<version>/` after an
+    * exception and a replay never races a straggler: a failing pairs
+    * chain (or an interrupted caller) cancels the branch's jobs and
+    * waits for it to end; a branch that outlives `branchTimeout` is
+    * cancelled the same way and fails the call with
+    * [[WaveBranchTimeoutException]]. */
   private[graft] def publishWaveState(spark: SparkSession, root: String,
     version: String, indexName: String, index: DataFrame,
-    pairs: => DataFrame, retainVersions: Int,
+    pairs: DataFrame, retainVersions: Int,
     sidecar: String => Unit = _ => (),
-    labelEdges: Option[DataFrame] = None): Unit = {
+    labelEdges: Option[DataFrame] = None,
+    branchTimeout: FiniteDuration = waveBranchTimeout): Unit = {
+    import java.util.concurrent.{ExecutionException, TimeUnit}
     val dir = s"$root/$version"
-    graft.sources.Pq.write(index, s"$dir/$indexName")
-    sidecar(s"$dir/$indexName")
-    graft.sources.Pq.write(pairs, s"$dir/pairs")
-    graft.sources.Pq.write(Components.labelComponents(labelEdges
-      .getOrElse(graft.sources.Pq.read(spark, s"$dir/pairs"))), s"$dir/labels")
+    val sc = spark.sparkContext
+    val tag = s"graft-wave-index-${java.util.UUID.randomUUID()}"
+    val deadline = System.nanoTime() + branchTimeout.toNanos
+    val indexChain = org.apache.spark.sql.graft.SessionBridge
+      .withThreadLocalCaptured(spark, waveBranchPool) {
+        sc.addJobTag(tag)
+        try {
+          graft.sources.Pq.write(index, s"$dir/$indexName")
+          sidecar(s"$dir/$indexName")
+        } finally sc.removeJobTag(tag)
+      }
+    // waits up to `nanos` for the branch to end, however it ends; an
+    // interrupt (a stopping query) cancels the branch and keeps waiting
+    // for it, then re-asserts the flag. True iff the branch ended.
+    def settle(nanos: Long): Boolean = {
+      val end = System.nanoTime() + nanos
+      var interrupted = false
+      while (!indexChain.isDone && System.nanoTime() < end) {
+        try indexChain.get(end - System.nanoTime(), TimeUnit.NANOSECONDS)
+        catch {
+          case _: InterruptedException =>
+            interrupted = true
+            sc.cancelJobsWithTag(tag)
+          case _: Exception => ()
+        }
+      }
+      if (interrupted) Thread.currentThread().interrupt()
+      indexChain.isDone
+    }
+    def cancelAndSettle(): Boolean = {
+      sc.cancelJobsWithTag(tag)
+      settle(branchTimeout.toNanos)
+    }
+    val stillRunning = "the index branch is still running after its " +
+      "jobs were cancelled"
+    try {
+      graft.sources.Pq.write(pairs, s"$dir/pairs")
+      graft.sources.Pq.write(labelEdges.fold(Components.labelComponents(
+          graft.sources.Pq.read(spark, s"$dir/pairs"), rereadable = true))(
+          Components.labelComponents(_)), s"$dir/labels")
+    } catch {
+      case t: Throwable =>
+        if (!cancelAndSettle())
+          t.addSuppressed(new WaveBranchTimeoutException(stillRunning))
+        throw t
+    }
+    if (!settle(deadline - System.nanoTime())) {
+      val ended = cancelAndSettle()
+      throw new WaveBranchTimeoutException(s"publishWaveState($root, " +
+        s"$version): the index branch did not finish within " +
+        s"$branchTimeout; its jobs were cancelled and the marker was " +
+        "not flipped" + (if (ended) "" else s"; $stillRunning"))
+    }
+    try indexChain.get()
+    catch { case e: ExecutionException => throw e.getCause }
     graft.sources.Markers.write(spark, root, dedupCurrentMarker, version)
     Curation.retireVersions(spark, root, version, retainVersions)
   }
@@ -1068,7 +1164,7 @@ object TextOps {
       else pairsCarriedStaged(staged, Some(hotSetOf(s, idx)))
     val pp = graft.sources.TempDirs
       .scratchDir("graft_compact_base_pairs").toString
-    basePairs.write.mode("overwrite").parquet(pp)
+    graft.sources.Pq.write(basePairs, pp)
     CompactState(idx, pp)
   })
   private[graft] def compactStateFor(spark: SparkSession,
@@ -1135,7 +1231,7 @@ object TextOps {
       else pairsCarriedStaged(staged, hot)
     val pp = graft.sources.TempDirs
       .scratchDir("graft_nightly_base_pairs").toString
-    basePairs.write.mode("overwrite").parquet(pp)
+    graft.sources.Pq.write(basePairs, pp)
     CompactState(idx, pp)
   })
   private[graft] def nightlyStateFor(spark: SparkSession,
@@ -3714,7 +3810,7 @@ object TextOps {
     val (identity, reps0) = simhashCollapse(simhashMd5Halves(base))
     val rp = graft.sources.TempDirs
       .scratchDir("graft_simhash_base_reps").toString
-    reps0.write.mode("overwrite").parquet(rp)
+    graft.sources.Pq.write(reps0, rp)
     val reps = graft.sources.Pq.read(s, rp)
     // the fit measures its own index: B widens past the count-derived
     // plan iff the published reps keep hot distinct-sig buckets there
@@ -3757,7 +3853,7 @@ object TextOps {
           .otherwise(col("text")))
       val sp = graft.sources.TempDirs
         .scratchDir("graft_simhash_compact_sigs").toString
-      simhashMd5Halves(stale).write.mode("overwrite").parquet(sp)
+      graft.sources.Pq.write(simhashMd5Halves(stale), sp)
       val sigs = graft.sources.Pq.read(s, sp)
       val reps = sigs.groupBy(col("sig_hi"), col("sig_lo"))
         .agg(min(col("doc_id")).as("doc_id"))
@@ -3768,13 +3864,8 @@ object TextOps {
       val b = simhashAutoPlan(reps, reps.count())
       val pp = graft.sources.TempDirs
         .scratchDir("graft_simhash_compact_pairs").toString
-      simhashSigPairs(reps, b)
-        .join(reps.select(col("doc_id").as("doc_id_a"),
-          col("sig_hi").as("hi_a"), col("sig_lo").as("lo_a")), "doc_id_a")
-        .join(reps.select(col("doc_id").as("doc_id_b"),
-          col("sig_hi").as("hi_b"), col("sig_lo").as("lo_b")), "doc_id_b")
-        .select(col("hi_a"), col("lo_a"), col("hi_b"), col("lo_b"))
-        .write.mode("overwrite").parquet(pp)
+      graft.sources.Pq.write(sigLevel(simhashSigPairs(reps, b), reps, reps),
+        pp)
       SimhashCompactState(sp, pp, b)
     })
   private[graft] def simhashCompactStateFor(spark: SparkSession,

@@ -801,16 +801,14 @@ object Vectors {
     newStaged: DataFrame, baseHot: Option[DataFrame] = None,
     bloomPrune: Boolean = true): DataFrame = {
     val newBanded = bandedVecs(newStaged)
-    // same pre-shuffle bloom prune as the text probe (ProbeFilters):
-    // the index branch sheds partnerless banded rows before its
-    // exchange, keyed by the increment's (band, band_sig) set
+    // same single bounded pull as the text probe: the increment's
+    // (band, band_sig) keys feed the pre-shuffle bloom prune of the
+    // index branch and the within self-join's driver-counted hot set
+    val keys = Seq("band", "band_sig")
+    val pulled = ProbeFilters.pullKeys(newBanded, keys, carry = keys)
     val baseBanded = {
       val b = bandedVecs(baseStaged)
-      if (bloomPrune)
-        ProbeFilters.bloomSemi(b,
-          newBanded.select(col("band"), col("band_sig")),
-          Seq("band", "band_sig"))
-      else b
+      if (bloomPrune) ProbeFilters.pruneBy(b, keys, pulled) else b
     }
     val cross = BandedJoins.emitOnce(
       baseBanded, newBanded,
@@ -822,7 +820,9 @@ object Vectors {
         col("u").as("ua")), "id_a")
       .join(baseStaged.select(col("vec_id").as("id_b"),
         col("u").as("ub")), "id_b")
-    verifyCosine(cross).unionByName(lshVerifiedPairsStaged(newStaged))
+    val newHot = pulled.map(BandedJoins.pulledHotSet(newBanded, "band",
+      "band_sig", _))
+    verifyCosine(cross).unionByName(lshVerifiedPairsStaged(newStaged, newHot))
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"), col("cosine"))
   }
@@ -971,16 +971,18 @@ object Vectors {
 
   /** Seed an embedding streaming-compaction root from a raw
     * (vec_id, …, embedding) frame: staged signatures (+ exact hot
-    * set), verified pairs, and labels under version `seed`. */
+    * set), verified pairs, and labels under version `seed`. The
+    * staging is materialized once and feeds both publish chains; the
+    * pairs count their hot buckets inline — the same set the sidecar
+    * publishes — because they must not read what the concurrent index
+    * branch is writing. */
   private[graft] def seedEmbedRoot(spark: SparkSession,
       vectors: DataFrame, root: String): Unit = {
-    val sp = s"$root/seed/staged"
+    val staged = stageVectors(vectors.select(col("vec_id"),
+        graft.functions.VectorFunctions.unitv(col("embedding")).as("u")))
+      .localCheckpoint(true)
     graft.operators.TextOps.publishWaveState(spark, root, "seed", "staged",
-      stageVectors(vectors.select(col("vec_id"),
-        graft.functions.VectorFunctions.unitv(col("embedding")).as("u"))),
-      lshVerifiedPairsStaged(graft.sources.Pq.read(spark, sp),
-          Some(BandedJoins.loadHotSet(spark, sp)))
-        .select(col("id_a"), col("id_b")),
+      staged, lshVerifiedPairsStaged(staged).select(col("id_a"), col("id_b")),
       0, BandedJoins.writeHotSet(spark, _, "sigs", "band_sig"))
   }
 

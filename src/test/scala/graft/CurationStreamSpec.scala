@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1204,5 +1206,140 @@ class CurationStreamSpec extends SparkTestBase {
       Curation.sourceRollup(snap).collect()
         .map(r => (r.getAs[String]("source"), r.getAs[Long]("n_docs"),
           r.getAs[Long]("n_tokens"))).toSet)
+  }
+
+  /** A seeded dedup root with one pending wave (doc 5 re-crawled as a
+    * near-dup of doc 1), for driving [[TextOps.publishWaveState]]
+    * directly. */
+  private def pendingWave(tag: String): (String, DataFrame) = {
+    import spark.implicits._
+    val a = words(200, 71)
+    val c = words(200, 73).map("z" + _)
+    def doc(base: Seq[String], keep: Int, seed: Int, t: String) =
+      (base.take(keep) ++ words(200 - keep, seed).map(t + _)).mkString(" ")
+    val root = tmp(tag)
+    TextOps.seedDedupState(spark, Seq(
+      (1L, a.mkString(" ")), (2L, doc(a, 190, 81, "q")),
+      (3L, c.mkString(" ")), (4L, doc(c, 190, 82, "r")),
+      (5L, words(200, 83).map("s" + _).mkString(" ")))
+      .toDF("doc_id", "text"), root)
+    (root, Seq((5L, doc(a, 188, 84, "t"))).toDF("doc_id", "text"))
+  }
+
+  /** Start times (ms) of every job run under a wave's index-branch tag,
+    * collected while `body` runs and for `settleMs` after it returns;
+    * returns (body's outcome, its return time, the start times, and
+    * the files under `dir` at return and after the wait). */
+  private def branchJobsAround[T](dir: String, settleMs: Long)(body: => T)
+      : (scala.util.Try[T], Long, Seq[Long], Set[String], Set[String]) = {
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.tags")))
+            .exists(_.contains("graft-wave-index"))) starts.add(e.time)
+    }
+    def files(): Set[String] = {
+      val d = new java.io.File(dir)
+      if (!d.exists()) Set.empty
+      else Files.walk(d.toPath).iterator().asScala
+        .map(_.toString).toSet
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = scala.util.Try(body)
+      val returned = System.currentTimeMillis()
+      val atReturn = files()
+      Thread.sleep(settleMs)
+      org.apache.spark.GraftTestBridge.drainListeners(sc)
+      (out, returned, starts.asScala.toSeq, atReturn, files())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a failing publish chain is joined: the previous version stays " +
+      "current, no branch job outlives the call, the next wave publishes") {
+    import TextOps.publishWaveState
+    val (root, wave) = pendingWave("graft_wave_fail_root")
+    def current() = graft.sources.Markers.read(spark, root,
+      TextOps.dedupCurrentMarker)
+    val hotSidecar = graft.operators.BandedJoins
+      .writeHotSet(spark, _: String, "bsigs", "bhash")
+
+    // (1) the index branch's sidecar fails — after a pause long enough
+    // that an un-joined branch would still be running at return
+    val (staged1, pairs1) = TextOps.compactWaveState(spark, root, wave)
+    val (out1, ret1, starts1, files1, later1) =
+      branchJobsAround(s"$root/v1", 1500) {
+        publishWaveState(spark, root, "v1", "staged", staged1, pairs1, 0,
+          { p => Thread.sleep(800); spark.range(4).count()
+            throw new IllegalStateException("sidecar failed") })
+      }
+    assert(out1.failed.get.getMessage.contains("sidecar failed"))
+    assert(current() == "seed")
+    assert(starts1.nonEmpty, "the listener saw no index-branch job")
+    assert(starts1.forall(_ <= ret1), s"branch job after return: $starts1")
+    assert(files1 == later1, "a write landed in v1/ after the call threw")
+
+    // (2) the pairs chain fails while the branch is still busy: the
+    // call cancels and waits for the branch before it throws
+    val (staged2, pairs2) = TextOps.compactWaveState(spark, root, wave)
+    val boom = udf { (x: Long) =>
+      if (x >= 0L) throw new IllegalStateException("pairs failed"); x }
+    val (out2, ret2, starts2, files2, later2) =
+      branchJobsAround(s"$root/v2", 1500) {
+        publishWaveState(spark, root, "v2", "staged", staged2,
+          pairs2.withColumn("id_a", boom(col("id_a"))), 0,
+          { p => hotSidecar(p); Thread.sleep(800); spark.range(4).count() })
+      }
+    assert(out2.isFailure)
+    assert(current() == "seed")
+    assert(starts2.nonEmpty && starts2.forall(_ <= ret2),
+      s"branch job after return: $starts2 vs $ret2")
+    assert(files2 == later2, "a write landed in v2/ after the call threw")
+
+    // (3) the next wave, computed from the still-current seed, publishes
+    val (staged3, pairs3) = TextOps.compactWaveState(spark, root, wave)
+    publishWaveState(spark, root, "v3", "staged", staged3, pairs3, 0,
+      hotSidecar)
+    assert(current() == "v3")
+    def set(df: DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val labels = set(spark.read.parquet(s"$root/v3/labels"))
+    assert(labels == set(Components.labelComponents(
+      spark.read.parquet(s"$root/v3/pairs"))))
+    assert(labels == Set((1L, 1L), (2L, 1L), (5L, 1L), (3L, 3L), (4L, 3L)))
+    assert(spark.read.parquet(s"$root/v3/staged").count() == 5L)
+  }
+
+  test("an index branch that outlives its bound is cancelled by tag " +
+      "and fails the publish loudly, unflipped") {
+    val (root, wave) = pendingWave("graft_wave_timeout_root")
+    val (staged, pairs) = TextOps.compactWaveState(spark, root, wave)
+    // a one-task sidecar job (the pairs chain keeps the other cores)
+    // that runs until it is killed, 30 s at most
+    def stuck(): Unit =
+      spark.sparkContext.parallelize(0 until 1, 1).foreach { _ =>
+        val tc = org.apache.spark.TaskContext.get()
+        val end = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!tc.isInterrupted() && System.nanoTime() < end)
+          Thread.sleep(20)
+      }
+    val t0 = System.nanoTime()
+    val (out, ret, starts, atReturn, later) =
+      branchJobsAround(s"$root/v1", 1000) {
+        TextOps.publishWaveState(spark, root, "v1", "staged", staged,
+          pairs, 0, _ => stuck(),
+          branchTimeout = scala.concurrent.duration.FiniteDuration(2, "s"))
+      }
+    assert(out.failed.get.isInstanceOf[TextOps.WaveBranchTimeoutException],
+      out.toString)
+    assert(!out.failed.get.getMessage.contains("still running"))
+    assert((System.nanoTime() - t0) / 1e9 < 20.0)
+    assert(graft.sources.Markers.read(spark, root,
+      TextOps.dedupCurrentMarker) == "seed")
+    assert(starts.nonEmpty && starts.forall(_ <= ret))
+    assert(atReturn == later)
   }
 }

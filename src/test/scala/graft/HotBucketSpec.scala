@@ -177,4 +177,87 @@ class HotBucketSpec extends SparkTestBase {
       assert(flags(1000L + i) == ((1000L + i, true)))
     }
   }
+
+  test("an increment's own hot bucket is counted from the probe's one " +
+      "pull and star-reduces exactly like the inline count") {
+    import spark.implicits._
+    // the increment holds k identical documents (ids 0..k-1, one
+    // bucket per band over the 64 cap) plus the small exact-dup pair;
+    // the base is the dissimilar fillers alone
+    val docs = megaDocs
+    val isInc = col("doc_id") < 1000L || col("doc_id") >= 2000L
+    val baseStaged = TextOps.stageDocs(docs.filter(!isInc))
+      .localCheckpoint(true)
+    val newStaged = TextOps.stageDocs(docs.filter(isInc))
+      .localCheckpoint(true)
+    val newBanded = newStaged
+      .select(posexplode(col("bsigs")).as(Seq("band", "bhash")))
+    val pulled = graft.operators.ProbeFilters.pullKeys(newBanded,
+      Seq("band", "bhash"), carry = Seq("band", "bhash")).get
+    val hot = BandedJoins.pulledHotSet(newBanded, "band", "bhash", pulled)
+    assert(hot.collect().map(r => (r.getInt(0), r.getLong(1))).toSet ==
+      BandedJoins.hotBuckets(newBanded, "band", "bhash").collect()
+        .map(r => (r.getInt(0), r.getLong(1))).toSet)
+    assert(hot.count() == 16)
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("id_a", "id_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    Seq(false, true).foreach { joinBack =>
+      val inc = pairs(TextOps.incrementPairs(baseStaged, newStaged,
+        joinBack))
+      val inline =
+        if (joinBack) pairs(TextOps.pairsJoinBackStaged(newStaged))
+        else pairs(TextOps.pairsCarriedStaged(newStaged))
+      // the base shares nothing with the increment: every emitted pair
+      // is a within edge, and they equal the inline-counted self-join's
+      assert(inc == inline, s"joinBack=$joinBack")
+      assert(inc == (1 until k).map(i => (0L, i.toLong)).toSet +
+        ((2000L, 2001L)), s"joinBack=$joinBack")
+    }
+    // the same holds for the embedding twin
+    def unit(v: Array[Double]): Seq[Double] = {
+      val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n).toSeq
+    }
+    val same = unit(Array.tabulate(64)(j => math.sin(j * 13.7)))
+    val vecs = ((0 until k).map(i => (i.toLong, same)) ++
+      (0 until 6).map(i => (1000L + i,
+        Array.tabulate(64)(j => if (j == i * 9) 1.0 else 0.0).toSeq)))
+      .toDF("vec_id", "u")
+    val vBase = Vectors.stageVectors(vecs.filter(col("vec_id") >= 1000L))
+      .localCheckpoint(true)
+    val vNew = Vectors.stageVectors(vecs.filter(col("vec_id") < 1000L))
+      .localCheckpoint(true)
+    assert(pairs(Vectors.embedIncrementPairs(vBase, vNew)) ==
+      pairs(Vectors.lshVerifiedPairsStaged(vNew)))
+    assert(pairs(Vectors.embedIncrementPairs(vBase, vNew)) ==
+      (1 until k).map(i => (0L, i.toLong)).toSet)
+  }
+
+  test("an empty published hot set plans no star branch and no " +
+      "hot-set broadcast; the served pairs are unchanged") {
+    val path = graft.sources.TempDirs
+      .scratchDir("graft_hotset_empty").toString
+    val idx = TextOps.minhashFit(spark,
+      graft.sources.Tables.documents(spark, sfDir), path)
+    assert(graft.sources.Markers
+      .read(spark, path, "_graft_hot_buckets") == "0")
+    val staged = TextOps.stagedFrame(spark, idx)
+    val served = TextOps.pairsCarriedStaged(staged,
+      Some(BandedJoins.loadHotSet(spark, path)))
+    val optimized = served.queryExecution.optimizedPlan.toString
+    assert(!optimized.contains("min_by"), optimized)
+    assert(!optimized.contains("LeftAnti"), optimized)
+    val physical = served.queryExecution.executedPlan.toString
+    assert(!physical.contains("BroadcastExchange"), physical)
+    // today's broadcast plan over the parquet hot set: same pairs
+    val broadcastPlan = TextOps.pairsCarriedStaged(staged,
+      Some(graft.sources.Pq.read(spark, s"$path/${BandedJoins.hotSetDirName}")
+        .select(col("hot_band"), col("hot_key"))))
+    assert(broadcastPlan.queryExecution.optimizedPlan.toString
+      .contains("min_by"))
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("id_a", "id_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs(served) == pairs(broadcastPlan))
+  }
 }

@@ -138,4 +138,53 @@ class ProbeFilterSpec extends SparkTestBase {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs(prune = true) == pairs(prune = false))
   }
+
+  test("the increment pull is bounded at maxKeys + 1 rows and its " +
+      "driver-built sketch keeps every true partner") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(91)
+    val keys = Seq.fill(3000)((rnd.nextLong(), rnd.nextInt(16))) ++
+      Seq((0L, 0), (Long.MinValue, 15), (Long.MaxValue, 7))
+    // materialized, not a local relation (whose limit would fold away
+    // at optimization instead of planning the bounded collect)
+    val probe = keys.toDF("bhash", "band").localCheckpoint(true)
+    val keyCols = Seq("band", "bhash")
+    // every executed pull plan: the limit is the bound, checked by the
+    // collect itself before the driver holds more rows
+    val limits = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = qe.executedPlan.collectFirst {
+        case c: org.apache.spark.sql.execution.CollectLimitExec => c.limit
+      }.foreach(limits.add)
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val n = keys.size.toLong
+    try {
+      // at and over the bound
+      val atBound = ProbeFilters.pullKeys(probe, keyCols, carry = keyCols,
+        maxKeys = n)
+      assert(atBound.map(_.length).contains(keys.size))
+      assert(ProbeFilters.pullKeys(probe, keyCols, maxKeys = n - 1).isEmpty)
+      assert(ProbeFilters.pullKeys(probe, keyCols, maxKeys = 10L).isEmpty)
+      org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      assert(limits.asScala.toSeq == Seq(n + 1, n, 11L).map(_.toInt),
+        limits.toString)
+      // the carried columns ride along unchanged
+      assert(atBound.get.map(r => (r.getLong(2), r.getInt(1))).toSet ==
+        keys.toSet)
+      // every true partner survives the sketch built from the pull
+      val bf = ProbeFilters.sketch(atBound.get)
+      assert(atBound.get.forall(r => bf.mightContainLong(r.getLong(0))))
+      val kept = ProbeFilters.pruneBy(probe, keyCols, atBound).count()
+      assert(kept == n)
+      // an over-bound pull skips the prune: the big side is unchanged
+      assert(ProbeFilters.pruneBy(probe, keyCols, None) eq probe)
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
