@@ -114,45 +114,49 @@ private[graft] object BandedJoins {
         .select(posexplode(col(sigsCol)).as(Seq("band", keyCol))),
       "band", keyCol).coalesce(1), s"$indexPath/$hotSetDirName")
 
-  /** Row bound of a hot set held as a driver-side local relation
-    * ([[loadHotSet]]): checked by the pull itself (it stops at
-    * bound + 1 rows), so the driver never holds more. A healthy index
-    * publishes an empty set; 100k (band, key) rows is a few MB and
-    * far past any set a 64-cap guard leaves on a real corpus. */
-  val maxLocalHotSet = 100000
-
-  /** The published hot set of an index directory, pulled once to the
-    * driver and served as a LOCAL relation — so Catalyst sees its
-    * rows while planning: an empty set (every healthy index) folds
-    * [[emitOnce]]'s anti-joins and star branch away before any job
-    * runs (PropagateEmptyRelation), instead of AQE pruning them only
-    * after their broadcast and `min_by` jobs ran. A set over
-    * [[maxLocalHotSet]] stays the parquet read (the broadcast plan). */
+  /** The published hot set of an index directory. An EMPTY set (every
+    * healthy index) is served as an empty LOCAL relation, so Catalyst
+    * folds [[emitOnce]]'s anti-joins and star branch away while
+    * planning (PropagateEmptyRelation) instead of AQE pruning them
+    * only after their broadcast and `min_by` jobs ran; a non-empty set
+    * stays the parquet read (the broadcast plan). The emptiness check
+    * is a one-row probe. */
   def loadHotSet(spark: org.apache.spark.sql.SparkSession,
     indexPath: String): DataFrame = {
     val published = graft.sources.Pq.read(spark, s"$indexPath/$hotSetDirName")
       .select(col("hot_band"), col("hot_key"))
-    val rows = published.limit(maxLocalHotSet + 1).collect()
-    if (rows.length > maxLocalHotSet) published
-    else localHotSet(spark, published.schema, rows.toSeq)
+    if (published.isEmpty) localHotSet(spark, published.schema, Nil)
+    else published
   }
 
-  /** [[hotBuckets]] of banded rows already on the driver — the rows of
-    * a [[ProbeFilters.pullKeys]] pull carrying (band, key) in columns
-    * 1 and 2 — counted there and returned as a local relation: no job,
-    * and an empty set plans no guard at all (see [[loadHotSet]]).
-    * `banded` is the pulled relation; it supplies the column types. */
-  def pulledHotSet(banded: DataFrame, bandCol: String, keyCol: String,
-    rows: Array[Row], cap: Int = defaultHotBucketCap): DataFrame = {
-    val counts = scala.collection.mutable.HashMap.empty[(Any, Any), Int]
-    rows.foreach { r =>
-      val k = (r.get(1), r.get(2))
-      counts.update(k, counts.getOrElse(k, 0) + 1)
+  /** The increment side of a banded incremental probe, planned from
+    * ONE bounded driver pull of the increment's (`bandCol`, `keyCol`)
+    * rows ([[ProbeFilters.pullKeys]]). Returns `base` bloom-pruned to
+    * the increment's keys when `bloomPrune` ([[ProbeFilters.pruneBy]])
+    * and the increment's own hot set for its within self-join: the
+    * [[hotBuckets]] rule (more than `cap` rows in a bucket) counted on
+    * the driver over the pulled rows and served as a local relation —
+    * no job, and an empty set plans no guard (see [[loadHotSet]]). An
+    * increment past the pull bound gets None: its self-join counts
+    * inline. */
+  def planIncrementProbe(base: DataFrame, increment: DataFrame,
+    bandCol: String, keyCol: String, bloomPrune: Boolean,
+    cap: Int = defaultHotBucketCap): (DataFrame, Option[DataFrame]) = {
+    val keys = Seq(bandCol, keyCol)
+    // rows are (key hash, band, key)
+    val pulled = ProbeFilters.pullKeys(increment, keys, carry = keys)
+    val pruned =
+      if (bloomPrune) ProbeFilters.pruneBy(base, increment, keys, pulled)
+      else base
+    val hot = pulled.map { rows =>
+      val schema = StructType(Seq(
+        StructField("hot_band", increment.schema(bandCol).dataType),
+        StructField("hot_key", increment.schema(keyCol).dataType)))
+      localHotSet(increment.sparkSession, schema,
+        rows.groupMapReduce(r => (r.get(1), r.get(2)))(_ => 1)(_ + _)
+          .collect { case ((b, k), n) if n > cap => Row(b, k) }.toSeq)
     }
-    localHotSet(banded.sparkSession, StructType(Seq(
-      StructField("hot_band", banded.schema(bandCol).dataType),
-      StructField("hot_key", banded.schema(keyCol).dataType))),
-      counts.collect { case ((b, k), n) if n > cap => Row(b, k) }.toSeq)
+    (pruned, hot)
   }
 
   private def localHotSet(spark: org.apache.spark.sql.SparkSession,
@@ -177,12 +181,12 @@ private[graft] object BandedJoins {
     * UNLESS the caller passes `hotOpt`, which skips the per-call
     * aggregation entirely: the index's published hot set
     * ([[loadHotSet]]) on an index-served probe, or the increment's own
-    * set counted on the driver ([[pulledHotSet]]) on the increment's
-    * self-join. Both are local relations when small, so an EMPTY set
-    * plans neither the anti-joins nor the star branch. Any hot set
-    * that is a superset of the current left side's true hot buckets
-    * is CORRECT (a bucket flagged hot that has
-    * since shrunk — e.g. after compaction retirement — is merely
+    * set counted on the driver ([[planIncrementProbe]]) on the
+    * increment's self-join. An EMPTY set of either kind is a local
+    * relation, so it plans neither the anti-joins nor the star branch.
+    * Any hot set that is a superset of the current left side's true
+    * hot buckets is CORRECT (a bucket flagged hot that has since
+    * shrunk — e.g. after compaction retirement — is merely
     * star-reduced conservatively; exclusivity only needs the one set
     * used consistently within the call). */
   def emitOnce(left: DataFrame, right: DataFrame, bandCol: String,

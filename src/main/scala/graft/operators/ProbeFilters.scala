@@ -27,15 +27,18 @@ import org.apache.spark.util.sketch.BloomFilter
   * candidates for the exact verify stage, and false negatives cannot
   * exist (every true partner's key was inserted).
   *
-  * Build cost is ONE increment-side job: a bounded pull of the
-  * probe's key hashes to the driver (`maxKeys + 1` rows at most, so
-  * the guard is checked before the driver holds more than the bound)
-  * and a driver-held sketch of ~1.2 bytes/key at the default fpp —
-  * the same bounded-model-pull contract as the IVF centroid fit. A
-  * caller that needs more of the increment than its hashes (the
-  * banded probes count the increment's own hot buckets) carries the
-  * key columns in the same pull ([[pullKeys]]). When the
-  * increment outgrows `maxKeys` (a driver bloom would stop being
+  * Build cost is ONE increment-side job while the increment is
+  * small: a bounded pull of the probe's key hashes to the driver
+  * ([[pullKeys]]: at most [[maxPullRows]] + 1 rows, checked by the
+  * pull itself before the driver holds more) and a driver-built
+  * sketch of ~1.2 bytes/key at the default fpp — the same
+  * bounded-model-pull contract as the IVF centroid fit. A caller that
+  * needs more of the increment than its hashes (the banded probes
+  * count the increment's own hot buckets) carries the key columns in
+  * the same pull. An increment past the pull bound builds its sketch
+  * on the executors instead (a count, then the filter aggregation),
+  * so only the sketch reaches the driver. When the increment
+  * outgrows `maxKeys` (a driver bloom would stop being
   * broadcast-small), the prune SKIPS and returns the index branch
   * unchanged — the exact posture of Spark's own
   * `runtimeFilter.creationSideThreshold`.
@@ -44,12 +47,16 @@ private[graft] object ProbeFilters {
 
   /** 8M keys ≈ 9.2 MiB sketch at fpp 0.01 — the broadcast-small bound;
     * above it the prune skips rather than ship a fat literal into
-    * every task. It also bounds the driver pull that builds the
-    * sketch ([[pullKeys]]): at most 8M + 1 rows, a few hundred MB of
-    * driver rows at the very top of the range, where today's
-    * increments (320 banded keys per 20-document wave) sit five
-    * orders of magnitude below it. */
+    * every task. */
   val defaultMaxKeys: Long = 8L * 1000 * 1000
+
+  /** Row bound of the driver pull ([[pullKeys]]). A pulled
+    * (hash, band, key) row is a boxed `GenericRow` of ~108 bytes of
+    * driver heap (measured with Spark's `SizeEstimator` and with heap
+    * deltas over a 400k-row pull; pinned in ProbeFilterSpec), so the
+    * bound holds a pull to ~54 MB — well inside the driver's default
+    * 1 GiB `maxResultSize`. A 20-document wave pulls 320 rows. */
+  val maxPullRows: Int = 500 * 1000
 
   /** Shared key shape for build and probe sides: xxhash64 of the join
     * key columns. `BloomFilterMightContain` consumes a LONG value, and
@@ -69,18 +76,16 @@ private[graft] object ProbeFilters {
   }
 
   /** `probe`'s rows as (xxhash64 of `keyCols`, then the `carry`
-    * columns), pulled to the driver in one bounded job — or None when
-    * the probe holds more than `maxKeys` rows (the skip-guard; the
-    * pull stops at `maxKeys + 1`, so the driver never holds more than
-    * the bound plus one row). Column 0 is the sketch key
-    * ([[sketch]]); a caller that reads nothing but the sketch carries
-    * nothing. */
+    * columns), pulled to the driver in one job — or None when the
+    * probe holds more than `maxRows` rows (the pull stops at
+    * `maxRows + 1`, so the driver never holds more than the bound
+    * plus one row). Column 0 is the sketch key ([[sketch]]). */
   def pullKeys(probe: DataFrame, keyCols: Seq[String],
     carry: Seq[String] = Nil,
-    maxKeys: Long = defaultMaxKeys): Option[Array[Row]] = {
+    maxRows: Int = maxPullRows): Option[Array[Row]] = {
     val rows = probe.select(keyHash(keyCols).as("kh") +: carry.map(col): _*)
-      .limit(math.min(maxKeys + 1, Int.MaxValue.toLong).toInt).collect()
-    if (rows.length > maxKeys) None else Some(rows)
+      .limit(maxRows + 1).collect()
+    if (rows.length > maxRows) None else Some(rows)
   }
 
   /** The bloom sketch of pulled key rows ([[pullKeys]]): `putLong` of
@@ -95,20 +100,35 @@ private[graft] object ProbeFilters {
   }
 
   /** `big` restricted to rows whose (keyCols) join key MIGHT appear in
-    * the pulled probe keys — a map-side semi-join sketch, no shuffle
-    * on either side. Returns `big` unchanged when the pull skipped
-    * (None: over the bound) or is empty (nothing can join — but the
+    * `probe` — a map-side semi-join sketch, no shuffle on either side.
+    * `pulled` is `probe`'s [[pullKeys]] pull: its rows build the
+    * sketch on the driver; None (the probe is past the pull bound)
+    * builds it on the executors — a count to size and guard it (sized
+    * by the raw row count, an upper bound on distinct keys, so no
+    * distinct shuffle), then the filter aggregation. Returns `big`
+    * unchanged when the probe is empty (nothing can join — but the
     * zero-row case only arises in degenerate fixtures; keeping the
-    * plan shape uniform costs nothing there). */
-  def pruneBy(big: DataFrame, keyCols: Seq[String],
-    pulled: Option[Array[Row]], fpp: Double = 0.01): DataFrame =
-    pulled.filter(_.nonEmpty)
-      .fold(big)(rows => big.filter(mightContain(sketch(rows, fpp),
-        keyHash(keyCols))))
+    * plan shape uniform costs nothing there) or exceeds `maxKeys`
+    * (skip-guard). */
+  def pruneBy(big: DataFrame, probe: DataFrame, keyCols: Seq[String],
+    pulled: Option[Array[Row]], fpp: Double = 0.01,
+    maxKeys: Long = defaultMaxKeys): DataFrame = {
+    val kh = keyHash(keyCols)
+    val bf = pulled match {
+      case Some(rows) =>
+        if (rows.isEmpty || rows.length > maxKeys) None
+        else Some(sketch(rows, fpp))
+      case None =>
+        val n = probe.count()
+        if (n == 0 || n > maxKeys) None
+        else Some(probe.select(kh.as("kh")).stat.bloomFilter("kh", n, fpp))
+    }
+    bf.fold(big)(f => big.filter(mightContain(f, kh)))
+  }
 
   /** [[pruneBy]] over a fresh pull of `probe`'s keys: the bloom prune
     * for callers that need nothing else from the probe side. */
   def bloomSemi(big: DataFrame, probe: DataFrame, keyCols: Seq[String],
     fpp: Double = 0.01, maxKeys: Long = defaultMaxKeys): DataFrame =
-    pruneBy(big, keyCols, pullKeys(probe, keyCols, maxKeys = maxKeys), fpp)
+    pruneBy(big, probe, keyCols, pullKeys(probe, keyCols), fpp, maxKeys)
 }

@@ -609,18 +609,14 @@ object TextOps {
           col("y.shash").as("sa"), col("x.shash").as("sb"))
     val newBanded = bandedRows(newStaged, carry = !joinBack)
     // ONE bounded driver pull of the increment's (band, bhash) keys
-    // feeds the bloom prune (ProbeFilters: the corpus-sized index
-    // branch drops its partnerless banded rows BEFORE its exchange —
-    // parity- and prune-pinned in ProbeFilterSpec; false positives
-    // only add verify work) AND the within self-join's hot set, counted
-    // on the driver instead of by a per-call aggregate; an increment
-    // over the pull bound skips the prune and counts inline
-    val keys = Seq("band", "bhash")
-    val pulled = ProbeFilters.pullKeys(newBanded, keys, carry = keys)
-    val baseBanded = {
-      val b = bandedRows(baseStaged, carry = !joinBack)
-      if (bloomPrune) ProbeFilters.pruneBy(b, keys, pulled) else b
-    }
+    // (BandedJoins.planIncrementProbe) feeds the bloom prune
+    // (ProbeFilters: the corpus-sized index branch drops its
+    // partnerless banded rows BEFORE its exchange — parity- and
+    // prune-pinned in ProbeFilterSpec; false positives only add verify
+    // work) AND the within self-join's driver-counted hot set
+    val (baseBanded, newHot) = BandedJoins.planIncrementProbe(
+      bandedRows(baseStaged, carry = !joinBack), newBanded, "band", "bhash",
+      bloomPrune)
     val crossCands = BandedJoins.emitOnce(
       baseBanded, newBanded,
       "band", "bhash", "bsigs", "doc_id",
@@ -633,8 +629,6 @@ object TextOps {
           .join(baseStaged.select(col("doc_id").as("id_b"),
             col("shash").as("sb")), "id_b"))
       else verifyJaccard(crossCands)
-    val newHot = pulled.map(BandedJoins.pulledHotSet(newBanded, "band",
-      "bhash", _))
     val within =
       if (joinBack) pairsJoinBackStaged(newStaged, newHot)
       else pairsCarriedStaged(newStaged, newHot)
@@ -834,11 +828,6 @@ object TextOps {
   private[graft] val waveBranchTimeout: FiniteDuration =
     FiniteDuration(30, "min")
 
-  /** [[publishWaveState]]'s index branch outlived its bound; its jobs
-    * were cancelled and the marker was not flipped. */
-  final class WaveBranchTimeoutException(msg: String)
-    extends java.util.concurrent.TimeoutException(msg)
-
   /** Daemon threads for [[publishWaveState]]'s index branch, made on
     * demand (one per concurrently publishing wave) and reclaimed when
     * idle. */
@@ -886,49 +875,59 @@ object TextOps {
     * under a job tag of its own, and it is JOINED before this call
     * returns or throws, so no write lands in `<version>/` after an
     * exception and a replay never races a straggler: a failing pairs
-    * chain (or an interrupted caller) cancels the branch's jobs and
-    * waits for it to end; a branch that outlives `branchTimeout` is
-    * cancelled the same way and fails the call with
-    * [[WaveBranchTimeoutException]]. */
+    * chain (or an interrupted caller) abandons the branch and waits
+    * for it to end; a branch that outlives `branchTimeout` is
+    * abandoned the same way and fails the call with a
+    * `TimeoutException`. An abandoned branch starts no further step,
+    * and every wait re-cancels its tag, so a job it started after the
+    * first cancel is killed too. */
   private[graft] def publishWaveState(spark: SparkSession, root: String,
     version: String, indexName: String, index: DataFrame,
     pairs: DataFrame, retainVersions: Int,
     sidecar: String => Unit = _ => (),
     labelEdges: Option[DataFrame] = None,
     branchTimeout: FiniteDuration = waveBranchTimeout): Unit = {
-    import java.util.concurrent.{ExecutionException, TimeUnit}
+    import java.util.concurrent.{CancellationException, ExecutionException,
+      TimeUnit, TimeoutException}
     val dir = s"$root/$version"
     val sc = spark.sparkContext
     val tag = s"graft-wave-index-${java.util.UUID.randomUUID()}"
     val deadline = System.nanoTime() + branchTimeout.toNanos
+    val abandoned = new java.util.concurrent.atomic.AtomicBoolean(false)
     val indexChain = org.apache.spark.sql.graft.SessionBridge
       .withThreadLocalCaptured(spark, waveBranchPool) {
         sc.addJobTag(tag)
-        try {
-          graft.sources.Pq.write(index, s"$dir/$indexName")
-          sidecar(s"$dir/$indexName")
-        } finally sc.removeJobTag(tag)
+        try Seq[String => Unit](graft.sources.Pq.write(index, _), sidecar)
+          .foreach { step =>
+            if (abandoned.get) throw new CancellationException(
+              s"publishWaveState($root, $version): index branch abandoned")
+            step(s"$dir/$indexName")
+          }
+        finally sc.removeJobTag(tag)
       }
-    // waits up to `nanos` for the branch to end, however it ends; an
-    // interrupt (a stopping query) cancels the branch and keeps waiting
-    // for it, then re-asserts the flag. True iff the branch ended.
+    // waits up to `nanos` for the branch to end, however it ends,
+    // re-cancelling an abandoned branch's tag every 50 ms; an interrupt
+    // (a stopping query) abandons the branch and keeps waiting for it,
+    // then re-asserts the flag. True iff the branch ended.
     def settle(nanos: Long): Boolean = {
       val end = System.nanoTime() + nanos
       var interrupted = false
       while (!indexChain.isDone && System.nanoTime() < end) {
-        try indexChain.get(end - System.nanoTime(), TimeUnit.NANOSECONDS)
+        if (abandoned.get) sc.cancelJobsWithTag(tag)
+        try indexChain.get(math.min(end - System.nanoTime(), 50000000L),
+          TimeUnit.NANOSECONDS)
         catch {
           case _: InterruptedException =>
             interrupted = true
-            sc.cancelJobsWithTag(tag)
+            abandoned.set(true)
           case _: Exception => ()
         }
       }
       if (interrupted) Thread.currentThread().interrupt()
       indexChain.isDone
     }
-    def cancelAndSettle(): Boolean = {
-      sc.cancelJobsWithTag(tag)
+    def abandon(): Boolean = {
+      abandoned.set(true)
       settle(branchTimeout.toNanos)
     }
     val stillRunning = "the index branch is still running after its " +
@@ -940,13 +939,13 @@ object TextOps {
           Components.labelComponents(_)), s"$dir/labels")
     } catch {
       case t: Throwable =>
-        if (!cancelAndSettle())
-          t.addSuppressed(new WaveBranchTimeoutException(stillRunning))
+        if (!abandon())
+          t.addSuppressed(new TimeoutException(stillRunning))
         throw t
     }
     if (!settle(deadline - System.nanoTime())) {
-      val ended = cancelAndSettle()
-      throw new WaveBranchTimeoutException(s"publishWaveState($root, " +
+      val ended = abandon()
+      throw new TimeoutException(s"publishWaveState($root, " +
         s"$version): the index branch did not finish within " +
         s"$branchTimeout; its jobs were cancelled and the marker was " +
         "not flipped" + (if (ended) "" else s"; $stillRunning"))

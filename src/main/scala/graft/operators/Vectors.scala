@@ -804,12 +804,8 @@ object Vectors {
     // same single bounded pull as the text probe: the increment's
     // (band, band_sig) keys feed the pre-shuffle bloom prune of the
     // index branch and the within self-join's driver-counted hot set
-    val keys = Seq("band", "band_sig")
-    val pulled = ProbeFilters.pullKeys(newBanded, keys, carry = keys)
-    val baseBanded = {
-      val b = bandedVecs(baseStaged)
-      if (bloomPrune) ProbeFilters.pruneBy(b, keys, pulled) else b
-    }
+    val (baseBanded, newHot) = BandedJoins.planIncrementProbe(
+      bandedVecs(baseStaged), newBanded, "band", "band_sig", bloomPrune)
     val cross = BandedJoins.emitOnce(
       baseBanded, newBanded,
       "band", "band_sig", "sigs", "vec_id",
@@ -820,8 +816,6 @@ object Vectors {
         col("u").as("ua")), "id_a")
       .join(baseStaged.select(col("vec_id").as("id_b"),
         col("u").as("ub")), "id_b")
-    val newHot = pulled.map(BandedJoins.pulledHotSet(newBanded, "band",
-      "band_sig", _))
     verifyCosine(cross).unionByName(lshVerifiedPairsStaged(newStaged, newHot))
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"), col("cosine"))

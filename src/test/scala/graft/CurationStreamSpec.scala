@@ -1313,33 +1313,55 @@ class CurationStreamSpec extends SparkTestBase {
     assert(spark.read.parquet(s"$root/v3/staged").count() == 5L)
   }
 
-  test("an index branch that outlives its bound is cancelled by tag " +
-      "and fails the publish loudly, unflipped") {
-    val (root, wave) = pendingWave("graft_wave_timeout_root")
+  /** A one-task job (the pairs chain keeps the other cores) that runs
+    * until it is killed, 30 s at most. */
+  private def stuckJob(): Unit =
+    spark.sparkContext.parallelize(0 until 1, 1).foreach { _ =>
+      val tc = org.apache.spark.TaskContext.get()
+      val end = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!tc.isInterrupted() && System.nanoTime() < end)
+        Thread.sleep(20)
+    }
+
+  /** publishWaveState over a fresh pending wave with a sidecar of
+    * `sidecar` and a `boundS`-second branch bound: asserts the call
+    * fails with a TimeoutException that does not report a branch still
+    * running, within `maxS` seconds, unflipped, with no branch job
+    * started and no file written after it returned. */
+  private def assertBranchTimesOut(tag: String, boundS: Int, maxS: Double)(
+      sidecar: Long => Unit): Unit = {
+    val (root, wave) = pendingWave(tag)
     val (staged, pairs) = TextOps.compactWaveState(spark, root, wave)
-    // a one-task sidecar job (the pairs chain keeps the other cores)
-    // that runs until it is killed, 30 s at most
-    def stuck(): Unit =
-      spark.sparkContext.parallelize(0 until 1, 1).foreach { _ =>
-        val tc = org.apache.spark.TaskContext.get()
-        val end = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (!tc.isInterrupted() && System.nanoTime() < end)
-          Thread.sleep(20)
-      }
     val t0 = System.nanoTime()
     val (out, ret, starts, atReturn, later) =
       branchJobsAround(s"$root/v1", 1000) {
         TextOps.publishWaveState(spark, root, "v1", "staged", staged,
-          pairs, 0, _ => stuck(),
-          branchTimeout = scala.concurrent.duration.FiniteDuration(2, "s"))
+          pairs, 0, _ => sidecar(t0),
+          branchTimeout = scala.concurrent.duration.FiniteDuration(boundS, "s"))
       }
-    assert(out.failed.get.isInstanceOf[TextOps.WaveBranchTimeoutException],
-      out.toString)
+    assert(out.failed.get
+      .isInstanceOf[java.util.concurrent.TimeoutException], out.toString)
     assert(!out.failed.get.getMessage.contains("still running"))
-    assert((System.nanoTime() - t0) / 1e9 < 20.0)
+    assert((System.nanoTime() - t0) / 1e9 < maxS)
     assert(graft.sources.Markers.read(spark, root,
       TextOps.dedupCurrentMarker) == "seed")
     assert(starts.nonEmpty && starts.forall(_ <= ret))
     assert(atReturn == later)
+  }
+
+  test("an index branch that outlives its bound is cancelled by tag " +
+      "and fails the publish loudly, unflipped") {
+    assertBranchTimesOut("graft_wave_timeout_root", 2, 20.0)(_ => stuckJob())
+  }
+
+  test("a branch job started after the timeout's cancel is killed too") {
+    // the sidecar starts its job 5 s into the call: after the 4 s bound
+    // fired and the first cancel found no job to kill, inside the wait
+    // that follows it (a cancel issued only once would leave it running
+    // and the call would throw with the branch still writing)
+    assertBranchTimesOut("graft_wave_late_root", 4, 20.0) { t0 =>
+      Thread.sleep(math.max(0L, 5000L - (System.nanoTime() - t0) / 1000000L))
+      stuckJob()
+    }
   }
 }

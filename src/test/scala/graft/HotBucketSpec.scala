@@ -192,9 +192,8 @@ class HotBucketSpec extends SparkTestBase {
       .localCheckpoint(true)
     val newBanded = newStaged
       .select(posexplode(col("bsigs")).as(Seq("band", "bhash")))
-    val pulled = graft.operators.ProbeFilters.pullKeys(newBanded,
-      Seq("band", "bhash"), carry = Seq("band", "bhash")).get
-    val hot = BandedJoins.pulledHotSet(newBanded, "band", "bhash", pulled)
+    val hot = BandedJoins.planIncrementProbe(newBanded, newBanded, "band",
+      "bhash", bloomPrune = false)._2.get
     assert(hot.collect().map(r => (r.getInt(0), r.getLong(1))).toSet ==
       BandedJoins.hotBuckets(newBanded, "band", "bhash").collect()
         .map(r => (r.getInt(0), r.getLong(1))).toSet)

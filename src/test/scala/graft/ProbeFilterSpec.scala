@@ -139,7 +139,7 @@ class ProbeFilterSpec extends SparkTestBase {
     assert(pairs(prune = true) == pairs(prune = false))
   }
 
-  test("the increment pull is bounded at maxKeys + 1 rows and its " +
+  test("the increment pull is bounded at maxRows + 1 rows and its " +
       "driver-built sketch keeps every true partner") {
     import spark.implicits._
     val rnd = new scala.util.Random(91)
@@ -163,28 +163,63 @@ class ProbeFilterSpec extends SparkTestBase {
           e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    val n = keys.size.toLong
+    val n = keys.size
     try {
       // at and over the bound
       val atBound = ProbeFilters.pullKeys(probe, keyCols, carry = keyCols,
-        maxKeys = n)
-      assert(atBound.map(_.length).contains(keys.size))
-      assert(ProbeFilters.pullKeys(probe, keyCols, maxKeys = n - 1).isEmpty)
-      assert(ProbeFilters.pullKeys(probe, keyCols, maxKeys = 10L).isEmpty)
+        maxRows = n)
+      assert(atBound.map(_.length).contains(n))
+      assert(ProbeFilters.pullKeys(probe, keyCols, maxRows = n - 1).isEmpty)
+      assert(ProbeFilters.pullKeys(probe, keyCols, maxRows = 10).isEmpty)
       org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext)
       import scala.jdk.CollectionConverters._
-      assert(limits.asScala.toSeq == Seq(n + 1, n, 11L).map(_.toInt),
-        limits.toString)
+      assert(limits.asScala.toSeq == Seq(n + 1, n, 11), limits.toString)
       // the carried columns ride along unchanged
       assert(atBound.get.map(r => (r.getLong(2), r.getInt(1))).toSet ==
         keys.toSet)
       // every true partner survives the sketch built from the pull
       val bf = ProbeFilters.sketch(atBound.get)
       assert(atBound.get.forall(r => bf.mightContainLong(r.getLong(0))))
-      val kept = ProbeFilters.pruneBy(probe, keyCols, atBound).count()
-      assert(kept == n)
-      // an over-bound pull skips the prune: the big side is unchanged
-      assert(ProbeFilters.pruneBy(probe, keyCols, None) eq probe)
+      assert(ProbeFilters.pruneBy(probe, probe, keyCols, atBound).count() ==
+        n.toLong)
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a probe past the pull bound builds its sketch on the executors: " +
+      "true partners kept, partnerless rows pruned, maxKeys still skips") {
+    import spark.implicits._
+    val keyCols = Seq("band", "bhash")
+    val probe = (0 until 2000).map(i => (1000000L + i, i % 16))
+      .toDF("bhash", "band").localCheckpoint(true)
+    val partners = (0 until 2000 by 7).map(i => (1000000L + i, i % 16))
+    val big = ((0 until 20000).map(i => (i.toLong, i % 16)) ++ partners)
+      .toDF("bhash", "band").localCheckpoint(true)
+    val pulled = ProbeFilters.pullKeys(probe, keyCols, maxRows = 100)
+    assert(pulled.isEmpty)
+    val pruned = ProbeFilters.pruneBy(big, probe, keyCols, pulled)
+    assert(pruned.queryExecution.executedPlan.toString
+      .contains("might_contain"))
+    val kept = pruned.collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    assert(partners.toSet.subsetOf(kept))
+    // disjoint keys: survivors past the partners are false positives
+    assert(kept.size < partners.size + 1000)
+    // the skip-guard holds on this path too
+    assert(ProbeFilters.pruneBy(big, probe, keyCols, pulled,
+      maxKeys = 1000L) eq big)
+  }
+
+  test("maxPullRows is sized from the driver bytes of a pulled row") {
+    import spark.implicits._
+    val n = 20000
+    val probe = (0 until n).map(i => (i * 7919L, i % 16))
+      .toDF("bhash", "band").localCheckpoint(true)
+    val rows = ProbeFilters.pullKeys(probe, Seq("band", "bhash"),
+      carry = Seq("band", "bhash")).get
+    // a (hash, band, key) row is a boxed GenericRow: ~108 bytes
+    val perRow =
+      org.apache.spark.util.SizeEstimator.estimate(rows).toDouble / n
+    assert(perRow > 64 && perRow < 128, perRow)
+    // a full pull stays under 64 MiB of driver heap
+    assert(ProbeFilters.maxPullRows * perRow < 64.0 * 1024 * 1024)
   }
 }
