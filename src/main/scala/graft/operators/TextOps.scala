@@ -584,7 +584,7 @@ object TextOps {
     *
     * Contract: `newStaged`'s doc_ids are disjoint from `baseStaged`'s
     * (an increment is NEW documents; re-crawled ids belong to the
-    * compaction job — [[compactClusters]] / [[qDedupCompact]] — which
+    * compaction job — [[compactState]] / [[qDedupCompact]] — which
     * retires their stale rows first and then calls this probe on the
     * disjoint remainder). The join guard only excludes the
     * degenerate self-pair. Output orientation is normalized
@@ -676,32 +676,14 @@ object TextOps {
   private[graft] def isIncrementDoc: Column =
     pmod(xxhash64(col("doc_id")), lit(5)) === 0
 
-  /** Fitted incremental-dedup state: the base corpus's published
-    * MinHash index plus its finished label map, both parquet artifacts
-    * (yesterday's nightly output). */
-  private[graft] case class DedupState(index: MinHashIndex,
-    labelsPath: String)
-
-  /** Fit-once cache of the base state per (JVM, corpus dir) —
-    * [[FitCache]] carries the lazy-holder/failed-fit/immutable-source
-    * contract. The fit is yesterday's nightly job: publish the base
-    * index, pair it against itself once, persist the label map. */
-  private val fittedDedupState = new FitCache[DedupState]((s, d) => {
-    val idx = minhashFit(s,
-      Tables.documents(s, d).filter(!isIncrementDoc),
-      graft.sources.TempDirs.scratchDir("graft_dedup_base_index").toString)
-    val basePairs =
-      if (idx.joinBack)
-        pairsJoinBackStaged(stagedFrame(s, idx), Some(hotSetOf(s, idx)))
-      else pairsCarriedStaged(stagedFrame(s, idx), Some(hotSetOf(s, idx)))
-    val lp = graft.sources.TempDirs
-      .scratchDir("graft_dedup_base_labels").toString
-    graft.sources.Pq.write(Components.labelComponents(
-      basePairs.select(col("id_a"), col("id_b"))), lp)
-    DedupState(idx, lp)
-  })
-  private[graft] def dedupStateFor(spark: SparkSession,
-    dir: String): DedupState = fittedDedupState.get(spark, dir)
+  /** The incremental base root per (JVM, corpus dir): yesterday's
+    * nightly output — the base split's published index, pairs and
+    * label map — seeded by [[seedDedupState]]. */
+  private[graft] val dedupBaseRoots =
+    FitCache.seededRoots("graft_dedup_base") { (s, d, root) =>
+      seedDedupState(s, Tables.documents(s, d).filter(!isIncrementDoc),
+        root)
+    }
 
   /** Incremental near-dup clustering — the declared query: the ~20%
     * increment split ([[isIncrementDoc]]) is shingled fresh (it IS the
@@ -716,7 +698,8 @@ object TextOps {
     * or splits a merged component fails the hash compare loudly.
     */
   def qDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val st = dedupStateFor(spark, dir)
+    val cur = currentDir(spark, dedupBaseRoots.get(spark, dir))
+    val idx = loadMinhashIndex(spark, s"$cur/staged")
     val docs = Tables.documents(spark, dir)
     // the increment is materialized once (localCheckpoint, the repo's
     // standard materialize-the-invariant move): its signature frame
@@ -724,10 +707,11 @@ object TextOps {
     // layout) two verify sides
     val newStaged = stageDocs(docs.filter(isIncrementDoc))
       .localCheckpoint(true)
-    val inc = incrementPairs(stagedFrame(spark, st.index), newStaged,
-      st.index.joinBack, baseHot = Some(hotSetOf(spark, st.index)))
+    val inc = incrementPairs(stagedFrame(spark, idx), newStaged,
+      idx.joinBack, baseHot = Some(hotSetOf(spark, idx)))
     Components.flagCorpus(docs, "doc_id",
-      Components.extendLabels(graft.sources.Pq.read(spark, st.labelsPath), inc))
+      Components.extendLabels(graft.sources.Pq.read(spark, s"$cur/labels"),
+        inc))
   }
 
   /** RE-CRAWL COMPACTION — the update half of the nightly posture that
@@ -742,52 +726,29 @@ object TextOps {
     * reachability, not which underlying near-dup pairs justified it —
     * a re-crawled document may have been the BRIDGE holding a
     * component together, and retiring it must SPLIT that component.
-    * So the nightly fit publishes the verified PAIR set (dup-set-sized
-    * — orders of magnitude smaller than the corpus) alongside the
-    * index, and compaction (1) anti-joins the re-crawled ids out of
-    * the staged index (stale signature retirement), (2) drops every
-    * published pair incident to a re-crawled id, (3) probes the
-    * re-crawled docs' NEW text against the retained index — the exact
-    * [[incrementPairs]] probe shape, increment-sized — and (4) relabels
-    * the repaired pair graph (retained ∪ fresh pairs), which is
-    * dup-set-sized, so the propagation cost matches the incremental
-    * path's. The re-crawl id set is increment-sized and broadcasts
-    * into every anti-join; the corpus itself never re-shingles.
-    * The updated index republishes as retained ∪ fresh staged rows
-    * (a parquet union write on the same schema — the artifact side of
-    * the same job).
-    */
-  private[graft] def compactClusters(baseStaged: DataFrame,
-    basePairs: DataFrame, recrawledDocs: DataFrame, corpus: DataFrame,
-    joinBack: Boolean, baseHot: Option[DataFrame] = None): DataFrame =
-    Components.flagCorpus(corpus, "doc_id",
-      Components.labelComponents(
-        compactPairs(baseStaged, basePairs, recrawledDocs, joinBack,
-          baseHot)))
-
-  /** The repaired pair graph of a compaction — retained published pairs
-    * (both ids surviving) ∪ fresh probes of the re-crawled text; the
-    * pair-stage is exposed so the plan audit can pin the broadcast
-    * anti-join retirement (the label propagation executes its input
-    * eagerly, so the declared query's final plan shows only the corpus
-    * flag join). */
-  private[graft] def compactPairs(baseStaged: DataFrame,
-    basePairs: DataFrame, recrawledDocs: DataFrame,
-    joinBack: Boolean, baseHot: Option[DataFrame] = None): DataFrame =
-    compactState(baseStaged, basePairs,
-      recrawledDocs.select(col("doc_id")),
-      stageDocs(recrawledDocs).localCheckpoint(true), joinBack,
-      baseHot)._2
-
-  /** The retire + re-probe core shared by the batch compaction and the
-    * STREAMING wave sink: given the served (staged index, pair set)
-    * state, the re-crawl id set, and the re-crawled docs' staged
-    * signatures, returns (repaired staged index = retained ∪ fresh
-    * rows, repaired pair set = surviving pairs ∪ fresh probes). The
-    * fit-time hot set is a conservative SUPERSET after retirement for
-    * the probe at hand (buckets only shrink) — correct per the
-    * emitOnce contract; the streaming publication recomputes it over
-    * the repaired index so the NEXT wave probes an exact set. */
+    * So the published state carries the verified PAIR set
+    * (dup-set-sized — orders of magnitude smaller than the corpus)
+    * alongside the index, and one compaction wave (1) anti-joins the
+    * re-crawled ids out of the staged index (stale signature
+    * retirement), (2) drops every published pair incident to a
+    * re-crawled id, and (3) probes the re-crawled docs' NEW text
+    * against the retained index — the exact [[incrementPairs]] probe
+    * shape, increment-sized; the caller relabels the repaired pair
+    * graph (retained ∪ fresh pairs), which is dup-set-sized, so the
+    * propagation cost matches the incremental path's. The re-crawl id
+    * set is increment-sized and broadcasts into every anti-join; the
+    * corpus itself never re-shingles.
+    *
+    * The core shared by the batch compaction queries and the
+    * STREAMING wave sink (both through [[compactWaveState]]): given
+    * the served (staged index, pair set) state, the re-crawl id set,
+    * and the re-crawled docs' staged signatures, returns (repaired
+    * staged index = retained ∪ fresh rows, repaired pair set =
+    * surviving pairs ∪ fresh probes). The published hot set is a
+    * conservative SUPERSET after retirement for the probe at hand
+    * (buckets only shrink) — correct per the emitOnce contract; the
+    * streaming publication recomputes it over the repaired index so
+    * the NEXT wave probes an exact set. */
   private[graft] def compactState(baseStaged: DataFrame,
     basePairs: DataFrame, ids: DataFrame, newStaged: DataFrame,
     joinBack: Boolean, baseHot: Option[DataFrame])
@@ -821,6 +782,10 @@ object TextOps {
     * root. */
   private[graft] val dedupCurrentMarker = "_graft_dedup_current"
 
+  /** The current version directory of a [[publishWaveState]] root. */
+  private[graft] def currentDir(spark: SparkSession, root: String): String =
+    s"$root/${graft.sources.Markers.read(spark, root, dedupCurrentMarker)}"
+
   /** How long [[publishWaveState]] waits for its index branch. A
     * benchmark-scale wave finishes it in well under a second; the
     * bound turns a wedged write into a loud micro-batch failure
@@ -838,8 +803,11 @@ object TextOps {
       t
     }
 
-  /** Transactional one-flip publication shared by every streaming
-    * compaction root (MinHash, SimHash, edit distance, embedding): the
+  /** Transactional one-flip publication shared by every near-dup
+    * lifecycle root (MinHash, SimHash, edit distance, embedding) — the
+    * streaming compaction sinks' waves and every `seed*` function, so
+    * the roots the batch incremental and compaction queries read are
+    * published by this same call: the
     * index under `indexName`, its `sidecar` (a hot set or edit stats,
     * recomputed over exactly the published rows so the next wave's
     * probe set is exact, not the seed's drifting superset), the
@@ -977,18 +945,19 @@ object TextOps {
   }
 
   /** One re-crawl wave applied to the CURRENT state of a dedup root —
-    * the batch [[compactState]] core reading its inputs from the
-    * served artifact: retire the wave's ids, probe their new text
-    * against the retained index. Returns (staged index, pairs) for
-    * [[publishWaveState]], which derives the labels. */
+    * the [[compactState]] core reading its inputs from the served
+    * artifact: retire the wave's ids, probe their new text against
+    * the retained index. Returns (staged index, pairs): the streaming
+    * sink hands both to [[publishWaveState]], which derives the
+    * labels; the batch compaction queries label the pairs. */
   private[graft] def compactWaveState(spark: SparkSession, root: String,
     recrawled: DataFrame): (DataFrame, DataFrame) = {
-    val v = graft.sources.Markers.read(spark, root, dedupCurrentMarker)
+    val cur = currentDir(spark, root)
     val joinBack = graft.sources.Markers.read(spark, root,
       "_graft_layout") == "joinback"
-    val staged = graft.sources.Pq.read(spark, s"$root/$v/staged")
-    val hot = Some(BandedJoins.loadHotSet(spark, s"$root/$v/staged"))
-    compactState(staged, graft.sources.Pq.read(spark, s"$root/$v/pairs"),
+    val staged = graft.sources.Pq.read(spark, s"$cur/staged")
+    val hot = Some(BandedJoins.loadHotSet(spark, s"$cur/staged"))
+    compactState(staged, graft.sources.Pq.read(spark, s"$cur/pairs"),
       recrawled.select(col("doc_id")),
       stageDocs(recrawled).localCheckpoint(true), joinBack, hot)
   }
@@ -999,7 +968,7 @@ object TextOps {
 
   /** Map an id-level pair frame onto SIGNATURE level through the two
     * sides' (doc_id, sig_hi, sig_lo) rep frames — the persistence
-    * transform of the SimHash compaction family ([[SimhashCompactState]]
+    * transform of the SimHash compaction family ([[seedSimhashRoot]]
     * scaladoc: sig-level pairs survive representative retirement,
     * id-level pairs would orphan groups). */
   private def sigLevel(idPairs: DataFrame, aSide: DataFrame,
@@ -1011,11 +980,20 @@ object TextOps {
         col("sig_hi").as("hi_b"), col("sig_lo").as("lo_b")), "doc_id_b")
       .select(col("hi_a"), col("lo_a"), col("hi_b"), col("lo_b"))
 
-  /** Seed a SimHash streaming-compaction root: per-doc signature
-    * table, SIG-level verified pair set, and label map under version
-    * `seed`, with the Hamming block plan `b` fixed at the root level
-    * for the root's lifetime (the [[seedDedupState]] rule: waves
-    * replace content, they do not re-decide plans mid-stream). */
+  /** Seed a SimHash compaction root: per-doc signature table,
+    * SIG-level verified pair set (hi_a, lo_a, hi_b, lo_b), and label
+    * map under version `seed`, with the Hamming block plan `b` —
+    * stats-driven over the distinct-sig reps (r14) — fixed at the root
+    * level for the root's lifetime (the [[seedDedupState]] rule: waves
+    * replace content, they do not re-decide plans mid-stream).
+    * Publishing pairs at SIGNATURE level — not rep-id level — is what
+    * makes retirement safe for this family: the clusters'
+    * identity-star edges hang off a representative, and retiring the
+    * representative would orphan its group if the edges were
+    * persisted as ids; signatures survive as long as ANY member does,
+    * and [[simhashWaveState]] re-elects representatives over the
+    * RETAINED members (an aggregation, not a join recompute) and maps
+    * the surviving sig pairs onto them. */
   private[graft] def seedSimhashRoot(spark: SparkSession,
       docs: DataFrame, root: String): Unit = {
     graft.sources.Pq.write(simhashMd5Halves(docs), s"$root/seed/sigs")
@@ -1047,57 +1025,60 @@ object TextOps {
   }
 
   /** One re-crawl wave applied to the CURRENT state of a SimHash
-    * root — [[qSimhashCompact]]'s retire → re-elect → map → probe →
-    * relabel steps reading the served artifact, returning (per-doc
-    * sigs, sig-level pairs, id-level label edges) for
-    * [[publishWaveState]]. */
+    * root — retire → re-elect → map → probe (the steps
+    * [[qSimhashCompact]] documents) reading the served artifact,
+    * returning (per-doc sigs, sig-level pairs, id-level label edges):
+    * the streaming sink publishes all three through
+    * [[publishWaveState]], the batch query labels the edges. */
   private[graft] def simhashWaveState(spark: SparkSession, root: String,
       batch: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val v = graft.sources.Markers.read(spark, root, dedupCurrentMarker)
+    val cur = currentDir(spark, root)
     val b = graft.sources.Markers.read(spark, root, "_graft_simhash_b")
       .toInt
     val ids = batch.select(col("doc_id"))
-    val retained = graft.sources.Pq.read(spark, s"$root/$v/sigs")
+    val retained = graft.sources.Pq.read(spark, s"$cur/sigs")
       .join(broadcast(ids), Seq("doc_id"), "left_anti")
     val repMap = retained.groupBy(col("sig_hi"), col("sig_lo"))
       .agg(min(col("doc_id")).as("rep")).localCheckpoint(true)
     val identity = retained.join(repMap, Seq("sig_hi", "sig_lo"))
       .filter(col("doc_id") =!= col("rep"))
       .select(col("doc_id").as("id_a"), col("rep").as("id_b"))
-    val keptSig = graft.sources.Pq.read(spark, s"$root/$v/pairs")
-      .join(repMap.select(col("sig_hi").as("hi_a"),
-        col("sig_lo").as("lo_a")), Seq("hi_a", "lo_a"), "left_semi")
-      .join(repMap.select(col("sig_hi").as("hi_b"),
-        col("sig_lo").as("lo_b")), Seq("hi_b", "lo_b"), "left_semi")
-      .localCheckpoint(true)
-    val keptIds = keptSig
+    // repMap is unique per signature, so one inner join both keeps the
+    // pairs whose two signatures survive and maps them onto the reps
+    val kept = graft.sources.Pq.read(spark, s"$cur/pairs")
       .join(repMap.select(col("sig_hi").as("hi_a"),
         col("sig_lo").as("lo_a"), col("rep").as("id_a")),
         Seq("hi_a", "lo_a"))
       .join(repMap.select(col("sig_hi").as("hi_b"),
         col("sig_lo").as("lo_b"), col("rep").as("id_b")),
         Seq("hi_b", "lo_b"))
-      .select(col("id_a"), col("id_b"))
-    val newSigs = simhashMd5Halves(batch).localCheckpoint(true)
+    val keptSig = kept.select(col("hi_a"), col("lo_a"), col("hi_b"),
+      col("lo_b"))
+    val keptIds = kept.select(col("id_a"), col("id_b"))
+    // kept, newSigs, cross and within each feed the labels AND a
+    // published artifact, yet stay unmaterialized: a batch query reads
+    // the labels only, and for increment-sized frames a second
+    // execution in the publish costs less than a materialization job
+    val newSigs = simhashMd5Halves(batch)
     val (newIdentity, newReps) = simhashCollapse(newSigs)
     val retainedReps = repMap.select(col("rep").as("doc_id"),
       col("sig_hi"), col("sig_lo"))
     val cross = simhashSigPairsBetween(retainedReps, newReps, b)
-      .select(col("doc_id_a"), col("doc_id_b")).localCheckpoint(true)
+      .select(col("doc_id_a"), col("doc_id_b"))
     val within = simhashSigPairs(newReps, b)
-      .select(col("doc_id_a"), col("doc_id_b")).localCheckpoint(true)
+      .select(col("doc_id_a"), col("doc_id_b"))
     val edges = identity.unionByName(keptIds).unionByName(newIdentity)
       .unionByName(cross.select(col("doc_id_a").as("id_a"),
         col("doc_id_b").as("id_b")))
       .unionByName(within.select(col("doc_id_a").as("id_a"),
         col("doc_id_b").as("id_b")))
     val sigs2 = retained.unionByName(newSigs)
-    // cross pairs: the a-side id is a RETAINED rep, the b-side a new
-    // rep; within pairs live wholly in the wave
-    val allReps = retainedReps.unionByName(newReps)
+    // cross pairs: the a-side id is a NEW rep, the b-side a retained
+    // one ([[simhashSigPairsBetween]]'s orientation); within pairs
+    // live wholly in the wave
     val pairs2 = keptSig.unionByName(
       sigLevel(cross.select(col("doc_id_a"), col("doc_id_b")),
-        allReps, newReps))
+        newReps, retainedReps))
       .unionByName(sigLevel(
         within.select(col("doc_id_a"), col("doc_id_b")),
         newReps, newReps))
@@ -1107,31 +1088,39 @@ object TextOps {
   // ── EDIT-DISTANCE STREAMING COMPACTION ROOT (r16 — the same shape
   // over the PassJoin compact core [[editWaveRepair]]) ──
 
-  /** Seed an edit-distance streaming-compaction root: the FLAT
-    * build-row segment index, the verified (id_a, id_b) pair set, and
-    * the label map under version `seed`. */
+  /** Seed an edit-distance compaction root: the FLAT build-row
+    * segment index (with its [[writeEditIndexStats]] sidecar), the
+    * verified (id_a, id_b) pair set, and the label map under version
+    * `seed`. The heads are keyed ONCE ([[editKeyedBase]]) for both
+    * publish chains; `shortsCap` lets the capped-cell fixtures
+    * star-reduce a small shorts cell. */
   private[graft] def seedEditRoot(spark: SparkSession, docs: DataFrame,
-      root: String, d: Int = 3): Unit =
+      root: String, d: Int = 3,
+      shortsCap: Int = BandedJoins.defaultHotBucketCap): Unit = {
+    val keyed = editKeyedBase(docs, 30)
     publishWaveState(spark, root, "seed", "index",
-      editBuildRows(editKeyedHeads(docs, 30), d)
+      editBuildRows(keyed, d, shortsCap)
         .select(col("doc_id"), col("lang"), col("head"), col("len"),
           col("kseg.idx").as("idx"), col("kseg.seg").as("seg")),
-      editDistancePairs(docs, 30, d)
+      editDistancePairsKeyed(keyed, d, shortsCap)
         .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b")),
-      0, writeEditIndexStats(spark, _))
+      0, writeEditIndexStats(spark, _, d))
+  }
 
   /** One re-crawl wave applied to the CURRENT state of an
     * edit-distance root — [[editWaveRepair]] reading the served
-    * artifact, returning (repaired index, repaired pairs) for
-    * [[publishWaveState]]. */
+    * artifact and gated by the served version's published counts
+    * (no emptiness-probe job), returning (repaired index, repaired
+    * pairs) for [[publishWaveState]] or a batch query's labels. */
   private[graft] def editWaveState(spark: SparkSession, root: String,
       batch: DataFrame, d: Int = 3): (DataFrame, DataFrame) = {
-    val v = graft.sources.Markers.read(spark, root, dedupCurrentMarker)
+    val cur = currentDir(spark, root)
+    val stats = loadEditIndexStats(spark, s"$cur/index", d)
     val (edges, index2) = editWaveRepair(spark,
-      graft.sources.Pq.read(spark, s"$root/$v/index"),
-      graft.sources.Pq.read(spark, s"$root/$v/pairs"), batch, d,
-      loadEditHotSet(spark, s"$root/$v/index"),
-      loadEditLens(spark, s"$root/$v/index"))
+      graft.sources.Pq.read(spark, s"$cur/index"),
+      graft.sources.Pq.read(spark, s"$cur/pairs"),
+      batch, d, stats.hotCells, Some(stats.lens),
+      noShortRows = stats.shortRows == 0L)
     (index2, edges)
   }
 
@@ -1143,98 +1132,73 @@ object TextOps {
   private[graft] def isRecrawlDoc: Column =
     pmod(xxhash64(col("doc_id")), lit(7)) === 0
 
-  /** Fitted compaction base state: yesterday's published index and
-    * verified pair set, both fitted over the corpus WITH STALE TEXT for
-    * the re-crawl subset (the revision the crawler supersedes tonight).
-    */
-  private[graft] case class CompactState(index: MinHashIndex,
-    pairsPath: String)
-
-  private val fittedCompactState = new FitCache[CompactState]((s, d) => {
-    val stale = Tables.documents(s, d).withColumn("text",
+  /** The stale revision the MinHash and SimHash compaction fixtures
+    * seed over: the re-crawl subset's text carries a marker the
+    * crawler supersedes tonight. */
+  private[graft] def staleRecrawlText(docs: DataFrame): DataFrame =
+    docs.withColumn("text",
       when(isRecrawlDoc,
         concat(col("text"), lit(" legacyrev legacyrev stale marker")))
         .otherwise(col("text")))
-    val idx = minhashFit(s, stale, graft.sources.TempDirs
-      .scratchDir("graft_compact_base_index").toString)
-    val staged = stagedFrame(s, idx)
-    val basePairs =
-      if (idx.joinBack) pairsJoinBackStaged(staged, Some(hotSetOf(s, idx)))
-      else pairsCarriedStaged(staged, Some(hotSetOf(s, idx)))
-    val pp = graft.sources.TempDirs
-      .scratchDir("graft_compact_base_pairs").toString
-    graft.sources.Pq.write(basePairs, pp)
-    CompactState(idx, pp)
-  })
-  private[graft] def compactStateFor(spark: SparkSession,
-    dir: String): CompactState = fittedCompactState.get(spark, dir)
 
-  /** Declared compaction query: the base index was fitted with STALE
+  /** Compaction base root: yesterday's published index and verified
+    * pair set, seeded over the corpus WITH STALE TEXT for the re-crawl
+    * subset (the revision the crawler supersedes tonight). */
+  private[graft] val dedupCompactRoots =
+    FitCache.seededRoots("graft_dedup_compact") { (s, d, root) =>
+      seedDedupState(s, staleRecrawlText(Tables.documents(s, d)), root)
+    }
+
+  /** Declared compaction query: the base root was seeded with STALE
     * text for the ~14% re-crawl subset; tonight those documents arrive
-    * with their TRUE text. After retirement + re-pairing + relabeling,
-    * the cluster flags must equal a FULL RECOMPUTE over the true
-    * corpus — which is exactly the documents table, so the same
-    * full-corpus reachability SQL as [[qDedupClusters]] is the oracle:
-    * a stale pair that survives retirement, a missed re-pair, or an
-    * unsplit bridged component all fail the hash compare loudly.
+    * with their TRUE text as ONE [[compactWaveState]] wave on it — the
+    * streaming sink's wave, labelled instead of published. After
+    * retirement + re-pairing + relabeling, the cluster flags must
+    * equal a FULL RECOMPUTE over the true corpus — which is exactly
+    * the documents table, so the same full-corpus reachability SQL as
+    * [[qDedupClusters]] is the oracle: a stale pair that survives
+    * retirement, a missed re-pair, or an unsplit bridged component all
+    * fail the hash compare loudly.
     */
   def qDedupCompact(spark: SparkSession, dir: String): DataFrame = {
-    val st = compactStateFor(spark, dir)
     val docs = Tables.documents(spark, dir)
-    compactClusters(stagedFrame(spark, st.index),
-      graft.sources.Pq.read(spark, st.pairsPath),
-      docs.filter(isRecrawlDoc), docs, st.index.joinBack,
-      baseHot = Some(hotSetOf(spark, st.index)))
+    Components.flagCorpus(docs, "doc_id", Components.labelComponents(
+      compactWaveState(spark, dedupCompactRoots.get(spark, dir),
+        docs.filter(isRecrawlDoc))._2))
   }
 
   /** EP6 — the UNIFIED NIGHTLY dedup job: a real crawl delivers BOTH
     * brand-new documents and re-crawls of existing ones in one batch,
-    * and [[compactClusters]] already IS that job — retirement and
+    * and one compaction wave already IS that job — retirement and
     * pair-drop anti-joins are no-ops for ids absent from the base, the
     * increment probe pairs the whole crawl against the retained index,
     * and the within self-join covers new-vs-new, new-vs-recrawled, and
     * recrawled-vs-recrawled alike. So the composed nightly pipeline is
-    * ONE operator call over the combined crawl; what this declared
-    * query adds is the fit posture (a base that is missing tonight's
-    * new ids AND holds stale text for tonight's re-crawls — the state
-    * an actual nightly wakes up to) and the oracle claim that the
-    * whole composition equals a full recompute of the true corpus.
-    * Crawl split: ~20% new ([[isIncrementDoc]]), plus ~11% of the rest
-    * re-crawled ([[isRecrawlDoc]] on the remainder).
+    * ONE [[compactWaveState]] call over the combined crawl; what this
+    * declared query adds is the seed posture (a base that is missing
+    * tonight's new ids AND holds stale text for tonight's re-crawls —
+    * the state an actual nightly wakes up to) and the oracle claim
+    * that the whole composition equals a full recompute of the true
+    * corpus. Crawl split: ~20% new ([[isIncrementDoc]]), plus ~11% of
+    * the rest re-crawled ([[isRecrawlDoc]] on the remainder).
     */
   def qPipelineNightly(spark: SparkSession, dir: String): DataFrame = {
-    val st = nightlyStateFor(spark, dir)
     val docs = Tables.documents(spark, dir)
     val crawl = docs.filter(isIncrementDoc ||
       (!isIncrementDoc && isRecrawlDoc))
-    compactClusters(stagedFrame(spark, st.index),
-      graft.sources.Pq.read(spark, st.pairsPath), crawl, docs, st.index.joinBack,
-      baseHot = Some(hotSetOf(spark, st.index)))
+    Components.flagCorpus(docs, "doc_id", Components.labelComponents(
+      compactWaveState(spark, nightlyRoots.get(spark, dir), crawl)._2))
   }
 
-  /** Nightly base state: the corpus MINUS tonight's new documents,
-    * with stale text for tonight's re-crawls — published index +
-    * verified pairs, the artifacts yesterday's run left behind. */
-  private val fittedNightlyState = new FitCache[CompactState]((s, d) => {
-    val base = Tables.documents(s, d).filter(!isIncrementDoc)
-      .withColumn("text",
-        when(isRecrawlDoc,
-          concat(col("text"), lit(" legacyrev legacyrev stale marker")))
-          .otherwise(col("text")))
-    val idx = minhashFit(s, base, graft.sources.TempDirs
-      .scratchDir("graft_nightly_base_index").toString)
-    val staged = stagedFrame(s, idx)
-    val hot = Some(hotSetOf(s, idx))
-    val basePairs =
-      if (idx.joinBack) pairsJoinBackStaged(staged, hot)
-      else pairsCarriedStaged(staged, hot)
-    val pp = graft.sources.TempDirs
-      .scratchDir("graft_nightly_base_pairs").toString
-    graft.sources.Pq.write(basePairs, pp)
-    CompactState(idx, pp)
-  })
-  private[graft] def nightlyStateFor(spark: SparkSession,
-    dir: String): CompactState = fittedNightlyState.get(spark, dir)
+  /** Nightly base root: the corpus MINUS tonight's new documents, with
+    * stale text for tonight's re-crawls — the published index and
+    * verified pairs yesterday's run left behind. */
+  private[graft] val nightlyRoots =
+    FitCache.seededRoots("graft_nightly") { (s, d, root) =>
+      seedDedupState(s,
+        staleRecrawlText(Tables.documents(s, d).filter(!isIncrementDoc)),
+        root)
+    }
 
   /** EXACT DUPLICATE-SPAN contamination — the substring-dedup family
     * (the published exact-span recipe: flag long token spans that recur
@@ -2000,9 +1964,6 @@ object TextOps {
     * it must be fitted and published alongside). */
   private[graft] case class LmModelState(modelPath: String, bigN: Long)
 
-  private[graft] val lmFitInvocations =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Publish a fitted LM bigram model (r16, closing the r15 verdict's
     * fit-behind-FitCache item): top-K bigram counts as parquet, with
     * a row-count + corpus-total marker so a partial write can never
@@ -2010,7 +1971,6 @@ object TextOps {
     * state the serving path needs. */
   private[graft] def publishLmModel(spark: SparkSession, docs: DataFrame,
       k: Int, path: String): LmModelState = {
-    lmFitInvocations.incrementAndGet()
     val counts = docs.select(explode(bigramsOf).as("bigram"))
       .groupBy(col("bigram")).agg(count(lit(1)).as("n"))
       .localCheckpoint(true) // ONE fit exchange feeds both the top-K
@@ -2041,7 +2001,7 @@ object TextOps {
   /** One published LM model per (JVM, corpus dir) — the declared
     * query scores against the artifact; only the first call pays the
     * fit ([[FitCache]] one-flight contract). */
-  private val fittedLmModel = new FitCache[LmModelState]((s, d) =>
+  private[graft] val fittedLmModel = new FitCache[LmModelState]((s, d) =>
     publishLmModel(s, Tables.documents(s, d), 10000,
       graft.sources.TempDirs.scratchDir("graft_lm_model").toString))
 
@@ -2134,16 +2094,12 @@ object TextOps {
       graft.sources.Pq.read(spark, modelPath))
   }
 
-  private[graft] val classifierFitInvocations =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** One published centroid model per (JVM, corpus dir) (r16, closing
     * the r15 verdict's fit-behind-FitCache item): the declared query
     * scores against the marker-checked artifact
     * ([[publishClassifier]]); only the first call pays the
     * vocabulary-sized fit exchange. */
-  private val fittedClassifierModel = new FitCache[String]((s, d) => {
-    classifierFitInvocations.incrementAndGet()
+  private[graft] val fittedClassifierModel = new FitCache[String]((s, d) => {
     val p = graft.sources.TempDirs
       .scratchDir("graft_classifier_model").toString
     publishClassifier(s, Tables.documents(s, d), 2000, p)
@@ -2807,78 +2763,65 @@ object TextOps {
     * pruning set, see [[editBuildLens]]). */
   private[graft] val editLensDirName = "_graft_lens"
 
-  /** Publish the fit-time index statistics INSIDE the index directory
-    * — the hot-cell set (returning its row count, known at fit time so
-    * warm queries pay ZERO stats actions) and the (lang, blen)
-    * key-length population the probe side prunes against. Returns
-    * (hot-cell count, len ≤ d index-row count): the second is the r20
-    * shorts-branch gate — retirement only shrinks the population, so a
-    * fit-time zero proves the re-election/sliver branches empty for
-    * every later wave at the same distance bound. */
-  private[graft] def publishEditIndexStats(spark: SparkSession,
-      indexPath: String, d: Int): (Long, Long) = {
-    writeEditIndexStats(spark, indexPath)
-    val hotN = graft.sources.Pq
-      .read(spark, s"$indexPath/$editHotSetDirName").count()
-    val shortN = graft.sources.Pq.read(spark, indexPath)
-      .filter(col("len") <= d).count()
-    (hotN, shortN)
-  }
+  /** Marker holding a published index's hot-cell count. */
+  private[graft] val editHotCellsMarker = "_graft_hot_cells"
 
-  /** [[publishEditIndexStats]] without its two counts — the sidecar of
-    * every streaming edit root version: each version re-derives its
-    * own stats, so a wave's fresh build rows are folded in and the
-    * streaming-cap caveat never loosens the SALT bound across waves. */
+  /** Marker holding a published index's count of rows with len ≤ `d`
+    * — named by the bound, so a reader at another bound fails loudly
+    * instead of trusting a count taken under a different one. */
+  private[graft] def editShortRowsMarker(d: Int): String =
+    s"_graft_short_rows_d$d"
+
+  /** The sidecar every published PassJoin index version carries
+    * ([[seedEditRoot]] and each streaming wave, through
+    * [[publishWaveState]]), written INSIDE the index directory over
+    * exactly the rows published there: the (lang, blen) key-length
+    * population the probe side prunes against, the hot-cell set, and
+    * two count markers — the hot-cell count (zero skips the salted
+    * join's aggregate and probes) and the count of rows with len ≤ `d`
+    * (r20's shorts-branch gate: zero proves [[editWaveRepair]]'s
+    * re-election and sliver branches empty for the next probe at this
+    * bound). Both are per version, because a wave's fresh build rows
+    * can add hot cells and short rows. */
   private[graft] def writeEditIndexStats(spark: SparkSession,
-      indexPath: String): Unit = {
+      indexPath: String, d: Int = 3): Unit = {
     val idx = editIndexFrame(spark, indexPath)
+    val hotPath = s"$indexPath/$editHotSetDirName"
     graft.sources.Pq.write(editBuildLens(idx).coalesce(1),
       s"$indexPath/$editLensDirName")
     graft.sources.Pq.write(editHotCells(idx)
       .select(col("h_lang"), col("h_kseg.idx").as("idx"),
         col("h_kseg.seg").as("seg"), col("h_kseg.blen").as("blen"))
-      .coalesce(1), s"$indexPath/$editHotSetDirName")
+      .coalesce(1), hotPath)
+    graft.sources.Markers.write(spark, indexPath, editHotCellsMarker,
+      graft.sources.Pq.read(spark, hotPath).count().toString)
+    graft.sources.Markers.write(spark, indexPath, editShortRowsMarker(d),
+      graft.sources.Pq.read(spark, indexPath).filter(col("len") <= d)
+        .count().toString)
   }
 
-  /** The published key-length population of an index directory (None
-    * for a pre-sidecar root — callers fall back to the inline
-    * aggregate). Retirement only shrinks the true population, so the
-    * fit-time superset stays a correct pruning set. */
-  private[graft] def loadEditLens(spark: SparkSession,
-      indexPath: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/$editLensDirName")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else Some(graft.sources.Pq.read(spark, p.toString))
-  }
+  /** A published index's statistics in join-ready shape: the hot-cell
+    * variant (no action: the count marker decides it), the key-length
+    * population, and the len ≤ d row count. Retirement only shrinks
+    * the true hot cells and lengths, so a version's sets stay a
+    * correct superset for a wave probing it. */
+  private[graft] case class EditIndexStats(hotCells: EditHotCells,
+      lens: DataFrame, shortRows: Long)
 
-  /** The published hot set of an index directory in join-ready shape
-    * (fit-time `hotCount` decides the variant without any action). */
-  private[graft] def loadEditHotSet(spark: SparkSession,
-      indexPath: String, hotCount: Long): EditHotCells =
-    if (hotCount == 0L) NoHotCells
-    else PublishedHotCells(
-      graft.sources.Pq.read(spark, s"$indexPath/$editHotSetDirName")
-        .select(col("h_lang"),
-          struct(col("idx"), col("seg"), col("blen")).as("h_kseg")))
-
-  /** Sidecar-probing variant for the streaming wave path, where no
-    * fitted state carries the count: the sidecar is KB-sized, so the
-    * emptiness probe is a single-file action — still never a full
-    * index aggregate. A root published before the sidecar existed
-    * falls back to the inline aggregate. */
-  private[graft] def loadEditHotSet(spark: SparkSession,
-      indexPath: String): EditHotCells = {
-    val p = new org.apache.hadoop.fs.Path(
-      s"$indexPath/$editHotSetDirName")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) ComputeHotCells
-    else {
-      val f = graft.sources.Pq.read(spark, p.toString)
-        .select(col("h_lang"),
-          struct(col("idx"), col("seg"), col("blen")).as("h_kseg"))
-      if (f.isEmpty) NoHotCells else PublishedHotCells(f)
-    }
+  /** The one loader of [[writeEditIndexStats]]' sidecar. */
+  private[graft] def loadEditIndexStats(spark: SparkSession,
+      indexPath: String, d: Int): EditIndexStats = {
+    def marker(name: String): Long =
+      graft.sources.Markers.read(spark, indexPath, name).toLong
+    val hot =
+      if (marker(editHotCellsMarker) == 0L) NoHotCells
+      else PublishedHotCells(
+        graft.sources.Pq.read(spark, s"$indexPath/$editHotSetDirName")
+          .select(col("h_lang"),
+            struct(col("idx"), col("seg"), col("blen")).as("h_kseg")))
+    EditIndexStats(hot,
+      graft.sources.Pq.read(spark, s"$indexPath/$editLensDirName"),
+      marker(editShortRowsMarker(d)))
   }
 
   /** The published build-row index staged for the STREAMING intake:
@@ -2937,7 +2880,7 @@ object TextOps {
     * (d, 2d] heads, DP-verify, and emit ONE min-member edge per probe
     * doc. One edge suffices for labels because a capped cell's
     * retained members are always one component (kept star edges when
-    * the fit min survives, [[editCompactLabels]]'s repair stars when
+    * the fit min survives, [[editWaveRepair]]'s repair stars when
     * it was retired); member–member pair LISTING stays star-scoped by
     * the documented contract. Both scans sit behind pushed len ≤ d /
     * len ≤ 2d parquet filters; on every healthy corpus both sides are
@@ -2962,42 +2905,17 @@ object TextOps {
         greatest(col("p_id"), col("m_id")).as("id_b"))
   }
 
-  /** Fitted incremental edit-distance state ([[dedupStateFor]]'s
+  /** Incremental edit-distance base root ([[dedupBaseRoots]]'s
     * posture on the PassJoin family — r13 verdict item 3, the last
     * family without nightly members): yesterday's job published the
     * base split's BUILD-ROW segment index (the (lang, seg-idx,
     * seg-text) keys PassJoin already builds, shorts-star-reduced at
-    * fit time) and persisted the finished base label map. */
-  private[graft] case class EditState(indexPath: String,
-    labelsPath: String, hotCount: Long, shortRows: Long)
-
-  private[graft] val editFitInvocations =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private[graft] def fitEditState(s: SparkSession, base: DataFrame,
-      scratchTag: String,
-      shortsCap: Int = BandedJoins.defaultHotBucketCap): EditState = {
-    editFitInvocations.incrementAndGet()
-    val keyed = editKeyedBase(base, 30)
-    val ip = graft.sources.TempDirs
-      .scratchDir(scratchTag + "_index").toString
-    graft.sources.Pq.write(editBuildRows(keyed, 3, shortsCap)
-      .select(col("doc_id"), col("lang"), col("head"), col("len"),
-        col("kseg.idx").as("idx"), col("kseg.seg").as("seg")), ip)
-    // r17: the hot-cell set is FIT output, not query work — warm
-    // probes read the KB sidecar instead of re-aggregating the index
-    val (hotN, shortN) = publishEditIndexStats(s, ip, 3)
-    val lp = graft.sources.TempDirs
-      .scratchDir(scratchTag + "_labels").toString
-    graft.sources.Pq.write(Components.labelComponents(
-      editDistancePairsKeyed(keyed, 3, shortsCap).select(
-        col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b"))), lp)
-    EditState(ip, lp, hotN, shortN)
-  }
-
-  private val fittedEditState = new FitCache[EditState]((s, d) =>
-    fitEditState(s, Tables.documents(s, d).filter(!isIncrementDoc),
-      "graft_edit_base"))
+    * seed time), its statistics sidecar, and the finished base label
+    * map — [[seedEditRoot]]. */
+  private[graft] val editBaseRoots =
+    FitCache.seededRoots("graft_edit_base") { (s, d, root) =>
+      seedEditRoot(s, Tables.documents(s, d).filter(!isIncrementDoc), root)
+    }
 
   /** Incremental edit-distance clustering — the PassJoin family's
     * nightly member: the ~20% increment split ([[isIncrementDoc]])
@@ -3005,7 +2923,7 @@ object TextOps {
     * base segment index through the one-directional cross PassJoin
     * (bloom-pruned, increment-built), self-joins within the
     * increment, and the base label map extends through star edges —
-    * base heads are never re-keyed (fit-counter-pinned) and
+    * base heads are never re-keyed (fit-count-pinned) and
     * old-vs-old pairs never re-verified. ORACLE: the full recompute —
     * the same recursive reachability that checks [[qEditClusters]]
     * must hash-match this path. The [[editShortsSliverEdges]] probe
@@ -3013,77 +2931,46 @@ object TextOps {
     * so an increment head of length in (d, 2d] reaches a star-reduced
     * capped-cell member exactly as the full recompute would. */
   def qEditIncremental(spark: SparkSession, dir: String): DataFrame =
-    editIncrementalLabels(spark, fittedEditState.get(spark, dir),
+    editIncrementalLabels(spark, editBaseRoots.get(spark, dir),
       Tables.documents(spark, dir), isIncrementDoc, 3)
 
-  /** The incremental assembly behind [[qEditIncremental]],
-    * parameterized over the corpus, increment predicate, and distance
-    * bound (r16 — factored so the capped-cell fixtures exercise the
-    * same code the declared query runs). */
+  /** The incremental assembly behind [[qEditIncremental]] over a seeded
+    * edit root, parameterized over the corpus, increment predicate,
+    * and distance bound (r16 — factored so the capped-cell fixtures
+    * exercise the same code the declared query runs). */
   private[graft] def editIncrementalLabels(spark: SparkSession,
-      st: EditState, docs: DataFrame, increment: Column,
+      root: String, docs: DataFrame, increment: Column,
       d: Int): DataFrame = {
+    val cur = currentDir(spark, root)
+    val stats = loadEditIndexStats(spark, s"$cur/index", d)
     val inc = docs.filter(increment)
     val incKeyed = editKeyedBase(inc, 30)
-    // the cross probe's hot set is the FIT-published one (pruning only
+    // the cross probe's hot set is the PUBLISHED one (pruning only
     // shrinks cells — a superset stays correct); the within self-join
     // keeps the inline aggregate because its build IS the increment,
     // but shares the increment's ONE keyed materialization (r20)
     val cross = editCrossPairs(
-      editIndexPruned(spark, st.indexPath, incKeyed, d), incKeyed, d,
-      loadEditHotSet(spark, st.indexPath, st.hotCount),
-      loadEditLens(spark, st.indexPath))
+      editIndexPruned(spark, s"$cur/index", incKeyed, d), incKeyed, d,
+      stats.hotCells, Some(stats.lens))
     val within = editDistancePairsKeyed(incKeyed, d)
       .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b"))
-    // fit-stat gate (r20, guide §1.2): the sliver exists only for
-    // probe docs pairing with star-reduced len ≤ d index rows, and
-    // the fit counted those rows — zero at fit means zero forever
-    // (retirement only removes), so the healthy-corpus path skips the
-    // branch's scans and its union outright
+    // published-count gate (r20, guide §1.2): the sliver exists only
+    // for probe docs pairing with star-reduced len ≤ d index rows, and
+    // the sidecar counted those rows — zero means the healthy-corpus
+    // path skips the branch's scans and its union outright
     val edges0 = cross.select(col("id_a"), col("id_b"))
       .unionByName(within)
     val edges =
-      if (st.shortRows == 0L) edges0
+      if (stats.shortRows == 0L) edges0
       else edges0.unionByName(editShortsSliverEdges(
-        graft.sources.Pq.read(spark, st.indexPath), incKeyed, d))
+        graft.sources.Pq.read(spark, s"$cur/index"), incKeyed, d))
     Components.flagCorpus(docs, "doc_id",
-      Components.extendLabels(graft.sources.Pq.read(spark, st.labelsPath),
+      Components.extendLabels(graft.sources.Pq.read(spark, s"$cur/labels"),
         edges))
   }
 
-  /** Fitted edit-compaction base state: the published build-row index
-    * and VERIFIED pair set, fitted over the corpus with STALE text for
-    * the ~14% re-crawl subset — the marker PREPENDS (the MinHash/
-    * SimHash fixtures append, but this family's relation lives on the
-    * 30-char HEAD, and an appended marker past the head would leave
-    * the stale fixture vacuously identical to the truth). */
-  private[graft] case class EditCompactState(indexPath: String,
-    pairsPath: String, hotCount: Long, shortRows: Long)
-
-  /** Publish the edit-compaction base artifacts (build-row index +
-    * verified pair ids) over a corpus frame — the fit step of
-    * [[qEditCompact]], parameterized so the capped-shorts fixture can
-    * exercise the re-election path. */
-  private[graft] def editCompactFit(staleDocs: DataFrame, d: Int,
-      shortsCap: Int = BandedJoins.defaultHotBucketCap)
-      : EditCompactState = {
-    val keyed = editKeyedBase(staleDocs, 30)
-    val ip = graft.sources.TempDirs
-      .scratchDir("graft_edit_compact_index").toString
-    graft.sources.Pq.write(editBuildRows(keyed, d, shortsCap)
-      .select(col("doc_id"), col("lang"), col("head"), col("len"),
-        col("kseg.idx").as("idx"), col("kseg.seg").as("seg")), ip)
-    val (hotN, shortN) =
-      publishEditIndexStats(staleDocs.sparkSession, ip, d)
-    val pp = graft.sources.TempDirs
-      .scratchDir("graft_edit_compact_pairs").toString
-    graft.sources.Pq.write(editDistancePairsKeyed(keyed, d, shortsCap)
-      .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b")), pp)
-    EditCompactState(ip, pp, hotN, shortN)
-  }
-
-  /** The edit family's stale-text transform: a PER-DOC hash marker
-    * PREPENDED to the text (this family's relation lives on the
+  /** The edit family's stale revision of the re-crawl subset: a PER-DOC
+    * hash marker PREPENDED to the text (this family's relation lives on the
     * 30-char head, so the marker must move the head; the MinHash/
     * SimHash fixtures append). r16, found by the sf10 sweep: the
     * original SHARED prefix ("legacyrev stale marker ") made every
@@ -3094,22 +2981,24 @@ object TextOps {
     * ~100 000 distinct prefixes: still genuinely stale per doc
     * (digits never open a true head — the corpus is alphabetic), and
     * the fit's cell profile matches the real corpus at every scale. */
-  private[graft] def editStaleText: Column =
-    concat(pmod(xxhash64(col("doc_id")), lit(100000L)).cast("string"),
-      lit("legacyrev stale "), col("text"))
+  private[graft] def editStaleRecrawl(docs: DataFrame): DataFrame =
+    docs.withColumn("text", when(isRecrawlDoc,
+      concat(pmod(xxhash64(col("doc_id")), lit(100000L)).cast("string"),
+        lit("legacyrev stale "), col("text"))).otherwise(col("text")))
 
-  private val fittedEditCompact = new FitCache[EditCompactState](
-    (s, d) => editCompactFit(
-      Tables.documents(s, d).withColumn("text",
-        when(isRecrawlDoc, editStaleText).otherwise(col("text"))), 3))
-
-  private[graft] def editCompactStateFor(spark: SparkSession,
-    dir: String): EditCompactState = fittedEditCompact.get(spark, dir)
+  /** Edit-compaction base root: [[seedEditRoot]] over the corpus with
+    * STALE heads ([[editStaleRecrawl]]) for the ~14% re-crawl subset. */
+  private[graft] val editCompactRoots =
+    FitCache.seededRoots("graft_edit_compact") { (s, d, root) =>
+      seedEditRoot(s, editStaleRecrawl(Tables.documents(s, d)), root)
+    }
 
   /** Edit-distance RE-CRAWL COMPACTION — the family's update member
-    * (the [[qDedupCompact]] posture on PassJoin): the base artifacts
-    * hold STALE heads for the re-crawl subset; tonight those documents
-    * arrive with their TRUE text. Retirement is a broadcast anti-join
+    * (the [[qDedupCompact]] posture on PassJoin): the base root holds
+    * STALE heads for the re-crawl subset; tonight those documents
+    * arrive with their TRUE text as one [[editWaveState]] wave — the
+    * streaming sink's wave, labelled instead of published — and
+    * [[editWaveRepair]] does the work. Retirement is a broadcast anti-join
     * of the re-crawled ids out of the published build-row index; every
     * published pair incident to a re-crawled id drops (a stale head
     * may have justified it); the re-crawled docs' new heads probe the
@@ -3120,7 +3009,7 @@ object TextOps {
     * reachability SQL verbatim.
     *
     * SHORTS-CHANNEL RE-ELECTION (r15, ADVICE r14): above the shorts
-    * cap the fit publishes exactly ONE shorts-keyed build row per hot
+    * cap the seed publishes exactly ONE shorts-keyed build row per hot
     * lang (the cell's min id). If that doc is itself re-crawled,
     * plain retirement would empty the channel while retained len ≤ d
     * docs remain: re-crawl probes would lose the only build row the
@@ -3157,28 +3046,16 @@ object TextOps {
     * the cap has no published row of any kind to re-elect from — the
     * star contract already scopes zero-content docs out of the pair
     * stream. */
-  def qEditCompact(spark: SparkSession, dir: String): DataFrame =
-    editCompactLabels(spark, fittedEditCompact.get(spark, dir),
-      Tables.documents(spark, dir), isRecrawlDoc, 3)
-
-  /** The compaction core behind [[qEditCompact]], parameterized over
-    * the corpus, re-crawl predicate, and distance bound. */
-  private[graft] def editCompactLabels(spark: SparkSession,
-      st: EditCompactState, docs: DataFrame, recrawl: Column,
-      d: Int): DataFrame = {
-    val (edges, _) = editWaveRepair(spark,
-      graft.sources.Pq.read(spark, st.indexPath),
-      graft.sources.Pq.read(spark, st.pairsPath), docs.filter(recrawl), d,
-      loadEditHotSet(spark, st.indexPath, st.hotCount),
-      loadEditLens(spark, st.indexPath),
-      noShortRows = st.shortRows == 0L)
-    Components.flagCorpus(docs, "doc_id",
-      Components.labelComponents(edges))
+  def qEditCompact(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    Components.flagCorpus(docs, "doc_id", Components.labelComponents(
+      editWaveState(spark, editCompactRoots.get(spark, dir),
+        docs.filter(isRecrawlDoc))._2))
   }
 
-  /** ONE WAVE of the edit-distance compaction — the core shared by
-    * the batch [[editCompactLabels]] and the streaming
-    * [[editWaveState]] (r16): retirement, shorts-channel re-election
+  /** ONE WAVE of the edit-distance compaction — the frame-level core
+    * behind [[editWaveState]], which both the streaming sink and the
+    * batch [[qEditCompact]] run (r16): retirement, shorts-channel re-election
     * + star repair, the cross PassJoin probe, the within self-join,
     * and the (d, 2d] sliver, over a FLAT published index frame and a
     * published (id_a, id_b) pair frame. Returns (repaired edge set,
@@ -3209,11 +3086,11 @@ object TextOps {
         Seq("id_b"), "left_anti")
     // shorts-channel re-election + star repair (scaladoc above): langs
     // whose only shorts-keyed row was retired but whose cell still has
-    // retained members. FIT-STAT GATED (r20, guide §1.2): when the
-    // fit counted ZERO len ≤ d index rows, every frame below is
-    // provably empty for every wave at the same bound (retirement
-    // only removes rows) — the caller passes `noShortRows` and the
-    // wave skips the branches' scans, joins, and unions outright.
+    // retained members. COUNT GATED (r20, guide §1.2): when the
+    // served index version counted ZERO len ≤ d rows, every frame
+    // below is provably empty for this wave (retirement only removes
+    // rows) — the caller passes `noShortRows` and the wave skips the
+    // branches' scans, joins, and unions outright.
     val shortRepair =
       if (noShortRows) None
       else {
@@ -3238,11 +3115,11 @@ object TextOps {
           .select(col("min_id").as("id_a"), col("doc_id").as("id_b"))
         Some((reElected, repairStars))
       }
-    // the fit-published hot set stays valid here: retirement only
+    // the published hot set stays valid here: retirement only
     // shrinks cells, and the single re-elected shorts row per lang
     // cannot create a hot cell (superset-correctness on the trait);
     // same argument for the lens set — a re-elected shorts row's
-    // (lang, -1) entry was in the fit population by precondition
+    // (lang, -1) entry was in the published population by precondition
     // (re-election requires a retired shorts row for that lang)
     val crossBuild = shortRepair match {
       case Some((reElected, _)) => retained.unionByName(reElected)
@@ -3258,7 +3135,7 @@ object TextOps {
     // (d, 2d]-probe sliver (r16, ADVICE r15): re-crawled heads of
     // length in (d, 2d] vs RETAINED star-reduced capped-cell members
     // — the one pair mode the shorts channel cannot route; same
-    // fit-stat gate (its build side is the len ≤ d population)
+    // count gate (its build side is the len ≤ d population)
     val edges = shortRepair match {
       case Some((_, repairStars)) =>
         edges0.unionByName(repairStars)
@@ -3792,7 +3669,7 @@ object TextOps {
       .localCheckpoint(true), b)
   }
 
-  /** Fitted incremental-SimHash state (the [[dedupStateFor]] posture
+  /** Fitted incremental-SimHash state (the [[dedupBaseRoots]] posture
     * applied to this family): yesterday's nightly job computed the
     * base split's signatures ONCE, collapsed them to distinct-sig
     * representatives, published the rep table + block plan as a
@@ -3800,11 +3677,7 @@ object TextOps {
   private[graft] case class SimhashState(repsPath: String,
     labelsPath: String, b: Int)
 
-  private[graft] val simhashFitInvocations =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private val fittedSimhashState = new FitCache[SimhashState]((s, d) => {
-    simhashFitInvocations.incrementAndGet()
+  private[graft] val fittedSimhashState = new FitCache[SimhashState]((s, d) => {
     val base = Tables.documents(s, d).filter(!isIncrementDoc)
     val (identity, reps0) = simhashCollapse(simhashMd5Halves(base))
     val rp = graft.sources.TempDirs
@@ -3826,55 +3699,19 @@ object TextOps {
     SimhashState(rp, lp, b)
   })
 
-  /** Fitted SimHash compaction state — yesterday's artifacts fitted
-    * over the corpus WITH STALE TEXT for the re-crawl subset: the
-    * per-document signature table and the SIG-LEVEL verified pair set
-    * (hi_a, lo_a, hi_b, lo_b). Publishing pairs at SIGNATURE level —
-    * not rep-id level — is what makes retirement safe for this
-    * family: the clusters' identity-star edges hang off a
-    * representative, and retiring the representative would orphan its
-    * group if the edges were persisted as ids; signatures survive as
-    * long as ANY member does, and the compact job re-elects
-    * representatives over the RETAINED members (an aggregation, not a
-    * join recompute) and maps the surviving sig pairs onto them. */
-  private[graft] case class SimhashCompactState(sigsPath: String,
-    sigPairsPath: String, b: Int)
-
-  private[graft] val simhashCompactFitInvocations =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private val fittedSimhashCompact =
-    new FitCache[SimhashCompactState]((s, d) => {
-      simhashCompactFitInvocations.incrementAndGet()
-      val stale = Tables.documents(s, d).withColumn("text",
-        when(isRecrawlDoc,
-          concat(col("text"), lit(" legacyrev legacyrev stale marker")))
-          .otherwise(col("text")))
-      val sp = graft.sources.TempDirs
-        .scratchDir("graft_simhash_compact_sigs").toString
-      graft.sources.Pq.write(simhashMd5Halves(stale), sp)
-      val sigs = graft.sources.Pq.read(s, sp)
-      val reps = sigs.groupBy(col("sig_hi"), col("sig_lo"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"), col("sig_hi"), col("sig_lo"))
-        .localCheckpoint(true)
-      // stats-driven plan over the distinct-sig reps (r14), shared by
-      // the published pair set and every later probe through `b`
-      val b = simhashAutoPlan(reps, reps.count())
-      val pp = graft.sources.TempDirs
-        .scratchDir("graft_simhash_compact_pairs").toString
-      graft.sources.Pq.write(sigLevel(simhashSigPairs(reps, b), reps, reps),
-        pp)
-      SimhashCompactState(sp, pp, b)
-    })
-  private[graft] def simhashCompactStateFor(spark: SparkSession,
-    dir: String): SimhashCompactState =
-    fittedSimhashCompact.get(spark, dir)
+  /** SimHash compaction base root: [[seedSimhashRoot]] over the
+    * corpus WITH STALE TEXT for the re-crawl subset. */
+  private[graft] val simhashCompactRoots =
+    FitCache.seededRoots("graft_simhash_compact") { (s, d, root) =>
+      seedSimhashRoot(s, staleRecrawlText(Tables.documents(s, d)), root)
+    }
 
   /** SimHash RE-CRAWL COMPACTION — the family's update member (the
-    * [[qDedupCompact]] posture): the base artifacts were fitted with
-    * STALE text for the ~14% re-crawl subset ([[isRecrawlDoc]]);
-    * tonight those documents arrive with their TRUE text. The job:
+    * [[qDedupCompact]] posture): the base root was seeded with STALE
+    * text for the ~14% re-crawl subset ([[isRecrawlDoc]]); tonight
+    * those documents arrive with their TRUE text as one
+    * [[simhashWaveState]] wave — the streaming sink's wave, labelled
+    * instead of published. The wave:
     *
     *   1. retire the re-crawled ids from the per-doc sig table
     *      (broadcast anti-join — stale signature retirement);
@@ -3886,10 +3723,12 @@ object TextOps {
     *      reps (two sig-keyed joins — a signature with no surviving
     *      member drops its pairs, exactly right: its only text left
     *      with the re-crawl);
-    *   4. probe the re-crawled docs' NEW signatures against the
-    *      retained reps (the exact [[simhashSigPairsBetween]] cross
-    *      join, bloom-pruned, increment-sized) plus the within
-    *      self-join;
+    *   4. collapse the re-crawl batch to its own distinct-sig reps
+    *      (ADVICE r13: a boilerplate cluster re-crawled in one night
+    *      costs O(k) identity edges, not O(k²) candidate rows) and
+    *      probe them against the retained reps (the exact
+    *      [[simhashSigPairsBetween]] cross join, bloom-pruned,
+    *      increment-sized) plus the within self-join;
     *   5. relabel the repaired graph — dup-set-sized, the incremental
     *      path's propagation cost.
     *
@@ -3900,44 +3739,10 @@ object TextOps {
     * a leaked stale pair, a missed re-pair, or a split surviving
     * group all fail the hash compare loudly. */
   def qSimhashCompact(spark: SparkSession, dir: String): DataFrame = {
-    val st = simhashCompactStateFor(spark, dir)
     val docs = Tables.documents(spark, dir)
-    val ids = docs.filter(isRecrawlDoc).select(col("doc_id"))
-    val retained = graft.sources.Pq.read(spark, st.sigsPath)
-      .join(broadcast(ids), Seq("doc_id"), "left_anti")
-    val repMap = retained.groupBy(col("sig_hi"), col("sig_lo"))
-      .agg(min(col("doc_id")).as("rep"))
-      .localCheckpoint(true)
-    val identity = retained.join(repMap, Seq("sig_hi", "sig_lo"))
-      .filter(col("doc_id") =!= col("rep"))
-      .select(col("doc_id").as("id_a"), col("rep").as("id_b"))
-    val kept = graft.sources.Pq.read(spark, st.sigPairsPath)
-      .join(repMap.select(col("sig_hi").as("hi_a"),
-        col("sig_lo").as("lo_a"), col("rep").as("id_a")),
-        Seq("hi_a", "lo_a"))
-      .join(repMap.select(col("sig_hi").as("hi_b"),
-        col("sig_lo").as("lo_b"), col("rep").as("id_b")),
-        Seq("hi_b", "lo_b"))
-      .select(col("id_a"), col("id_b"))
-    // ADVICE r13: the re-crawl batch collapses to its own distinct-sig
-    // reps before any block join — a boilerplate cluster re-crawled in
-    // one night costs O(k) identity edges, not O(k²) candidate rows;
-    // probing reps only is connectivity-exact (Hamming-0 stars)
-    val (newIdentity, newReps) = simhashCollapse(
-      simhashMd5Halves(docs.filter(isRecrawlDoc)))
-    val cross = simhashSigPairsBetween(
-      repMap.select(col("rep").as("doc_id"), col("sig_hi"),
-        col("sig_lo")), newReps, st.b)
-    val within = simhashSigPairs(newReps, st.b)
-    val edges = identity
-      .unionByName(kept)
-      .unionByName(newIdentity)
-      .unionByName(cross.select(col("doc_id_a").as("id_a"),
-        col("doc_id_b").as("id_b")))
-      .unionByName(within.select(col("doc_id_a").as("id_a"),
-        col("doc_id_b").as("id_b")))
-    Components.flagCorpus(docs, "doc_id",
-      Components.labelComponents(edges))
+    Components.flagCorpus(docs, "doc_id", Components.labelComponents(
+      simhashWaveState(spark, simhashCompactRoots.get(spark, dir),
+        docs.filter(isRecrawlDoc))._3))
   }
 
   /** Incremental SimHash clustering — the family's nightly member

@@ -231,7 +231,7 @@ object Vectors {
     * query sized its corpus-wide shortlist with a per-call `count()`
     * job on the warm path; the count is a property of the published
     * index, known when it is built — the
-    * [[graft.operators.TextOps.publishEditIndexStats]] posture). −1
+    * [[graft.operators.TextOps.writeEditIndexStats]] posture). −1
     * means "not carried" (a hand-built model); readers fall back to
     * counting. */
   private[graft] case class IvfModel(nlist: Int,
@@ -821,41 +821,18 @@ object Vectors {
         greatest(col("id_a"), col("id_b")).as("id_b"), col("cosine"))
   }
 
-  /** Fitted embedding-dedup base state: the base split's staged
-    * signature parquet plus its finished label map — yesterday's
-    * nightly artifacts, fitted once per (JVM, dir) via [[FitCache]]. */
-  private[graft] case class EmbedDedupState(stagedPath: String,
-    labelsPath: String)
-
-  /** Incremented on every embedding base-state fit — lets the spec
-    * assert warm declared invocations never re-fit. */
-  private[graft] val embedFitInvocations =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** The deterministic split the declared incremental query simulates
     * a nightly increment with (~20% of vectors by id hash). */
   private[graft] def isIncrementVec: Column =
     pmod(xxhash64(col("vec_id")), lit(5)) === 0
 
-  private val fittedEmbedState = new FitCache[EmbedDedupState]((s, d) => {
-    embedFitInvocations.incrementAndGet()
-    val sp = graft.sources.TempDirs
-      .scratchDir("graft_embed_base_index").toString
-    graft.sources.Pq.write(stageVectors(unit(s, d).filter(!isIncrementVec)), sp)
-    // hot-set publication, same as the text fit: persisted inside the
-    // index, count published as the loud marker, probes read it instead
-    // of re-aggregating per query
-    val nHot = BandedJoins.publishHotSet(s, sp, "sigs", "band_sig")
-    graft.sources.Markers.write(s, sp, "_graft_hot_buckets", nHot.toString)
-    val lp = graft.sources.TempDirs
-      .scratchDir("graft_embed_base_labels").toString
-    graft.sources.Pq.write(Components.labelComponents(lshVerifiedPairsStaged(
-      graft.sources.Pq.read(s, sp), Some(BandedJoins.loadHotSet(s, sp)))
-      .select(col("id_a"), col("id_b"))), lp)
-    EmbedDedupState(sp, lp)
-  })
-  private[graft] def embedDedupStateFor(spark: SparkSession,
-    dir: String): EmbedDedupState = fittedEmbedState.get(spark, dir)
+  /** Embedding-dedup base root per (JVM, corpus dir): the base
+    * split's staged signatures (+ hot set), pairs and label map —
+    * yesterday's nightly artifacts, seeded by [[seedEmbedRoot]]. */
+  private[graft] val embedBaseRoots =
+    FitCache.seededRoots("graft_embed_base") { (s, d, root) =>
+      seedEmbedRoot(s, Tables.embeddings(s, d).filter(!isIncrementVec), root)
+    }
 
   /** Incremental embedding near-dup clustering — the declared query:
     * the ~20% increment is normalized+signed fresh (it IS the new
@@ -869,55 +846,46 @@ object Vectors {
     * behavior is pinned on planted ≥0.9-cosine cross-split clusters in
     * VectorsSpec). */
   def qDedupEmbedIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val st = embedDedupStateFor(spark, dir)
+    val cur = graft.operators.TextOps.currentDir(spark,
+      embedBaseRoots.get(spark, dir))
     val all = unit(spark, dir)
     val newStaged = stageVectors(all.filter(isIncrementVec))
       .localCheckpoint(true)
-    val inc = embedIncrementPairs(graft.sources.Pq.read(spark, st.stagedPath),
+    val inc = embedIncrementPairs(graft.sources.Pq.read(spark, s"$cur/staged"),
       newStaged,
-      baseHot = Some(BandedJoins.loadHotSet(spark, st.stagedPath)))
+      baseHot = Some(BandedJoins.loadHotSet(spark, s"$cur/staged")))
     Components.flagCorpus(all, "vec_id",
-      Components.extendLabels(graft.sources.Pq.read(spark, st.labelsPath), inc))
+      Components.extendLabels(graft.sources.Pq.read(spark, s"$cur/labels"),
+        inc))
   }
 
   /** RE-CRAWL COMPACTION, embedding modality — the twin of
-    * [[graft.operators.TextOps.compactClusters]] (same reasoning: a
+    * [[graft.operators.TextOps.compactState]] (same reasoning: a
     * re-embedded document's stale signature rows and published pairs
     * must retire BEFORE its new vector is paired in, and the label map
-    * alone cannot repair a retired bridge, so the fit publishes the
-    * verified pair set). Retirement and pair drops are broadcast
-    * anti-joins against the increment-sized re-embed id set; the fresh
-    * probe is the [[embedIncrementPairs]] shape; the relabeled graph is
-    * dup-set-sized. A production trigger for this path: an embedding
-    * MODEL upgrade re-embeds a corpus slice — ids unchanged, vectors
-    * superseded.
+    * alone cannot repair a retired bridge, so the published state
+    * carries the verified pair set). Retirement and pair drops are
+    * broadcast anti-joins against the increment-sized re-embed id set
+    * `ids`; the fresh probe is the [[embedIncrementPairs]] shape over
+    * the NEW vectors' staged signatures; the published hot set is a
+    * conservative superset after retirement. Returns (repaired staged
+    * index = retained ∪ new rows, repaired pair set = surviving pairs
+    * ∪ fresh probes); the caller relabels the dup-set-sized graph. A
+    * production trigger for this path: an embedding MODEL upgrade
+    * re-embeds a corpus slice — ids unchanged, vectors superseded.
     */
-  private[graft] def embedCompactClusters(baseStaged: DataFrame,
-    basePairs: DataFrame, recrawled: DataFrame,
-    corpus: DataFrame, baseHot: Option[DataFrame] = None): DataFrame =
-    Components.flagCorpus(corpus, "vec_id",
-      Components.labelComponents(
-        embedCompactPairs(baseStaged, basePairs, recrawled, baseHot)))
-
-  /** The repaired pair graph (retained ∪ fresh) — exposed for the plan
-    * audit, mirroring [[TextOps.compactPairs]]. `recrawled` is a
-    * (vec_id, u) unit-vector frame holding the NEW vectors. */
-  private[graft] def embedCompactPairs(baseStaged: DataFrame,
-    basePairs: DataFrame, recrawled: DataFrame,
-    baseHot: Option[DataFrame] = None): DataFrame = {
-    val ids = recrawled.select(col("vec_id"))
-    val retainedStaged = baseStaged
-      .join(broadcast(ids), Seq("vec_id"), "left_anti")
-    val newStaged = stageVectors(recrawled).localCheckpoint(true)
-    // fit-time hot set = conservative superset after retirement
-    val fresh = embedIncrementPairs(retainedStaged, newStaged, baseHot)
+  private[graft] def embedCompactState(baseStaged: DataFrame,
+      basePairs: DataFrame, ids: DataFrame, newStaged: DataFrame,
+      baseHot: Option[DataFrame]): (DataFrame, DataFrame) = {
+    val retained = baseStaged.join(broadcast(ids), Seq("vec_id"), "left_anti")
+    val fresh = embedIncrementPairs(retained, newStaged, baseHot)
     val kept = basePairs
       .join(broadcast(ids.select(col("vec_id").as("id_a"))),
         Seq("id_a"), "left_anti")
       .join(broadcast(ids.select(col("vec_id").as("id_b"))),
         Seq("id_b"), "left_anti")
-    kept.select(col("id_a"), col("id_b"))
-      .unionByName(fresh.select(col("id_a"), col("id_b")))
+    (retained.unionByName(newStaged), kept.select(col("id_a"), col("id_b"))
+      .unionByName(fresh.select(col("id_a"), col("id_b"))))
   }
 
   /** The deterministic re-embed subset the declared query simulates
@@ -926,44 +894,27 @@ object Vectors {
   private[graft] def isRecrawlVec: Column =
     pmod(xxhash64(col("vec_id")), lit(7)) === 0
 
-  /** Fitted embedding-compaction base state: the staged signature
-    * parquet and verified pair set over the corpus WITH STALE VECTORS
-    * (component-reversed — a deterministic stand-in for the previous
-    * embedding model's output) for the re-embed subset. */
-  private[graft] case class EmbedCompactState(stagedPath: String,
-    pairsPath: String)
+  /** Embedding-compaction base root: [[seedEmbedRoot]] over the
+    * corpus WITH STALE VECTORS (component-reversed — a deterministic
+    * stand-in for the previous embedding model's output) for the
+    * re-embed subset. */
+  private[graft] val embedCompactRoots =
+    FitCache.seededRoots("graft_embed_compact") { (s, d, root) =>
+      seedEmbedRoot(s, staleRecrawlVecs(Tables.embeddings(s, d)), root)
+    }
 
-  private val fittedEmbedCompact = new FitCache[EmbedCompactState](
-    (s, d) => {
-      val stale = Tables.embeddings(s, d)
-        .withColumn("embedding",
-          when(isRecrawlVec, reverse(col("embedding")))
-            .otherwise(col("embedding")))
-      val staleU = prepUnit(stale)
-      val sp = graft.sources.TempDirs
-        .scratchDir("graft_embed_compact_index").toString
-      graft.sources.Pq.write(stageVectors(staleU), sp)
-      BandedJoins.writeHotSet(s, sp, "sigs", "band_sig")
-      val pp = graft.sources.TempDirs
-        .scratchDir("graft_embed_compact_pairs").toString
-      graft.sources.Pq.write(lshVerifiedPairsStaged(
-        graft.sources.Pq.read(s, sp), Some(BandedJoins.loadHotSet(s, sp))), pp)
-      EmbedCompactState(sp, pp)
-    })
-  private[graft] def embedCompactStateFor(spark: SparkSession,
-    dir: String): EmbedCompactState = fittedEmbedCompact.get(spark, dir)
+  /** The stale-model revision of the re-embed subset: its vectors
+    * component-reversed. */
+  private[graft] def staleRecrawlVecs(vectors: DataFrame): DataFrame =
+    vectors.withColumn("embedding",
+      when(isRecrawlVec, reverse(col("embedding")))
+        .otherwise(col("embedding")))
 
-  /** (vec_id, u) normalization of any embeddings-shaped frame. */
-  private def prepUnit(vectors: DataFrame): DataFrame =
-    vectors.select(col("vec_id"), col("label"),
-      graft.functions.VectorFunctions.unitv(col("embedding")).as("u"))
-      .select(col("vec_id"), col("u"))
-
-  // ── EMBEDDING STREAMING COMPACTION ROOT (r16, r15 verdict item 3 —
-  // the [[graft.operators.TextOps.seedDedupState]] shape over the
+  // ── EMBEDDING COMPACTION ROOT (r16, r15 verdict item 3 — the
+  // [[graft.operators.TextOps.seedDedupState]] shape over the
   // embedding compact core) ──
 
-  /** Seed an embedding streaming-compaction root from a raw
+  /** Seed an embedding compaction root from a raw
     * (vec_id, …, embedding) frame: staged signatures (+ exact hot
     * set), verified pairs, and labels under version `seed`. The
     * staging is materialized once and feeds both publish chains; the
@@ -981,47 +932,35 @@ object Vectors {
   }
 
   /** One re-embed wave applied to the CURRENT state of an embedding
-    * root — retire, probe ([[embedIncrementPairs]] against the served
-    * hot set); returns (staged, pairs) for
-    * [[graft.operators.TextOps.publishWaveState]]. `batch` is raw
-    * (vec_id, embedding). */
+    * root — [[embedCompactState]] reading the served staged index,
+    * pairs and hot set; returns (staged, pairs) for
+    * [[graft.operators.TextOps.publishWaveState]] or a batch query's
+    * labels. `batch` is raw (vec_id, embedding). */
   private[graft] def embedWaveState(spark: SparkSession, root: String,
       batch: DataFrame): (DataFrame, DataFrame) = {
-    val v = graft.sources.Markers.read(spark, root,
-      graft.operators.TextOps.dedupCurrentMarker)
-    val staged = graft.sources.Pq.read(spark, s"$root/$v/staged")
-    val hot = Some(BandedJoins.loadHotSet(spark, s"$root/$v/staged"))
-    val ids = batch.select(col("vec_id"))
-    val retained = staged.join(broadcast(ids), Seq("vec_id"), "left_anti")
-    val newStaged = stageVectors(batch
-        .select(col("vec_id"), graft.functions.VectorFunctions
-          .unitv(col("embedding")).as("u")))
-      .localCheckpoint(true)
-    val fresh = embedIncrementPairs(retained, newStaged, hot)
-    val kept = graft.sources.Pq.read(spark, s"$root/$v/pairs")
-      .join(broadcast(ids.select(col("vec_id").as("id_a"))),
-        Seq("id_a"), "left_anti")
-      .join(broadcast(ids.select(col("vec_id").as("id_b"))),
-        Seq("id_b"), "left_anti")
-    (retained.unionByName(newStaged), kept.select(col("id_a"), col("id_b"))
-      .unionByName(fresh.select(col("id_a"), col("id_b"))))
+    val cur = graft.operators.TextOps.currentDir(spark, root)
+    embedCompactState(graft.sources.Pq.read(spark, s"$cur/staged"),
+      graft.sources.Pq.read(spark, s"$cur/pairs"),
+      batch.select(col("vec_id")),
+      stageVectors(batch.select(col("vec_id"), graft.functions
+        .VectorFunctions.unitv(col("embedding")).as("u")))
+        .localCheckpoint(true),
+      Some(BandedJoins.loadHotSet(spark, s"$cur/staged")))
   }
 
-  /** Declared embedding compaction: the base index holds reversed
+  /** Declared embedding compaction: the base root holds reversed
     * (stale-model) vectors for the ~14% re-embed subset; tonight they
-    * arrive re-embedded with the true vectors. After retirement +
-    * re-pairing + relabeling the flags must equal a full recompute over
-    * the true corpus — the same exact-reachability oracle as
-    * [[qDedupEmbedClusters]].
+    * arrive re-embedded with the true vectors as one [[embedWaveState]]
+    * wave — the streaming sink's wave, labelled instead of published.
+    * After retirement + re-pairing + relabeling the flags must equal a
+    * full recompute over the true corpus — the same exact-reachability
+    * oracle as [[qDedupEmbedClusters]].
     */
-  def qDedupEmbedCompact(spark: SparkSession, dir: String): DataFrame = {
-    val st = embedCompactStateFor(spark, dir)
-    val all = unit(spark, dir)
-    embedCompactClusters(graft.sources.Pq.read(spark, st.stagedPath),
-      graft.sources.Pq.read(spark, st.pairsPath),
-      all.filter(isRecrawlVec), all,
-      baseHot = Some(BandedJoins.loadHotSet(spark, st.stagedPath)))
-  }
+  def qDedupEmbedCompact(spark: SparkSession, dir: String): DataFrame =
+    Components.flagCorpus(unit(spark, dir), "vec_id",
+      Components.labelComponents(embedWaveState(spark,
+        embedCompactRoots.get(spark, dir),
+        Tables.embeddings(spark, dir).filter(isRecrawlVec))._2))
 
   /** LSH-bucketed embedding near-dup — the scale path for
     * [[qDedupEmbed]] (same exact-baseline / banded-scale pairing as the

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Schema-cached parquet reads for published artifacts (r19
@@ -37,9 +38,22 @@ object Pq {
 
   /** Overwrite `path` with `df` and record the written schema as a
     * parquet read returns it: every field nullable, recursively (a
-    * file source never trusts the writer's non-null claims). */
+    * file source never trusts the writer's non-null claims).
+    *
+    * A driver-built frame (one whose optimized plan is a
+    * `LocalRelation`, e.g. a driver-solved label map) is written as
+    * ONE slice: Spark's local scan splits it into min(rows,
+    * defaultParallelism) slices, so a ~100-row map landed as one task
+    * and one file per core, most of them footer-only. Anything that
+    * scans data keeps its partitioning. The leaf check runs first, so
+    * a scan-backed plan pays no extra optimizer pass. */
   def write(df: DataFrame, path: String): Unit = {
-    df.write.mode("overwrite").parquet(path)
+    val driverBuilt =
+      df.queryExecution.analyzed.collectLeaves().forall(
+        _.isInstanceOf[LocalRelation]) &&
+        df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    (if (driverBuilt) df.coalesce(1) else df)
+      .write.mode("overwrite").parquet(path)
     schemaCache.put(path, nullable(df.schema).asInstanceOf[StructType])
   }
 

@@ -964,7 +964,10 @@ object Streams {
   /** The retire → probe → relabel → ONE-FLIP wave shape shared by
     * every modality's streaming compaction sink (r16, r15 verdict
     * item 3 — [[dedupCompactSink]]'s exactly-once argument
-    * genericized): each micro-batch derives a qid-bound version; a
+    * genericized). Each sink's wave function is the same one its
+    * family's batch compaction query runs on a seeded root, so the
+    * batch query is one such wave, labelled instead of published:
+    * each micro-batch derives a qid-bound version; a
     * replay whose version is already current is short-circuited
     * BEFORE any state is read (waves are not idempotent — re-retiring
     * ids whose fresh rows were just published would corrupt the

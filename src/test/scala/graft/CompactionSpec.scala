@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Components, TextOps, Vectors}
@@ -31,6 +32,17 @@ class CompactionSpec extends SparkTestBase {
       (11L, toks(40, "g").mkString(" "))).toDF("doc_id", "text")
   }
 
+  /** One compaction wave through the MinHash frame-level core
+    * ([[TextOps.compactState]]), relabelled and joined to `corpus` —
+    * what the declared compaction queries run over a seeded root. */
+  private def compactFlags(baseStaged: DataFrame, basePairs: DataFrame,
+      recrawled: DataFrame, corpus: DataFrame): DataFrame =
+    Components.flagCorpus(corpus, "doc_id", Components.labelComponents(
+      TextOps.compactState(baseStaged, basePairs,
+        recrawled.select(col("doc_id")),
+        TextOps.stageDocs(recrawled).localCheckpoint(true),
+        joinBack = false, baseHot = None)._2))
+
   private def trueDocs = {
     import spark.implicits._
     Seq((1L, aText), (2L, bNew), (3L, cText),
@@ -51,8 +63,8 @@ class CompactionSpec extends SparkTestBase {
     val basePairs = TextOps.pairsCarriedStaged(baseStaged)
       .localCheckpoint(true)
     val recrawled = Seq((2L, bNew)).toDF("doc_id", "text")
-    val out = TextOps.compactClusters(baseStaged, basePairs, recrawled,
-      trueDocs, joinBack = false).collect()
+    val out = compactFlags(baseStaged, basePairs, recrawled, trueDocs)
+      .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
     // full recompute over the true corpus: everything is a singleton
     Seq(1L, 2L, 3L, 10L, 11L).foreach { id =>
@@ -82,8 +94,8 @@ class CompactionSpec extends SparkTestBase {
     val baseStaged = TextOps.stageDocs(staleDocs).localCheckpoint(true)
     val basePairs = TextOps.pairsCarriedStaged(baseStaged)
       .localCheckpoint(true)
-    val got = TextOps.compactClusters(baseStaged, basePairs, recrawled,
-      newCorpus, joinBack = false).collect().map(_.toSeq).toSeq
+    val got = compactFlags(baseStaged, basePairs, recrawled, newCorpus)
+      .collect().map(_.toSeq).toSeq
     val want = TextOps.dedupClusters(newCorpus).collect()
       .map(_.toSeq).toSeq
     assert(got == want)
@@ -118,9 +130,12 @@ class CompactionSpec extends SparkTestBase {
     assert(basePairs.select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet ==
       Set((1L, 2L), (2L, 3L)))
-    val out = Vectors.embedCompactClusters(baseStaged, basePairs,
-      trueU.filter(org.apache.spark.sql.functions.col("vec_id") === 2L),
-      trueU).collect()
+    val recrawled = trueU.filter(col("vec_id") === 2L)
+    val out = Components.flagCorpus(trueU, "vec_id",
+      Components.labelComponents(Vectors.embedCompactState(baseStaged,
+        basePairs, recrawled.select(col("vec_id")),
+        Vectors.stageVectors(recrawled).localCheckpoint(true), None)._2))
+      .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
     Seq(1L, 2L, 3L, 10L).foreach { id =>
       assert(out(id) == ((id, true)), s"vec $id: ${out(id)}")
@@ -156,8 +171,8 @@ class CompactionSpec extends SparkTestBase {
     val baseStaged = TextOps.stageDocs(staleBase).localCheckpoint(true)
     val basePairs = TextOps.pairsCarriedStaged(baseStaged)
       .localCheckpoint(true)
-    val got = TextOps.compactClusters(baseStaged, basePairs, crawl,
-      trueCorpus, joinBack = false).collect().map(_.toSeq).toSeq
+    val got = compactFlags(baseStaged, basePairs, crawl, trueCorpus)
+      .collect().map(_.toSeq).toSeq
     val want = TextOps.dedupClusters(trueCorpus).collect()
       .map(_.toSeq).toSeq
     assert(got == want)

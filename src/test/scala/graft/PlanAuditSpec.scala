@@ -283,13 +283,10 @@ class PlanAuditSpec extends SparkTestBase {
     // the exposed pair stage: stale-row retirement and pair drops must
     // be BROADCAST anti-joins — the re-crawl id set is increment-sized
     // and the corpus-sized index must not shuffle for it
-    import org.apache.spark.sql.functions.col
-    val st = TextOps.compactStateFor(spark, sfDir)
     val docs = graft.sources.Tables.documents(spark, sfDir)
-    val p = plan(TextOps.compactPairs(
-      TextOps.stagedFrame(spark, st.index),
-      spark.read.parquet(st.pairsPath),
-      docs.filter(TextOps.isRecrawlDoc), st.index.joinBack))
+    val p = plan(TextOps.compactWaveState(spark,
+      TextOps.dedupCompactRoots.get(spark, sfDir),
+      docs.filter(TextOps.isRecrawlDoc))._2)
     val anti = "BroadcastHashJoin .*LeftAnti".r.findAllIn(p).length
     assert(anti >= 3, s"expected 3 broadcast anti-joins, got $anti:\n" +
       p.take(3000))

@@ -61,4 +61,31 @@ class PqSpec extends SparkTestBase {
     assert(cached == spark.read.parquet(p).schema)
     assert(Pq.read(spark, p).collect().toSeq == df.collect().toSeq)
   }
+
+  private def parquetFiles(p: String): Int =
+    Files.list(java.nio.file.Paths.get(p)).toArray
+      .count(_.toString.endsWith(".parquet"))
+
+  test("a driver-built frame lands as one file; a scan-backed frame " +
+      "keeps its partitioning") {
+    import spark.implicits._
+    val local = (1L to 100L).map(i => (i, i % 7)).toDF("node_id", "cluster_id")
+    assert(spark.sparkContext.defaultParallelism > 1)
+    val lp = tmp("graft_pq_local")
+    Pq.write(local, lp)
+    assert(parquetFiles(lp) == 1)
+    assert(Pq.read(spark, lp).orderBy("node_id").collect().toSeq ==
+      local.collect().toSeq)
+    // a frame read from parquet keeps the scan's three files, and a
+    // local relation joined to it is not driver-built
+    val src = tmp("graft_pq_src")
+    spark.range(0, 300, 1, 3).write.parquet(src)
+    val sp = tmp("graft_pq_scan")
+    Pq.write(spark.read.parquet(src), sp)
+    assert(parquetFiles(sp) == 3)
+    val jp = tmp("graft_pq_joined")
+    Pq.write(spark.read.parquet(src).join(local.withColumnRenamed("node_id", "id"), "id")
+      .repartition(2), jp)
+    assert(parquetFiles(jp) == 2)
+  }
 }

@@ -126,16 +126,21 @@ class RobustnessSpec extends SparkTestBase {
     val noneRecrawled = docs.filter(org.apache.spark.sql.functions
       .col("doc_id") < 0)
     // empty re-crawl set: compaction is a no-op relabel of the base
-    val out = TextOps.compactClusters(staged, pairs, noneRecrawled,
-      docs, joinBack = false).collect()
+    def compactFlags(recrawled: org.apache.spark.sql.DataFrame,
+        corpus: org.apache.spark.sql.DataFrame) =
+      graft.operators.Components.flagCorpus(corpus, "doc_id",
+        graft.operators.Components.labelComponents(TextOps.compactState(
+          staged, pairs, recrawled.select("doc_id"),
+          TextOps.stageDocs(recrawled).localCheckpoint(true),
+          joinBack = false, baseHot = None)._2))
+    val out = compactFlags(noneRecrawled, docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     assert(out == Set((1L, 1L, true), (2L, 2L, true)))
     // every document re-crawled: the base contributes nothing and the
     // result is a full recompute of the new text
     val allNew = Seq((1L, "one two three four"),
       (2L, "one two three four")).toDF("doc_id", "text")
-    val out2 = TextOps.compactClusters(staged, pairs, allNew, allNew,
-      joinBack = false).collect()
+    val out2 = compactFlags(allNew, allNew).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     assert(out2 == Set((1L, 1L, true), (2L, 1L, false)))
   }

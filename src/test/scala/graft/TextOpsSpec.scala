@@ -354,19 +354,20 @@ class TextOpsSpec extends SparkTestBase {
       case f: FileSourceScanExec => Seq(f)
       case other => other.children.flatMap(fileScans)
     }
-    val st = TextOps.dedupStateFor(spark, sfDir)
+    val baseIdx = TextOps.loadMinhashIndex(spark, TextOps.currentDir(spark,
+      TextOps.dedupBaseRoots.get(spark, sfDir)) + "/staged")
     val newIdx = TextOps.minhashFit(spark,
       spark.read.parquet(s"$sfDir/documents.parquet")
         .filter(TextOps.isIncrementDoc),
       java.nio.file.Files.createTempDirectory("graft_inc_probe").toString)
     val probe = TextOps.incrementPairs(
-      TextOps.stagedFrame(spark, st.index),
-      TextOps.stagedFrame(spark, newIdx), st.index.joinBack)
+      TextOps.stagedFrame(spark, baseIdx),
+      TextOps.stagedFrame(spark, newIdx), baseIdx.joinBack)
     probe.collect()
     val paths = fileScans(probe.queryExecution.executedPlan)
       .flatMap(_.relation.location.rootPaths.map(_.toString))
     assert(paths.nonEmpty)
-    assert(paths.forall(p => p.contains(st.index.stagedPath) ||
+    assert(paths.forall(p => p.contains(baseIdx.stagedPath) ||
       p.contains(newIdx.stagedPath)),
       s"probe plan scanned outside the published artifacts: $paths")
     // build-side audit (round-8 review): the cross probe's hash join
@@ -388,12 +389,12 @@ class TextOpsSpec extends SparkTestBase {
     // locate the cross join by the side that CANNOT move: the base
     // index scan (the within self-join never touches it) — then pin
     // the index to the stream side and the increment to the build side
-    val cross = joins.filter(j => scansPath(j, st.index.stagedPath))
+    val cross = joins.filter(j => scansPath(j, baseIdx.stagedPath))
     assert(cross.nonEmpty, "no join touches the base index — plan shape changed?")
     cross.foreach { j =>
       assert(j.buildSide == BuildRight)
-      assert(scansPath(j.left, st.index.stagedPath) &&
-        !scansPath(j.right, st.index.stagedPath),
+      assert(scansPath(j.left, baseIdx.stagedPath) &&
+        !scansPath(j.right, baseIdx.stagedPath),
         "cross probe must STREAM the corpus-sized index")
       assert(scansPath(j.right, newIdx.stagedPath),
         "cross probe must BUILD over the increment staging")
@@ -1007,10 +1008,10 @@ class TextOpsSpec extends SparkTestBase {
     // broadcast into the scoring join, nothing else.
     val q = TextOps.qLmScore(spark, sfDir)
     q.collect()
-    val fits = TextOps.lmFitInvocations.get()
+    val fits = TextOps.fittedLmModel.buildCount
     val q2 = TextOps.qLmScore(spark, sfDir)
     q2.collect()
-    assert(TextOps.lmFitInvocations.get() == fits,
+    assert(TextOps.fittedLmModel.buildCount == fits,
       "LM model fit re-ran on a warm query")
     val plan = q2.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
@@ -1030,10 +1031,10 @@ class TextOpsSpec extends SparkTestBase {
   test("classifier serve: fit runs once; served scores equal the " +
       "inline-fit formulation") {
     TextOps.qClassifySource(spark, sfDir).collect()
-    val fits = TextOps.classifierFitInvocations.get()
+    val fits = TextOps.fittedClassifierModel.buildCount
     val served = TextOps.qClassifySource(spark, sfDir)
     val rows = served.collect()
-    assert(TextOps.classifierFitInvocations.get() == fits,
+    assert(TextOps.fittedClassifierModel.buildCount == fits,
       "classifier fit re-ran on a warm query")
     def key(rs: Array[org.apache.spark.sql.Row]) = rs.map(r =>
       (r.getLong(0), r.getString(1), r.getDouble(2),
@@ -1598,6 +1599,24 @@ class TextOpsSpec extends SparkTestBase {
       s"first-match path: missing=${star -- oldPath} extra=${oldPath -- star}")
   }
 
+  /** A fresh edit root seeded over `docs` at d = 3. */
+  private def editRoot(docs: org.apache.spark.sql.DataFrame,
+      shortsCap: Int = graft.operators.BandedJoins.defaultHotBucketCap)
+      : String = {
+    val root = java.nio.file.Files.createTempDirectory("graft_edit_root")
+      .toString
+    TextOps.seedEditRoot(spark, docs, root, 3, shortsCap)
+    root
+  }
+
+  /** The declared edit compaction path on a seeded root: one wave of
+    * the `recrawl` subset, relabelled and joined to `docs`. */
+  private def editCompact(root: String, docs: org.apache.spark.sql.DataFrame,
+      recrawl: org.apache.spark.sql.Column) =
+    graft.operators.Components.flagCorpus(docs, "doc_id",
+      graft.operators.Components.labelComponents(
+        TextOps.editWaveState(spark, root, docs.filter(recrawl))._2))
+
   test("compact re-elects the shorts channel when the capped cell's " +
       "elected min is itself re-crawled") {
     import spark.implicits._
@@ -1620,19 +1639,17 @@ class TextOpsSpec extends SparkTestBase {
         .when(col("doc_id") === 101L,
           concat(lit("legacyrev stale marker "), col("text")))
         .otherwise(col("text")))
-    val st = graft.operators.TextOps.editCompactFit(stale, 3,
-      shortsCap = 8)
+    val root = editRoot(stale, shortsCap = 8)
     // non-vacuity: the fit elected doc 1 as the ONLY shorts row, so
     // retiring the re-crawl set leaves the channel empty
-    val shortRows = spark.read.parquet(st.indexPath)
+    val shortRows = spark.read.parquet(s"$root/seed/index")
       .filter(col("idx") === -1).select("doc_id").collect()
       .map(_.getLong(0)).toSet
     assert(shortRows == Set(1L),
       s"fixture must star-reduce to doc 1's shorts row, got $shortRows")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-    val compact = rows(graft.operators.TextOps.editCompactLabels(
-      spark, st, trueDocs, recrawl, 3))
+    val compact = rows(editCompact(root, trueDocs, recrawl))
     val full = rows(graft.operators.Components.flagCorpus(trueDocs,
       "doc_id", graft.operators.Components.labelComponents(
         graft.operators.TextOps.editDistancePairs(trueDocs, 30, 3,
@@ -1670,20 +1687,18 @@ class TextOpsSpec extends SparkTestBase {
     val stale = trueDocs.withColumn("text",
       when(recrawl, lit("wholly unrelated stale placeholder body"))
         .otherwise(col("text")))
-    val st = graft.operators.TextOps.editCompactFit(stale, 3,
-      shortsCap = 8)
+    val root = editRoot(stale, shortsCap = 8)
     // non-vacuity: the cell tripped the cap (only doc 1 keeps the
     // shorts row) and the retained min survives retirement, so the
     // r15 re-election path never fires — the sliver is the only
     // channel that can connect doc 50
-    val shortRows = spark.read.parquet(st.indexPath)
+    val shortRows = spark.read.parquet(s"$root/seed/index")
       .filter(col("idx") === -1).select("doc_id").collect()
       .map(_.getLong(0)).toSet
     assert(shortRows == Set(1L))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-    val compact = rows(graft.operators.TextOps.editCompactLabels(
-      spark, st, trueDocs, recrawl, 3))
+    val compact = rows(editCompact(root, trueDocs, recrawl))
     // comparator: the UNCAPPED recompute (cap never trips -> exact
     // PassJoin truth). Legal here because every (d, 2d] doc in the
     // fixture is re-crawled — the capped base self-join's own star
@@ -1711,14 +1726,13 @@ class TextOpsSpec extends SparkTestBase {
       else ('a' + (i % 5)).toChar.toString * (1 + i % 3))) ++ Seq(
       (100L, "en", "the quick brown fox jumps over the lazy dog")))
       .toDF("doc_id", "lang", "text")
-    val st = graft.operators.TextOps.fitEditState(spark, base,
-      "graft_edit_sliver_inc", shortsCap = 8)
+    val root = editRoot(base, shortsCap = 8)
     val docs = base.unionByName(
       Seq((50L, "en", "aaaa")).toDF("doc_id", "lang", "text"))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     val inc = rows(graft.operators.TextOps.editIncrementalLabels(
-      spark, st, docs, col("doc_id") === 50L, 3))
+      spark, root, docs, col("doc_id") === 50L, 3))
     val full = rows(graft.operators.Components.flagCorpus(docs,
       "doc_id", graft.operators.Components.labelComponents(
         graft.operators.TextOps.editDistancePairs(docs, 30, 3,
@@ -1746,11 +1760,13 @@ class TextOpsSpec extends SparkTestBase {
     val stale = docs.withColumn("text",
       when(recrawl, concat(lit("9871"), lit("legacyrev stale "),
         col("text"))).otherwise(col("text")))
-    val st = graft.operators.TextOps.editCompactFit(stale, 3)
-    assert(st.shortRows == 0L,
-      s"shorts-free fixture must fit shortRows=0, got ${st.shortRows}")
-    val idx = graft.sources.Pq.read(spark, st.indexPath)
-    val pairs = graft.sources.Pq.read(spark, st.pairsPath)
+    val root = editRoot(stale)
+    val shortN = TextOps.loadEditIndexStats(spark, s"$root/seed/index", 3)
+      .shortRows
+    assert(shortN == 0L,
+      s"shorts-free fixture must fit shortRows=0, got $shortN")
+    val idx = graft.sources.Pq.read(spark, s"$root/seed/index")
+    val pairs = graft.sources.Pq.read(spark, s"$root/seed/pairs")
     def edges(gate: Boolean) = graft.operators.TextOps.editWaveRepair(
       spark, idx, pairs, docs.filter(recrawl), 3,
       noShortRows = gate)._1
@@ -1763,8 +1779,8 @@ class TextOpsSpec extends SparkTestBase {
     val shorty = (docs.collect().map(r =>
       (r.getLong(0), r.getString(1), r.getString(2))).toSeq :+
       ((200L, "en", "ab"))).toDF("doc_id", "lang", "text")
-    val st2 = graft.operators.TextOps.editCompactFit(shorty, 3)
-    assert(st2.shortRows > 0L)
+    assert(TextOps.loadEditIndexStats(spark,
+      s"${editRoot(shorty)}/seed/index", 3).shortRows > 0L)
   }
 
   test("length-keyed candidate cells: a shared-segment cell across " +
@@ -1841,14 +1857,15 @@ class TextOpsSpec extends SparkTestBase {
         .map(_ => ('a' + rnd.nextInt(3)).toChar).mkString
       (i.toLong, "en", s"commonaacommonbbcommoncc$tail")
     }.toDF("doc_id", "lang", "text")
-    val st = graft.operators.TextOps.fitEditState(spark, base,
-      "graft_edit_hotset_spec")
-    assert(st.hotCount > 0, "fixture failed to saturate any cell")
-    val sidecar = spark.read.parquet(st.indexPath + "/" +
+    def hotCount(root: String): Long = graft.sources.Markers.read(spark,
+      s"$root/seed/index", TextOps.editHotCellsMarker).toLong
+    val root = editRoot(base)
+    assert(hotCount(root) > 0, "fixture failed to saturate any cell")
+    val sidecar = spark.read.parquet(s"$root/seed/index/" +
       graft.operators.TextOps.editHotSetDirName)
-    assert(sidecar.count() == st.hotCount)
+    assert(sidecar.count() == hotCount(root))
     // the index read itself must NOT see the sidecar rows
-    val idxCols = spark.read.parquet(st.indexPath).columns.toSet
+    val idxCols = spark.read.parquet(s"$root/seed/index").columns.toSet
     assert(idxCols == Set("doc_id", "lang", "head", "len", "idx", "seg"),
       idxCols.toString)
     val incText = base.collect()
@@ -1858,7 +1875,7 @@ class TextOpsSpec extends SparkTestBase {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     val inc = rows(graft.operators.TextOps.editIncrementalLabels(
-      spark, st, docs, col("doc_id") === 1000L, 3))
+      spark, root, docs, col("doc_id") === 1000L, 3))
     val full = rows(graft.operators.Components.flagCorpus(docs,
       "doc_id", graft.operators.Components.labelComponents(
         graft.operators.TextOps.editDistancePairs(docs, 30, 3)
@@ -1868,10 +1885,12 @@ class TextOpsSpec extends SparkTestBase {
     // the increment doc genuinely clustered through the hot cell
     assert(inc.find(_._1 == 1000L).exists(t => t._2 != 1000L || t._3))
     // and a healthy fit publishes an EMPTY set that short-circuits
-    val cold = graft.operators.TextOps.fitEditState(spark,
+    val cold = editRoot(
       Seq((1L, "en", "alpha beta"), (2L, "en", "gamma delta"))
-        .toDF("doc_id", "lang", "text"), "graft_edit_coldset_spec")
-    assert(cold.hotCount == 0L)
+        .toDF("doc_id", "lang", "text"))
+    assert(hotCount(cold) == 0L)
+    assert(TextOps.loadEditIndexStats(spark, s"$cold/seed/index", 3)
+      .hotCells == TextOps.NoHotCells)
   }
 
   test("edit incremental and compact equal the full recompute; fits " +
@@ -1881,9 +1900,9 @@ class TextOpsSpec extends SparkTestBase {
     val full = key(graft.operators.TextOps.qEditClusters(spark, sfDir))
     val inc = key(graft.operators.TextOps.qEditIncremental(spark, sfDir))
     assert(inc == full, "edit incremental diverged from full recompute")
-    val fitsAfter = graft.operators.TextOps.editFitInvocations.get()
+    val fitsAfter = graft.operators.TextOps.editBaseRoots.buildCount
     key(graft.operators.TextOps.qEditIncremental(spark, sfDir))
-    assert(graft.operators.TextOps.editFitInvocations.get() == fitsAfter,
+    assert(graft.operators.TextOps.editBaseRoots.buildCount == fitsAfter,
       "edit base fit re-ran on a warm query")
     assert(key(graft.operators.TextOps.qEditCompact(spark, sfDir))
       == full, "edit compaction diverged from full recompute")
@@ -1903,8 +1922,8 @@ class TextOpsSpec extends SparkTestBase {
       "true heads unexpectedly open with the stale marker's digits")
     // and the published index genuinely holds marked heads for them
     val staleHeads = spark.read.parquet(
-        graft.operators.TextOps.editCompactStateFor(spark, sfDir)
-          .indexPath)
+        graft.operators.TextOps.editCompactRoots.get(spark, sfDir) +
+          "/seed/index")
       .select("doc_id", "head").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(recHeads.keys.forall(id =>
@@ -2093,13 +2112,13 @@ class TextOpsSpec extends SparkTestBase {
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     val full = key(graft.operators.TextOps.qSimhashClusters(spark, sfDir))
-    val fitsBefore = graft.operators.TextOps.simhashFitInvocations.get()
+    val fitsBefore = graft.operators.TextOps.fittedSimhashState.buildCount
     val inc = key(graft.operators.TextOps.qSimhashIncremental(spark, sfDir))
     assert(inc == full, "incremental path diverged from full recompute")
     // a second invocation serves from the published artifacts — the
     // base corpus is never re-signed (the minhash fitInvocations pin)
     key(graft.operators.TextOps.qSimhashIncremental(spark, sfDir))
-    assert(graft.operators.TextOps.simhashFitInvocations.get() <=
+    assert(graft.operators.TextOps.fittedSimhashState.buildCount <=
       fitsBefore + 1, "base simhash fit re-ran on a warm query")
   }
 
@@ -2116,20 +2135,20 @@ class TextOpsSpec extends SparkTestBase {
     // artifacts without re-fitting (the incremental member's
     // fitInvocations discipline, extended to compaction)
     val fitsAfterFirst =
-      graft.operators.TextOps.simhashCompactFitInvocations.get()
+      graft.operators.TextOps.simhashCompactRoots.buildCount
     key(graft.operators.TextOps.qSimhashCompact(spark, sfDir))
-    assert(graft.operators.TextOps.simhashCompactFitInvocations.get()
+    assert(graft.operators.TextOps.simhashCompactRoots.buildCount
       == fitsAfterFirst, "compact fit re-ran on a warm query")
     // non-vacuity: the published sig table really carries STALE
     // signatures for the re-crawl subset (otherwise retirement +
     // re-pairing tested nothing)
-    val st = graft.operators.TextOps.simhashCompactStateFor(spark, sfDir)
+    val root = graft.operators.TextOps.simhashCompactRoots.get(spark, sfDir)
     val trueSigs = graft.operators.TextOps.simhashMd5Halves(
         graft.sources.Tables.documents(spark, sfDir)
           .filter(graft.operators.TextOps.isRecrawlDoc))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
       .toMap
-    val staleSigs = spark.read.parquet(st.sigsPath)
+    val staleSigs = spark.read.parquet(s"$root/seed/sigs")
       .filter(graft.operators.TextOps.isRecrawlDoc)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
       .toMap

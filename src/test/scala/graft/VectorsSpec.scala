@@ -649,11 +649,11 @@ class VectorsSpec extends SparkTestBase {
 
   test("q_dedup_embed_incremental: warm runs never re-fit; equals full recompute") {
     Vectors.qDedupEmbedIncremental(spark, sfDir).collect()
-    val fits = Vectors.embedFitInvocations.get()
+    val fits = Vectors.embedBaseRoots.buildCount
     assert(fits >= 1)
     val warm = Vectors.qDedupEmbedIncremental(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-    assert(Vectors.embedFitInvocations.get() == fits,
+    assert(Vectors.embedBaseRoots.buildCount == fits,
       "warm incremental invocation re-fitted the base state")
     // the oracle contract, asserted engine-side too: incremental ==
     // full-recompute declared clustering
