@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -70,23 +72,46 @@ object StreamBench {
       System.err.println(f"[stream-bench] $leg: ${rows.size / secs}%.0f rows/s")
     }
 
+    /** Bytes published per payload byte of each compaction leg. */
+    val publishAmp = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+
+    /** Sizes of the files under `root`. */
+    def filesUnder(root: String): Map[String, Long] = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => p.toString -> java.nio.file.Files.size(p)).toMap
+      finally s.close()
+    }
+
     /** foreachBatch sinks manage their own lifecycle; time the whole
-      * pumped volume. */
+      * pumped volume. With `published` = (root, payload bytes of a row),
+      * the files each micro-batch adds under the root are summed (listed
+      * after every batch, so versions retired later still count) and
+      * divided by the rows' payload bytes. */
     def runSinkLeg[T: org.apache.spark.sql.Encoder](leg: String, rows: Seq[T],
         start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery,
-        toDf: org.apache.spark.sql.Dataset[T] => DataFrame): Unit = {
+        toDf: org.apache.spark.sql.Dataset[T] => DataFrame,
+        published: Option[(String, T => Long)] = None): Unit = {
       val input = MemoryStream[T](spark)
       val q = start(toDf(input.toDS()))
+      val before = published.fold(Map.empty[String, Long])(p => filesUnder(p._1))
+      val added = scala.collection.mutable.Map.empty[String, Long]
       val t0 = System.nanoTime()
       try {
         rows.grouped(math.max(1, rows.size / 4)).foreach { chunk =>
           input.addData(chunk); q.processAllAvailable()
+          published.foreach(p => added ++= filesUnder(p._1) -- before.keys)
         }
       } finally q.stop()
       val secs = (System.nanoTime() - t0) / 1e9
       results(leg) = (rows.size.toLong, rows.size / secs)
-      System.err.println(f"[stream-bench] $leg: ${rows.size / secs}%.0f rows/s")
+      published.foreach { case (_, payload) =>
+        publishAmp(leg) = added.values.sum.toDouble / rows.map(payload).sum }
+      System.err.println(f"[stream-bench] $leg: ${rows.size / secs}%.0f rows/s" +
+        publishAmp.get(leg).fold("")(a => f", $a%.2f bytes published per payload byte"))
     }
+
+    def textBytes(t: String): Long = 8L + t.getBytes("UTF-8").length
 
     // anchors: the full Bench calibration contract (r17 hygiene — the
     // stream artifact carried only overhead_sec, so cross-round
@@ -441,7 +466,7 @@ object StreamBench {
     runSinkLeg[(Long, String)]("dedup_compact_sink", compRows,
       df => graft.streaming.Streams.dedupCompactSink(compRoot, df,
         tmp("graft_sb_compact_cp"), retainVersions = 2),
-      ds => ds.toDF("doc_id", "text"))
+      ds => ds.toDF("doc_id", "text"), Some((compRoot, r => textBytes(r._2))))
     val compLabels = spark.read.parquet(compRoot + "/" +
       graft.sources.Markers.read(spark, compRoot,
         graft.operators.TextOps.dedupCurrentMarker) + "/labels")
@@ -474,7 +499,7 @@ object StreamBench {
     runSinkLeg[(Long, String)]("simhash_compact_sink", shcRows,
       df => graft.streaming.Streams.simhashCompactSink(shRoot, df,
         tmp("graft_sb_simhash_cp"), retainVersions = 2),
-      ds => ds.toDF("doc_id", "text"))
+      ds => ds.toDF("doc_id", "text"), Some((shRoot, r => textBytes(r._2))))
     val shLabels = spark.read.parquet(shRoot + "/" +
       graft.sources.Markers.read(spark, shRoot,
         graft.operators.TextOps.dedupCurrentMarker) + "/labels")
@@ -501,7 +526,8 @@ object StreamBench {
     runSinkLeg[(Long, String, String)]("edit_compact_sink", edRows,
       df => graft.streaming.Streams.editCompactSink(edRoot, df,
         tmp("graft_sb_editc_cp"), retainVersions = 2),
-      ds => ds.toDF("doc_id", "lang", "text"))
+      ds => ds.toDF("doc_id", "lang", "text"),
+      Some((edRoot, r => textBytes(r._3) + r._2.length)))
     val edLabels = spark.read.parquet(edRoot + "/" +
       graft.sources.Markers.read(spark, edRoot,
         graft.operators.TextOps.dedupCurrentMarker) + "/labels")
@@ -532,7 +558,8 @@ object StreamBench {
     runSinkLeg[(Long, Seq[Float])]("embed_compact_sink", emRows,
       df => graft.streaming.Streams.embedCompactSink(emRoot, df,
         tmp("graft_sb_embedc_cp"), retainVersions = 2),
-      ds => ds.toDF("vec_id", "embedding"))
+      ds => ds.toDF("vec_id", "embedding"),
+      Some((emRoot, r => 8L + 4L * r._2.size)))
     val emLabels = spark.read.parquet(emRoot + "/" +
       graft.sources.Markers.read(spark, emRoot,
         graft.operators.TextOps.dedupCurrentMarker) + "/labels")
@@ -555,7 +582,10 @@ object StreamBench {
     val checksJson = checks.map { case (k, v) =>
       "\"" + k + "\":" + v
     }.mkString("{", ",", "}")
-    val line = s"""{"metric":"stream_rows_per_sec","legs":$legs,"rows":$sizes,"batches_per_leg":4,"checks":$checksJson,"anchor":{"overhead_sec":$anchorSecs,"cpu_sec":$cpuSecs,"mem_sec":$memSecs},"cpus":"$cpus"}"""
+    val ampJson = publishAmp.map { case (k, a) =>
+      "\"" + k + "\":" + f"$a%.2f"
+    }.mkString("{", ",", "}")
+    val line = s"""{"metric":"stream_rows_per_sec","legs":$legs,"rows":$sizes,"published_per_payload_byte":$ampJson,"batches_per_leg":4,"checks":$checksJson,"anchor":{"overhead_sec":$anchorSecs,"cpu_sec":$cpuSecs,"mem_sec":$memSecs},"cpus":"$cpus"}"""
     println(line)
     try {
       val outPath = sys.env.getOrElse("SPARK_GRAFT_STREAM_BENCH_OUT",

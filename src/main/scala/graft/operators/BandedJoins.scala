@@ -90,6 +90,9 @@ private[graft] object BandedJoins {
     * skew profile live in ONE self-contained artifact. */
   val hotSetDirName = "_graft_hotset"
 
+  /** Marker holding the bucket count of an index's published hot set. */
+  val hotBucketsMarker = "_graft_hot_buckets"
+
   /** Fit-time hot-set publication (round-9 follow-up to the guard): the
     * per-call bucket-count aggregation is the guard's only steady-state
     * cost, and for INDEX-SERVED probes it re-derives a property of the
@@ -98,34 +101,36 @@ private[graft] object BandedJoins {
     * already pays a corpus pass, so it computes the hot set once,
     * persists it inside the index directory, and probes pass it to
     * [[emitOnce]] instead of re-aggregating. The banded relation is
-    * the index's `sigsCol` array exploded to (band, `keyCol`). Returns
-    * the hot-bucket count for the fit's loud marker. */
-  def publishHotSet(spark: org.apache.spark.sql.SparkSession,
-    indexPath: String, sigsCol: String, keyCol: String): Long = {
-    writeHotSet(spark, indexPath, sigsCol, keyCol)
-    graft.sources.Pq.read(spark, s"$indexPath/$hotSetDirName").count()
-  }
-
-  /** [[publishHotSet]] without the count job — for publishers that
-    * record no hot-bucket marker. */
+    * the index's `sigsCol` array exploded to (band, `keyCol`); its
+    * bucket count lands as [[hotBucketsMarker]] (observed while the
+    * set is written: no count job), so a curator sees a mega-cluster
+    * at fit time. The counts run over the EFFECTIVE index
+    * ([[IndexLayers.read]]), so the hot set of a delta layer covers
+    * every layer its manifest lists. */
   def writeHotSet(spark: org.apache.spark.sql.SparkSession,
-    indexPath: String, sigsCol: String, keyCol: String): Unit =
-    graft.sources.Pq.write(hotBuckets(graft.sources.Pq.read(spark, indexPath)
+    indexPath: String, sigsCol: String, keyCol: String): Unit = {
+    val buckets = org.apache.spark.sql.Observation()
+    graft.sources.Pq.write(hotBuckets(IndexLayers.read(spark, indexPath)
         .select(posexplode(col(sigsCol)).as(Seq("band", keyCol))),
-      "band", keyCol).coalesce(1), s"$indexPath/$hotSetDirName")
+      "band", keyCol).coalesce(1).observe(buckets, count(lit(1)).as("n")),
+      s"$indexPath/$hotSetDirName")
+    graft.sources.Markers.write(spark, indexPath, hotBucketsMarker,
+      buckets.get("n").toString)
+  }
 
   /** The published hot set of an index directory. An EMPTY set (every
     * healthy index) is served as an empty LOCAL relation, so Catalyst
     * folds [[emitOnce]]'s anti-joins and star branch away while
     * planning (PropagateEmptyRelation) instead of AQE pruning them
     * only after their broadcast and `min_by` jobs ran; a non-empty set
-    * stays the parquet read (the broadcast plan). The emptiness check
-    * is a one-row probe. */
+    * stays the parquet read (the broadcast plan). Emptiness comes off
+    * the published count ([[hotBucketsMarker]]): no job. */
   def loadHotSet(spark: org.apache.spark.sql.SparkSession,
     indexPath: String): DataFrame = {
     val published = graft.sources.Pq.read(spark, s"$indexPath/$hotSetDirName")
       .select(col("hot_band"), col("hot_key"))
-    if (published.isEmpty) localHotSet(spark, published.schema, Nil)
+    if (graft.sources.Markers.read(spark, indexPath, hotBucketsMarker) == "0")
+      localHotSet(spark, published.schema, Nil)
     else published
   }
 

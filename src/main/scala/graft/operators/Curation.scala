@@ -857,7 +857,10 @@ object Curation {
     * snapshot-expiry scheme (table-format VACUUM) documents. Deletion
     * is crash-safe: versions are retired newest-first exempt, marker
     * already points at the new version, so a crash mid-retirement
-    * leaves only unreferenced garbage, never a half-current artifact. */
+    * leaves only unreferenced garbage, never a half-current artifact.
+    * Manifest-aware: a version whose index layer the current or a
+    * retained version's manifest lists ([[IndexLayers.pinned]]) is
+    * kept whole, so every retained version stays readable. */
   private[graft] val snapshotCurrentMarker = "_graft_snapshot_current"
 
   private[graft] def retireVersions(spark: SparkSession, root: String,
@@ -865,14 +868,17 @@ object Curation {
     if (retainVersions > 0) {
       val rootPath = new org.apache.hadoop.fs.Path(root)
       val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-      fs.listStatus(rootPath)
+      val (kept, old) = fs.listStatus(rootPath)
         .filter(_.isDirectory)
         .map(st => st.getPath.getName -> st.getModificationTime)
         .filter(_._1 != current)
         .sortBy(-_._2)
-        .drop(retainVersions)
-        .foreach { case (n, _) =>
-          fs.delete(new org.apache.hadoop.fs.Path(rootPath, n), true) }
+        .map(_._1)
+        .splitAt(retainVersions)
+      val pinned = (current +: kept).toSet
+        .flatMap(IndexLayers.pinned(spark, root, _: String))
+      old.filterNot(pinned).foreach { n =>
+        fs.delete(new org.apache.hadoop.fs.Path(rootPath, n), true) }
     }
 
   private[graft] def publishSnapshot(spark: SparkSession,

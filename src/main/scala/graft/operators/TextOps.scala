@@ -260,9 +260,7 @@ object TextOps {
     // and a full extra index pass at 100 TB), and publishes the count
     // as a marker so a curator sees a boilerplate mega-cluster at fit
     // time, not as a mystery skew at probe time
-    val nHot = BandedJoins.publishHotSet(spark, outPath, "bsigs", "bhash")
-    graft.sources.Markers.write(spark, outPath, "_graft_hot_buckets",
-      nHot.toString)
+    BandedJoins.writeHotSet(spark, outPath, "bsigs", "bhash")
     MinHashIndex(jb, outPath)
   }
 
@@ -301,7 +299,7 @@ object TextOps {
     * (doc_id, shash, bsigs, n_sh). */
   private[graft] def stagedFrame(spark: SparkSession,
     index: MinHashIndex): DataFrame =
-    graft.sources.Pq.read(spark, index.stagedPath)
+    IndexLayers.read(spark, index.stagedPath)
 
   /** Near-dup pairs served from the fitted index: signatures come off
     * the index parquet (column-pruned scans, no re-shingle), the verify
@@ -742,10 +740,11 @@ object TextOps {
     * The core shared by the batch compaction queries and the
     * STREAMING wave sink (both through [[compactWaveState]]): given
     * the served (staged index, pair set) state, the re-crawl id set,
-    * and the re-crawled docs' staged signatures, returns (repaired
-    * staged index = retained ∪ fresh rows, repaired pair set =
-    * surviving pairs ∪ fresh probes). The published hot set is a
-    * conservative SUPERSET after retirement for the probe at hand
+    * and the re-crawled docs' staged signatures, returns (the wave's
+    * added staged rows — the repaired index is the retained rows ∪
+    * these, published as a delta over the served manifest — and the
+    * repaired pair set = surviving pairs ∪ fresh probes). The
+    * published hot set is a conservative SUPERSET after retirement for the probe at hand
     * (buckets only shrink) — correct per the emitOnce contract; the
     * streaming publication recomputes it over the repaired index so
     * the NEXT wave probes an exact set. */
@@ -769,8 +768,7 @@ object TextOps {
           !newStaged.columns.contains("n_sh"))
         newStaged.withColumn("n_sh", size(col("shash")))
       else newStaged
-    (retainedStaged.unionByName(newAligned),
-      keptPairs.select(col("id_a"), col("id_b"))
+    (newAligned, keptPairs.select(col("id_a"), col("id_b"))
         .unionByName(freshPairs.select(col("id_a"), col("id_b"))))
   }
 
@@ -807,16 +805,22 @@ object TextOps {
     * lifecycle root (MinHash, SimHash, edit distance, embedding) — the
     * streaming compaction sinks' waves and every `seed*` function, so
     * the roots the batch incremental and compaction queries read are
-    * published by this same call: the
-    * index under `indexName`, its `sidecar` (a hot set or edit stats,
-    * recomputed over exactly the published rows so the next wave's
-    * probe set is exact, not the seed's drifting superset), the
-    * verified pair set, and the label map land under ONE version
-    * directory and ONE marker flip — the [[Curation.publishEpoch]]
-    * discipline; two flips would leave a crash window where the pair
+    * published by this same call: the index layer under `indexName`
+    * ([[IndexLayers.write]]: the wave's added rows `index` as one
+    * delta, listed with its `retired` key set in a manifest that
+    * extends the served version's, a fold into a new base, or —
+    * `retired` None, a seed — a base), its `sidecar` (a hot set or
+    * edit stats, recomputed over the EFFECTIVE index so the next
+    * wave's probe set is exact, not the seed's drifting superset), the
+    * verified pair set, and the label
+    * map land under ONE version directory and ONE marker flip — the
+    * [[Curation.publishEpoch]] discipline; the marker names the
+    * version whose manifest is served, so the manifest flip IS the
+    * marker flip. Two flips would leave a crash window where the pair
     * set reflects the wave but the index does not, and the NEXT
     * wave's retirement would then anti-join against rows that were
-    * never republished.
+    * never republished. `labels = false` skips the label map for roots
+    * whose readers relabel the wave's pairs themselves.
     *
     * Cost posture: the artifacts form two independent chains, and
     * they run CONCURRENTLY — index → sidecar on a branch thread, pairs
@@ -828,14 +832,15 @@ object TextOps {
     * `<version>/pairs` (the same function over the same edge set, so
     * the same map), never a second run of the bloom-pruned probe.
     * Every artifact goes through [[graft.sources.Pq.write]], so no
-    * read-back pays a schema-inference job. What still rewrites in
-    * full per wave is the index and its hot set; at 100 TB that
-    * becomes a partitioned rewrite of the doc_id ranges the wave
-    * touches plus a delta-maintained bucket-count table — both swaps
-    * change this function only, not the wave semantics. SimHash
-    * passes `labelEdges`: its pairs are signature-level, so its labels
-    * come from the wave's id-level edges instead. `pairs` must not
-    * read the index or sidecar this call writes: the two chains race.
+    * read-back pays a schema-inference job. What a wave writes is
+    * wave-sized: its index delta, the dup-set-sized pairs and labels,
+    * and the sidecar. What still reads in full per wave is the
+    * sidecar's pass over the effective index, and a fold — when the
+    * deltas since the base reach the base's bytes — rewrites it once.
+    * SimHash passes `labelEdges`: its pairs are signature-level, so its
+    * labels come from the wave's id-level edges instead. `pairs` must
+    * not read the index or sidecar this call writes: the two chains
+    * race.
     *
     * The branch runs with the caller's local properties (job group,
     * streaming query and batch ids — its jobs count in the
@@ -848,12 +853,14 @@ object TextOps {
     * abandoned the same way and fails the call with a
     * `TimeoutException`. An abandoned branch starts no further step,
     * and every wait re-cancels its tag, so a job it started after the
-    * first cancel is killed too. */
+    * first cancel is killed too; it counts as ended once no task of its
+    * tagged jobs is still active, since a killed task can still touch
+    * its output after its job is reported failed. */
   private[graft] def publishWaveState(spark: SparkSession, root: String,
     version: String, indexName: String, index: DataFrame,
-    pairs: DataFrame, retainVersions: Int,
+    retired: Option[DataFrame], pairs: DataFrame, retainVersions: Int,
     sidecar: String => Unit = _ => (),
-    labelEdges: Option[DataFrame] = None,
+    labelEdges: Option[DataFrame] = None, labels: Boolean = true,
     branchTimeout: FiniteDuration = waveBranchTimeout): Unit = {
     import java.util.concurrent.{CancellationException, ExecutionException,
       TimeUnit, TimeoutException}
@@ -865,7 +872,9 @@ object TextOps {
     val indexChain = org.apache.spark.sql.graft.SessionBridge
       .withThreadLocalCaptured(spark, waveBranchPool) {
         sc.addJobTag(tag)
-        try Seq[String => Unit](graft.sources.Pq.write(index, _), sidecar)
+        try Seq[String => Unit](_ => IndexLayers.write(spark, root, version,
+            indexName, index, retired, s"${currentDir(spark, root)}/$indexName"),
+            sidecar)
           .foreach { step =>
             if (abandoned.get) throw new CancellationException(
               s"publishWaveState($root, $version): index branch abandoned")
@@ -894,17 +903,30 @@ object TextOps {
       if (interrupted) Thread.currentThread().interrupt()
       indexChain.isDone
     }
+    // the killed tasks of a cancelled job can still touch its output
+    // after the job is reported failed: an abandoned branch has ended
+    // only when none of its tagged jobs has an active task
+    def drained(until: Long): Boolean = {
+      val st = sc.statusTracker
+      def active = st.getJobIdsForTag(tag).exists(j =>
+        st.getJobInfo(j).exists(_.stageIds.exists(s =>
+          st.getStageInfo(s).exists(_.numActiveTasks > 0))))
+      while (active && System.nanoTime() < until) Thread.sleep(10)
+      !active
+    }
     def abandon(): Boolean = {
       abandoned.set(true)
-      settle(branchTimeout.toNanos)
+      val until = System.nanoTime() + branchTimeout.toNanos
+      settle(branchTimeout.toNanos) && drained(until)
     }
     val stillRunning = "the index branch is still running after its " +
       "jobs were cancelled"
     try {
       graft.sources.Pq.write(pairs, s"$dir/pairs")
-      graft.sources.Pq.write(labelEdges.fold(Components.labelComponents(
-          graft.sources.Pq.read(spark, s"$dir/pairs"), rereadable = true))(
-          Components.labelComponents(_)), s"$dir/labels")
+      if (labels)
+        graft.sources.Pq.write(labelEdges.fold(Components.labelComponents(
+            graft.sources.Pq.read(spark, s"$dir/pairs"), rereadable = true))(
+            Components.labelComponents(_)), s"$dir/labels")
     } catch {
       case t: Throwable =>
         if (!abandon())
@@ -927,10 +949,11 @@ object TextOps {
   /** Seed a streaming-compaction root from a corpus: one
     * [[minhashFit]] (which also fixes the verify layout for the
     * root's lifetime — waves replace content, they do not re-decide
-    * plans mid-stream), the fitted pairs, and the initial label map,
-    * published as version `seed`. */
+    * plans mid-stream), the fitted pairs, and the initial label map
+    * (unless `labels` is false), published as version `seed` — a base
+    * layer with no manifest. */
   private[graft] def seedDedupState(spark: SparkSession,
-    docs: DataFrame, root: String): Unit = {
+    docs: DataFrame, root: String, labels: Boolean = true): Unit = {
     val idx = minhashFit(spark, docs, s"$root/seed/staged")
     graft.sources.Markers.write(spark, root, "_graft_layout",
       if (idx.joinBack) "joinback" else "carried")
@@ -939,23 +962,26 @@ object TextOps {
     graft.sources.Pq.write((if (idx.joinBack) pairsJoinBackStaged(staged, hot)
       else pairsCarriedStaged(staged, hot)).select(col("id_a"), col("id_b")),
       s"$root/seed/pairs")
-    graft.sources.Pq.write(Components.labelComponents(
-      graft.sources.Pq.read(spark, s"$root/seed/pairs")), s"$root/seed/labels")
+    if (labels)
+      graft.sources.Pq.write(Components.labelComponents(
+        graft.sources.Pq.read(spark, s"$root/seed/pairs")),
+        s"$root/seed/labels")
     graft.sources.Markers.write(spark, root, dedupCurrentMarker, "seed")
   }
 
   /** One re-crawl wave applied to the CURRENT state of a dedup root —
     * the [[compactState]] core reading its inputs from the served
-    * artifact: retire the wave's ids, probe their new text against
-    * the retained index. Returns (staged index, pairs): the streaming
-    * sink hands both to [[publishWaveState]], which derives the
+    * artifact (the effective index, [[IndexLayers.read]]): retire the
+    * wave's ids, probe their new text against the retained index.
+    * Returns (added staged rows, pairs): the streaming sink hands both
+    * to [[publishWaveState]] with the wave's ids, which derives the
     * labels; the batch compaction queries label the pairs. */
   private[graft] def compactWaveState(spark: SparkSession, root: String,
     recrawled: DataFrame): (DataFrame, DataFrame) = {
     val cur = currentDir(spark, root)
     val joinBack = graft.sources.Markers.read(spark, root,
       "_graft_layout") == "joinback"
-    val staged = graft.sources.Pq.read(spark, s"$cur/staged")
+    val staged = IndexLayers.read(spark, s"$cur/staged")
     val hot = Some(BandedJoins.loadHotSet(spark, s"$cur/staged"))
     compactState(staged, graft.sources.Pq.read(spark, s"$cur/pairs"),
       recrawled.select(col("doc_id")),
@@ -995,7 +1021,7 @@ object TextOps {
     * RETAINED members (an aggregation, not a join recompute) and maps
     * the surviving sig pairs onto them. */
   private[graft] def seedSimhashRoot(spark: SparkSession,
-      docs: DataFrame, root: String): Unit = {
+      docs: DataFrame, root: String, labels: Boolean = true): Unit = {
     graft.sources.Pq.write(simhashMd5Halves(docs), s"$root/seed/sigs")
     val sigs = graft.sources.Pq.read(spark, s"$root/seed/sigs")
     val reps = sigs.groupBy(col("sig_hi"), col("sig_lo"))
@@ -1012,22 +1038,24 @@ object TextOps {
         Seq("sig_hi", "sig_lo"))
       .filter(col("doc_id") =!= col("rep"))
       .select(col("doc_id").as("id_a"), col("rep").as("id_b"))
-    graft.sources.Pq.write(Components.labelComponents(identity.unionByName(
-        graft.sources.Pq.read(spark, s"$root/seed/pairs")
-          .join(reps.select(col("sig_hi").as("hi_a"),
-            col("sig_lo").as("lo_a"), col("doc_id").as("id_a")),
-            Seq("hi_a", "lo_a"))
-          .join(reps.select(col("sig_hi").as("hi_b"),
-            col("sig_lo").as("lo_b"), col("doc_id").as("id_b")),
-            Seq("hi_b", "lo_b"))
-          .select(col("id_a"), col("id_b")))), s"$root/seed/labels")
+    if (labels)
+      graft.sources.Pq.write(Components.labelComponents(identity.unionByName(
+          graft.sources.Pq.read(spark, s"$root/seed/pairs")
+            .join(reps.select(col("sig_hi").as("hi_a"),
+              col("sig_lo").as("lo_a"), col("doc_id").as("id_a")),
+              Seq("hi_a", "lo_a"))
+            .join(reps.select(col("sig_hi").as("hi_b"),
+              col("sig_lo").as("lo_b"), col("doc_id").as("id_b")),
+              Seq("hi_b", "lo_b"))
+            .select(col("id_a"), col("id_b")))), s"$root/seed/labels")
     graft.sources.Markers.write(spark, root, dedupCurrentMarker, "seed")
   }
 
   /** One re-crawl wave applied to the CURRENT state of a SimHash
     * root — retire → re-elect → map → probe (the steps
     * [[qSimhashCompact]] documents) reading the served artifact,
-    * returning (per-doc sigs, sig-level pairs, id-level label edges):
+    * returning (the wave's added per-doc sigs, sig-level pairs,
+    * id-level label edges):
     * the streaming sink publishes all three through
     * [[publishWaveState]], the batch query labels the edges. */
   private[graft] def simhashWaveState(spark: SparkSession, root: String,
@@ -1036,7 +1064,7 @@ object TextOps {
     val b = graft.sources.Markers.read(spark, root, "_graft_simhash_b")
       .toInt
     val ids = batch.select(col("doc_id"))
-    val retained = graft.sources.Pq.read(spark, s"$cur/sigs")
+    val retained = IndexLayers.read(spark, s"$cur/sigs")
       .join(broadcast(ids), Seq("doc_id"), "left_anti")
     val repMap = retained.groupBy(col("sig_hi"), col("sig_lo"))
       .agg(min(col("doc_id")).as("rep")).localCheckpoint(true)
@@ -1072,7 +1100,6 @@ object TextOps {
         col("doc_id_b").as("id_b")))
       .unionByName(within.select(col("doc_id_a").as("id_a"),
         col("doc_id_b").as("id_b")))
-    val sigs2 = retained.unionByName(newSigs)
     // cross pairs: the a-side id is a NEW rep, the b-side a retained
     // one ([[simhashSigPairsBetween]]'s orientation); within pairs
     // live wholly in the wave
@@ -1082,7 +1109,7 @@ object TextOps {
       .unionByName(sigLevel(
         within.select(col("doc_id_a"), col("doc_id_b")),
         newReps, newReps))
-    (sigs2, pairs2, edges)
+    (newSigs, pairs2, edges)
   }
 
   // ── EDIT-DISTANCE STREAMING COMPACTION ROOT (r16 — the same shape
@@ -1096,28 +1123,30 @@ object TextOps {
     * star-reduce a small shorts cell. */
   private[graft] def seedEditRoot(spark: SparkSession, docs: DataFrame,
       root: String, d: Int = 3,
-      shortsCap: Int = BandedJoins.defaultHotBucketCap): Unit = {
+      shortsCap: Int = BandedJoins.defaultHotBucketCap,
+      labels: Boolean = true): Unit = {
     val keyed = editKeyedBase(docs, 30)
     publishWaveState(spark, root, "seed", "index",
       editBuildRows(keyed, d, shortsCap)
         .select(col("doc_id"), col("lang"), col("head"), col("len"),
-          col("kseg.idx").as("idx"), col("kseg.seg").as("seg")),
+          col("kseg.idx").as("idx"), col("kseg.seg").as("seg")), None,
       editDistancePairsKeyed(keyed, d, shortsCap)
         .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b")),
-      0, writeEditIndexStats(spark, _, d))
+      0, writeEditIndexStats(spark, _, d), labels = labels)
   }
 
   /** One re-crawl wave applied to the CURRENT state of an
     * edit-distance root — [[editWaveRepair]] reading the served
     * artifact and gated by the served version's published counts
-    * (no emptiness-probe job), returning (repaired index, repaired
-    * pairs) for [[publishWaveState]] or a batch query's labels. */
+    * (no emptiness-probe job), returning (the wave's added index rows,
+    * repaired pairs) for [[publishWaveState]] or a batch query's
+    * labels. */
   private[graft] def editWaveState(spark: SparkSession, root: String,
       batch: DataFrame, d: Int = 3): (DataFrame, DataFrame) = {
     val cur = currentDir(spark, root)
     val stats = loadEditIndexStats(spark, s"$cur/index", d)
     val (edges, index2) = editWaveRepair(spark,
-      graft.sources.Pq.read(spark, s"$cur/index"),
+      IndexLayers.read(spark, s"$cur/index"),
       graft.sources.Pq.read(spark, s"$cur/pairs"),
       batch, d, stats.hotCells, Some(stats.lens),
       noShortRows = stats.shortRows == 0L)
@@ -1146,7 +1175,8 @@ object TextOps {
     * subset (the revision the crawler supersedes tonight). */
   private[graft] val dedupCompactRoots =
     FitCache.seededRoots("graft_dedup_compact") { (s, d, root) =>
-      seedDedupState(s, staleRecrawlText(Tables.documents(s, d)), root)
+      seedDedupState(s, staleRecrawlText(Tables.documents(s, d)), root,
+        labels = false)
     }
 
   /** Declared compaction query: the base root was seeded with STALE
@@ -1197,7 +1227,7 @@ object TextOps {
     FitCache.seededRoots("graft_nightly") { (s, d, root) =>
       seedDedupState(s,
         staleRecrawlText(Tables.documents(s, d).filter(!isIncrementDoc)),
-        root)
+        root, labels = false)
     }
 
   /** EXACT DUPLICATE-SPAN contamination — the substring-dedup family
@@ -2470,7 +2500,7 @@ object TextOps {
     * whose build population exceeds [[editSaltCap]]. Computed inline
     * on cold self-join paths; PUBLISHED at fit time for the warm
     * incremental/compact paths (r17, the
-    * [[BandedJoins.publishHotSet]] posture — the r16 verdict measured
+    * [[BandedJoins.writeHotSet]] posture — the r16 verdict measured
     * the inline aggregate as an extra full pass over the published
     * index per warm query). */
   private[graft] def editHotCells(build: DataFrame): DataFrame =
@@ -2748,7 +2778,7 @@ object TextOps {
     * its fields as plain columns; `blen` derives from `len`/`idx`). */
   private[graft] def editIndexFrame(spark: SparkSession,
       path: String): DataFrame =
-    graft.sources.Pq.read(spark, path)
+    IndexLayers.read(spark, path)
       .select(col("doc_id"), col("lang"), col("head"), col("len"),
         struct(col("idx"), col("seg"),
           editFlatBlen.as("blen")).as("kseg"))
@@ -2774,8 +2804,10 @@ object TextOps {
 
   /** The sidecar every published PassJoin index version carries
     * ([[seedEditRoot]] and each streaming wave, through
-    * [[publishWaveState]]), written INSIDE the index directory over
-    * exactly the rows published there: the (lang, blen) key-length
+    * [[publishWaveState]]), written INSIDE the version's index layer
+    * directory over exactly the version's EFFECTIVE index
+    * ([[IndexLayers.read]]: every layer its manifest lists, not just
+    * the wave's delta): the (lang, blen) key-length
     * population the probe side prunes against, the hot-cell set, and
     * two count markers — the hot-cell count (zero skips the salted
     * join's aggregate and probes) and the count of rows with len ≤ `d`
@@ -2796,7 +2828,7 @@ object TextOps {
     graft.sources.Markers.write(spark, indexPath, editHotCellsMarker,
       graft.sources.Pq.read(spark, hotPath).count().toString)
     graft.sources.Markers.write(spark, indexPath, editShortRowsMarker(d),
-      graft.sources.Pq.read(spark, indexPath).filter(col("len") <= d)
+      IndexLayers.read(spark, indexPath).filter(col("len") <= d)
         .count().toString)
   }
 
@@ -2841,7 +2873,7 @@ object TextOps {
     * exist). */
   private def editIndexPruned(spark: SparkSession, path: String,
       probeKeyed: DataFrame, d: Int): DataFrame =
-    editIndexPrunedFrame(graft.sources.Pq.read(spark, path), probeKeyed, d)
+    editIndexPrunedFrame(IndexLayers.read(spark, path), probeKeyed, d)
 
   /** [[editIndexPruned]] over an already-opened FLAT index frame (the
     * streaming wave core reads the served version's parquet once and
@@ -2963,7 +2995,7 @@ object TextOps {
     val edges =
       if (stats.shortRows == 0L) edges0
       else edges0.unionByName(editShortsSliverEdges(
-        graft.sources.Pq.read(spark, s"$cur/index"), incKeyed, d))
+        IndexLayers.read(spark, s"$cur/index"), incKeyed, d))
     Components.flagCorpus(docs, "doc_id",
       Components.extendLabels(graft.sources.Pq.read(spark, s"$cur/labels"),
         edges))
@@ -2990,7 +3022,8 @@ object TextOps {
     * STALE heads ([[editStaleRecrawl]]) for the ~14% re-crawl subset. */
   private[graft] val editCompactRoots =
     FitCache.seededRoots("graft_edit_compact") { (s, d, root) =>
-      seedEditRoot(s, editStaleRecrawl(Tables.documents(s, d)), root)
+      seedEditRoot(s, editStaleRecrawl(Tables.documents(s, d)), root,
+        labels = false)
     }
 
   /** Edit-distance RE-CRAWL COMPACTION — the family's update member
@@ -3059,8 +3092,10 @@ object TextOps {
     * + star repair, the cross PassJoin probe, the within self-join,
     * and the (d, 2d] sliver, over a FLAT published index frame and a
     * published (id_a, id_b) pair frame. Returns (repaired edge set,
-    * repaired FLAT index = retained rows ∪ re-elected shorts row ∪
-    * the wave's fresh build rows). Streaming-cap caveat, stated
+    * the wave's ADDED flat rows = re-elected shorts rows ∪ its fresh
+    * build rows; the repaired index is the retained rows ∪ these, and
+    * a re-elected row, keyed by a retained doc, is retired with that
+    * doc by a later wave). Streaming-cap caveat, stated
     * loudly: the fresh build rows apply the shorts cap to the WAVE's
     * own population, so a capped lang accretes one extra shorts row
     * per wave that re-crawls into it — candidates stay a DP-verified
@@ -3146,14 +3181,13 @@ object TextOps {
     }
     val flat = Seq(col("doc_id"), col("lang"), col("head"), col("len"),
       col("kseg.idx").as("idx"), col("kseg.seg").as("seg"))
-    val index1 = baseIdx
-      .join(broadcast(ids), Seq("doc_id"), "left_anti")
-    val index2 = (shortRepair match {
+    val fresh = editBuildRows(recKeyed, d).select(flat: _*)
+    val added = shortRepair match {
       case Some((reElected, _)) =>
-        index1.unionByName(reElected.select(flat: _*))
-      case None => index1
-    }).unionByName(editBuildRows(recKeyed, d).select(flat: _*))
-    (edges, index2)
+        reElected.select(flat: _*).unionByName(fresh)
+      case None => fresh
+    }
+    (edges, added)
   }
 
   /** The SimHash family's ORACLE RIDE (the [[qFingerprintChecked]]
@@ -3703,7 +3737,8 @@ object TextOps {
     * corpus WITH STALE TEXT for the re-crawl subset. */
   private[graft] val simhashCompactRoots =
     FitCache.seededRoots("graft_simhash_compact") { (s, d, root) =>
-      seedSimhashRoot(s, staleRecrawlText(Tables.documents(s, d)), root)
+      seedSimhashRoot(s, staleRecrawlText(Tables.documents(s, d)), root,
+        labels = false)
     }
 
   /** SimHash RE-CRAWL COMPACTION — the family's update member (the

@@ -851,7 +851,7 @@ object Vectors {
     val all = unit(spark, dir)
     val newStaged = stageVectors(all.filter(isIncrementVec))
       .localCheckpoint(true)
-    val inc = embedIncrementPairs(graft.sources.Pq.read(spark, s"$cur/staged"),
+    val inc = embedIncrementPairs(IndexLayers.read(spark, s"$cur/staged"),
       newStaged,
       baseHot = Some(BandedJoins.loadHotSet(spark, s"$cur/staged")))
     Components.flagCorpus(all, "vec_id",
@@ -868,9 +868,10 @@ object Vectors {
     * broadcast anti-joins against the increment-sized re-embed id set
     * `ids`; the fresh probe is the [[embedIncrementPairs]] shape over
     * the NEW vectors' staged signatures; the published hot set is a
-    * conservative superset after retirement. Returns (repaired staged
-    * index = retained ∪ new rows, repaired pair set = surviving pairs
-    * ∪ fresh probes); the caller relabels the dup-set-sized graph. A
+    * conservative superset after retirement. Returns (the wave's added
+    * staged rows — the repaired index is retained ∪ these — and the
+    * repaired pair set = surviving pairs ∪ fresh probes); the caller
+    * relabels the dup-set-sized graph. A
     * production trigger for this path: an embedding MODEL upgrade
     * re-embeds a corpus slice — ids unchanged, vectors superseded.
     */
@@ -884,7 +885,7 @@ object Vectors {
         Seq("id_a"), "left_anti")
       .join(broadcast(ids.select(col("vec_id").as("id_b"))),
         Seq("id_b"), "left_anti")
-    (retained.unionByName(newStaged), kept.select(col("id_a"), col("id_b"))
+    (newStaged, kept.select(col("id_a"), col("id_b"))
       .unionByName(fresh.select(col("id_a"), col("id_b"))))
   }
 
@@ -900,7 +901,8 @@ object Vectors {
     * re-embed subset. */
   private[graft] val embedCompactRoots =
     FitCache.seededRoots("graft_embed_compact") { (s, d, root) =>
-      seedEmbedRoot(s, staleRecrawlVecs(Tables.embeddings(s, d)), root)
+      seedEmbedRoot(s, staleRecrawlVecs(Tables.embeddings(s, d)), root,
+        labels = false)
     }
 
   /** The stale-model revision of the re-embed subset: its vectors
@@ -916,30 +918,34 @@ object Vectors {
 
   /** Seed an embedding compaction root from a raw
     * (vec_id, …, embedding) frame: staged signatures (+ exact hot
-    * set), verified pairs, and labels under version `seed`. The
+    * set), verified pairs, and labels (unless `labels` is false) under
+    * version `seed`, a base layer. The
     * staging is materialized once and feeds both publish chains; the
     * pairs count their hot buckets inline — the same set the sidecar
     * publishes — because they must not read what the concurrent index
     * branch is writing. */
   private[graft] def seedEmbedRoot(spark: SparkSession,
-      vectors: DataFrame, root: String): Unit = {
+      vectors: DataFrame, root: String, labels: Boolean = true): Unit = {
     val staged = stageVectors(vectors.select(col("vec_id"),
         graft.functions.VectorFunctions.unitv(col("embedding")).as("u")))
       .localCheckpoint(true)
     graft.operators.TextOps.publishWaveState(spark, root, "seed", "staged",
-      staged, lshVerifiedPairsStaged(staged).select(col("id_a"), col("id_b")),
-      0, BandedJoins.writeHotSet(spark, _, "sigs", "band_sig"))
+      staged, None,
+      lshVerifiedPairsStaged(staged).select(col("id_a"), col("id_b")),
+      0, BandedJoins.writeHotSet(spark, _, "sigs", "band_sig"),
+      labels = labels)
   }
 
   /** One re-embed wave applied to the CURRENT state of an embedding
-    * root — [[embedCompactState]] reading the served staged index,
-    * pairs and hot set; returns (staged, pairs) for
+    * root — [[embedCompactState]] reading the served (effective)
+    * staged index, pairs and hot set; returns (added staged rows,
+    * pairs) for
     * [[graft.operators.TextOps.publishWaveState]] or a batch query's
     * labels. `batch` is raw (vec_id, embedding). */
   private[graft] def embedWaveState(spark: SparkSession, root: String,
       batch: DataFrame): (DataFrame, DataFrame) = {
     val cur = graft.operators.TextOps.currentDir(spark, root)
-    embedCompactState(graft.sources.Pq.read(spark, s"$cur/staged"),
+    embedCompactState(IndexLayers.read(spark, s"$cur/staged"),
       graft.sources.Pq.read(spark, s"$cur/pairs"),
       batch.select(col("vec_id")),
       stageVectors(batch.select(col("vec_id"), graft.functions

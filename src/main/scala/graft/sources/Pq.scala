@@ -36,6 +36,10 @@ object Pq {
     }
   }
 
+  /** The schema [[read]] would give `path`, without building a scan. */
+  def schema(spark: SparkSession, path: String): StructType =
+    Option(schemaCache.get(path)).getOrElse(read(spark, path).schema)
+
   /** Overwrite `path` with `df` and record the written schema as a
     * parquet read returns it: every field nullable, recursively (a
     * file source never trusts the writer's non-null claims).

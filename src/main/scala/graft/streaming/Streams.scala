@@ -926,7 +926,8 @@ object Streams {
     * RE-CRAWLED documents (doc_id, text): the wave retires its ids
     * from the served index, probes the new text against the retained
     * rows through the exact [[graft.operators.TextOps.incrementPairs]]
-    * shape, and republishes index + pairs + labels (relabelled from
+    * shape, and publishes its index delta (added rows + retired ids,
+    * [[graft.operators.IndexLayers]]) + pairs + labels (relabelled from
     * the published dup-set-sized pair graph) under ONE version
     * directory and ONE marker flip
     * ([[graft.operators.TextOps.publishWaveState]]).
@@ -949,16 +950,18 @@ object Streams {
     * on a streaming clock — a curator reads `<root>/<current>/labels`
     * and always sees a complete, never-torn repair of everything
     * re-crawled so far, with per-wave probe cost increment-sized
-    * (bloom-pruned index branch, broadcast retirement) and only the
-    * publication layer paying the rewrite (its partitioned-rewrite
-    * swap is documented on the publisher). */
+    * (bloom-pruned index branch, broadcast retirement) and per-wave
+    * writes wave-sized too: the index is a manifest of one base plus
+    * the waves' deltas, folded into a new base only once the deltas
+    * reach the base's own bytes. */
   def dedupCompactSink(root: String, recrawls: DataFrame,
     checkpointDir: String, retainVersions: Int = 0)
     : org.apache.spark.sql.streaming.StreamingQuery =
     compactWaveSink(root, recrawls, checkpointDir) { (s, batch, v) =>
-      val (staged2, pairs2) = TextOps.compactWaveState(s, root, batch)
-      TextOps.publishWaveState(s, root, v, "staged", staged2, pairs2,
-        retainVersions, BandedJoins.writeHotSet(s, _, "bsigs", "bhash"))
+      val (added, pairs2) = TextOps.compactWaveState(s, root, batch)
+      TextOps.publishWaveState(s, root, v, "staged", added,
+        Some(batch.select("doc_id")), pairs2, retainVersions,
+        BandedJoins.writeHotSet(s, _, "bsigs", "bhash"))
     }
 
   /** The retire → probe → relabel → ONE-FLIP wave shape shared by
@@ -972,7 +975,11 @@ object Streams {
     * BEFORE any state is read (waves are not idempotent — re-retiring
     * ids whose fresh rows were just published would corrupt the
     * root), and `applyWave` must publish all artifacts under the
-    * version directory with the marker flip LAST. */
+    * version directory with the marker flip LAST. Each `applyWave`
+    * hands the publisher its wave function's ADDED index rows and the
+    * batch's key set, which land as one index delta over the served
+    * version's manifest; a replay before the flip overwrites the
+    * orphaned delta, which no manifest lists. */
   private def compactWaveSink(root: String, waves: DataFrame,
       checkpointDir: String)(applyWave:
         (org.apache.spark.sql.SparkSession, DataFrame, String) => Unit)
@@ -999,9 +1006,10 @@ object Streams {
     checkpointDir: String, retainVersions: Int = 0)
     : org.apache.spark.sql.streaming.StreamingQuery =
     compactWaveSink(root, recrawls, checkpointDir) { (s, batch, v) =>
-      val (sigs2, pairs2, edges) = TextOps.simhashWaveState(s, root, batch)
-      TextOps.publishWaveState(s, root, v, "sigs", sigs2, pairs2,
-        retainVersions, labelEdges = Some(edges))
+      val (added, pairs2, edges) = TextOps.simhashWaveState(s, root, batch)
+      TextOps.publishWaveState(s, root, v, "sigs", added,
+        Some(batch.select("doc_id")), pairs2, retainVersions,
+        labelEdges = Some(edges))
     }
 
   /** Streaming re-crawl compaction, EDIT-DISTANCE modality: waves of
@@ -1014,9 +1022,10 @@ object Streams {
     checkpointDir: String, retainVersions: Int = 0)
     : org.apache.spark.sql.streaming.StreamingQuery =
     compactWaveSink(root, recrawls, checkpointDir) { (s, batch, v) =>
-      val (index2, pairs2) = TextOps.editWaveState(s, root, batch)
-      TextOps.publishWaveState(s, root, v, "index", index2, pairs2,
-        retainVersions, TextOps.writeEditIndexStats(s, _))
+      val (added, pairs2) = TextOps.editWaveState(s, root, batch)
+      TextOps.publishWaveState(s, root, v, "index", added,
+        Some(batch.select("doc_id")), pairs2, retainVersions,
+        TextOps.writeEditIndexStats(s, _))
     }
 
   /** Streaming re-embed compaction, EMBEDDING modality: waves of
@@ -1028,9 +1037,10 @@ object Streams {
     checkpointDir: String, retainVersions: Int = 0)
     : org.apache.spark.sql.streaming.StreamingQuery =
     compactWaveSink(root, waves, checkpointDir) { (s, batch, v) =>
-      val (staged2, pairs2) = Vectors.embedWaveState(s, root, batch)
-      TextOps.publishWaveState(s, root, v, "staged", staged2, pairs2,
-        retainVersions, BandedJoins.writeHotSet(s, _, "sigs", "band_sig"))
+      val (added, pairs2) = Vectors.embedWaveState(s, root, batch)
+      TextOps.publishWaveState(s, root, v, "staged", added,
+        Some(batch.select("vec_id")), pairs2, retainVersions,
+        BandedJoins.writeHotSet(s, _, "sigs", "band_sig"))
     }
 
   /** Nightly-cadence BPE tokenizer refresh as a STREAMING leg (r12

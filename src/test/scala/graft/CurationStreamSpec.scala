@@ -568,8 +568,9 @@ class CurationStreamSpec extends SparkTestBase {
     assert(labels() == full)
     // and the published index itself is repaired: re-staging the true
     // corpus from scratch pairs identically to probing the served index
-    val served = spark.read.parquet(root + "/" + graft.sources.Markers
-      .read(spark, root, TextOps.dedupCurrentMarker) + "/staged")
+    val served = graft.operators.IndexLayers.read(spark, root + "/" +
+      graft.sources.Markers.read(spark, root, TextOps.dedupCurrentMarker) +
+      "/staged")
     val servedPairs = TextOps.pairsJoinBackStaged(served)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -1272,7 +1273,8 @@ class CurationStreamSpec extends SparkTestBase {
     val (staged1, pairs1) = TextOps.compactWaveState(spark, root, wave)
     val (out1, ret1, starts1, files1, later1) =
       branchJobsAround(s"$root/v1", 1500) {
-        publishWaveState(spark, root, "v1", "staged", staged1, pairs1, 0,
+        publishWaveState(spark, root, "v1", "staged", staged1,
+          Some(wave.select("doc_id")), pairs1, 0,
           { p => Thread.sleep(800); spark.range(4).count()
             throw new IllegalStateException("sidecar failed") })
       }
@@ -1290,6 +1292,7 @@ class CurationStreamSpec extends SparkTestBase {
     val (out2, ret2, starts2, files2, later2) =
       branchJobsAround(s"$root/v2", 1500) {
         publishWaveState(spark, root, "v2", "staged", staged2,
+          Some(wave.select("doc_id")),
           pairs2.withColumn("id_a", boom(col("id_a"))), 0,
           { p => hotSidecar(p); Thread.sleep(800); spark.range(4).count() })
       }
@@ -1301,8 +1304,8 @@ class CurationStreamSpec extends SparkTestBase {
 
     // (3) the next wave, computed from the still-current seed, publishes
     val (staged3, pairs3) = TextOps.compactWaveState(spark, root, wave)
-    publishWaveState(spark, root, "v3", "staged", staged3, pairs3, 0,
-      hotSidecar)
+    publishWaveState(spark, root, "v3", "staged", staged3,
+      Some(wave.select("doc_id")), pairs3, 0, hotSidecar)
     assert(current() == "v3")
     def set(df: DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -1310,7 +1313,8 @@ class CurationStreamSpec extends SparkTestBase {
     assert(labels == set(Components.labelComponents(
       spark.read.parquet(s"$root/v3/pairs"))))
     assert(labels == Set((1L, 1L), (2L, 1L), (5L, 1L), (3L, 3L), (4L, 3L)))
-    assert(spark.read.parquet(s"$root/v3/staged").count() == 5L)
+    assert(graft.operators.IndexLayers.read(spark, s"$root/v3/staged")
+      .count() == 5L)
   }
 
   /** A one-task job (the pairs chain keeps the other cores) that runs
@@ -1336,7 +1340,7 @@ class CurationStreamSpec extends SparkTestBase {
     val (out, ret, starts, atReturn, later) =
       branchJobsAround(s"$root/v1", 1000) {
         TextOps.publishWaveState(spark, root, "v1", "staged", staged,
-          pairs, 0, _ => sidecar(t0),
+          Some(wave.select("doc_id")), pairs, 0, _ => sidecar(t0),
           branchTimeout = scala.concurrent.duration.FiniteDuration(boundS, "s"))
       }
     assert(out.failed.get

@@ -118,7 +118,8 @@ class LifecycleSpec extends SparkTestBase {
         rows.toDF("doc_id", "lang", "text"), input)
     wave(shorts)
     assert(shortRows() > 0L, "wave 1 published no short-row count")
-    val idx1 = served(root, "index")
+    val idx1 = graft.operators.IndexLayers.read(spark,
+      s"${TextOps.currentDir(spark, root)}/index")
     assert(idx1.filter(col("idx") === -1).select("doc_id").collect()
       .map(_.getLong(0)).toSet == Set(1L),
       "fixture must star-reduce the wave's cell to doc 1's shorts row")
