@@ -853,9 +853,9 @@ object TextOps {
     * abandoned the same way and fails the call with a
     * `TimeoutException`. An abandoned branch starts no further step,
     * and every wait re-cancels its tag, so a job it started after the
-    * first cancel is killed too; it counts as ended once no task of its
-    * tagged jobs is still active, since a killed task can still touch
-    * its output after its job is reported failed. */
+    * first cancel is killed too; once it has ended, the abandoned
+    * version's directory is deleted (an aborted write's cleanup could
+    * otherwise still change it after the call threw). */
   private[graft] def publishWaveState(spark: SparkSession, root: String,
     version: String, indexName: String, index: DataFrame,
     retired: Option[DataFrame], pairs: DataFrame, retainVersions: Int,
@@ -903,21 +903,18 @@ object TextOps {
       if (interrupted) Thread.currentThread().interrupt()
       indexChain.isDone
     }
-    // the killed tasks of a cancelled job can still touch its output
-    // after the job is reported failed: an abandoned branch has ended
-    // only when none of its tagged jobs has an active task
-    def drained(until: Long): Boolean = {
-      val st = sc.statusTracker
-      def active = st.getJobIdsForTag(tag).exists(j =>
-        st.getJobInfo(j).exists(_.stageIds.exists(s =>
-          st.getStageInfo(s).exists(_.numActiveTasks > 0))))
-      while (active && System.nanoTime() < until) Thread.sleep(10)
-      !active
-    }
+    // no manifest lists an abandoned version and the marker never
+    // names it: once the branch has ended, drop what its aborted
+    // writes left, so nothing under `<version>/` changes after the
+    // call throws
     def abandon(): Boolean = {
       abandoned.set(true)
-      val until = System.nanoTime() + branchTimeout.toNanos
-      settle(branchTimeout.toNanos) && drained(until)
+      val ended = settle(branchTimeout.toNanos)
+      if (ended) {
+        val p = new org.apache.hadoop.fs.Path(dir)
+        p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+      }
+      ended
     }
     val stillRunning = "the index branch is still running after its " +
       "jobs were cancelled"
