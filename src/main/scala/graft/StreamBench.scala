@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.sources.{Pq, Versions}
+
 /** Streaming-throughput benchmark main (r11 verdict item 7): the batch
   * surface publishes per-query medians every round (`BENCH_FULL`), but
   * the streaming intake legs were only floor-gated inside an env-gated
@@ -217,7 +219,7 @@ object StreamBench {
     val cdcBase = (0 until 2000).map(i => (i.toLong, words(40, i).mkString(" ")))
       .toDF("doc_id", "text")
     val cdcRoot = tmp("graft_sb_cdc")
-    graft.operators.Curation.publishSnapshot(spark, cdcBase, cdcRoot, "base")
+    Versions.publish(spark, cdcRoot, "base")(Pq.write(cdcBase, _))
     val cdcOps: Seq[(Long, String, String)] = (0 until 1000).map { i =>
       if (i % 5 == 4) (i.toLong * 2, "delete", null)
       else (2000L + i, "upsert", words(40, 500000 + i).mkString(" "))
@@ -234,8 +236,10 @@ object StreamBench {
         words(40, i).mkString(" ")))
       .toDF("doc_id", "source", "text")
     val mvRoot = tmp("graft_sb_mv")
-    graft.operators.Curation.publishEpoch(spark, mvRoot, "base", mvBase,
-      graft.operators.Curation.sourceRollup(mvBase))
+    Versions.publish(spark, mvRoot, "base") { dir =>
+      Pq.write(mvBase, s"$dir/snapshot")
+      Pq.write(graft.operators.Curation.sourceRollup(mvBase), s"$dir/mv")
+    }
     val mvOps: Seq[(Long, String, String, String)] = (0 until 1000).map { i =>
       if (i % 5 == 4) (i.toLong * 2, "delete", null, null)
       else (2000L + i, "upsert", if (i % 3 == 0) "web" else "book",
@@ -251,8 +255,7 @@ object StreamBench {
     // r12 `collapseOps` last-op-wins collapse — this leg prices that
     // hardening instead of only fixture-testing it
     val cdc2Root = tmp("graft_sb_cdc2")
-    graft.operators.Curation.publishSnapshot(spark, cdcBase, cdc2Root,
-      "base")
+    Versions.publish(spark, cdc2Root, "base")(Pq.write(cdcBase, _))
     val backlogOps: Seq[(Long, String, String, Long)] =
       (0 until 1500).map { i =>
         val doc = 3000L + i / 3 // doc-major: a doc's ops share a batch
@@ -271,11 +274,10 @@ object StreamBench {
     // star edges ∪ new pairs, and republishes versioned-then-flip
     // (retainVersions = 2 — the retention cost rides in the number)
     val labelsRoot = tmp("graft_sb_labels")
-    graft.operators.Components.publishLabels(spark,
+    Versions.publish(spark, labelsRoot, "base")(Pq.write(
       graft.operators.Components.labelComponents(
         graft.operators.TextOps.pairsCarriedStaged(staged)
-          .select(col("id_a"), col("id_b"))),
-      labelsRoot, "base")
+          .select(col("id_a"), col("id_b"))), _))
     val labelRows: Seq[(Long, String)] = (0 until 1000).map { i =>
       val id = 50000L + i
       if (i % 8 == 0) {
@@ -384,16 +386,14 @@ object StreamBench {
     // hostile wave; the check pins the final map's exactly-once shape
     // (every arrival labeled to the boilerplate component's min id)
     val advLabelsRoot = tmp("graft_sb_sh_adv_labels")
-    graft.operators.Components.publishLabels(spark,
-      graft.operators.Components.labelComponents(advIdentity2),
-      advLabelsRoot, "base")
+    Versions.publish(spark, advLabelsRoot, "base")(Pq.write(
+      graft.operators.Components.labelComponents(advIdentity2), _))
     runSinkLeg[(Long, String)]("simhash_labels_adversarial", megaRows,
       df => graft.streaming.Streams.simhashLabelsSink(advKeyed,
         advBLoaded, advLabelsRoot, df, tmp("graft_sb_sh_adv_lcp"),
         retainVersions = 2),
       ds => ds.toDF("doc_id", "text"))
-    val advLabels = graft.operators.Components
-      .currentLabels(spark, advLabelsRoot)
+    val advLabels = Pq.read(spark, Versions.current(spark, advLabelsRoot))
     checks("simhash_adv_labels_exactly_once") =
       advLabels.filter(col("node_id") >= 500000000L).count() == 1000L &&
         advLabels.filter(col("node_id") >= 500000000L)
@@ -467,9 +467,8 @@ object StreamBench {
       df => graft.streaming.Streams.dedupCompactSink(compRoot, df,
         tmp("graft_sb_compact_cp"), retainVersions = 2),
       ds => ds.toDF("doc_id", "text"), Some((compRoot, r => textBytes(r._2))))
-    val compLabels = spark.read.parquet(compRoot + "/" +
-      graft.sources.Markers.read(spark, compRoot,
-        graft.operators.TextOps.dedupCurrentMarker) + "/labels")
+    val compLabels = spark.read.parquet(
+      Versions.current(spark, compRoot) + "/labels")
     // every copy re-crawl pairs (i, 1000+i) into a min-i component;
     // every unrelated re-crawl stays a singleton (absent from labels)
     checks("compact_sink_repairs_exact") =
@@ -500,9 +499,8 @@ object StreamBench {
       df => graft.streaming.Streams.simhashCompactSink(shRoot, df,
         tmp("graft_sb_simhash_cp"), retainVersions = 2),
       ds => ds.toDF("doc_id", "text"), Some((shRoot, r => textBytes(r._2))))
-    val shLabels = spark.read.parquet(shRoot + "/" +
-      graft.sources.Markers.read(spark, shRoot,
-        graft.operators.TextOps.dedupCurrentMarker) + "/labels")
+    val shLabels = spark.read.parquet(
+      Versions.current(spark, shRoot) + "/labels")
     checks("simhash_compact_repairs_exact") =
       shLabels.filter(col("node_id") >= 1000L &&
         col("node_id") < 1400L &&
@@ -528,9 +526,8 @@ object StreamBench {
         tmp("graft_sb_editc_cp"), retainVersions = 2),
       ds => ds.toDF("doc_id", "lang", "text"),
       Some((edRoot, r => textBytes(r._3) + r._2.length)))
-    val edLabels = spark.read.parquet(edRoot + "/" +
-      graft.sources.Markers.read(spark, edRoot,
-        graft.operators.TextOps.dedupCurrentMarker) + "/labels")
+    val edLabels = spark.read.parquet(
+      Versions.current(spark, edRoot) + "/labels")
     checks("edit_compact_repairs_exact") =
       edLabels.filter(col("node_id") >= 600L &&
         col("node_id") < 900L &&
@@ -560,9 +557,8 @@ object StreamBench {
         tmp("graft_sb_embedc_cp"), retainVersions = 2),
       ds => ds.toDF("vec_id", "embedding"),
       Some((emRoot, r => 8L + 4L * r._2.size)))
-    val emLabels = spark.read.parquet(emRoot + "/" +
-      graft.sources.Markers.read(spark, emRoot,
-        graft.operators.TextOps.dedupCurrentMarker) + "/labels")
+    val emLabels = spark.read.parquet(
+      Versions.current(spark, emRoot) + "/labels")
     checks("embed_compact_repairs_exact") =
       emLabels.filter(col("node_id") >= 600L &&
         col("node_id") < 900L &&

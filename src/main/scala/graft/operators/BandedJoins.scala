@@ -168,6 +168,55 @@ private[graft] object BandedJoins {
     schema: StructType, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
+  /** The `x`/`y` bucket join of [[emitOnce]]: same (band, key), the
+    * caller's `extra`, and no earlier colliding band. */
+  private def emitOnceCond(bandCol: String, keyCol: String,
+      sigsCol: String, extra: Column): Column =
+    col(s"x.$bandCol") === col(s"y.$bandCol") &&
+      col(s"x.$keyCol") === col(s"y.$keyCol") && extra &&
+      !graft.functions.TextFunctions.earlierBandCollision(
+        col(s"x.$sigsCol"), col(s"y.$sigsCol"), col(s"x.$bandCol"))
+
+  /** The star edges a retirement owes a hot set. The star path centres
+    * each hot bucket on its min-id member, so retiring that member
+    * leaves the others with no published edge between them. For each
+    * bucket of `hot` (None: counted inline over `banded`) whose min id
+    * `retired` holds, the star re-centres on the smallest retained
+    * member: [[emitOnce]]'s star path over the bucket's retained rows of
+    * `banded` (the index BEFORE retirement), so a pair surfaces in one
+    * band only. Returns unverified (`id_a` < `id_b`) candidates, or
+    * None when `hot` is an empty local relation ([[loadHotSet]] of an
+    * index with no hot bucket): the caller's plan is then unchanged. */
+  def recentredStars(banded: DataFrame, retired: DataFrame,
+      hot: Option[DataFrame], bandCol: String, keyCol: String,
+      sigsCol: String, idCol: String): Option[DataFrame] = {
+    val set = hot.getOrElse(hotBuckets(banded, bandCol, keyCol)
+      .select(col("hot_band"), col("hot_key")))
+    val empty = set.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        l.data.isEmpty
+      case _ => false
+    }
+    Option.when(!empty) {
+      val inHot = banded.join(broadcast(set), col(bandCol) ===
+        col("hot_band") && col(keyCol) === col("hot_key"), "left_semi")
+      val ids = broadcast(retired.select(col(idCol)))
+      val lost = inHot.join(ids, Seq(idCol), "left_semi")
+        .groupBy(col(bandCol), col(keyCol))
+        .agg(min(col(idCol)).as("lost_min"))
+      val kept = inHot.join(ids, Seq(idCol), "left_anti")
+        .join(lost.select(bandCol, keyCol), Seq(bandCol, keyCol), "left_semi")
+      val centres = kept.groupBy(col(bandCol), col(keyCol))
+        .agg(min_by(struct(kept.columns.map(col): _*), col(idCol)).as("m"))
+        .join(lost, Seq(bandCol, keyCol))
+        .filter(col(s"m.$idCol") > col("lost_min"))
+        .select(col("m.*"))
+      broadcast(centres).as("x").join(kept.as("y"), emitOnceCond(bandCol,
+          keyCol, sigsCol, col(s"x.$idCol") < col(s"y.$idCol")))
+        .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
+    }
+  }
+
   /** Emit-once join of banded relations `left` (aliased `x`) and
     * `right` (aliased `y`) on (`bandCol`, `keyCol`), with the
     * no-earlier-collision predicate over `sigsCol` (the full signature
@@ -199,12 +248,7 @@ private[graft] object BandedJoins {
     outCols: Seq[Column],
     cap: Int = defaultHotBucketCap,
     hotOpt: Option[DataFrame] = None): DataFrame = {
-    val noEarlierCollision = !graft.functions.TextFunctions
-      .earlierBandCollision(col(s"x.$sigsCol"), col(s"y.$sigsCol"),
-        col(s"x.$bandCol"))
-    val joinCond = col(s"x.$bandCol") === col(s"y.$bandCol") &&
-      col(s"x.$keyCol") === col(s"y.$keyCol") &&
-      extra && noEarlierCollision
+    val joinCond = emitOnceCond(bandCol, keyCol, sigsCol, extra)
     val hot = broadcast(hotOpt.getOrElse(
       hotBuckets(left, bandCol, keyCol, cap)
         .select(col("hot_band"), col("hot_key"))))

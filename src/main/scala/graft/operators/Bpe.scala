@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{BpeEncode, BpeFunctions}
-import graft.sources.Tables
+import graft.sources.{Tables, Versions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -123,7 +123,6 @@ object Bpe {
     * update to a capped table could not promote a tail word whose base
     * count was thrown away. */
   private[graft] val wordsSuffix = "_words"
-  private[graft] val wordsCurrentMarker = "_graft_bpe_words_current"
   private[graft] def wordsRootOf(path: String): String =
     path.stripSuffix("/") + wordsSuffix
 
@@ -184,8 +183,8 @@ object Bpe {
       path: String, numMerges: Int = 160,
       maxVocab: Int = 50000): Seq[(String, String)] = {
     val wordsRoot = wordsRootOf(path)
-    graft.sources.Pq.write(wordCounts(docs), s"$wordsRoot/v0")
-    graft.sources.Markers.write(spark, wordsRoot, wordsCurrentMarker, "v0")
+    Versions.publish(spark, wordsRoot, "v0")(
+      graft.sources.Pq.write(wordCounts(docs), _))
     val capped = cappedWords(graft.sources.Pq.read(spark, s"$wordsRoot/v0"),
       maxVocab)
     val merges = trainBpe(capped, numMerges)
@@ -193,13 +192,6 @@ object Bpe {
     graft.sources.Markers.write(spark, path, trainSetMarker,
       trainSetFingerprint(capped))
     merges
-  }
-
-  private def currentWords(spark: SparkSession,
-      wordsRoot: String): (String, DataFrame) = {
-    val v = graft.sources.Markers.read(spark, wordsRoot,
-      wordsCurrentMarker)
-    (v, graft.sources.Pq.read(spark, s"$wordsRoot/$v"))
   }
 
   /** NIGHTLY TOKENIZER REFRESH (r11 verdict item 8): fold an APPEND
@@ -211,8 +203,7 @@ object Bpe {
     *      pass) full-outer-merge onto the persisted vocabulary-sized
     *      table — exact count addition, published versioned-then-flip
     *      (read the current version, write the next, flip the marker;
-    *      bounded newest-2 retention via the shared
-    *      [[Curation.retireVersions]]);
+    *      bounded newest-2 retention, [[graft.sources.Versions]]);
     *   2. refit decision: retrain iff the CAPPED training table
     *      differs from the one the PUBLISHED tokenizer records having
     *      been trained on ([[trainSetMarker]] — ADVICE r12: a
@@ -250,8 +241,9 @@ object Bpe {
       delta: DataFrame, numMerges: Int = 160,
       maxVocab: Int = 50000, version: Option[String] = None): Boolean = {
     val wordsRoot = wordsRootOf(path)
-    val (v, prev) = currentWords(spark, wordsRoot)
-    val updated = prev
+    val prevDir = Versions.current(spark, wordsRoot)
+    val v = prevDir.stripPrefix(s"$wordsRoot/")
+    val updated = graft.sources.Pq.read(spark, prevDir)
       .join(wordCounts(delta).select(col("w"), col("n").as("dn")),
         Seq("w"), "full_outer")
       .select(col("w"),
@@ -271,10 +263,8 @@ object Bpe {
             "batch refresh cannot extend a streaming-managed root")
       s"v${v.stripPrefix("v").toLong + 1L}"
     }
-    graft.sources.Pq.write(updated, s"$wordsRoot/$next")
-    graft.sources.Markers.write(spark, wordsRoot, wordsCurrentMarker,
-      next)
-    Curation.retireVersions(spark, wordsRoot, next, retainVersions = 2)
+    Versions.publish(spark, wordsRoot, next, retain = 2)(
+      graft.sources.Pq.write(updated, _))
     retrainIfStale(spark, path, numMerges, maxVocab)
   }
 
@@ -288,8 +278,8 @@ object Bpe {
     * @return true iff the merges were retrained and republished. */
   private[graft] def retrainIfStale(spark: SparkSession, path: String,
       numMerges: Int = 160, maxVocab: Int = 50000): Boolean = {
-    val after = cappedWords(currentWords(spark, wordsRootOf(path))._2,
-      maxVocab)
+    val after = cappedWords(graft.sources.Pq.read(spark,
+      Versions.current(spark, wordsRootOf(path))), maxVocab)
     val afterPrint = trainSetFingerprint(after)
     // the tokenizer artifact's own record of its training set is the
     // comparison baseline — an absent marker (pre-fingerprint artifact

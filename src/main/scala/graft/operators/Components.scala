@@ -280,36 +280,6 @@ object Components {
     labelComponents(starEdges(baseLabels)
       .unionByName(incPairs.select(col("id_a"), col("id_b"))))
 
-  /** Versioned label-map publication — the artifact discipline the
-    * streaming extension sink needs for exactly-once restarts
-    * (r8 verdict item 4): each version lands under its own
-    * subdirectory and a `_graft_labels_current` marker flips to it
-    * LAST, so a crash mid-write can never corrupt the served map (the
-    * half-written version is simply not current; a replay overwrites
-    * it with identical content — label extension is idempotent — and
-    * re-flips the marker to the same value). A plain
-    * `mode("overwrite")` on one path would delete the old map before
-    * the new one commits. `retainVersions` bounds storage across
-    * micro-batches (the shared [[Curation.retireVersions]] newest-N
-    * contract, r12 — a week of 1-minute triggers would otherwise
-    * strand 10k label snapshots; keep N > 1 for in-flight readers). */
-  private[graft] val labelsCurrentMarker = "_graft_labels_current"
-
-  private[graft] def publishLabels(spark: org.apache.spark.sql.SparkSession,
-    labels: DataFrame, root: String, version: String,
-    retainVersions: Int = 0): Unit = {
-    graft.sources.Pq.write(labels, s"$root/$version")
-    graft.sources.Markers.write(spark, root, labelsCurrentMarker,
-      version)
-    Curation.retireVersions(spark, root, version, retainVersions)
-  }
-
-  /** The currently-published label map of a [[publishLabels]] root. */
-  private[graft] def currentLabels(spark: org.apache.spark.sql.SparkSession,
-    root: String): DataFrame =
-    graft.sources.Pq.read(spark, root + "/" +
-      graft.sources.Markers.read(spark, root, labelsCurrentMarker))
-
   /** Join a finished label map against the full corpus id set: every id
     * gets its component's min id as `cluster_id` (singletons default to
     * themselves) and `is_kept` = is-the-canonical-representative — the

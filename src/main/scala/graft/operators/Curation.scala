@@ -839,63 +839,6 @@ object Curation {
     }
   }
 
-  /** Versioned-then-flip snapshot publication for the streaming CDC
-    * apply path — the [[Components.publishLabels]] discipline applied
-    * to the corpus snapshot itself: a new version lands in its own
-    * directory and only a successful complete write flips the current
-    * marker, so a crash mid-publish leaves the previous snapshot
-    * readable and intact.
-    *
-    * `retainVersions` bounds storage across micro-batches (the
-    * [[Pipelines.landThenPublish]] contract ported to the streaming
-    * loops, which otherwise grow one full snapshot per trigger
-    * forever): strictly AFTER the flip, all but the newest N
-    * non-current version directories are deleted (0 = keep
-    * everything). Keep N > 1 — a reader that resolved the marker just
-    * before the flip may still be scanning the previous version; the
-    * newest N survivors give it the same grace window any
-    * snapshot-expiry scheme (table-format VACUUM) documents. Deletion
-    * is crash-safe: versions are retired newest-first exempt, marker
-    * already points at the new version, so a crash mid-retirement
-    * leaves only unreferenced garbage, never a half-current artifact.
-    * Manifest-aware: a version whose index layer the current or a
-    * retained version's manifest lists ([[IndexLayers.pinned]]) is
-    * kept whole, so every retained version stays readable. */
-  private[graft] val snapshotCurrentMarker = "_graft_snapshot_current"
-
-  private[graft] def retireVersions(spark: SparkSession, root: String,
-      current: String, retainVersions: Int): Unit =
-    if (retainVersions > 0) {
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-      val (kept, old) = fs.listStatus(rootPath)
-        .filter(_.isDirectory)
-        .map(st => st.getPath.getName -> st.getModificationTime)
-        .filter(_._1 != current)
-        .sortBy(-_._2)
-        .map(_._1)
-        .splitAt(retainVersions)
-      val pinned = (current +: kept).toSet
-        .flatMap(IndexLayers.pinned(spark, root, _: String))
-      old.filterNot(pinned).foreach { n =>
-        fs.delete(new org.apache.hadoop.fs.Path(rootPath, n), true) }
-    }
-
-  private[graft] def publishSnapshot(spark: SparkSession,
-      snap: DataFrame, root: String, version: String,
-      retainVersions: Int = 0): Unit = {
-    graft.sources.Pq.write(snap, s"$root/$version")
-    graft.sources.Markers.write(spark, root, snapshotCurrentMarker,
-      version)
-    retireVersions(spark, root, version, retainVersions)
-  }
-
-  /** The currently-published snapshot of a [[publishSnapshot]] root. */
-  private[graft] def currentSnapshot(spark: SparkSession,
-      root: String): DataFrame =
-    graft.sources.Pq.read(spark, root + "/" +
-      graft.sources.Markers.read(spark, root, snapshotCurrentMarker))
-
   /** [[cdcMerge]] widened to the full document row (doc_id, source,
     * text) — the same anti+outer plan shape, but the upsert payload
     * rides ONE struct so the per-row coalesce replaces the whole row
@@ -917,36 +860,6 @@ object Curation {
       .select(col("doc_id"), coalesce(col("u"), col("b")).as("r"))
       .select(col("doc_id"), col("r.source").as("source"),
         col("r.text").as("text"))
-  }
-
-  /** Transactional multi-artifact epoch publication for the streaming
-    * snapshot+MV pair: BOTH artifacts land under one version directory
-    * and ONE marker flip makes them current together — the
-    * table-format commit discipline reduced to its essence. Publishing
-    * them through two independent marker flips would leave a crash
-    * window where one artifact reflects the batch and the other does
-    * not, and a checkpoint-replayed batch then either skips or
-    * double-applies the MV delta; with a single flip, replay from
-    * EITHER side of the flip is exactly-once (before: both recompute
-    * from the old epoch; after: the merge is a fixed point and the
-    * refresh delta cancels to zero — both pinned in
-    * CurationStreamSpec). */
-  private[graft] val epochCurrentMarker = "_graft_epoch_current"
-
-  private[graft] def publishEpoch(spark: SparkSession, root: String,
-      version: String, snap: DataFrame, mv: DataFrame,
-      retainVersions: Int = 0): Unit = {
-    graft.sources.Pq.write(snap, s"$root/$version/snapshot")
-    graft.sources.Pq.write(mv, s"$root/$version/mv")
-    graft.sources.Markers.write(spark, root, epochCurrentMarker, version)
-    retireVersions(spark, root, version, retainVersions)
-  }
-
-  private[graft] def currentEpoch(spark: SparkSession,
-      root: String): (DataFrame, DataFrame) = {
-    val v = graft.sources.Markers.read(spark, root, epochCurrentMarker)
-    (graft.sources.Pq.read(spark, s"$root/$v/snapshot"),
-      graft.sources.Pq.read(spark, s"$root/$v/mv"))
   }
 
   /** Declared CDC-merge query: the change batch is the

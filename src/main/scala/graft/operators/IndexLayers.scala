@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,8 +34,9 @@ import org.apache.spark.sql.functions._
   * would pass `spark.sql.sources.parallelPartitionDiscovery.threshold`
   * (a read lists its layer directories on the driver below it, so no
   * read starts a listing job), or when the retired set would pass its
-  * bound. Retirement keeps every layer a retained manifest lists
-  * ([[pinned]]). */
+  * bound. [[write]] returns the versions its manifest lists, which the
+  * version publishes as its refs ([[graft.sources.Versions]]), so
+  * retirement keeps every layer a retained manifest lists. */
 private[graft] object IndexLayers {
 
   val manifestMarker = "_graft_manifest"
@@ -51,9 +52,6 @@ private[graft] object IndexLayers {
     def retiredCount: Long = layers.map(_.retired.size.toLong).sum
   }
 
-  private def fs(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
   /** `<root>/<version>/<name>` → `<root>`. */
   private def rootOf(indexPath: String): Path =
     new Path(indexPath).getParent.getParent
@@ -66,10 +64,11 @@ private[graft] object IndexLayers {
   /** Bytes of a layer's data files (markers and sidecars excluded). */
   private def dataBytes(spark: SparkSession, indexPath: String): Long = {
     val p = new Path(indexPath)
-    fs(spark, p).listStatus(p).filter { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.map(_.getLen).sum
+    p.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(p)
+      .filter { s =>
+        val n = s.getPath.getName
+        s.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.map(_.getLen).sum
   }
 
   private def manifest(spark: SparkSession, indexPath: String): Manifest =
@@ -136,10 +135,11 @@ private[graft] object IndexLayers {
     * base (a seed). Otherwise the layer extends the manifest of
     * `previous`, the served version's layer directory: a delta of
     * `added` listing `retired`'s keys, or, when a fold rule fires, the
-    * whole effective index after the wave as a new base. */
+    * whole effective index after the wave as a new base. Returns the
+    * versions whose layers the manifest lists. */
   def write(spark: SparkSession, root: String, version: String,
       name: String, added: DataFrame, retired: Option[DataFrame],
-      previous: => String): Unit = {
+      previous: => String): Seq[String] = {
     val dir = s"$root/$version/$name"
     val key = retired.fold("")(_.columns.head)
     val (layers, wave) = retired match {
@@ -180,19 +180,6 @@ private[graft] object IndexLayers {
         (Seq(l.path, l.bytes.toString) ++
           Some(l.retired).filter(_.nonEmpty).map(_.mkString(","))).mkString(" ")
       }).mkString("\n"))
-  }
-
-  /** The versions under `root` whose layers `version`'s manifests list,
-    * its own included: [[Curation.retireVersions]] deletes none of
-    * them while `version` is retained. */
-  def pinned(spark: SparkSession, root: String,
-      version: String): Set[String] = {
-    val dir = new Path(root, version)
-    val fsys = fs(spark, dir)
-    if (!fsys.exists(dir)) Set.empty
-    else fsys.listStatus(dir).filter(_.isDirectory).toSet
-      .filter(s => fsys.exists(new Path(s.getPath, manifestMarker)))
-      .flatMap(s => manifest(spark, s.getPath.toString).layers)
-      .map(_.path.split("/").head)
+    all.map(_.path.split("/").head)
   }
 }

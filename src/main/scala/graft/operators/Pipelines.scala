@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Tables, Versions}
 
 /** Composed end-to-end pipelines — the reference's actual *product* is
   * not single operators but whole task dataflows
@@ -577,8 +577,6 @@ object Pipelines {
 
   // ------------------------------------------------------- gated publish
 
-  private[graft] val silverCurrentMarker = "_graft_silver_current"
-
   /** [[landThenPublish]]'s shard digests outlived their bound; the
     * publish was abandoned before any version byte landed. */
   final class DigestTimeoutException(msg: String)
@@ -664,12 +662,12 @@ object Pipelines {
     *   - the gate DECIDES before a single publish byte is written (the
     *     checklist is cell-sized by [[qPipelineLanding]]'s contract, so
     *     the driver-side decision collect is bounded);
-    *   - publication is versioned-then-flip (the
-    *     [[Components.publishLabels]] discipline): the layout lands
-    *     under `root/<version>` and only a successful complete write
-    *     flips the `_graft_silver_current` marker — a crash mid-write,
-    *     like a failing gate, leaves the previous version current and
-    *     readers never observe a half-published table.
+    *   - publication is versioned-then-flip
+    *     ([[graft.sources.Versions.publish]]): the layout lands under
+    *     `root/<version>` and only a successful complete write flips
+    *     the current marker — a crash mid-write, like a failing gate,
+    *     leaves the previous version current and readers never observe
+    *     a half-published table.
     * The quarantined drop keeps full fidelity (the re-land after the
     * upstream fix re-reads it), and the checklist records exactly which
     * checks sank it.
@@ -684,17 +682,13 @@ object Pipelines {
     * [[Relational.pointLookupClustered]]) resolve the manifest;
     * pre-manifest versions read exactly as before.
     *
-    * `retainVersions` bounds storage across nightly drops: after a
-    * successful flip, all but the newest N non-current versions are
-    * deleted (0 = keep everything; quarantine, the current version,
-    * and any version whose directories a SURVIVING manifest still
-    * references are never touched — manifest paths are terminal, so
-    * the reference closure needs no transitive walk). Retention runs
-    * strictly AFTER the flip, so a reader that resolved the marker
-    * before the publish always sees a complete (possibly previous)
-    * version, never a half-deleted one — readers of retention-expired
-    * versions need the same grace window any snapshot-expiry scheme
-    * (table-format VACUUM) documents.
+    * `retainVersions` bounds storage across nightly drops through the
+    * shared retention rule (0 = keep everything): a version publishes
+    * the versions its carried shards live in as its refs, so a
+    * SURVIVING manifest's shards are never deleted, and quarantine is
+    * never touched. Retention runs strictly AFTER the flip, so a
+    * reader that resolved the marker before the publish always sees a
+    * complete (possibly previous) version, never a half-deleted one.
     *
     * @return true iff the drop was published. */
   def landThenPublish(spark: SparkSession, landed: DataFrame,
@@ -736,9 +730,7 @@ object Pipelines {
       // digests, then manifest land under `root/<version>`, and only
       // the final marker flip makes any of it current.
       val versionDir = s"$root/$version"
-      val prev = graft.sources.Markers.readOption(spark, root,
-        silverCurrentMarker)
-      val prevDir = prev.map(v => s"$root/$v")
+      val prevDir = Versions.currentVersion(spark, root).map(v => s"$root/$v")
       // carry-forward is legal only against a same-shard-count layout
       val prevComparable = prevDir.filter(d =>
         graft.sources.Markers.readOption(spark, d, "_graft_shards")
@@ -774,46 +766,21 @@ object Pipelines {
       val changed = digests.keySet.filter(k =>
         !prevDigests.get(k).contains(digests(k)) ||
           !prevSources.contains(k))
-      if (changed.nonEmpty)
-        Relational.writePointLayout(landed, key, versionDir, shards,
-          onlyShards = Some(changed))
       val sources = digests.keys.map { k =>
         k -> (if (changed(k)) s"$versionDir/key_shard=$k"
               else prevSources(k))
       }.toMap
-      graft.sources.Markers.write(spark, versionDir, "_graft_shards",
-        shards.toString)
-      graft.sources.Markers.write(spark, versionDir, shardDigestsMarker,
-        formatShardMap(digests))
-      graft.sources.Markers.write(spark, versionDir, shardSourcesMarker,
-        formatShardMap(sources))
-      graft.sources.Markers.write(spark, root, silverCurrentMarker,
-        version)
-      if (retainVersions > 0) {
-        // retention is REFERENCE-AWARE: a surviving version's
-        // manifest may point into an older version's directories, so
-        // the keep set is (current + newest N) CLOSED over their
-        // manifests — physical paths are terminal, no transitive walk
-        val rootPath = new org.apache.hadoop.fs.Path(root)
-        val fs = rootPath.getFileSystem(
-          spark.sessionState.newHadoopConf())
-        val others = fs.listStatus(rootPath)
-          .filter(_.isDirectory)
-          .map(st => st.getPath.getName -> st.getModificationTime)
-          .filter { case (n, _) => n != "quarantine" && n != version }
-        val kept = others.sortBy(-_._2).take(retainVersions).map(_._1)
-        val referenced = (version +: kept).toSet.flatMap { (v: String) =>
-          graft.sources.Markers.readOption(spark, s"$root/$v",
-              shardSourcesMarker)
-            .map(parseShardMap(_).values
-              .flatMap(p => p.stripPrefix(root + "/").split("/")
-                .headOption).toSet)
-            .getOrElse(Set.empty[String])
-        }
-        others.map(_._1)
-          .filterNot(kept.toSet).filterNot(referenced)
-          .foreach { n =>
-            fs.delete(new org.apache.hadoop.fs.Path(rootPath, n), true) }
+      Versions.publish(spark, root, version, retainVersions,
+          sources.values.map(_.stripPrefix(s"$root/").split("/").head)) { d =>
+        if (changed.nonEmpty)
+          Relational.writePointLayout(landed, key, d, shards,
+            onlyShards = Some(changed))
+        graft.sources.Markers.write(spark, d, "_graft_shards",
+          shards.toString)
+        graft.sources.Markers.write(spark, d, shardDigestsMarker,
+          formatShardMap(digests))
+        graft.sources.Markers.write(spark, d, shardSourcesMarker,
+          formatShardMap(sources))
       }
       true
     } else {
@@ -832,8 +799,7 @@ object Pipelines {
     * root — what every downstream reader (and
     * [[Relational.pointLookupClustered]]) serves from. */
   def currentSilver(spark: SparkSession, root: String): DataFrame = {
-    val v = graft.sources.Markers.read(spark, root, silverCurrentMarker)
-    val dir = s"$root/$v"
+    val dir = Versions.current(spark, root)
     graft.sources.Markers.readOption(spark, dir, shardSourcesMarker)
       .map(parseShardMap) match {
       case Some(srcs) if srcs.nonEmpty =>

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Tables, Versions}
 
 /** LLM-training-data text operators over the `documents` table — the
   * north-star extension (BASELINE.json; SURVEY.md §2.10, §7.2 M5):
@@ -696,7 +696,7 @@ object TextOps {
     * or splits a merged component fails the hash compare loudly.
     */
   def qDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val cur = currentDir(spark, dedupBaseRoots.get(spark, dir))
+    val cur = Versions.current(spark, dedupBaseRoots.get(spark, dir))
     val idx = loadMinhashIndex(spark, s"$cur/staged")
     val docs = Tables.documents(spark, dir)
     // the increment is materialized once (localCheckpoint, the repo's
@@ -743,10 +743,12 @@ object TextOps {
     * and the re-crawled docs' staged signatures, returns (the wave's
     * added staged rows — the repaired index is the retained rows ∪
     * these, published as a delta over the served manifest — and the
-    * repaired pair set = surviving pairs ∪ fresh probes). The
-    * published hot set is a conservative SUPERSET after retirement for the probe at hand
-    * (buckets only shrink) — correct per the emitOnce contract; the
-    * streaming publication recomputes it over the repaired index so
+    * repaired pair set = surviving pairs ∪ fresh probes ∪ the stars of
+    * hot buckets whose centre retired, re-centred on their smallest
+    * retained member, [[BandedJoins.recentredStars]]). The published
+    * hot set is a conservative SUPERSET after retirement for the probe
+    * at hand (buckets only shrink) — correct per the emitOnce contract;
+    * the streaming publication recomputes it over the repaired index so
     * the NEXT wave probes an exact set. */
   private[graft] def compactState(baseStaged: DataFrame,
     basePairs: DataFrame, ids: DataFrame, newStaged: DataFrame,
@@ -768,8 +770,22 @@ object TextOps {
           !newStaged.columns.contains("n_sh"))
         newStaged.withColumn("n_sh", size(col("shash")))
       else newStaged
-    (newAligned, keptPairs.select(col("id_a"), col("id_b"))
-        .unionByName(freshPairs.select(col("id_a"), col("id_b"))))
+    val pairs = keptPairs.select(col("id_a"), col("id_b"))
+      .unionByName(freshPairs.select(col("id_a"), col("id_b")))
+    // a hot bucket whose star centre retired re-centres on its smallest
+    // retained member; its edges join two retained ids, so they never
+    // meet a fresh pair, and the anti-join drops any the kept set holds
+    val recentred = BandedJoins.recentredStars(
+      bandedRows(baseStaged, carry = false), ids, baseHot, "band", "bhash",
+      "bsigs", "doc_id").map { cands =>
+        val shash = retainedStaged.select(col("doc_id"), col("shash"))
+        verifyJaccard(cands
+            .join(shash.toDF("id_a", "sa"), "id_a")
+            .join(shash.toDF("id_b", "sb"), "id_b"))
+          .select(col("id_a"), col("id_b"))
+          .join(keptPairs, Seq("id_a", "id_b"), "left_anti")
+      }
+    (newAligned, recentred.fold(pairs)(pairs.unionByName))
   }
 
   // ── CONTINUOUSLY-MAINTAINED DEDUP ARTIFACT (r15, r14 verdict item
@@ -777,12 +793,8 @@ object TextOps {
   // intake but compaction ran batch-only) ──
 
   /** Marker naming the current version of a [[publishWaveState]]
-    * root. */
-  private[graft] val dedupCurrentMarker = "_graft_dedup_current"
-
-  /** The current version directory of a [[publishWaveState]] root. */
-  private[graft] def currentDir(spark: SparkSession, root: String): String =
-    s"$root/${graft.sources.Markers.read(spark, root, dedupCurrentMarker)}"
+    * root: the shared [[graft.sources.Versions]] marker. */
+  private[graft] val dedupCurrentMarker = Versions.currentMarker
 
   /** How long [[publishWaveState]] waits for its index branch. A
     * benchmark-scale wave finishes it in well under a second; the
@@ -812,10 +824,10 @@ object TextOps {
     * `retired` None, a seed — a base), its `sidecar` (a hot set or
     * edit stats, recomputed over the EFFECTIVE index so the next
     * wave's probe set is exact, not the seed's drifting superset), the
-    * verified pair set, and the label
-    * map land under ONE version directory and ONE marker flip — the
-    * [[Curation.publishEpoch]] discipline; the marker names the
-    * version whose manifest is served, so the manifest flip IS the
+    * verified pair set, and the label map land under ONE version
+    * directory and ONE marker flip ([[graft.sources.Versions.publish]],
+    * whose refs are the versions the manifest lists); the marker names
+    * the version whose manifest is served, so the manifest flip IS the
     * marker flip. Two flips would leave a crash window where the pair
     * set reflects the wave but the index does not, and the NEXT
     * wave's retirement would then anti-join against rows that were
@@ -848,13 +860,14 @@ object TextOps {
     * under a job tag of its own, and it is JOINED before this call
     * returns or throws, so no write lands in `<version>/` after an
     * exception and a replay never races a straggler: a failing pairs
-    * chain (or an interrupted caller) abandons the branch and waits
-    * for it to end; a branch that outlives `branchTimeout` is
-    * abandoned the same way and fails the call with a
-    * `TimeoutException`. An abandoned branch starts no further step,
-    * and every wait re-cancels its tag, so a job it started after the
-    * first cancel is killed too; once it has ended, the abandoned
-    * version's directory is deleted (an aborted write's cleanup could
+    * chain abandons the branch — it starts no further step — and waits
+    * for its running step to end; an interrupted caller, or a branch
+    * that outlives `branchTimeout`, has its jobs cancelled by tag and
+    * is waited for the same way (the timeout fails the call with a
+    * `TimeoutException`). Every wait re-cancels a cancelled branch's
+    * tag, so a job it started after the first cancel is killed too;
+    * once the branch has ended, the abandoned version's directory is
+    * deleted by the publish (an aborted write's cleanup could
     * otherwise still change it after the call threw). */
   private[graft] def publishWaveState(spark: SparkSession, root: String,
     version: String, indexName: String, index: DataFrame,
@@ -864,83 +877,87 @@ object TextOps {
     branchTimeout: FiniteDuration = waveBranchTimeout): Unit = {
     import java.util.concurrent.{CancellationException, ExecutionException,
       TimeUnit, TimeoutException}
-    val dir = s"$root/$version"
     val sc = spark.sparkContext
     val tag = s"graft-wave-index-${java.util.UUID.randomUUID()}"
     val deadline = System.nanoTime() + branchTimeout.toNanos
+    // an abandoned branch starts no further step; a cancelled one also
+    // has its running jobs killed
     val abandoned = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val indexChain = org.apache.spark.sql.graft.SessionBridge
-      .withThreadLocalCaptured(spark, waveBranchPool) {
-        sc.addJobTag(tag)
-        try Seq[String => Unit](_ => IndexLayers.write(spark, root, version,
-            indexName, index, retired, s"${currentDir(spark, root)}/$indexName"),
-            sidecar)
-          .foreach { step =>
-            if (abandoned.get) throw new CancellationException(
-              s"publishWaveState($root, $version): index branch abandoned")
-            step(s"$dir/$indexName")
-          }
-        finally sc.removeJobTag(tag)
-      }
-    // waits up to `nanos` for the branch to end, however it ends,
-    // re-cancelling an abandoned branch's tag every 50 ms; an interrupt
-    // (a stopping query) abandons the branch and keeps waiting for it,
-    // then re-asserts the flag. True iff the branch ended.
-    def settle(nanos: Long): Boolean = {
-      val end = System.nanoTime() + nanos
-      var interrupted = false
-      while (!indexChain.isDone && System.nanoTime() < end) {
-        if (abandoned.get) sc.cancelJobsWithTag(tag)
-        try indexChain.get(math.min(end - System.nanoTime(), 50000000L),
-          TimeUnit.NANOSECONDS)
-        catch {
-          case _: InterruptedException =>
-            interrupted = true
-            abandoned.set(true)
-          case _: Exception => ()
+    val cancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
+    var layers: Seq[String] = Nil
+    Versions.publish(spark, root, version, retainVersions,
+        layers) { dir =>
+      val indexChain = org.apache.spark.sql.graft.SessionBridge
+        .withThreadLocalCaptured(spark, waveBranchPool) {
+          sc.addJobTag(tag)
+          try Seq[String => Unit](_ => layers = IndexLayers.write(spark,
+              root, version, indexName, index, retired,
+              s"${Versions.current(spark, root)}/$indexName"),
+              sidecar)
+            .foreach { step =>
+              if (abandoned.get) throw new CancellationException(
+                s"publishWaveState($root, $version): index branch abandoned")
+              step(s"$dir/$indexName")
+            }
+          finally sc.removeJobTag(tag)
         }
+      // waits up to `nanos` for the branch to end, however it ends,
+      // re-cancelling a cancelled branch's tag every 50 ms; an interrupt
+      // (a stopping query) cancels the branch and keeps waiting for it,
+      // then re-asserts the flag. True iff the branch ended.
+      def settle(nanos: Long): Boolean = {
+        val end = System.nanoTime() + nanos
+        var interrupted = false
+        while (!indexChain.isDone && System.nanoTime() < end) {
+          if (cancelled.get) sc.cancelJobsWithTag(tag)
+          try indexChain.get(math.min(end - System.nanoTime(), 50000000L),
+            TimeUnit.NANOSECONDS)
+          catch {
+            case _: InterruptedException =>
+              interrupted = true
+              abandoned.set(true)
+              cancelled.set(true)
+            case _: Exception => ()
+          }
+        }
+        if (interrupted) Thread.currentThread().interrupt()
+        indexChain.isDone
       }
-      if (interrupted) Thread.currentThread().interrupt()
-      indexChain.isDone
-    }
-    // no manifest lists an abandoned version and the marker never
-    // names it: once the branch has ended, drop what its aborted
-    // writes left, so nothing under `<version>/` changes after the
-    // call throws
-    def abandon(): Boolean = {
-      abandoned.set(true)
-      val ended = settle(branchTimeout.toNanos)
-      if (ended) {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+      // no manifest lists an abandoned version and the marker never
+      // names it: the publish deletes its directory once this returns
+      def abandon(): Boolean = {
+        abandoned.set(true)
+        cancelled.set(true)
+        settle(branchTimeout.toNanos)
       }
-      ended
+      val stillRunning = "the index branch is still running after its " +
+        "jobs were cancelled"
+      try {
+        graft.sources.Pq.write(pairs, s"$dir/pairs")
+        if (labels)
+          graft.sources.Pq.write(labelEdges.fold(Components.labelComponents(
+              graft.sources.Pq.read(spark, s"$dir/pairs"), rereadable = true))(
+              Components.labelComponents(_)), s"$dir/labels")
+      } catch {
+        case t: Throwable =>
+          // a failed pairs chain lets the branch finish its running step
+          // before the deadline instead of killing it: a killed task can
+          // still write under `<version>/` after its job reported failure
+          abandoned.set(true)
+          if (!settle(deadline - System.nanoTime()) && !abandon())
+            t.addSuppressed(new TimeoutException(stillRunning))
+          throw t
+      }
+      if (!settle(deadline - System.nanoTime())) {
+        val ended = abandon()
+        throw new TimeoutException(s"publishWaveState($root, " +
+          s"$version): the index branch did not finish within " +
+          s"$branchTimeout; its jobs were cancelled and the marker was " +
+          "not flipped" + (if (ended) "" else s"; $stillRunning"))
+      }
+      try indexChain.get()
+      catch { case e: ExecutionException => throw e.getCause }
     }
-    val stillRunning = "the index branch is still running after its " +
-      "jobs were cancelled"
-    try {
-      graft.sources.Pq.write(pairs, s"$dir/pairs")
-      if (labels)
-        graft.sources.Pq.write(labelEdges.fold(Components.labelComponents(
-            graft.sources.Pq.read(spark, s"$dir/pairs"), rereadable = true))(
-            Components.labelComponents(_)), s"$dir/labels")
-    } catch {
-      case t: Throwable =>
-        if (!abandon())
-          t.addSuppressed(new TimeoutException(stillRunning))
-        throw t
-    }
-    if (!settle(deadline - System.nanoTime())) {
-      val ended = abandon()
-      throw new TimeoutException(s"publishWaveState($root, " +
-        s"$version): the index branch did not finish within " +
-        s"$branchTimeout; its jobs were cancelled and the marker was " +
-        "not flipped" + (if (ended) "" else s"; $stillRunning"))
-    }
-    try indexChain.get()
-    catch { case e: ExecutionException => throw e.getCause }
-    graft.sources.Markers.write(spark, root, dedupCurrentMarker, version)
-    Curation.retireVersions(spark, root, version, retainVersions)
   }
 
   /** Seed a streaming-compaction root from a corpus: one
@@ -950,21 +967,20 @@ object TextOps {
     * (unless `labels` is false), published as version `seed` — a base
     * layer with no manifest. */
   private[graft] def seedDedupState(spark: SparkSession,
-    docs: DataFrame, root: String, labels: Boolean = true): Unit = {
-    val idx = minhashFit(spark, docs, s"$root/seed/staged")
-    graft.sources.Markers.write(spark, root, "_graft_layout",
-      if (idx.joinBack) "joinback" else "carried")
-    val staged = stagedFrame(spark, idx)
-    val hot = Some(hotSetOf(spark, idx))
-    graft.sources.Pq.write((if (idx.joinBack) pairsJoinBackStaged(staged, hot)
-      else pairsCarriedStaged(staged, hot)).select(col("id_a"), col("id_b")),
-      s"$root/seed/pairs")
-    if (labels)
-      graft.sources.Pq.write(Components.labelComponents(
-        graft.sources.Pq.read(spark, s"$root/seed/pairs")),
-        s"$root/seed/labels")
-    graft.sources.Markers.write(spark, root, dedupCurrentMarker, "seed")
-  }
+    docs: DataFrame, root: String, labels: Boolean = true): Unit =
+    Versions.publish(spark, root, "seed") { dir =>
+      val idx = minhashFit(spark, docs, s"$dir/staged")
+      graft.sources.Markers.write(spark, root, "_graft_layout",
+        if (idx.joinBack) "joinback" else "carried")
+      val staged = stagedFrame(spark, idx)
+      val hot = Some(hotSetOf(spark, idx))
+      graft.sources.Pq.write((if (idx.joinBack) pairsJoinBackStaged(staged, hot)
+        else pairsCarriedStaged(staged, hot)).select(col("id_a"), col("id_b")),
+        s"$dir/pairs")
+      if (labels)
+        graft.sources.Pq.write(Components.labelComponents(
+          graft.sources.Pq.read(spark, s"$dir/pairs")), s"$dir/labels")
+    }
 
   /** One re-crawl wave applied to the CURRENT state of a dedup root —
     * the [[compactState]] core reading its inputs from the served
@@ -975,7 +991,7 @@ object TextOps {
     * labels; the batch compaction queries label the pairs. */
   private[graft] def compactWaveState(spark: SparkSession, root: String,
     recrawled: DataFrame): (DataFrame, DataFrame) = {
-    val cur = currentDir(spark, root)
+    val cur = Versions.current(spark, root)
     val joinBack = graft.sources.Markers.read(spark, root,
       "_graft_layout") == "joinback"
     val staged = IndexLayers.read(spark, s"$cur/staged")
@@ -1018,35 +1034,35 @@ object TextOps {
     * RETAINED members (an aggregation, not a join recompute) and maps
     * the surviving sig pairs onto them. */
   private[graft] def seedSimhashRoot(spark: SparkSession,
-      docs: DataFrame, root: String, labels: Boolean = true): Unit = {
-    graft.sources.Pq.write(simhashMd5Halves(docs), s"$root/seed/sigs")
-    val sigs = graft.sources.Pq.read(spark, s"$root/seed/sigs")
-    val reps = sigs.groupBy(col("sig_hi"), col("sig_lo"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"), col("sig_hi"), col("sig_lo"))
-      .localCheckpoint(true)
-    val b = simhashAutoPlan(reps, reps.count())
-    graft.sources.Markers.write(spark, root, "_graft_simhash_b",
-      b.toString)
-    graft.sources.Pq.write(sigLevel(simhashSigPairs(reps, b), reps, reps),
-      s"$root/seed/pairs")
-    val identity = sigs.join(reps
-        .select(col("sig_hi"), col("sig_lo"), col("doc_id").as("rep")),
-        Seq("sig_hi", "sig_lo"))
-      .filter(col("doc_id") =!= col("rep"))
-      .select(col("doc_id").as("id_a"), col("rep").as("id_b"))
-    if (labels)
-      graft.sources.Pq.write(Components.labelComponents(identity.unionByName(
-          graft.sources.Pq.read(spark, s"$root/seed/pairs")
-            .join(reps.select(col("sig_hi").as("hi_a"),
-              col("sig_lo").as("lo_a"), col("doc_id").as("id_a")),
-              Seq("hi_a", "lo_a"))
-            .join(reps.select(col("sig_hi").as("hi_b"),
-              col("sig_lo").as("lo_b"), col("doc_id").as("id_b")),
-              Seq("hi_b", "lo_b"))
-            .select(col("id_a"), col("id_b")))), s"$root/seed/labels")
-    graft.sources.Markers.write(spark, root, dedupCurrentMarker, "seed")
-  }
+      docs: DataFrame, root: String, labels: Boolean = true): Unit =
+    Versions.publish(spark, root, "seed") { dir =>
+      graft.sources.Pq.write(simhashMd5Halves(docs), s"$dir/sigs")
+      val sigs = graft.sources.Pq.read(spark, s"$dir/sigs")
+      val reps = sigs.groupBy(col("sig_hi"), col("sig_lo"))
+        .agg(min(col("doc_id")).as("doc_id"))
+        .select(col("doc_id"), col("sig_hi"), col("sig_lo"))
+        .localCheckpoint(true)
+      val b = simhashAutoPlan(reps, reps.count())
+      graft.sources.Markers.write(spark, root, "_graft_simhash_b",
+        b.toString)
+      graft.sources.Pq.write(sigLevel(simhashSigPairs(reps, b), reps, reps),
+        s"$dir/pairs")
+      val identity = sigs.join(reps
+          .select(col("sig_hi"), col("sig_lo"), col("doc_id").as("rep")),
+          Seq("sig_hi", "sig_lo"))
+        .filter(col("doc_id") =!= col("rep"))
+        .select(col("doc_id").as("id_a"), col("rep").as("id_b"))
+      if (labels)
+        graft.sources.Pq.write(Components.labelComponents(identity.unionByName(
+            graft.sources.Pq.read(spark, s"$dir/pairs")
+              .join(reps.select(col("sig_hi").as("hi_a"),
+                col("sig_lo").as("lo_a"), col("doc_id").as("id_a")),
+                Seq("hi_a", "lo_a"))
+              .join(reps.select(col("sig_hi").as("hi_b"),
+                col("sig_lo").as("lo_b"), col("doc_id").as("id_b")),
+                Seq("hi_b", "lo_b"))
+              .select(col("id_a"), col("id_b")))), s"$dir/labels")
+    }
 
   /** One re-crawl wave applied to the CURRENT state of a SimHash
     * root — retire → re-elect → map → probe (the steps
@@ -1057,7 +1073,7 @@ object TextOps {
     * [[publishWaveState]], the batch query labels the edges. */
   private[graft] def simhashWaveState(spark: SparkSession, root: String,
       batch: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val cur = currentDir(spark, root)
+    val cur = Versions.current(spark, root)
     val b = graft.sources.Markers.read(spark, root, "_graft_simhash_b")
       .toInt
     val ids = batch.select(col("doc_id"))
@@ -1140,7 +1156,7 @@ object TextOps {
     * labels. */
   private[graft] def editWaveState(spark: SparkSession, root: String,
       batch: DataFrame, d: Int = 3): (DataFrame, DataFrame) = {
-    val cur = currentDir(spark, root)
+    val cur = Versions.current(spark, root)
     val stats = loadEditIndexStats(spark, s"$cur/index", d)
     val (edges, index2) = editWaveRepair(spark,
       IndexLayers.read(spark, s"$cur/index"),
@@ -2970,7 +2986,7 @@ object TextOps {
   private[graft] def editIncrementalLabels(spark: SparkSession,
       root: String, docs: DataFrame, increment: Column,
       d: Int): DataFrame = {
-    val cur = currentDir(spark, root)
+    val cur = Versions.current(spark, root)
     val stats = loadEditIndexStats(spark, s"$cur/index", d)
     val inc = docs.filter(increment)
     val incKeyed = editKeyedBase(inc, 30)

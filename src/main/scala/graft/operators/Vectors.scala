@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Tables, Versions}
 
 /** Embedding similarity search over the `embeddings` table (64-dim
   * float vectors) — the north-star similarity-search extension
@@ -846,8 +846,7 @@ object Vectors {
     * behavior is pinned on planted ≥0.9-cosine cross-split clusters in
     * VectorsSpec). */
   def qDedupEmbedIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val cur = graft.operators.TextOps.currentDir(spark,
-      embedBaseRoots.get(spark, dir))
+    val cur = Versions.current(spark, embedBaseRoots.get(spark, dir))
     val all = unit(spark, dir)
     val newStaged = stageVectors(all.filter(isIncrementVec))
       .localCheckpoint(true)
@@ -870,8 +869,9 @@ object Vectors {
     * the NEW vectors' staged signatures; the published hot set is a
     * conservative superset after retirement. Returns (the wave's added
     * staged rows — the repaired index is retained ∪ these — and the
-    * repaired pair set = surviving pairs ∪ fresh probes); the caller
-    * relabels the dup-set-sized graph. A
+    * repaired pair set = surviving pairs ∪ fresh probes ∪ the re-centred
+    * stars of hot buckets whose centre retired); the caller relabels
+    * the dup-set-sized graph. A
     * production trigger for this path: an embedding MODEL upgrade
     * re-embeds a corpus slice — ids unchanged, vectors superseded.
     */
@@ -885,8 +885,19 @@ object Vectors {
         Seq("id_a"), "left_anti")
       .join(broadcast(ids.select(col("vec_id").as("id_b"))),
         Seq("id_b"), "left_anti")
-    (newStaged, kept.select(col("id_a"), col("id_b"))
-      .unionByName(fresh.select(col("id_a"), col("id_b"))))
+    val pairs = kept.select(col("id_a"), col("id_b"))
+      .unionByName(fresh.select(col("id_a"), col("id_b")))
+    // hot buckets whose star centre retired: the text twin's re-centring
+    val recentred = BandedJoins.recentredStars(bandedVecs(baseStaged),
+      ids, baseHot, "band", "band_sig", "sigs", "vec_id").map { cands =>
+        val u = retained.select(col("vec_id"), col("u"))
+        verifyCosine(cands
+            .join(u.toDF("id_a", "ua"), "id_a")
+            .join(u.toDF("id_b", "ub"), "id_b"))
+          .select(col("id_a"), col("id_b"))
+          .join(kept, Seq("id_a", "id_b"), "left_anti")
+      }
+    (newStaged, recentred.fold(pairs)(pairs.unionByName))
   }
 
   /** The deterministic re-embed subset the declared query simulates
@@ -944,7 +955,7 @@ object Vectors {
     * labels. `batch` is raw (vec_id, embedding). */
   private[graft] def embedWaveState(spark: SparkSession, root: String,
       batch: DataFrame): (DataFrame, DataFrame) = {
-    val cur = graft.operators.TextOps.currentDir(spark, root)
+    val cur = Versions.current(spark, root)
     embedCompactState(IndexLayers.read(spark, s"$cur/staged"),
       graft.sources.Pq.read(spark, s"$cur/pairs"),
       batch.select(col("vec_id")),

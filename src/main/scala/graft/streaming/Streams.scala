@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode}
 
-import graft.operators.{BandedJoins, TextOps, Vectors}
+import graft.operators.{BandedJoins, Components, Curation, TextOps, Vectors}
+import graft.sources.{Pq, Versions}
 
 /** Input/output/state records for the custom stateful sessionizer.
   * [[SessionState]] start/end are epoch MICROSECONDS — `Timestamp
@@ -556,34 +557,6 @@ object Streams {
     TextOps.editCrossFlags(baseBuild, TextOps.editKeyedHeads(docs, 30), 3,
       pinPartitions = false)
 
-  /** Streaming LABEL EXTENSION (r8 verdict item 4): [[nearDupIntake]]
-    * flags (new, base) pairs but never folds them into the published
-    * label map — this sink does, per micro-batch, through
-    * `foreachBatch`: probe the batch against the published index
-    * (the stream-static emit-once join), extend the CURRENT label map
-    * with the flagged pairs ([[graft.operators.Components.extendLabels]]
-    * — star edges ∪ batch pairs, dup-set-sized propagation), and
-    * publish the result as a new label version.
-    *
-    * Exactly-once across restarts WITHOUT transactional storage, from
-    * two properties:
-    *   - publication is versioned-then-flip
-    *     ([[graft.operators.Components.publishLabels]]): a crash
-    *     mid-write leaves the previous version current;
-    *   - extension is IDEMPOTENT: re-extending a map that already
-    *     reflects a batch's pairs is a fixed point (the components and
-    *     their min ids are unchanged), so the one batch Spark may
-    *     replay after a crash re-publishes identical content.
-    * Batch-by-batch extension also equals one extension with all
-    * batches' pairs (star edges preserve node set + connectivity
-    * exactly), which is what the restart spec asserts against the
-    * batch dual.
-    *
-    * State posture at 100 TB: the streaming state is EMPTY (the join
-    * is stateless, the label map is an external artifact) — executor
-    * memory holds only the micro-batch, and the per-batch propagation
-    * cost rides on the dup-set size, not the corpus.
-    */
   /** Streaming ANN INDEX INTAKE — the continuous-maintenance leg of
     * the IVF fit/probe split: new embedding arrivals are unit-
     * normalized and assigned to their coarse bucket against the
@@ -628,6 +601,44 @@ object Streams {
       .outputMode("append")
       .start()
 
+  /** The stream's DURABLE identity: the query id Spark persists in
+    * the checkpoint's `metadata` file — constant across every restart
+    * from the SAME checkpoint, fresh for a new one. Read per batch (a
+    * ~60-byte file against a full artifact publish — noise).
+    *
+    * Why the publish-version markers must carry it (ADVICE r12,
+    * medium): a version named `b<batchId>` ALONE survives a checkpoint
+    * swap — reuse a snapshot/epoch/labels root with a FRESH checkpoint
+    * (batch ids restart at 0) and the prior run's stale `b0` marker
+    * makes the new batch 0 "already published": the checkpoint commits
+    * and the batch's data silently vanishes, where the pre-r12 code at
+    * least wedged loudly on read-under-own-overwrite. Folding the
+    * checkpoint's own query id into the version makes the post-flip
+    * short-circuit fire only for THIS stream's replayed batch; any
+    * foreign marker — stale run, fat-fingered root sharing — reads as
+    * not-yet-published and the batch publishes normally (idempotent
+    * for a true replay, corrective for a stale root). */
+  private[graft] def checkpointQueryId(
+    spark: org.apache.spark.sql.SparkSession,
+    checkpointDir: String): String = {
+    val p = new org.apache.hadoop.fs.Path(checkpointDir, "metadata")
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val in = fs.open(p)
+    val text = try new String(in.readAllBytes(), "UTF-8")
+      finally in.close()
+    """"id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(text)
+      .map(_.group(1))
+      .getOrElse(throw new IllegalStateException(
+        s"checkpoint $checkpointDir has no query id in its metadata — " +
+          "cannot bind publish versions to the stream instance"))
+  }
+
+  /** Version name for batch `batchId` of the stream running on
+    * `checkpointDir`: `b<batchId>-<first 8 of the query id>`. */
+  private def sinkVersion(spark: org.apache.spark.sql.SparkSession,
+    checkpointDir: String, batchId: Long): String =
+    s"b$batchId-${checkpointQueryId(spark, checkpointDir).take(8)}"
+
   /** Streaming CDC APPLY (r10 verdict item 5) — the intake dual of the
     * batch diff→merge loop (`q_snapshot_diff` → `q_cdc_merge`): change
     * batches (doc_id, op ∈ upsert|delete, text) arrive as a stream and
@@ -640,8 +651,8 @@ object Streams {
     * Exactly-once across restarts WITHOUT transactional storage — the
     * [[extendLabelsSink]] argument, point for point:
     *   - publication is versioned-then-flip
-    *     ([[graft.operators.Curation.publishSnapshot]]): a crash
-    *     mid-write leaves the previous snapshot current;
+    *     ([[graft.sources.Versions.publish]]): a crash mid-write
+    *     leaves the previous snapshot current;
     *   - application is IDEMPOTENT: re-merging a change batch onto a
     *     snapshot that already reflects it is a fixed point (upserts
     *     re-replace with identical text, deletes find nothing), so
@@ -683,70 +694,16 @@ object Streams {
     * executor memory; reading the CURRENT version while writing the
     * NEXT is safe because they are different directories and the flip
     * happens only after the write completes. */
-  /** The stream's DURABLE identity: the query id Spark persists in
-    * the checkpoint's `metadata` file — constant across every restart
-    * from the SAME checkpoint, fresh for a new one. Read per batch (a
-    * ~60-byte file against a full artifact publish — noise).
-    *
-    * Why the publish-version markers must carry it (ADVICE r12,
-    * medium): a version named `b<batchId>` ALONE survives a checkpoint
-    * swap — reuse a snapshot/epoch/labels root with a FRESH checkpoint
-    * (batch ids restart at 0) and the prior run's stale `b0` marker
-    * makes the new batch 0 "already published": the checkpoint commits
-    * and the batch's data silently vanishes, where the pre-r12 code at
-    * least wedged loudly on read-under-own-overwrite. Folding the
-    * checkpoint's own query id into the version makes the post-flip
-    * short-circuit fire only for THIS stream's replayed batch; any
-    * foreign marker — stale run, fat-fingered root sharing — reads as
-    * not-yet-published and the batch publishes normally (idempotent
-    * for a true replay, corrective for a stale root). */
-  private[graft] def checkpointQueryId(
-    spark: org.apache.spark.sql.SparkSession,
-    checkpointDir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(checkpointDir, "metadata")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val text = try new String(in.readAllBytes(), "UTF-8")
-      finally in.close()
-    """"id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(text)
-      .map(_.group(1))
-      .getOrElse(throw new IllegalStateException(
-        s"checkpoint $checkpointDir has no query id in its metadata — " +
-          "cannot bind publish versions to the stream instance"))
-  }
-
-  /** Version name for batch `batchId` of the stream running on
-    * `checkpointDir`: `b<batchId>-<first 8 of the query id>`. */
-  private def sinkVersion(spark: org.apache.spark.sql.SparkSession,
-    checkpointDir: String, batchId: Long): String =
-    s"b$batchId-${checkpointQueryId(spark, checkpointDir).take(8)}"
-
   def cdcApplySink(snapshotRoot: String, changes: DataFrame,
     checkpointDir: String, retainVersions: Int = 0)
     : org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val version = sinkVersion(s, checkpointDir, batchId)
-        // artifact-layer idempotence for the crash window BETWEEN the
-        // marker flip and the checkpoint commit: the replayed batch's
-        // "current" snapshot would resolve to its OWN output directory
-        // (read-under-overwrite — Spark refuses, wedging the stream on
-        // every restart). The marker already naming this version IS
-        // the proof the batch published; just let the checkpoint
-        // commit.
-        if (!graft.sources.Markers.readOption(s, snapshotRoot,
-            graft.operators.Curation.snapshotCurrentMarker)
-            .contains(version)) {
-          graft.operators.Curation.publishSnapshot(s,
-            graft.operators.Curation.cdcMerge(
-              graft.operators.Curation.currentSnapshot(s, snapshotRoot),
-              graft.operators.Curation.collapseOps(batch)),
-            snapshotRoot, version, retainVersions)
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    versionedSink(snapshotRoot, changes, checkpointDir) { (s, batch, v) =>
+      val merged = Curation.cdcMerge(
+        Pq.read(s, Versions.current(s, snapshotRoot)),
+        Curation.collapseOps(batch))
+      Versions.publish(s, snapshotRoot, v, retainVersions)(
+        Pq.write(merged, _))
+    }
 
   /** Streaming dual of the full nightly serving loop — CDC merge PLUS
     * incremental materialized-view maintenance in one exactly-once
@@ -759,8 +716,8 @@ object Streams {
     * delta-sized.
     *
     * Exactly-once rests on the transactional epoch publication
-    * ([[graft.operators.Curation.publishEpoch]]): snapshot and MV land
-    * under ONE version directory and ONE marker flip. A
+    * ([[graft.sources.Versions.publish]]): snapshot and MV land under
+    * ONE version directory and ONE marker flip. A
     * checkpoint-replayed batch is handled from either side of the
     * flip: BEFORE it, both artifacts recompute from the old epoch
     * (`cdcMergeDocs` is a fixed point, the refresh's retract/insert
@@ -790,65 +747,72 @@ object Streams {
   def mvApplySink(epochRoot: String, changes: DataFrame,
     checkpointDir: String, retainVersions: Int = 0)
     : org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val version = sinkVersion(s, checkpointDir, batchId)
-        // same artifact-layer idempotence as [[cdcApplySink]]: if the
-        // marker already names this version, a predecessor crashed
-        // AFTER the flip but BEFORE the checkpoint commit — the epoch
-        // is published; re-deriving it would read the current epoch
-        // out of the directory this batch is about to overwrite.
-        if (!graft.sources.Markers.readOption(s, epochRoot,
-            graft.operators.Curation.epochCurrentMarker)
-            .contains(version)) {
-          val (snap, mv) = graft.operators.Curation.currentEpoch(s, epochRoot)
-          val ops = graft.operators.Curation.collapseOps(batch)
-          val merged = graft.operators.Curation.cdcMergeDocs(snap, ops)
-          val mv2 = graft.operators.Curation.mvRefresh(mv, snap, merged,
-            ops.select(col("doc_id")))
-          graft.operators.Curation.publishEpoch(s, epochRoot, version,
-            merged, mv2, retainVersions)
-        }
+    versionedSink(epochRoot, changes, checkpointDir) { (s, batch, v) =>
+      val cur = Versions.current(s, epochRoot)
+      val snap = Pq.read(s, s"$cur/snapshot")
+      val ops = Curation.collapseOps(batch)
+      val merged = Curation.cdcMergeDocs(snap, ops)
+      val mv = Curation.mvRefresh(Pq.read(s, s"$cur/mv"), snap, merged,
+        ops.select(col("doc_id")))
+      Versions.publish(s, epochRoot, v, retainVersions) { dir =>
+        Pq.write(merged, s"$dir/snapshot")
+        Pq.write(mv, s"$dir/mv")
       }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    }
 
+  /** Streaming LABEL EXTENSION (r8 verdict item 4): [[nearDupIntake]]
+    * flags (new, base) pairs but never folds them into the published
+    * label map — this sink does, per micro-batch, through
+    * `foreachBatch`: probe the batch against the published index
+    * (the stream-static emit-once join), extend the CURRENT label map
+    * with the flagged pairs ([[graft.operators.Components.extendLabels]]
+    * — star edges ∪ batch pairs, dup-set-sized propagation), and
+    * publish the result as a new label version.
+    *
+    * Exactly-once across restarts WITHOUT transactional storage, from
+    * two properties:
+    *   - publication is versioned-then-flip
+    *     ([[graft.sources.Versions.publish]]): a crash mid-write
+    *     leaves the previous version current;
+    *   - extension is IDEMPOTENT: re-extending a map that already
+    *     reflects a batch's pairs is a fixed point (the components and
+    *     their min ids are unchanged), so the one batch Spark may
+    *     replay after a crash re-publishes identical content.
+    * Batch-by-batch extension also equals one extension with all
+    * batches' pairs (star edges preserve node set + connectivity
+    * exactly), which is what the restart spec asserts against the
+    * batch dual.
+    *
+    * State posture at 100 TB: the streaming state is EMPTY (the join
+    * is stateless, the label map is an external artifact) — executor
+    * memory holds only the micro-batch, and the per-batch propagation
+    * cost rides on the dup-set size, not the corpus.
+    */
   def extendLabelsSink(baseStaged: DataFrame, labelsRoot: String,
     docs: DataFrame, checkpointDir: String,
     baseHot: Option[DataFrame] = None, retainVersions: Int = 0)
     : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val version = sinkVersion(s, checkpointDir, batchId)
-        // post-flip crash-window short-circuit (the [[cdcApplySink]]
-        // discipline, r12): unlike the CDC sinks this one never
-        // wedged — the eager localCheckpoint below completes the read
-        // of the current version before the overwrite starts, and
-        // re-publishing is idempotent — but the replay would still
-        // re-pay the probe join and a full map rewrite for content the
-        // marker proves is already published.
-        if (!graft.sources.Markers.readOption(s, labelsRoot,
-            graft.operators.Components.labelsCurrentMarker)
-            .contains(version)) {
-          val pairs = TextOps.intakePairs(baseStaged, batch, baseHot)
-            .select(col("doc_id").as("id_a"), col("dup_of").as("id_b"))
-          // materialize BEFORE publishing: the plan reads the current
-          // version's parquet, and lazy evaluation during the write of
-          // the NEXT version is safe (different directory), but eager
-          // materialization keeps the propagation's own actions off the
-          // publication path
-          val next = graft.operators.Components
-            .extendLabels(graft.operators.Components
-              .currentLabels(s, labelsRoot), pairs)
-            .localCheckpoint(true)
-          graft.operators.Components.publishLabels(s, next, labelsRoot,
-            version, retainVersions)
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    labelExtensionSink(labelsRoot, docs, checkpointDir, retainVersions)(
+      TextOps.intakePairs(baseStaged, _, baseHot))
+
+  /** The label-extension shell of [[extendLabelsSink]] and its SimHash
+    * and edit twins: `flags` probes a micro-batch into (doc_id, dup_of)
+    * pairs, the CURRENT label map extends over them, and the result
+    * publishes as the batch's version. The extension is materialized
+    * BEFORE publishing, so the propagation's own actions stay off the
+    * publication path. */
+  private def labelExtensionSink(labelsRoot: String, docs: DataFrame,
+      checkpointDir: String, retainVersions: Int)(
+      flags: DataFrame => DataFrame)
+    : org.apache.spark.sql.streaming.StreamingQuery =
+    versionedSink(labelsRoot, docs, checkpointDir) { (s, batch, v) =>
+      val next = Components.extendLabels(
+          Pq.read(s, Versions.current(s, labelsRoot)),
+          flags(batch).select(col("doc_id").as("id_a"),
+            col("dup_of").as("id_b")))
+        .localCheckpoint(true)
+      Versions.publish(s, labelsRoot, v, retainVersions)(Pq.write(next, _))
+    }
 
   /** SimHash label extension sink — [[extendLabelsSink]] on the
     * block-combination probe instead of the banded MinHash one: each
@@ -867,25 +831,8 @@ object Streams {
     labelsRoot: String, docs: DataFrame, checkpointDir: String,
     retainVersions: Int = 0)
     : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val version = sinkVersion(s, checkpointDir, batchId)
-        if (!graft.sources.Markers.readOption(s, labelsRoot,
-            graft.operators.Components.labelsCurrentMarker)
-            .contains(version)) {
-          val pairs = TextOps.simhashIntakePairs(keyedReps, batch, b)
-            .select(col("doc_id").as("id_a"), col("dup_of").as("id_b"))
-          val next = graft.operators.Components
-            .extendLabels(graft.operators.Components
-              .currentLabels(s, labelsRoot), pairs)
-            .localCheckpoint(true)
-          graft.operators.Components.publishLabels(s, next, labelsRoot,
-            version, retainVersions)
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    labelExtensionSink(labelsRoot, docs, checkpointDir, retainVersions)(
+      TextOps.simhashIntakePairs(keyedReps, _, b))
 
   /** Edit-distance label extension sink — [[extendLabelsSink]] on the
     * PassJoin probe: each micro-batch keys its heads, probes the
@@ -897,26 +844,9 @@ object Streams {
   def editLabelsSink(baseBuild: DataFrame, labelsRoot: String,
     docs: DataFrame, checkpointDir: String, retainVersions: Int = 0)
     : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val version = sinkVersion(s, checkpointDir, batchId)
-        if (!graft.sources.Markers.readOption(s, labelsRoot,
-            graft.operators.Components.labelsCurrentMarker)
-            .contains(version)) {
-          val pairs = TextOps
-            .editCrossFlags(baseBuild, TextOps.editKeyedHeads(batch, 30), 3)
-            .select(col("doc_id").as("id_a"), col("dup_of").as("id_b"))
-          val next = graft.operators.Components
-            .extendLabels(graft.operators.Components
-              .currentLabels(s, labelsRoot), pairs)
-            .localCheckpoint(true)
-          graft.operators.Components.publishLabels(s, next, labelsRoot,
-            version, retainVersions)
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    labelExtensionSink(labelsRoot, docs, checkpointDir, retainVersions)(
+      batch => TextOps.editCrossFlags(baseBuild,
+        TextOps.editKeyedHeads(batch, 30), 3))
 
   /** Streaming RE-CRAWL COMPACTION sink — the nightly repair loop as a
     * continuously-maintained artifact (r14 verdict item 6, closing the
@@ -939,7 +869,7 @@ object Streams {
     * version current and the replay recomputes the identical wave from
     * it; a post-flip replay is short-circuited by the marker already
     * naming this batch's qid-bound version (re-deriving it would read
-    * directories `retireVersions` may since have deleted). Unlike the
+    * directories retention may since have deleted). Unlike the
     * label-extension sinks, waves are NOT idempotent at the semantic
     * layer — replaying a wave against the post-wave state would
     * re-retire ids whose fresh rows were just published — so the
@@ -957,41 +887,39 @@ object Streams {
   def dedupCompactSink(root: String, recrawls: DataFrame,
     checkpointDir: String, retainVersions: Int = 0)
     : org.apache.spark.sql.streaming.StreamingQuery =
-    compactWaveSink(root, recrawls, checkpointDir) { (s, batch, v) =>
+    versionedSink(root, recrawls, checkpointDir) { (s, batch, v) =>
       val (added, pairs2) = TextOps.compactWaveState(s, root, batch)
       TextOps.publishWaveState(s, root, v, "staged", added,
         Some(batch.select("doc_id")), pairs2, retainVersions,
         BandedJoins.writeHotSet(s, _, "bsigs", "bhash"))
     }
 
-  /** The retire → probe → relabel → ONE-FLIP wave shape shared by
-    * every modality's streaming compaction sink (r16, r15 verdict
-    * item 3 — [[dedupCompactSink]]'s exactly-once argument
-    * genericized). Each sink's wave function is the same one its
-    * family's batch compaction query runs on a seeded root, so the
-    * batch query is one such wave, labelled instead of published:
-    * each micro-batch derives a qid-bound version; a
-    * replay whose version is already current is short-circuited
-    * BEFORE any state is read (waves are not idempotent — re-retiring
-    * ids whose fresh rows were just published would corrupt the
-    * root), and `applyWave` must publish all artifacts under the
-    * version directory with the marker flip LAST. Each `applyWave`
-    * hands the publisher its wave function's ADDED index rows and the
-    * batch's key set, which land as one index delta over the served
-    * version's manifest; a replay before the flip overwrites the
+  /** The shell of every sink that publishes one version of a
+    * versioned root per micro-batch (the CDC, MV, label-extension and
+    * compaction sinks): each micro-batch derives a qid-bound version; a
+    * replay whose version is already current
+    * ([[graft.sources.Versions.isCurrent]]) is short-circuited BEFORE
+    * any state is read, and `apply` must publish that version through
+    * [[graft.sources.Versions.publish]]. The short-circuit is what
+    * keeps the CDC and MV replays from reading under their own
+    * overwrite, and it is load-bearing for the compaction waves, which
+    * are not idempotent — re-retiring ids whose fresh rows were just
+    * published would corrupt the root. Each compaction sink's wave
+    * function is the one its family's batch compaction query runs on a
+    * seeded root, so the batch query is one such wave, labelled
+    * instead of published; it hands the publisher its ADDED index rows
+    * and the batch's key set, which land as one index delta over the
+    * served version's manifest; a replay before the flip overwrites the
     * orphaned delta, which no manifest lists. */
-  private def compactWaveSink(root: String, waves: DataFrame,
-      checkpointDir: String)(applyWave:
+  private def versionedSink(root: String, batches: DataFrame,
+      checkpointDir: String)(apply:
         (org.apache.spark.sql.SparkSession, DataFrame, String) => Unit)
     : org.apache.spark.sql.streaming.StreamingQuery =
-    waves.writeStream
+    batches.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
         val version = sinkVersion(s, checkpointDir, batchId)
-        if (!graft.sources.Markers.readOption(s, root,
-            TextOps.dedupCurrentMarker).contains(version)) {
-          applyWave(s, batch, version)
-        }
+        if (!Versions.isCurrent(s, root, version)) apply(s, batch, version)
       }
       .option("checkpointLocation", checkpointDir)
       .start()
@@ -1005,7 +933,7 @@ object Streams {
   def simhashCompactSink(root: String, recrawls: DataFrame,
     checkpointDir: String, retainVersions: Int = 0)
     : org.apache.spark.sql.streaming.StreamingQuery =
-    compactWaveSink(root, recrawls, checkpointDir) { (s, batch, v) =>
+    versionedSink(root, recrawls, checkpointDir) { (s, batch, v) =>
       val (added, pairs2, edges) = TextOps.simhashWaveState(s, root, batch)
       TextOps.publishWaveState(s, root, v, "sigs", added,
         Some(batch.select("doc_id")), pairs2, retainVersions,
@@ -1021,7 +949,7 @@ object Streams {
   def editCompactSink(root: String, recrawls: DataFrame,
     checkpointDir: String, retainVersions: Int = 0)
     : org.apache.spark.sql.streaming.StreamingQuery =
-    compactWaveSink(root, recrawls, checkpointDir) { (s, batch, v) =>
+    versionedSink(root, recrawls, checkpointDir) { (s, batch, v) =>
       val (added, pairs2) = TextOps.editWaveState(s, root, batch)
       TextOps.publishWaveState(s, root, v, "index", added,
         Some(batch.select("doc_id")), pairs2, retainVersions,
@@ -1036,7 +964,7 @@ object Streams {
   def embedCompactSink(root: String, waves: DataFrame,
     checkpointDir: String, retainVersions: Int = 0)
     : org.apache.spark.sql.streaming.StreamingQuery =
-    compactWaveSink(root, waves, checkpointDir) { (s, batch, v) =>
+    versionedSink(root, waves, checkpointDir) { (s, batch, v) =>
       val (added, pairs2) = Vectors.embedWaveState(s, root, batch)
       TextOps.publishWaveState(s, root, v, "staged", added,
         Some(batch.select("vec_id")), pairs2, retainVersions,
@@ -1074,9 +1002,8 @@ object Streams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
         val version = sinkVersion(s, checkpointDir, batchId)
-        if (graft.sources.Markers.readOption(s,
-            graft.operators.Bpe.wordsRootOf(tokenizerPath),
-            graft.operators.Bpe.wordsCurrentMarker).contains(version)) {
+        if (Versions.isCurrent(s,
+            graft.operators.Bpe.wordsRootOf(tokenizerPath), version)) {
           graft.operators.Bpe.retrainIfStale(s, tokenizerPath,
             numMerges, maxVocab)
         } else {

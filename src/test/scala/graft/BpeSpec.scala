@@ -409,7 +409,7 @@ class BpeSpec extends SparkTestBase {
           .as("n"))
     updated.write.mode("overwrite").parquet(s"$wordsRoot/v1")
     graft.sources.Markers.write(spark, wordsRoot,
-      Bpe.wordsCurrentMarker, "v1")
+      graft.sources.Versions.currentMarker, "v1")
     assert(Bpe.loadTokenizer(spark, p) === m0, "tokenizer is stale")
     // an EMPTY-delta refresh (the nightly tick with nothing new) must
     // still notice the recorded training set no longer matches and

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.{Components, Curation, TextOps}
+import graft.sources.{Pq, Versions}
 import graft.streaming.Streams
 
 /** The corpus-intake streaming duals: the row-local curation flags and
@@ -23,6 +24,24 @@ class CurationStreamSpec extends SparkTestBase {
 
   private def tmp(tag: String): String =
     Files.createTempDirectory(tag).toString
+
+  /** The served artifact of a single-artifact versioned root. */
+  private def served(root: String): DataFrame =
+    Pq.read(spark, Versions.current(spark, root))
+
+  /** A snapshot+MV epoch published as one version of `root`. */
+  private def publishEpoch(root: String, version: String,
+      snap: DataFrame, mv: DataFrame): Unit =
+    Versions.publish(spark, root, version) { dir =>
+      Pq.write(snap, s"$dir/snapshot")
+      Pq.write(mv, s"$dir/mv")
+    }
+
+  /** The served (snapshot, MV) pair of an epoch root. */
+  private def currentEpoch(root: String): (DataFrame, DataFrame) = {
+    val dir = Versions.current(spark, root)
+    (Pq.read(spark, s"$dir/snapshot"), Pq.read(spark, s"$dir/mv"))
+  }
 
   private def words(n: Int, seed: Int): Seq[String] =
     (0 until n).map(i => s"w${(i * 31 + seed * 7919) % 100000}")
@@ -174,11 +193,11 @@ class CurationStreamSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val staged = TextOps.stageDocs(base).localCheckpoint(true)
     val labelsRoot = tmp("graft_labels_root")
-    Components.publishLabels(spark,
+    Versions.publish(spark, labelsRoot, "base")(Pq.write(
       Components.labelComponents(
         TextOps.pairsCarriedStaged(staged).select(col("id_a"), col("id_b"))),
-      labelsRoot, "base")
-    assert(Components.currentLabels(spark, labelsRoot).isEmpty)
+      _))
+    assert(served(labelsRoot).isEmpty)
 
     val input = tmp("graft_label_in")
     val cp = tmp("graft_label_cp")
@@ -192,7 +211,7 @@ class CurationStreamSpec extends SparkTestBase {
     Seq((101L, (a.take(195) ++ words(5, 23).map("q" + _)).mkString(" ")))
       .toDF("doc_id", "text").write.mode("append").json(input)
     run() // then KILLED (stopped) mid-stream
-    val afterB1 = Components.currentLabels(spark, labelsRoot).collect()
+    val afterB1 = served(labelsRoot).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(afterB1 == Set((10L, 10L), (101L, 10L)))
     // batch 2 arrives while the query is down: the BRIDGE — within 0.8
@@ -200,7 +219,7 @@ class CurationStreamSpec extends SparkTestBase {
     Seq((301L, (a.take(185) ++ words(15, 22).map("v" + _)).mkString(" ")))
       .toDF("doc_id", "text").write.mode("append").json(input)
     run() // restart from the same checkpoint: processes ONLY batch 2
-    val finalLabels = Components.currentLabels(spark, labelsRoot).collect()
+    val finalLabels = served(labelsRoot).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // the bridge merges {10, 101} and {20} into one min-10 component
     assert(finalLabels ==
@@ -216,7 +235,7 @@ class CurationStreamSpec extends SparkTestBase {
     // idempotence (what makes a crash-replayed batch exactly-once):
     // re-extending the final map with the same pairs is a fixed point
     val again = Components.extendLabels(
-        Components.currentLabels(spark, labelsRoot), allPairs).collect()
+        served(labelsRoot), allPairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(again == finalLabels)
   }
@@ -273,8 +292,8 @@ class CurationStreamSpec extends SparkTestBase {
       bPlan.toString)
     val (keyedReps, bLoaded) = ops.simhashIntakeIndex(spark, rp)
     val labelsRoot = tmp("graft_sl_labels")
-    Components.publishLabels(spark,
-      Components.labelComponents(identity), labelsRoot, "base")
+    Versions.publish(spark, labelsRoot, "base")(Pq.write(
+      Components.labelComponents(identity), _))
     val input = tmp("graft_sl_in")
     val cp = tmp("graft_sl_cp")
     def run(): Unit = {
@@ -286,7 +305,7 @@ class CurationStreamSpec extends SparkTestBase {
     // batch 1: one exact dup of the {10, 11} group
     Seq((101L, a)).toDF("doc_id", "text").write.mode("append").json(input)
     run() // then KILLED (stopped)
-    val afterB1 = Components.currentLabels(spark, labelsRoot).collect()
+    val afterB1 = served(labelsRoot).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(afterB1 == Set((10L, 10L), (11L, 10L), (101L, 10L)))
     // batch 2 arrives while the query is down: the ADVERSARIAL shape —
@@ -296,7 +315,7 @@ class CurationStreamSpec extends SparkTestBase {
     val mega = (0 until 300).map(i => (5000L + i, b))
     mega.toDF("doc_id", "text").write.mode("append").json(input)
     run() // restart from the checkpoint: processes ONLY batch 2
-    val finalLabels = Components.currentLabels(spark, labelsRoot)
+    val finalLabels = served(labelsRoot)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val wantMega = mega.map { case (id, _) => (id, 20L) }.toSet
     assert(finalLabels ==
@@ -313,7 +332,7 @@ class CurationStreamSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(finalLabels == dual)
     val again = Components.extendLabels(
-        Components.currentLabels(spark, labelsRoot), allPairs).collect()
+        served(labelsRoot), allPairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(again == finalLabels)
   }
@@ -370,10 +389,9 @@ class CurationStreamSpec extends SparkTestBase {
       .write.mode("overwrite").parquet(ip)
     val staged = TextOps.editIntakeIndex(spark, ip)
     val labelsRoot = tmp("graft_el_labels")
-    Components.publishLabels(spark,
+    Versions.publish(spark, labelsRoot, "base")(Pq.write(
       Components.labelComponents(
-        spark.emptyDataset[(Long, Long)].toDF("id_a", "id_b")),
-      labelsRoot, "base")
+        spark.emptyDataset[(Long, Long)].toDF("id_a", "id_b")), _))
     val input = tmp("graft_el_in")
     val cp = tmp("graft_el_cp")
     def run(): Unit = {
@@ -387,7 +405,7 @@ class CurationStreamSpec extends SparkTestBase {
     Seq((101L, "abcXefghij klmnopQrst uvwxyz" + " y"))
       .toDF("doc_id", "text").write.mode("append").json(input)
     run() // then KILLED
-    val afterB1 = Components.currentLabels(spark, labelsRoot).collect()
+    val afterB1 = served(labelsRoot).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(afterB1 == Set((10L, 10L), (101L, 10L)))
     // batch 2 while down: 200 arrivals sharing base 20's EXACT head
@@ -395,7 +413,7 @@ class CurationStreamSpec extends SparkTestBase {
     val mega = (0 until 200).map(i => (7000L + i, t20))
     mega.toDF("doc_id", "text").write.mode("append").json(input)
     run() // restart: processes ONLY batch 2
-    val finalLabels = Components.currentLabels(spark, labelsRoot)
+    val finalLabels = served(labelsRoot)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(finalLabels == afterB1 ++ Set((20L, 20L)) ++
       mega.map { case (id, _) => (id, 20L) }.toSet)
@@ -409,7 +427,7 @@ class CurationStreamSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(finalLabels == dual)
     val again = Components.extendLabels(
-        Components.currentLabels(spark, labelsRoot), allPairs).collect()
+        served(labelsRoot), allPairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(again == finalLabels)
   }
@@ -851,7 +869,7 @@ class CurationStreamSpec extends SparkTestBase {
     val cp = tmp("graft_cdc_cp")
     // published base snapshot: docs 1..8
     val base = (1L to 8L).map(i => (i, s"text-$i")).toDF("doc_id", "text")
-    Curation.publishSnapshot(spark, base, snapRoot, "base")
+    Versions.publish(spark, snapRoot, "base")(Pq.write(base, _))
     def run(): Unit = {
       val q = Streams.cdcApplySink(snapRoot,
         spark.readStream.schema(changeSchema)
@@ -866,7 +884,7 @@ class CurationStreamSpec extends SparkTestBase {
     dropChanges(Seq((2L, "upsert", Some("text-2-v2")),
       (3L, "delete", None), (100L, "upsert", Some("text-100"))))
     run() // then KILLED (stopped)
-    val afterB1 = Curation.currentSnapshot(spark, snapRoot).collect()
+    val afterB1 = served(snapRoot).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(afterB1(2L) == "text-2-v2" && !afterB1.contains(3L) &&
       afterB1(100L) == "text-100" && afterB1.size == 8)
@@ -876,7 +894,7 @@ class CurationStreamSpec extends SparkTestBase {
       (1L, "delete", None), (200L, "upsert", Some("text-200"))))
     run() // restart from the same checkpoint: processes ONLY batch 2
     run() // no new data: exactly-once, nothing re-applies
-    val got = Curation.currentSnapshot(spark, snapRoot).collect()
+    val got = served(snapRoot).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     val expected = ((4L to 8L).map(i => i -> s"text-$i") ++
       Seq(2L -> "text-2-v2", 100L -> "text-100-v2",
@@ -895,7 +913,7 @@ class CurationStreamSpec extends SparkTestBase {
     // re-merging the final batch onto the final snapshot is a fixed
     // point
     val again = Curation.cdcMerge(
-        Curation.currentSnapshot(spark, snapRoot),
+        served(snapRoot),
         spark.read.schema(changeSchema)
           .json(allFiles.maxBy(_.lastModified()).getPath))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -914,8 +932,7 @@ class CurationStreamSpec extends SparkTestBase {
     val cp = tmp("graft_mv_cp")
     val base = Seq((1L, "web", "a b"), (2L, "web", "c"),
       (3L, "book", "d e f")).toDF("doc_id", "source", "text")
-    Curation.publishEpoch(spark, root, "base", base,
-      Curation.sourceRollup(base))
+    publishEpoch(root, "base", base, Curation.sourceRollup(base))
     def run(): Unit = {
       val q = Streams.mvApplySink(root,
         spark.readStream.schema(changeSchema)
@@ -938,7 +955,7 @@ class CurationStreamSpec extends SparkTestBase {
       (1L, "delete", None, None)))
     run() // restart from the same checkpoint: processes ONLY batch 2
     run() // no new data: exactly-once, nothing re-applies
-    val (snap, mv) = Curation.currentEpoch(spark, root)
+    val (snap, mv) = currentEpoch(root)
     // snapshot dual: fold of the widened merge over the change files
     val allFiles = new java.io.File(input).listFiles()
       .filter(_.getName.endsWith(".json")).sortBy(_.lastModified())
@@ -993,8 +1010,7 @@ class CurationStreamSpec extends SparkTestBase {
     val cp = tmp("graft_mv_crash_cp")
     val base = Seq((1L, "web", "a b"), (2L, "book", "c"))
       .toDF("doc_id", "source", "text")
-    Curation.publishEpoch(spark, root, "base", base,
-      Curation.sourceRollup(base))
+    publishEpoch(root, "base", base, Curation.sourceRollup(base))
     def run(): Unit = {
       val q = Streams.mvApplySink(root,
         spark.readStream.schema(changeSchema)
@@ -1007,7 +1023,7 @@ class CurationStreamSpec extends SparkTestBase {
       .toDF("doc_id", "op", "source", "text")
       .coalesce(1).write.mode("append").json(input)
     run()
-    def snapKey() = Curation.currentEpoch(spark, root)._1.collect()
+    def snapKey() = currentEpoch(root)._1.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
     val published = snapKey()
     assert(published == Set((1L, "web", "a b"), (2L, "book", "c"),
@@ -1022,7 +1038,7 @@ class CurationStreamSpec extends SparkTestBase {
     new java.io.File(s"$cp/commits/.0.crc").delete()
     run() // replays batch 0: must short-circuit, not wedge or corrupt
     assert(snapKey() == published)
-    val (snapAfter, mvAfter) = Curation.currentEpoch(spark, root)
+    val (snapAfter, mvAfter) = currentEpoch(root)
     assert(mvAfter.collect().map(r => (r.getAs[String]("source"),
         r.getAs[Long]("n_docs"), r.getAs[Long]("n_tokens"))).toSet ==
       Curation.sourceRollup(snapAfter).collect()
@@ -1094,9 +1110,8 @@ class CurationStreamSpec extends SparkTestBase {
     assert(Bpe.refitInvocations.get() == refitsBefore,
       "replay retrained on an unchanged training set")
     // exact word table: fold happened exactly once
-    val words = spark.read.parquet(Bpe.wordsRootOf(p) + "/" +
-        graft.sources.Markers.read(spark, Bpe.wordsRootOf(p),
-          Bpe.wordsCurrentMarker))
+    val words = spark.read.parquet(
+        Versions.current(spark, Bpe.wordsRootOf(p)))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     val want = Bpe.wordCounts(base.unionByName(d1.toDF("doc_id", "text")))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
@@ -1124,7 +1139,7 @@ class CurationStreamSpec extends SparkTestBase {
       StructField("text", StringType)))
     val root = tmp("graft_cdc_stale")
     val base = Seq((1L, "a b")).toDF("doc_id", "text")
-    Curation.publishSnapshot(spark, base, root, "base")
+    Versions.publish(spark, root, "base")(Pq.write(base, _))
     def runOnce(cp: String, input: String): Unit = {
       val q = Streams.cdcApplySink(root,
         spark.readStream.schema(changeSchema).json(input), cp)
@@ -1134,14 +1149,13 @@ class CurationStreamSpec extends SparkTestBase {
     Seq((2L, "upsert", "first run")).toDF("doc_id", "op", "text")
       .coalesce(1).write.mode("append").json(in1)
     runOnce(tmp("graft_cdc_stale_cp1"), in1)
-    def snapIds() = Curation.currentSnapshot(spark, root).collect()
+    def snapIds() = served(root).collect()
       .map(_.getLong(0)).toSet
     assert(snapIds() == Set(1L, 2L))
     // second stream instance: FRESH checkpoint, fresh input, same root
     // — its batch 0 must land doc 3 even though a b0-prefixed marker
     // from the first run's batch 0 is current
-    assert(graft.sources.Markers.read(spark, root,
-      Curation.snapshotCurrentMarker).startsWith("b0-"))
+    assert(Versions.currentVersion(spark, root).exists(_.startsWith("b0-")))
     val in2 = tmp("graft_cdc_stale_in2")
     Seq((3L, "upsert", "second run")).toDF("doc_id", "op", "text")
       .coalesce(1).write.mode("append").json(in2)
@@ -1160,8 +1174,7 @@ class CurationStreamSpec extends SparkTestBase {
     val root = tmp("graft_mv_dup")
     val input = tmp("graft_mv_dup_in")
     val base = Seq((1L, "web", "a b")).toDF("doc_id", "source", "text")
-    Curation.publishEpoch(spark, root, "base", base,
-      Curation.sourceRollup(base))
+    publishEpoch(root, "base", base, Curation.sourceRollup(base))
     // two ops for doc 5 coalesced into ONE batch (the restart-backlog
     // shape) and no seq column: the sink must refuse — an arbitrary
     // winner would silently double the MV's retract leg
@@ -1180,7 +1193,7 @@ class CurationStreamSpec extends SparkTestBase {
       c.isInstanceOf[IllegalStateException] &&
         c.getMessage.contains("multiple ops")), err.toString)
     // epoch untouched by the failed batch
-    assert(Curation.currentEpoch(spark, root)._1.collect()
+    assert(currentEpoch(root)._1.collect()
       .map(_.getLong(0)).toSet == Set(1L))
 
     // the SAME backlog with a seq column collapses deterministically to
@@ -1197,7 +1210,7 @@ class CurationStreamSpec extends SparkTestBase {
       spark.readStream.schema(seqSchema).json(input2),
       tmp("graft_mv_seq_cp"))
     try q2.processAllAvailable() finally q2.stop()
-    val (snap, mv) = Curation.currentEpoch(spark, root)
+    val (snap, mv) = currentEpoch(root)
     assert(snap.collect().map(r =>
         (r.getLong(0), r.getString(1), r.getString(2))).toSet ==
       Set((1L, "web", "a b"), (6L, "book", "y z")))

@@ -259,4 +259,60 @@ class HotBucketSpec extends SparkTestBase {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs(served) == pairs(broadcastPlan))
   }
+
+  test("retiring a hot bucket's star centre re-centres the star on the " +
+      "smallest retained member in both banded families") {
+    import spark.implicits._
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.select("id_a", "id_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    def labels(ps: Seq[(Long, Long)]): Set[(Long, Long)] =
+      Components.labelComponents(ps.toDF("id_a", "id_b")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    // 100 identical members put every band bucket over the cap, so the
+    // seed publishes the 99 star edges on member 1; the wave re-crawls
+    // member 1 into unrelated content
+    val star = (3 to 100).map(i => (2L, i.toLong))
+    def tmp(tag: String) = java.nio.file.Files.createTempDirectory(tag)
+      .toString
+
+    val text = "the quick brown fox jumps over the lazy dog and then runs " +
+      "far away into the deep green forest tonight"
+    val docs = (1 to 100).map(i => (i.toLong, text)).toDF("doc_id", "text")
+    val recrawl = Seq((1L, (0 until 40).map(j => s"u${j * 977}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val textRoot = tmp("graft_recentre_text")
+    TextOps.seedDedupState(spark, docs, textRoot)
+    val seeded = pairs(spark.read.parquet(s"$textRoot/" + graft.sources
+      .Markers.read(spark, textRoot, TextOps.dedupCurrentMarker) + "/pairs"))
+    assert(seeded.toSet == (2 to 100).map(i => (1L, i.toLong)).toSet)
+    val textWave = pairs(TextOps.compactWaveState(spark, textRoot, recrawl)._2)
+    assert(textWave.size == textWave.distinct.size, "duplicate pairs")
+    assert(textWave.toSet == star.toSet)
+    val textAfter = docs.filter(col("doc_id") =!= 1L).unionByName(recrawl)
+    assert(labels(textWave) == labels(pairs(TextOps.minhashPairs(textAfter))))
+
+    def unit(v: Array[Double]): Seq[Double] = {
+      val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n).toSeq
+    }
+    val same = unit(Array.tabulate(64)(j => math.sin(j * 13.7)))
+    val vecs = (1 to 100).map(i => (i.toLong, same)).toDF("vec_id", "embedding")
+    val reembed = Seq((1L, Array.tabulate(64)(j => if (j == 5) 1.0 else 0.0)
+      .toSeq)).toDF("vec_id", "embedding")
+    val vecRoot = tmp("graft_recentre_vec")
+    Vectors.seedEmbedRoot(spark, vecs, vecRoot)
+    val vecWave = pairs(Vectors.embedWaveState(spark, vecRoot, reembed)._2)
+    assert(vecWave.size == vecWave.distinct.size, "duplicate pairs")
+    assert(vecWave.toSet == star.toSet)
+    val vecAfter = vecs.filter(col("vec_id") =!= 1L).unionByName(reembed)
+    assert(labels(vecWave) ==
+      labels(pairs(Vectors.lshVerifiedPairsOver(vecAfter))))
+
+    // a root whose published hot set is empty plans no re-centring
+    val healthy = tmp("graft_recentre_healthy")
+    TextOps.seedDedupState(spark, docs.filter(col("doc_id") <= 2L), healthy)
+    val plan = TextOps.compactWaveState(spark, healthy, recrawl)._2
+      .queryExecution.optimizedPlan.toString
+    assert(!plan.contains("min_by"), plan)
+  }
 }

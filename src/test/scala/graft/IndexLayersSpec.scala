@@ -192,13 +192,17 @@ class IndexLayersSpec extends SparkTestBase {
     // a new doc 15 copying doc 4, which doc 3's re-crawl also copies
     val batch = doc(15L, words(60, 4))
     val (added, pairs) = TextOps.compactWaveState(spark, r.root, batch)
+    var deltaWritten = false
     val failed = scala.util.Try(TextOps.publishWaveState(spark, r.root,
       "crashed", "staged", added, Some(batch.select("doc_id")), pairs, 2,
       { p => BandedJoins.writeHotSet(spark, p, "bsigs", "bhash")
+        deltaWritten = new java.io.File(s"${r.root}/crashed/staged/" +
+          IndexLayers.manifestMarker).exists()
         throw new IllegalStateException("sidecar failed") }))
     assert(failed.failed.get.getMessage == "sidecar failed")
-    assert(new java.io.File(s"${r.root}/crashed/staged/" +
-      IndexLayers.manifestMarker).exists(), "the delta was not written")
+    assert(deltaWritten, "the delta was not written")
+    // the failed version's directory is gone with its orphaned delta
+    assert(!versionDirs(r.root)("crashed"))
     assert(current(r.root) == served)
     assert(bag(r.effective()) == before)
     // the replay of that wave, and the next wave, publish correctly

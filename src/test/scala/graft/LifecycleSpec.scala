@@ -28,7 +28,7 @@ class LifecycleSpec extends SparkTestBase {
   }
 
   private def served(root: String, name: String): DataFrame =
-    Pq.read(spark, s"${TextOps.currentDir(spark, root)}/$name")
+    Pq.read(spark, s"${graft.sources.Versions.current(spark, root)}/$name")
 
   /** One family's declared compaction path and its streaming sink. */
   private case class Family(name: String,
@@ -102,7 +102,7 @@ class LifecycleSpec extends SparkTestBase {
     val root = tmp("graft_edit_gate_root")
     TextOps.seedEditRoot(spark, seedDocs, root)
     def shortRows(): Long = TextOps.loadEditIndexStats(spark,
-      s"${TextOps.currentDir(spark, root)}/index", 3).shortRows
+      s"${graft.sources.Versions.current(spark, root)}/index", 3).shortRows
     assert(shortRows() == 0L)
     val shorts = (1 to 70).map { i =>
       (i.toLong, "en",
@@ -119,7 +119,7 @@ class LifecycleSpec extends SparkTestBase {
     wave(shorts)
     assert(shortRows() > 0L, "wave 1 published no short-row count")
     val idx1 = graft.operators.IndexLayers.read(spark,
-      s"${TextOps.currentDir(spark, root)}/index")
+      s"${graft.sources.Versions.current(spark, root)}/index")
     assert(idx1.filter(col("idx") === -1).select("doc_id").collect()
       .map(_.getLong(0)).toSet == Set(1L),
       "fixture must star-reduce the wave's cell to doc 1's shorts row")

@@ -206,7 +206,7 @@ class SinkSpec extends SparkTestBase {
     assert(!Pipelines.landThenPublish(spark, landedFrame(99),
       gateFrame(Seq(("orphans:fk", 1.0, 0.0))), root, "v2", key = "id"))
     assert(graft.sources.Markers.read(spark, root,
-      Pipelines.silverCurrentMarker) == "v1")
+      graft.sources.Versions.currentMarker) == "v1")
     assert(Pipelines.currentSilver(spark, root).count() == 10)
     // v2 exists only under quarantine
     assert(!new java.io.File(s"$root/v2").exists())
@@ -231,7 +231,7 @@ class SinkSpec extends SparkTestBase {
     assert((System.nanoTime() - t0) / 1e9 < 10.0)
     assert(ls(root).isEmpty, ls(root).toString)
     assert(graft.sources.Markers.readOption(spark, root,
-      Pipelines.silverCurrentMarker).isEmpty)
+      graft.sources.Versions.currentMarker).isEmpty)
   }
 
   /** A drop whose every row differs per `tag` — every shard digest
@@ -260,9 +260,97 @@ class SinkSpec extends SparkTestBase {
     // newest two non-current versions (v2, v3) survive with current v4;
     // v1 is expired; quarantine is untouched
     assert(ls(root) == Set("quarantine", "v2", "v3", "v4",
-      "_graft_silver_current"), ls(root).toString)
+      graft.sources.Versions.currentMarker), ls(root).toString)
     assert(Pipelines.currentSilver(spark, root).count() == 40)
     assert(new java.io.File(s"$root/quarantine/q0/drop").exists())
+  }
+
+  test("every versioned root kind commits, resolves, retires and rolls " +
+      "back through one protocol") {
+    import graft.operators.{BandedJoins, Bpe, Components, Curation,
+      Pipelines, TextOps}
+    import graft.sources.{Pq, Versions}
+    import spark.implicits._
+    val gate = gateFrame(Seq(("nulls:id", 0.0, 0.0)))
+    def rows(v: Int) = (0 until 6).map(i => (i.toLong, s"v$v w$i x$i"))
+      .toDF("doc_id", "text")
+    /** A root kind: its three versions' names, publishing version i
+      * (1-based) with `retain` = 1, a publish of a fourth version whose
+      * write throws, and whether the first version stays referenced. */
+    final case class Kind(name: String, versions: Seq[String],
+        publish: (String, Int) => Unit, failing: String => Unit,
+        referenced: Boolean)
+    def boom(): Nothing = throw new IllegalStateException("write failed")
+    def plain(name: String)(write: (Int, String) => Unit) =
+      Kind(name, Seq("v1", "v2", "v3"),
+        (root, i) => Versions.publish(spark, root, s"v$i", retain = 1)(
+          write(i, _)),
+        root => Versions.publish(spark, root, "v4", retain = 1) { dir =>
+          write(4, dir); boom()
+        }, referenced = false)
+    val docs = (0 until 12).map(i =>
+      (i.toLong, (0 until 40).map(j => s"t${(i * 31 + j * 7919) % 100000}")
+        .mkString(" "))).toDF("doc_id", "text")
+    def wave(i: Int) = Seq((i.toLong, s"recrawl $i " * 20))
+      .toDF("doc_id", "text")
+    def publishWave(root: String, version: String,
+        pairs: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+        : Unit = {
+      val w = wave(version.last.asDigit)
+      val (added, ps) = TextOps.compactWaveState(spark, root, w)
+      TextOps.publishWaveState(spark, root, version, "staged", added,
+        Some(w.select("doc_id")), pairs(ps), 1,
+        BandedJoins.writeHotSet(spark, _, "bsigs", "bhash"))
+    }
+    val failPairs = udf { (x: Long) =>
+      if (x >= 0) throw new IllegalStateException("pairs failed"); x }
+    val kinds = Seq(
+      plain("labels")((i, dir) => Pq.write(Components.labelComponents(
+        Seq((1L, 1L + i)).toDF("id_a", "id_b")), dir)),
+      plain("snapshot")((i, dir) => Pq.write(rows(i), dir)),
+      plain("epoch") { (i, dir) =>
+        Pq.write(rows(i).withColumn("source", lit("web")), s"$dir/snapshot")
+        Pq.write(Curation.sourceRollup(rows(i).withColumn("source",
+          lit("web"))), s"$dir/mv")
+      },
+      plain("bpe words")((i, dir) => Pq.write(Bpe.wordCounts(rows(i)), dir)),
+      // identical drops: v2 and v3 carry every shard of v1
+      Kind("silver", Seq("v1", "v2", "v3"),
+        (root, i) => assert(Pipelines.landThenPublish(spark,
+          landedFrame(10), gate, root, s"v$i", key = "id",
+          retainVersions = 1)),
+        root => Versions.publish(spark, root, "v4", retain = 1) { dir =>
+          Pq.write(landedFrame(3), s"$dir/key_shard=0"); boom()
+        }, referenced = true),
+      // v3's manifest lists the seed's base and v2's delta
+      Kind("near-dup", Seq("seed", "v2", "v3"),
+        (root, i) =>
+          if (i == 1) TextOps.seedDedupState(spark, docs, root)
+          else publishWave(root, s"v$i", identity),
+        root => publishWave(root, "v4", _.unionByName(spark.range(1)
+          .select(failPairs(col("id")).as("id_a"), col("id").as("id_b")))),
+        referenced = true))
+    kinds.foreach { k =>
+      val root = java.nio.file.Files
+        .createTempDirectory(s"graft_versions_${k.name.replace(' ', '_')}")
+        .toString
+      new java.io.File(s"$root/quarantine").mkdirs()
+      (1 to 3).foreach(k.publish(root, _))
+      val Seq(first, second, third) = k.versions
+      // the current version is the third
+      assert(Versions.current(spark, root) == s"$root/$third", k.name)
+      assert(Versions.isCurrent(spark, root, third), k.name)
+      // the first is deleted unless a kept version references it; the
+      // kept second and the unpublished quarantine/ always survive
+      val dirs = ls(root)
+      assert(dirs.contains(first) == k.referenced, s"${k.name}: $dirs")
+      assert(Set(second, third, "quarantine").subsetOf(dirs),
+        s"${k.name}: $dirs")
+      // a write that throws leaves the third current and no fourth
+      intercept[Exception](k.failing(root))
+      assert(Versions.isCurrent(spark, root, third), k.name)
+      assert(!ls(root).contains("v4"), s"${k.name}: ${ls(root)}")
+    }
   }
 
   test("copy-on-write publish: unchanged shards carry forward by " +
@@ -366,7 +454,7 @@ class SinkSpec extends SparkTestBase {
         "v2", key = "id")
     }
     assert(graft.sources.Markers.read(spark, root,
-      Pipelines.silverCurrentMarker) == "v1")
+      graft.sources.Versions.currentMarker) == "v1")
     assert(!new java.io.File(s"$root/v2").exists(),
       "refused publish left a version directory behind")
     assert(Pipelines.currentSilver(spark, root).count() == 10)

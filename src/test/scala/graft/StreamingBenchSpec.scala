@@ -189,11 +189,10 @@ class StreamingBenchSpec extends SparkTestBase {
     def measure(): Double = {
       val root = java.nio.file.Files
         .createTempDirectory("graft_label_bench").toString
-      graft.operators.Components.publishLabels(spark,
-        graft.operators.Components.labelComponents(
+      graft.sources.Versions.publish(spark, root, "base")(
+        graft.sources.Pq.write(graft.operators.Components.labelComponents(
           graft.operators.TextOps.pairsCarriedStaged(staged)
-            .select(col("id_a"), col("id_b"))),
-        root, "base")
+            .select(col("id_a"), col("id_b"))), _))
       val input = MemoryStream[(Long, String)](spark)
       val q = Streams.extendLabelsSink(staged, root,
         input.toDF().toDF("doc_id", "text"),
@@ -205,8 +204,8 @@ class StreamingBenchSpec extends SparkTestBase {
         }
       } finally q.stop()
       val secs = (System.nanoTime() - t0) / 1e9
-      labelled = graft.operators.Components.currentLabels(spark, root)
-        .count()
+      labelled = graft.sources.Pq.read(spark,
+        graft.sources.Versions.current(spark, root)).count()
       info(f"extendLabelsSink: ${nDocs / secs}%.0f docs/s " +
         f"($nDocs docs in $secs%.2f s)")
       nDocs / secs

@@ -354,8 +354,9 @@ class TextOpsSpec extends SparkTestBase {
       case f: FileSourceScanExec => Seq(f)
       case other => other.children.flatMap(fileScans)
     }
-    val baseIdx = TextOps.loadMinhashIndex(spark, TextOps.currentDir(spark,
-      TextOps.dedupBaseRoots.get(spark, sfDir)) + "/staged")
+    val baseIdx = TextOps.loadMinhashIndex(spark,
+      graft.sources.Versions.current(spark,
+        TextOps.dedupBaseRoots.get(spark, sfDir)) + "/staged")
     val newIdx = TextOps.minhashFit(spark,
       spark.read.parquet(s"$sfDir/documents.parquet")
         .filter(TextOps.isIncrementDoc),
