@@ -47,7 +47,7 @@ object AdvProbe {
     val banded = staged
       .select(col("doc_id"), posexplode(col("bsigs")).as(Seq("band", "bhash")))
     val hotMinhash = BandedJoins.hotBuckets(banded, "band", "bhash").count()
-    val cands = TextOps.minhashCandidates(docs)
+    val cands = BandedJoins.candidates(TextOps.minhashFamily, staged)
       .filter(col("id_a") >= ScaleGen.megaClusterBase &&
         col("id_b") >= ScaleGen.megaClusterBase)
       .count()

@@ -276,7 +276,8 @@ object StreamBench {
     val labelsRoot = tmp("graft_sb_labels")
     Versions.publish(spark, labelsRoot, "base")(Pq.write(
       graft.operators.Components.labelComponents(
-        graft.operators.TextOps.pairsCarriedStaged(staged)
+        graft.operators.BandedJoins.selfPairs(
+            graft.operators.TextOps.minhashFamily, staged, joinBack = false)
           .select(col("id_a"), col("id_b"))), _))
     val labelRows: Seq[(Long, String)] = (0 until 1000).map { i =>
       val id = 50000L + i

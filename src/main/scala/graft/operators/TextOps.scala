@@ -190,21 +190,15 @@ object TextOps {
     * flip point the corpus happens to sit on. Both serve from the
     * fitted index — no re-shingle, no sampling action.
     */
-  def qDedupMinhashCarried(spark: SparkSession, dir: String): DataFrame = {
-    val idx = minhashIndexFor(spark, dir)
-    pairsCarriedStaged(stagedFrame(spark, idx),
-      Some(hotSetOf(spark, idx)))
+  def qDedupMinhashCarried(spark: SparkSession, dir: String): DataFrame =
+    servedPairs(spark, minhashIndexFor(spark, dir), joinBack = false)
       .orderBy(col("id_a"), col("id_b"))
-  }
 
   /** Join-back twin of [[qDedupMinhashCarried]] — candidates are bare
     * id pairs and the shingle sets rejoin from the index parquet. */
-  def qDedupMinhashJoinback(spark: SparkSession, dir: String): DataFrame = {
-    val idx = minhashIndexFor(spark, dir)
-    pairsJoinBackStaged(stagedFrame(spark, idx),
-      Some(hotSetOf(spark, idx)))
+  def qDedupMinhashJoinback(spark: SparkSession, dir: String): DataFrame =
+    servedPairs(spark, minhashIndexFor(spark, dir), joinBack = true)
       .orderBy(col("id_a"), col("id_b"))
-  }
 
   /** Fitted text-dedup index — the ivfFit of MinHash (r5 verdict item
     * 1): the shingled + banded signature frame persisted as parquet,
@@ -260,15 +254,9 @@ object TextOps {
     // and a full extra index pass at 100 TB), and publishes the count
     // as a marker so a curator sees a boilerplate mega-cluster at fit
     // time, not as a mystery skew at probe time
-    BandedJoins.writeHotSet(spark, outPath, "bsigs", "bhash")
+    BandedJoins.writeHotSet(spark, outPath, minhashFamily)
     MinHashIndex(jb, outPath)
   }
-
-  /** The fit-time published hot set of an index — served to every
-    * index-backed probe so the guard costs nothing per query. */
-  private[graft] def hotSetOf(spark: SparkSession,
-    index: MinHashIndex): DataFrame =
-    BandedJoins.loadHotSet(spark, index.stagedPath)
 
   /** Re-open a [[minhashFit]] artifact from its path alone — the
     * layout decision comes off the `_graft_layout` marker, so a second
@@ -295,23 +283,23 @@ object TextOps {
   private[graft] def minhashIndexFor(spark: SparkSession,
     dir: String): MinHashIndex = fittedMinhash.get(spark, dir)
 
-  /** The persisted signature frame of a fitted index:
-    * (doc_id, shash, bsigs, n_sh). */
-  private[graft] def stagedFrame(spark: SparkSession,
-    index: MinHashIndex): DataFrame =
-    IndexLayers.read(spark, index.stagedPath)
+  /** Near-dup pairs served from a fitted index in the given verify
+    * layout: signatures come off the effective index, (doc_id, shash,
+    * bsigs, n_sh) — column-pruned scans, no re-shingle — and the guard
+    * reads the fit-time published hot set, so it costs nothing per
+    * query. No localCheckpoint — the parquet IS the materialization
+    * the uncached join-back path needed. */
+  private def servedPairs(spark: SparkSession, idx: MinHashIndex,
+    joinBack: Boolean): DataFrame =
+    BandedJoins.selfPairs(minhashFamily,
+      IndexLayers.read(spark, idx.stagedPath), joinBack,
+      Some(BandedJoins.loadHotSet(spark, idx.stagedPath)))
 
-  /** Near-dup pairs served from the fitted index: signatures come off
-    * the index parquet (column-pruned scans, no re-shingle), the verify
-    * layout is the fit-time decision. No localCheckpoint — the parquet
-    * IS the materialization the uncached join-back path needed. */
+  /** [[servedPairs]] in the fit-time layout. */
   private[graft] def minhashPairsIndexed(spark: SparkSession,
     dir: String): DataFrame = {
     val idx = minhashIndexFor(spark, dir)
-    val staged = stagedFrame(spark, idx)
-    val hot = Some(hotSetOf(spark, idx))
-    if (idx.joinBack) pairsJoinBackStaged(staged, hot)
-    else pairsCarriedStaged(staged, hot)
+    servedPairs(spark, idx, idx.joinBack)
   }
 
   /** Unsorted near-dup pairs from the banded MinHash path — shared by
@@ -372,7 +360,7 @@ object TextOps {
   private[graft] val minhashBandCount = 16
 
   /** Projected per-document exchange bytes of the two verify layouts,
-    * derived from the banded-row shapes ([[bandedRows]], B =
+    * derived from the banded-row shapes ([[BandedJoins.banded]], B =
     * [[minhashBandCount]] bands over [[minhashHashes]] long hashes):
     * every banded row carries 8 B doc_id + 8·B B bsigs + 12 B
     * (band int, bhash long), and a document emits B of them:
@@ -457,59 +445,15 @@ object TextOps {
   private[graft] def stageDocs(docs: DataFrame): DataFrame =
     withSigs(shingled(docs))
 
-  /** Banded (band, bhash) rows for the candidate equi-join over a
-    * signature frame (doc_id, shash, bsigs); `carry` controls whether
-    * the full shingle-hash set rides along. */
-  private def bandedRows(sigd: DataFrame, carry: Boolean): DataFrame = {
-    val cols =
-      if (carry) Seq(col("doc_id"), col("shash"), col("bsigs"))
-      else Seq(col("doc_id"), col("bsigs"))
-    sigd.select(cols :+
-      posexplode(col("bsigs")).as(Seq("band", "bhash")): _*)
-  }
-
-  /** Emit-once self-join of a banded relation: the shared
-    * [[BandedJoins.emitOnce]] construction (r5 verdict item 3) with
-    * this modality's (band, bhash, bsigs) columns and the self-join's
-    * ordered-pair constraint. A pair colliding in k bands surfaces
-    * only in its FIRST colliding band, so no global dedup shuffle
-    * follows — cost model and what-it-buys are documented on the
-    * shared builder.
-    */
-  private def emitOnceJoin(banded: DataFrame, outCols: Seq[Column],
-    hot: Option[DataFrame] = None): DataFrame =
-    BandedJoins.emitOnce(banded, banded, "band", "bhash", "bsigs",
-      "doc_id", col("x.doc_id") < col("y.doc_id"), outCols,
-      hotOpt = hot)
-
-  /** Carried-payload layout over a signature frame: verify runs
-    * directly on the join output. `hot` is the index's published hot
-    * set when serving from a fit. */
-  private[graft] def pairsCarriedStaged(sigd: DataFrame,
-    hot: Option[DataFrame] = None): DataFrame =
-    verifyJaccard(emitOnceJoin(bandedRows(sigd, carry = true),
-      Seq(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"),
-        col("x.shash").as("sa"), col("y.shash").as("sb")), hot))
+  /** The MinHash banded family: staged (doc_id, shash, bsigs) rows band
+    * on (band, bhash) and verify by exact Jaccard of the shingle-hash
+    * sets. */
+  private[graft] val minhashFamily =
+    BandedJoins.Family("doc_id", "bsigs", "bhash", "shash", verifyJaccard)
 
   /** Carried-payload layout from raw documents (uncached path). */
   private[graft] def minhashPairsCarried(docs: DataFrame): DataFrame =
-    pairsCarriedStaged(withSigs(shingled(docs)))
-
-  /** Join-back layout over a signature frame: candidates are bare id
-    * pairs; the shingle sets rejoin for the verify — the plan for
-    * long-document corpora. The caller supplies a MATERIALIZED frame
-    * (index parquet, or localCheckpoint on the uncached path): three
-    * plan branches consume it (banded rows + both join-back sides). */
-  private[graft] def pairsJoinBackStaged(sigd: DataFrame,
-    hot: Option[DataFrame] = None): DataFrame = {
-    val cands = emitOnceJoin(bandedRows(sigd, carry = false),
-      Seq(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b")), hot)
-    verifyJaccard(cands
-      .join(sigd.select(col("doc_id").as("id_a"),
-        col("shash").as("sa")), "id_a")
-      .join(sigd.select(col("doc_id").as("id_b"),
-        col("shash").as("sb")), "id_b"))
-  }
+    BandedJoins.selfPairs(minhashFamily, stageDocs(docs), joinBack = false)
 
   /** Join-back layout from raw documents (uncached path): the shingled
     * signatures are materialized ONCE (`localCheckpoint`, the repo's
@@ -518,23 +462,16 @@ object TextOps {
     * tokenize+shingle per plan branch would triple the dominant
     * per-row cost. */
   private[graft] def minhashPairsJoinBack(docs: DataFrame): DataFrame =
-    pairsJoinBackStaged(withSigs(shingled(docs)).localCheckpoint(true))
+    BandedJoins.selfPairs(minhashFamily,
+      stageDocs(docs).localCheckpoint(true), joinBack = true)
 
-  /** Candidate id pairs sharing ≥1 MinHash band bucket (each pair
-    * exactly once via the emit-once predicate) — exposed for the
-    * candidate-sparsity guard test that bounds the emit-once
-    * predicate's interpreted cost. */
-  private[graft] def minhashCandidates(docs: DataFrame): DataFrame =
-    emitOnceJoin(bandedRows(withSigs(shingled(docs)), carry = false),
-      Seq(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b")))
-
-  /** Verify stage shared by both layouts: exact Jaccard from the
-    * (sa, sb) shingle-hash sets, thresholded at 0.8. */
+  /** Verify stage of both layouts: exact Jaccard from the (pa, pb)
+    * shingle-hash sets, thresholded at 0.8. */
   private def verifyJaccard(cands: DataFrame): DataFrame =
     cands
-      .withColumn("common", size(array_intersect(col("sa"), col("sb"))))
+      .withColumn("common", size(array_intersect(col("pa"), col("pb"))))
       .withColumn("jaccard", col("common") /
-        (size(col("sa")) + size(col("sb")) - col("common")))
+        (size(col("pa")) + size(col("pb")) - col("common")))
       .filter(col("jaccard") >= 0.8)
       .select(col("id_a"), col("id_b"), col("jaccard"))
 
@@ -567,77 +504,9 @@ object TextOps {
     Components.flagCorpus(docs, "doc_id", Components.labelComponents(pairs))
   }
 
-  /** INCREMENTAL near-duplicate pairs — the nightly-sync posture of a
-    * production corpus pipeline (reference: recurring incremental loads
-    * rather than full recomputes; r5 verdict item 4, the top round-8
-    * item): NEW documents band+probe the already-published index
-    * instead of re-pairing the whole corpus. Emitted pairs are
-    * new-vs-old (a banded join of the increment's signatures against
-    * the index's buckets) plus new-vs-new (the ordinary emit-once
-    * self-join over the increment alone) — old-vs-old pairs are never
-    * recomputed; they are already baked into yesterday's label map.
-    * At 100 TB this is the whole game: a daily crawl increment is
-    * ~0.1% of the corpus, so probe cost is increment-sized × band
-    * fan-out, not corpus-sized.
-    *
-    * Contract: `newStaged`'s doc_ids are disjoint from `baseStaged`'s
-    * (an increment is NEW documents; re-crawled ids belong to the
-    * compaction job — [[compactState]] / [[qDedupCompact]] — which
-    * retires their stale rows first and then calls this probe on the
-    * disjoint remainder). The join guard only excludes the
-    * degenerate self-pair. Output orientation is normalized
-    * (id_a < id_b) so pairs line up with the full-recompute path's
-    * ordered emission regardless of which side a document entered on.
-    */
-  private[graft] def incrementPairs(baseStaged: DataFrame,
-    newStaged: DataFrame, joinBack: Boolean,
-    baseHot: Option[DataFrame] = None,
-    bloomPrune: Boolean = true): DataFrame = {
-    // the increment goes on the RIGHT — emitOnce's SHUFFLE_HASH build
-    // side (round-8 review: hinting the corpus-sized base relation
-    // built per-partition hash maps over the whole index while
-    // streaming the ~0.1% increment, inverting the join's memory
-    // profile at exactly the scale this operator exists for); id_a is
-    // the new-side id, id_b the base-side id
-    val crossOut =
-      if (joinBack)
-        Seq(col("y.doc_id").as("id_a"), col("x.doc_id").as("id_b"))
-      else
-        Seq(col("y.doc_id").as("id_a"), col("x.doc_id").as("id_b"),
-          col("y.shash").as("sa"), col("x.shash").as("sb"))
-    val newBanded = bandedRows(newStaged, carry = !joinBack)
-    // ONE bounded driver pull of the increment's (band, bhash) keys
-    // (BandedJoins.planIncrementProbe) feeds the bloom prune
-    // (ProbeFilters: the corpus-sized index branch drops its
-    // partnerless banded rows BEFORE its exchange — parity- and
-    // prune-pinned in ProbeFilterSpec; false positives only add verify
-    // work) AND the within self-join's driver-counted hot set
-    val (baseBanded, newHot) = BandedJoins.planIncrementProbe(
-      bandedRows(baseStaged, carry = !joinBack), newBanded, "band", "bhash",
-      bloomPrune)
-    val crossCands = BandedJoins.emitOnce(
-      baseBanded, newBanded,
-      "band", "bhash", "bsigs", "doc_id",
-      col("x.doc_id") =!= col("y.doc_id"), crossOut, hotOpt = baseHot)
-    val cross =
-      if (joinBack)
-        verifyJaccard(crossCands
-          .join(newStaged.select(col("doc_id").as("id_a"),
-            col("shash").as("sa")), "id_a")
-          .join(baseStaged.select(col("doc_id").as("id_b"),
-            col("shash").as("sb")), "id_b"))
-      else verifyJaccard(crossCands)
-    val within =
-      if (joinBack) pairsJoinBackStaged(newStaged, newHot)
-      else pairsCarriedStaged(newStaged, newHot)
-    cross.unionByName(within)
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"), col("jaccard"))
-  }
-
   /** Streaming-intake near-dup flagger — the stream-static dual of
-    * [[incrementPairs]]'s cross component: each arriving document is
-    * staged PER-ROW (fused shingle/band expressions — stateless),
+    * [[BandedJoins.incrementPairs]]' cross step: each arriving document
+    * is staged PER-ROW (fused shingle/band expressions — stateless),
     * banded, and joined against the published base index on
     * (band, bhash) with the emit-once predicate, so a (new, base) pair
     * surfaces exactly once WITHOUT streaming state, watermark, or a
@@ -653,19 +522,13 @@ object TextOps {
     * doc_id = the arriving document, one row per flagged base match.
     */
   private[graft] def intakePairs(baseStaged: DataFrame,
-    newDocs: DataFrame, baseHot: Option[DataFrame] = None): DataFrame = {
-    val cands = BandedJoins.emitOnce(
-      bandedRows(baseStaged, carry = true),
-      bandedRows(stageDocs(newDocs), carry = true),
-      "band", "bhash", "bsigs", "doc_id",
-      col("x.doc_id") =!= col("y.doc_id"), hotOpt = baseHot,
-      outCols =
-      Seq(col("y.doc_id").as("id_a"), col("x.doc_id").as("id_b"),
-        col("y.shash").as("sa"), col("x.shash").as("sb")))
-    verifyJaccard(cands)
+    newDocs: DataFrame, baseHot: Option[DataFrame] = None): DataFrame =
+    BandedJoins.cross(minhashFamily,
+      BandedJoins.banded(minhashFamily, baseStaged, carry = true),
+      BandedJoins.banded(minhashFamily, stageDocs(newDocs), carry = true),
+      baseHot, joinBack = None)
       .select(col("id_a").as("doc_id"), col("id_b").as("dup_of"),
         col("jaccard"))
-  }
 
   /** The deterministic corpus split the declared incremental query
     * simulates a nightly increment with: ~20% of documents (by doc_id
@@ -686,8 +549,8 @@ object TextOps {
   /** Incremental near-dup clustering — the declared query: the ~20%
     * increment split ([[isIncrementDoc]]) is shingled fresh (it IS the
     * new data), probed against the base split's published index via
-    * [[incrementPairs]], and the base label map is extended through
-    * star edges — the base corpus is never re-shingled and old-vs-old
+    * [[BandedJoins.incrementPairs]], and the base label map is extended
+    * through star edges — the base corpus is never re-shingled and old-vs-old
     * pairs never recomputed (fit-counter- and scan-path-pinned in
     * TextOpsSpec). Output shape matches [[qDedupClusters]], and so
     * does the ORACLE: increment ∪ base must equal a full recompute,
@@ -705,87 +568,12 @@ object TextOps {
     // layout) two verify sides
     val newStaged = stageDocs(docs.filter(isIncrementDoc))
       .localCheckpoint(true)
-    val inc = incrementPairs(stagedFrame(spark, idx), newStaged,
-      idx.joinBack, baseHot = Some(hotSetOf(spark, idx)))
+    val inc = BandedJoins.incrementPairs(minhashFamily,
+      IndexLayers.read(spark, idx.stagedPath), newStaged, idx.joinBack,
+      Some(BandedJoins.loadHotSet(spark, idx.stagedPath)))
     Components.flagCorpus(docs, "doc_id",
       Components.extendLabels(graft.sources.Pq.read(spark, s"$cur/labels"),
         inc))
-  }
-
-  /** RE-CRAWL COMPACTION — the update half of the nightly posture that
-    * [[qDedupIncremental]]'s contract explicitly excludes ("re-crawled
-    * ids belong to a compaction job"; r8 verdict item 3): a nightly
-    * crawl RE-FETCHES documents whose content changed (the reference's
-    * own recurring-sync shape, /root/reference/insights.md:169-172),
-    * and their STALE rows must leave the published index before the
-    * new text is paired in.
-    *
-    * Why the label map alone cannot be repaired: star edges record
-    * reachability, not which underlying near-dup pairs justified it —
-    * a re-crawled document may have been the BRIDGE holding a
-    * component together, and retiring it must SPLIT that component.
-    * So the published state carries the verified PAIR set
-    * (dup-set-sized — orders of magnitude smaller than the corpus)
-    * alongside the index, and one compaction wave (1) anti-joins the
-    * re-crawled ids out of the staged index (stale signature
-    * retirement), (2) drops every published pair incident to a
-    * re-crawled id, and (3) probes the re-crawled docs' NEW text
-    * against the retained index — the exact [[incrementPairs]] probe
-    * shape, increment-sized; the caller relabels the repaired pair
-    * graph (retained ∪ fresh pairs), which is dup-set-sized, so the
-    * propagation cost matches the incremental path's. The re-crawl id
-    * set is increment-sized and broadcasts into every anti-join; the
-    * corpus itself never re-shingles.
-    *
-    * The core shared by the batch compaction queries and the
-    * STREAMING wave sink (both through [[compactWaveState]]): given
-    * the served (staged index, pair set) state, the re-crawl id set,
-    * and the re-crawled docs' staged signatures, returns (the wave's
-    * added staged rows — the repaired index is the retained rows ∪
-    * these, published as a delta over the served manifest — and the
-    * repaired pair set = surviving pairs ∪ fresh probes ∪ the stars of
-    * hot buckets whose centre retired, re-centred on their smallest
-    * retained member, [[BandedJoins.recentredStars]]). The published
-    * hot set is a conservative SUPERSET after retirement for the probe
-    * at hand (buckets only shrink) — correct per the emitOnce contract;
-    * the streaming publication recomputes it over the repaired index so
-    * the NEXT wave probes an exact set. */
-  private[graft] def compactState(baseStaged: DataFrame,
-    basePairs: DataFrame, ids: DataFrame, newStaged: DataFrame,
-    joinBack: Boolean, baseHot: Option[DataFrame])
-    : (DataFrame, DataFrame) = {
-    val retainedStaged = baseStaged
-      .join(broadcast(ids), Seq("doc_id"), "left_anti")
-    val freshPairs = incrementPairs(retainedStaged, newStaged, joinBack,
-      baseHot)
-    val keptPairs = basePairs
-      .join(broadcast(ids.select(col("doc_id").as("id_a"))),
-        Seq("id_a"), "left_anti")
-      .join(broadcast(ids.select(col("doc_id").as("id_b"))),
-        Seq("id_b"), "left_anti")
-    // keep the published index schema stable across waves: index rows
-    // carry the fit's n_sh stat column, freshly staged rows do not
-    val newAligned =
-      if (baseStaged.columns.contains("n_sh") &&
-          !newStaged.columns.contains("n_sh"))
-        newStaged.withColumn("n_sh", size(col("shash")))
-      else newStaged
-    val pairs = keptPairs.select(col("id_a"), col("id_b"))
-      .unionByName(freshPairs.select(col("id_a"), col("id_b")))
-    // a hot bucket whose star centre retired re-centres on its smallest
-    // retained member; its edges join two retained ids, so they never
-    // meet a fresh pair, and the anti-join drops any the kept set holds
-    val recentred = BandedJoins.recentredStars(
-      bandedRows(baseStaged, carry = false), ids, baseHot, "band", "bhash",
-      "bsigs", "doc_id").map { cands =>
-        val shash = retainedStaged.select(col("doc_id"), col("shash"))
-        verifyJaccard(cands
-            .join(shash.toDF("id_a", "sa"), "id_a")
-            .join(shash.toDF("id_b", "sb"), "id_b"))
-          .select(col("id_a"), col("id_b"))
-          .join(keptPairs, Seq("id_a", "id_b"), "left_anti")
-      }
-    (newAligned, recentred.fold(pairs)(pairs.unionByName))
   }
 
   // ── CONTINUOUSLY-MAINTAINED DEDUP ARTIFACT (r15, r14 verdict item
@@ -972,33 +760,29 @@ object TextOps {
       val idx = minhashFit(spark, docs, s"$dir/staged")
       graft.sources.Markers.write(spark, root, "_graft_layout",
         if (idx.joinBack) "joinback" else "carried")
-      val staged = stagedFrame(spark, idx)
-      val hot = Some(hotSetOf(spark, idx))
-      graft.sources.Pq.write((if (idx.joinBack) pairsJoinBackStaged(staged, hot)
-        else pairsCarriedStaged(staged, hot)).select(col("id_a"), col("id_b")),
-        s"$dir/pairs")
+      graft.sources.Pq.write(servedPairs(spark, idx, idx.joinBack)
+        .select(col("id_a"), col("id_b")), s"$dir/pairs")
       if (labels)
         graft.sources.Pq.write(Components.labelComponents(
           graft.sources.Pq.read(spark, s"$dir/pairs")), s"$dir/labels")
     }
 
-  /** One re-crawl wave applied to the CURRENT state of a dedup root —
-    * the [[compactState]] core reading its inputs from the served
-    * artifact (the effective index, [[IndexLayers.read]]): retire the
-    * wave's ids, probe their new text against the retained index.
+  /** One re-crawl wave applied to the CURRENT state of a dedup root:
+    * [[BandedJoins.waveState]] in the root's fit-time layout (its
+    * `_graft_layout` marker) — retire the wave's ids, probe their new
+    * text against the retained index. The added rows carry the fit's
+    * `n_sh` column, so every layer of the index shares one schema.
     * Returns (added staged rows, pairs): the streaming sink hands both
     * to [[publishWaveState]] with the wave's ids, which derives the
     * labels; the batch compaction queries label the pairs. */
   private[graft] def compactWaveState(spark: SparkSession, root: String,
     recrawled: DataFrame): (DataFrame, DataFrame) = {
-    val cur = Versions.current(spark, root)
-    val joinBack = graft.sources.Markers.read(spark, root,
-      "_graft_layout") == "joinback"
-    val staged = IndexLayers.read(spark, s"$cur/staged")
-    val hot = Some(BandedJoins.loadHotSet(spark, s"$cur/staged"))
-    compactState(staged, graft.sources.Pq.read(spark, s"$cur/pairs"),
+    val (added, pairs) = BandedJoins.waveState(spark, minhashFamily, root,
       recrawled.select(col("doc_id")),
-      stageDocs(recrawled).localCheckpoint(true), joinBack, hot)
+      stageDocs(recrawled).localCheckpoint(true),
+      joinBack = graft.sources.Markers.read(spark, root, "_graft_layout") ==
+        "joinback")
+    (added.withColumn("n_sh", size(col("shash"))), pairs)
   }
 
   // ── SIMHASH STREAMING COMPACTION ROOT (r16, r15 verdict item 3 —
@@ -2878,9 +2662,9 @@ object TextOps {
     editIndexFrame(spark, path).localCheckpoint(true)
 
   /** Bloom-pruned base index branch for an increment probe — the
-    * [[incrementPairs]] posture on the PassJoin shape: the index side
-    * pays the probe's dominant exchange and almost none of its rows
-    * have a partner, so a driver bloom over the increment's
+    * [[BandedJoins.incrementPairs]] posture on the PassJoin shape: the
+    * index side pays the probe's dominant exchange and almost none of
+    * its rows have a partner, so a driver bloom over the increment's
     * (lang, idx, seg) probe-key set drops them before the shuffle
     * (false positives only add DP verify work; false negatives cannot
     * exist). */
@@ -3619,8 +3403,8 @@ object TextOps {
     * doc_id_b = index id, hamming). */
   private[graft] def simhashSigPairsBetween(left: DataFrame,
       right: DataFrame, b: Int): DataFrame = {
-    // bloom prune (the [[incrementPairs]] posture): the index side
-    // pays the probe's dominant cost — a corpus-banded exchange whose
+    // bloom prune (the [[BandedJoins.incrementPairs]] posture): the index
+    // side pays the probe's dominant cost — a corpus-banded exchange whose
     // rows almost all lack a partner; a driver bloom over the
     // increment's (band, key) set drops them BEFORE the shuffle (false
     // positives only add verify work, false negatives cannot exist)

@@ -667,66 +667,21 @@ object Vectors {
     u.select(col("vec_id"), col("u"), graft.functions.VectorFunctions
       .lshBandSigs(col("u"), lshPlanes(), lshBandBits).as("sigs"))
 
-  /** Banded rows of a staged frame: one row per (vector, band) with
-    * the band's bucket key and the full signature array — sigs must
-    * ride for the emit-once predicate; the unit vector does NOT (the
-    * r15 joinback layout: vectors join back once per verify side, so
-    * the banded exchange is dimension-independent). */
-  private def bandedVecs(staged: DataFrame): DataFrame =
-    staged.select(Seq(col("vec_id"), col("sigs")) :+
-      posexplode(col("sigs")).as(Seq("band", "band_sig")): _*)
-
-  private def lshCandidatePairs(u: DataFrame): DataFrame =
-    // materialized once: the joinback layout consumes the staged frame
-    // in three plan branches (banded rows + both vector join-backs)
-    lshCandidatePairsStaged(stageVectors(u).localCheckpoint(true))
-
-  /** Candidates via the shared emit-once banded self-join (r5 verdict
-    * item 3 — one construction for both LSH modalities; cost model
-    * documented on [[graft.operators.BandedJoins.emitOnce]]): the
-    * "first colliding band" predicate makes each pair's emission
-    * unique by construction, so no global dropDuplicates shuffle is
-    * needed afterwards.
-    *
-    * JOINBACK layout (r15 — the MinHash bytes model applied to this
-    * family's one remaining carried-payload exchange): banded rows
-    * carry only (vec_id, sigs); candidate id pairs join the unit
-    * vectors back for the exact-cosine verify. The former carried
-    * layout shipped each unit vector through every banded row —
+  /** The embedding banded family: staged (vec_id, u, sigs) rows band
+    * on (band, band_sig) and verify by exact cosine of the unit
+    * vectors. It always joins the vectors back (r15 — the MinHash bytes
+    * model applied to this family's one carried-payload exchange): the
+    * carried layout shipped each unit vector through every banded row,
     * bands × 8·dim bytes per vector (measured 60.6 MB shuffle-read at
-    * sf0.1) — where the joinback pays 2 × 8·dim through the sparse
+    * sf0.1), where the join-back pays 2 × 8·dim through the sparse
     * candidate joins plus the thin banded rows. Unlike text, the
-    * payload is FIXED-size per corpus, so the comparison is
-    * dimension-independent: carried costs bands/2 ≈ 8× the joinback's
-    * vector bytes at 16 bands, and no runtime chooser is needed —
-    * joinback wins on bytes unconditionally. On the 1000-executor
-    * network the exchange is the cost (BASELINE.md's reading rule);
-    * on local[32] the candidate set is sparse by construction, so the
-    * two extra joins are noise (measured at equal wall). CALLER
-    * CONTRACT: `staged` must be cheap to re-read (index parquet, or
-    * localCheckpoint on the uncached path) — three plan branches
-    * consume it. */
-  private def lshCandidatePairsStaged(staged: DataFrame,
-    hot: Option[DataFrame] = None): DataFrame = {
-    val banded = bandedVecs(staged)
-    BandedJoins.emitOnce(banded, banded, "band", "band_sig", "sigs",
-      "vec_id", col("x.vec_id") < col("y.vec_id"),
-      Seq(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b")),
-      hotOpt = hot)
-      .join(staged.select(col("vec_id").as("id_a"), col("u").as("ua")),
-        "id_a")
-      .join(staged.select(col("vec_id").as("id_b"), col("u").as("ub")),
-        "id_b")
-  }
-
-  /** Candidate id pairs sharing ≥1 LSH band bucket (each pair exactly
-    * once, via the emit-once predicate) — exposed for the
-    * candidate-sparsity property test. At scale the bucket width is the
-    * knob: expected bucket size is n/2^bits, so bits grows like log₂(n)
-    * to keep buckets O(1). */
-  private[graft] def lshCandidates(u: DataFrame): DataFrame =
-    lshCandidatePairs(u)
-      .select(col("id_a"), col("id_b"))
+    * payload is FIXED-size per corpus, so carried costs bands/2 ≈ 8×
+    * the join-back's vector bytes at 16 bands whatever the dimension,
+    * and no runtime chooser is needed. On local[32] the candidate set
+    * is sparse by construction, so the two extra joins are noise
+    * (measured at equal wall). */
+  private[graft] val lshFamily =
+    BandedJoins.Family("vec_id", "sigs", "band_sig", "u", verifyCosine)
 
   /** Exact cosine re-verification over candidate pairs only — the
     * verify stage shared by the declared query and the synthetic-corpus
@@ -756,70 +711,30 @@ object Vectors {
 
   /** Unsorted verified near-dup pairs from the banded LSH path — shared
     * by the declared pair query and the clustering query (which must
-    * not inherit a useless pre-join sort). */
+    * not inherit a useless pre-join sort). The staging is materialized
+    * once: the join-back layout reads it in three plan branches. */
   private[graft] def lshVerifiedPairs(u: DataFrame): DataFrame =
-    verifyCosine(lshCandidatePairs(u))
+    BandedJoins.selfPairs(lshFamily, stageVectors(u).localCheckpoint(true),
+      joinBack = true)
 
-  /** Same, over an already-staged (vec_id, u, sigs) frame — the shape
-    * the embedding dedup index serves; `hot` is the index's published
-    * hot set when serving from a fit. */
-  private[graft] def lshVerifiedPairsStaged(staged: DataFrame,
-    hot: Option[DataFrame] = None): DataFrame =
-    verifyCosine(lshCandidatePairsStaged(staged, hot))
-
-  /** [[lshVerifiedPairsStaged]] over a raw (vec_id, …, embedding)
-    * frame — the full-recompute comparator the streaming-compaction
-    * specs assert against. */
+  /** [[lshVerifiedPairs]] over a raw (vec_id, …, embedding) frame — the
+    * full-recompute comparator the streaming-compaction specs assert
+    * against. */
   private[graft] def lshVerifiedPairsOver(vectors: DataFrame): DataFrame =
-    lshVerifiedPairsStaged(stageVectors(
-      vectors.select(col("vec_id"), graft.functions.VectorFunctions
-        .unitv(col("embedding")).as("u"))).localCheckpoint(true))
+    lshVerifiedPairs(unitOf(vectors))
 
-  /** Verify stage shared by the batch and incremental paths: exact
-    * cosine on the carried unit vectors, thresholded at
-    * [[lshCosineThreshold]]. */
+  /** Unit vectors (vec_id, u) of a raw (vec_id, …, embedding) frame. */
+  private def unitOf(vectors: DataFrame): DataFrame =
+    vectors.select(col("vec_id"),
+      graft.functions.VectorFunctions.unitv(col("embedding")).as("u"))
+
+  /** Verify stage of the batch and incremental paths: exact cosine of
+    * the (pa, pb) unit vectors, thresholded at [[lshCosineThreshold]]. */
   private def verifyCosine(cands: DataFrame): DataFrame =
     cands
-      .withColumn("cosine", dot(col("ua"), col("ub")))
+      .withColumn("cosine", dot(col("pa"), col("pb")))
       .filter(col("cosine") >= lshCosineThreshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
-
-  /** INCREMENTAL embedding near-dup pairs — the embedding twin of
-    * [[graft.operators.TextOps.incrementPairs]] (nightly-sync posture):
-    * NEW vectors band+probe the published base index's buckets
-    * (new-vs-old) plus the ordinary emit-once self-join within the
-    * increment (new-vs-new); old-vs-old pairs are never recomputed.
-    * The increment rides the SHUFFLE_HASH build side (emitOnce's
-    * `right`); the corpus-sized index streams. Contract: increment
-    * vec_ids are disjoint from the base's, and BOTH staged inputs are
-    * cheap to re-read (index parquet / localCheckpoint) — the r15
-    * joinback layout (see [[lshCandidatePairsStaged]]) reads each in
-    * a banded branch and a vector join-back branch. Output
-    * orientation is normalized (id_a < id_b) to line up with the
-    * full-recompute path. */
-  private[graft] def embedIncrementPairs(baseStaged: DataFrame,
-    newStaged: DataFrame, baseHot: Option[DataFrame] = None,
-    bloomPrune: Boolean = true): DataFrame = {
-    val newBanded = bandedVecs(newStaged)
-    // same single bounded pull as the text probe: the increment's
-    // (band, band_sig) keys feed the pre-shuffle bloom prune of the
-    // index branch and the within self-join's driver-counted hot set
-    val (baseBanded, newHot) = BandedJoins.planIncrementProbe(
-      bandedVecs(baseStaged), newBanded, "band", "band_sig", bloomPrune)
-    val cross = BandedJoins.emitOnce(
-      baseBanded, newBanded,
-      "band", "band_sig", "sigs", "vec_id",
-      col("x.vec_id") =!= col("y.vec_id"),
-      Seq(col("y.vec_id").as("id_a"), col("x.vec_id").as("id_b")),
-      hotOpt = baseHot)
-      .join(newStaged.select(col("vec_id").as("id_a"),
-        col("u").as("ua")), "id_a")
-      .join(baseStaged.select(col("vec_id").as("id_b"),
-        col("u").as("ub")), "id_b")
-    verifyCosine(cross).unionByName(lshVerifiedPairsStaged(newStaged, newHot))
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"), col("cosine"))
-  }
 
   /** The deterministic split the declared incremental query simulates
     * a nightly increment with (~20% of vectors by id hash). */
@@ -850,54 +765,12 @@ object Vectors {
     val all = unit(spark, dir)
     val newStaged = stageVectors(all.filter(isIncrementVec))
       .localCheckpoint(true)
-    val inc = embedIncrementPairs(IndexLayers.read(spark, s"$cur/staged"),
-      newStaged,
-      baseHot = Some(BandedJoins.loadHotSet(spark, s"$cur/staged")))
+    val inc = BandedJoins.incrementPairs(lshFamily,
+      IndexLayers.read(spark, s"$cur/staged"), newStaged, joinBack = true,
+      Some(BandedJoins.loadHotSet(spark, s"$cur/staged")))
     Components.flagCorpus(all, "vec_id",
       Components.extendLabels(graft.sources.Pq.read(spark, s"$cur/labels"),
         inc))
-  }
-
-  /** RE-CRAWL COMPACTION, embedding modality — the twin of
-    * [[graft.operators.TextOps.compactState]] (same reasoning: a
-    * re-embedded document's stale signature rows and published pairs
-    * must retire BEFORE its new vector is paired in, and the label map
-    * alone cannot repair a retired bridge, so the published state
-    * carries the verified pair set). Retirement and pair drops are
-    * broadcast anti-joins against the increment-sized re-embed id set
-    * `ids`; the fresh probe is the [[embedIncrementPairs]] shape over
-    * the NEW vectors' staged signatures; the published hot set is a
-    * conservative superset after retirement. Returns (the wave's added
-    * staged rows — the repaired index is retained ∪ these — and the
-    * repaired pair set = surviving pairs ∪ fresh probes ∪ the re-centred
-    * stars of hot buckets whose centre retired); the caller relabels
-    * the dup-set-sized graph. A
-    * production trigger for this path: an embedding MODEL upgrade
-    * re-embeds a corpus slice — ids unchanged, vectors superseded.
-    */
-  private[graft] def embedCompactState(baseStaged: DataFrame,
-      basePairs: DataFrame, ids: DataFrame, newStaged: DataFrame,
-      baseHot: Option[DataFrame]): (DataFrame, DataFrame) = {
-    val retained = baseStaged.join(broadcast(ids), Seq("vec_id"), "left_anti")
-    val fresh = embedIncrementPairs(retained, newStaged, baseHot)
-    val kept = basePairs
-      .join(broadcast(ids.select(col("vec_id").as("id_a"))),
-        Seq("id_a"), "left_anti")
-      .join(broadcast(ids.select(col("vec_id").as("id_b"))),
-        Seq("id_b"), "left_anti")
-    val pairs = kept.select(col("id_a"), col("id_b"))
-      .unionByName(fresh.select(col("id_a"), col("id_b")))
-    // hot buckets whose star centre retired: the text twin's re-centring
-    val recentred = BandedJoins.recentredStars(bandedVecs(baseStaged),
-      ids, baseHot, "band", "band_sig", "sigs", "vec_id").map { cands =>
-        val u = retained.select(col("vec_id"), col("u"))
-        verifyCosine(cands
-            .join(u.toDF("id_a", "ua"), "id_a")
-            .join(u.toDF("id_b", "ub"), "id_b"))
-          .select(col("id_a"), col("id_b"))
-          .join(kept, Seq("id_a", "id_b"), "left_anti")
-      }
-    (newStaged, recentred.fold(pairs)(pairs.unionByName))
   }
 
   /** The deterministic re-embed subset the declared query simulates
@@ -937,33 +810,25 @@ object Vectors {
     * branch is writing. */
   private[graft] def seedEmbedRoot(spark: SparkSession,
       vectors: DataFrame, root: String, labels: Boolean = true): Unit = {
-    val staged = stageVectors(vectors.select(col("vec_id"),
-        graft.functions.VectorFunctions.unitv(col("embedding")).as("u")))
-      .localCheckpoint(true)
+    val staged = stageVectors(unitOf(vectors)).localCheckpoint(true)
     graft.operators.TextOps.publishWaveState(spark, root, "seed", "staged",
       staged, None,
-      lshVerifiedPairsStaged(staged).select(col("id_a"), col("id_b")),
-      0, BandedJoins.writeHotSet(spark, _, "sigs", "band_sig"),
-      labels = labels)
+      BandedJoins.selfPairs(lshFamily, staged, joinBack = true)
+        .select(col("id_a"), col("id_b")),
+      0, BandedJoins.writeHotSet(spark, _, lshFamily), labels = labels)
   }
 
   /** One re-embed wave applied to the CURRENT state of an embedding
-    * root — [[embedCompactState]] reading the served (effective)
-    * staged index, pairs and hot set; returns (added staged rows,
-    * pairs) for
+    * root: [[BandedJoins.waveState]] over the wave's staged vectors.
+    * Returns (added staged rows, pairs) for
     * [[graft.operators.TextOps.publishWaveState]] or a batch query's
-    * labels. `batch` is raw (vec_id, embedding). */
+    * labels. `batch` is raw (vec_id, embedding); a re-embed (an
+    * embedding MODEL upgrade re-embeds a corpus slice — ids unchanged,
+    * vectors superseded) retires the stale vectors first. */
   private[graft] def embedWaveState(spark: SparkSession, root: String,
-      batch: DataFrame): (DataFrame, DataFrame) = {
-    val cur = Versions.current(spark, root)
-    embedCompactState(IndexLayers.read(spark, s"$cur/staged"),
-      graft.sources.Pq.read(spark, s"$cur/pairs"),
-      batch.select(col("vec_id")),
-      stageVectors(batch.select(col("vec_id"), graft.functions
-        .VectorFunctions.unitv(col("embedding")).as("u")))
-        .localCheckpoint(true),
-      Some(BandedJoins.loadHotSet(spark, s"$cur/staged")))
-  }
+      batch: DataFrame): (DataFrame, DataFrame) =
+    BandedJoins.waveState(spark, lshFamily, root, batch.select(col("vec_id")),
+      stageVectors(unitOf(batch)).localCheckpoint(true), joinBack = true)
 
   /** Declared embedding compaction: the base root holds reversed
     * (stale-model) vectors for the ~14% re-embed subset; tonight they

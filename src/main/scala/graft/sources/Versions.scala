@@ -50,13 +50,19 @@ object Versions {
     }
     Markers.write(spark, dir, refsMarker,
       refs.filter(_ != version).toSeq.distinct.mkString("\n"))
-    Markers.write(spark, root, currentMarker, version)
+    Markers.replace(spark, root, currentMarker, version)
     if (retain > 0) retire(spark, root, version, retain)
   }
 
-  /** The served version's directory, `<root>/<version>`. */
-  def current(spark: SparkSession, root: String): String =
-    s"$root/${Markers.read(spark, root, currentMarker)}"
+  /** The served version's directory, `<root>/<version>`. An empty
+    * marker names no version and fails loudly instead of resolving to
+    * the root itself. */
+  def current(spark: SparkSession, root: String): String = {
+    val version = Markers.read(spark, root, currentMarker)
+    require(version.nonEmpty,
+      s"$root/$currentMarker is empty: the root names no served version")
+    s"$root/$version"
+  }
 
   /** The served version's name, None before the first publish. */
   def currentVersion(spark: SparkSession, root: String): Option[String] =

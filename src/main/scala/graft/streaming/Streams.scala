@@ -855,8 +855,9 @@ object Streams {
     * relabel — ran batch-only). Each micro-batch is a wave of
     * RE-CRAWLED documents (doc_id, text): the wave retires its ids
     * from the served index, probes the new text against the retained
-    * rows through the exact [[graft.operators.TextOps.incrementPairs]]
-    * shape, and publishes its index delta (added rows + retired ids,
+    * rows through the increment probe
+    * ([[graft.operators.BandedJoins.incrementPairs]]), and publishes
+    * its index delta (added rows + retired ids,
     * [[graft.operators.IndexLayers]]) + pairs + labels (relabelled from
     * the published dup-set-sized pair graph) under ONE version
     * directory and ONE marker flip
@@ -891,7 +892,7 @@ object Streams {
       val (added, pairs2) = TextOps.compactWaveState(s, root, batch)
       TextOps.publishWaveState(s, root, v, "staged", added,
         Some(batch.select("doc_id")), pairs2, retainVersions,
-        BandedJoins.writeHotSet(s, _, "bsigs", "bhash"))
+        BandedJoins.writeHotSet(s, _, TextOps.minhashFamily))
     }
 
   /** The shell of every sink that publishes one version of a
@@ -968,7 +969,7 @@ object Streams {
       val (added, pairs2) = Vectors.embedWaveState(s, root, batch)
       TextOps.publishWaveState(s, root, v, "staged", added,
         Some(batch.select("vec_id")), pairs2, retainVersions,
-        BandedJoins.writeHotSet(s, _, "sigs", "band_sig"))
+        BandedJoins.writeHotSet(s, _, Vectors.lshFamily))
     }
 
   /** Nightly-cadence BPE tokenizer refresh as a STREAMING leg (r12

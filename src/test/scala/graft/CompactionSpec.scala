@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Components, TextOps, Vectors}
+import graft.operators.{BandedJoins, Components, TextOps, Vectors}
 
 /** Re-crawl compaction (r8 verdict item 3): retiring a re-crawled
   * document's stale index rows, dropping its published pairs,
@@ -33,15 +33,17 @@ class CompactionSpec extends SparkTestBase {
   }
 
   /** One compaction wave through the MinHash frame-level core
-    * ([[TextOps.compactState]]), relabelled and joined to `corpus` —
-    * what the declared compaction queries run over a seeded root. */
+    * ([[BandedJoins.compactState]]) in either verify layout, relabelled
+    * and joined to `corpus` — what the declared compaction queries run
+    * over a seeded root. */
   private def compactFlags(baseStaged: DataFrame, basePairs: DataFrame,
-      recrawled: DataFrame, corpus: DataFrame): DataFrame =
+      recrawled: DataFrame, corpus: DataFrame,
+      joinBack: Boolean): DataFrame =
     Components.flagCorpus(corpus, "doc_id", Components.labelComponents(
-      TextOps.compactState(baseStaged, basePairs,
+      BandedJoins.compactState(TextOps.minhashFamily, baseStaged, basePairs,
         recrawled.select(col("doc_id")),
         TextOps.stageDocs(recrawled).localCheckpoint(true),
-        joinBack = false, baseHot = None)._2))
+        joinBack, baseHot = None)._2))
 
   private def trueDocs = {
     import spark.implicits._
@@ -60,10 +62,12 @@ class CompactionSpec extends SparkTestBase {
   test("compaction splits a component bridged by the re-crawled doc") {
     import spark.implicits._
     val baseStaged = TextOps.stageDocs(staleDocs).localCheckpoint(true)
-    val basePairs = TextOps.pairsCarriedStaged(baseStaged)
+    val basePairs = BandedJoins.selfPairs(TextOps.minhashFamily, baseStaged,
+        joinBack = false)
       .localCheckpoint(true)
     val recrawled = Seq((2L, bNew)).toDF("doc_id", "text")
-    val out = compactFlags(baseStaged, basePairs, recrawled, trueDocs)
+    val out = compactFlags(baseStaged, basePairs, recrawled, trueDocs,
+        joinBack = false)
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
     // full recompute over the true corpus: everything is a singleton
@@ -92,17 +96,22 @@ class CompactionSpec extends SparkTestBase {
       (10L, toks(40, "f").mkString(" ")),
       (11L, toks(40, "g").mkString(" "))).toDF("doc_id", "text")
     val baseStaged = TextOps.stageDocs(staleDocs).localCheckpoint(true)
-    val basePairs = TextOps.pairsCarriedStaged(baseStaged)
+    val basePairs = BandedJoins.selfPairs(TextOps.minhashFamily, baseStaged,
+        joinBack = false)
       .localCheckpoint(true)
-    val got = compactFlags(baseStaged, basePairs, recrawled, newCorpus)
-      .collect().map(_.toSeq).toSeq
     val want = TextOps.dedupClusters(newCorpus).collect()
       .map(_.toSeq).toSeq
-    assert(got == want)
-    // the new pairing actually exists (2 clusters with 10)
-    val flags = got.map(s => s.head.asInstanceOf[Long] ->
-      s(1).asInstanceOf[Long]).toMap
-    assert(flags(10L) == 2L && flags(2L) == 2L)
+    // both verify layouts: carried, and the join-back the long-document
+    // corpora (and the compaction benchmark) run
+    Seq(false, true).foreach { joinBack =>
+      val got = compactFlags(baseStaged, basePairs, recrawled, newCorpus,
+        joinBack).collect().map(_.toSeq).toSeq
+      assert(got == want, s"joinBack=$joinBack")
+      // the new pairing actually exists (2 clusters with 10)
+      val flags = got.map(s => s.head.asInstanceOf[Long] ->
+        s(1).asInstanceOf[Long]).toMap
+      assert(flags(10L) == 2L && flags(2L) == 2L, s"joinBack=$joinBack")
+    }
   }
 
   test("embedding compaction splits a vector-bridged component") {
@@ -124,7 +133,8 @@ class CompactionSpec extends SparkTestBase {
     val trueU = Seq((1L, unit(a)), (2L, unit(bNew)), (3L, unit(c)),
       (10L, unit(basis(30)))).toDF("vec_id", "u")
     val baseStaged = Vectors.stageVectors(staleU).localCheckpoint(true)
-    val basePairs = Vectors.lshVerifiedPairsStaged(baseStaged)
+    val basePairs = BandedJoins.selfPairs(Vectors.lshFamily, baseStaged,
+        joinBack = true)
       .localCheckpoint(true)
     // fixture sanity: the stale graph is exactly the bridge
     assert(basePairs.select("id_a", "id_b").collect()
@@ -132,9 +142,10 @@ class CompactionSpec extends SparkTestBase {
       Set((1L, 2L), (2L, 3L)))
     val recrawled = trueU.filter(col("vec_id") === 2L)
     val out = Components.flagCorpus(trueU, "vec_id",
-      Components.labelComponents(Vectors.embedCompactState(baseStaged,
-        basePairs, recrawled.select(col("vec_id")),
-        Vectors.stageVectors(recrawled).localCheckpoint(true), None)._2))
+      Components.labelComponents(BandedJoins.compactState(Vectors.lshFamily,
+        baseStaged, basePairs, recrawled.select(col("vec_id")),
+        Vectors.stageVectors(recrawled).localCheckpoint(true),
+        joinBack = true, None)._2))
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
     Seq(1L, 2L, 3L, 10L).foreach { id =>
@@ -169,9 +180,11 @@ class CompactionSpec extends SparkTestBase {
       (10L, toks(40, "f").mkString(" ")),
       (11L, toks(40, "g").mkString(" "))).toDF("doc_id", "text")
     val baseStaged = TextOps.stageDocs(staleBase).localCheckpoint(true)
-    val basePairs = TextOps.pairsCarriedStaged(baseStaged)
+    val basePairs = BandedJoins.selfPairs(TextOps.minhashFamily, baseStaged,
+        joinBack = false)
       .localCheckpoint(true)
-    val got = compactFlags(baseStaged, basePairs, crawl, trueCorpus)
+    val got = compactFlags(baseStaged, basePairs, crawl, trueCorpus,
+        joinBack = false)
       .collect().map(_.toSeq).toSeq
     val want = TextOps.dedupClusters(trueCorpus).collect()
       .map(_.toSeq).toSeq

@@ -8,7 +8,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.{Components, Curation, TextOps}
+import graft.operators.{BandedJoins, Components, Curation, TextOps}
 import graft.sources.{Pq, Versions}
 import graft.streaming.Streams
 
@@ -195,7 +195,8 @@ class CurationStreamSpec extends SparkTestBase {
     val labelsRoot = tmp("graft_labels_root")
     Versions.publish(spark, labelsRoot, "base")(Pq.write(
       Components.labelComponents(
-        TextOps.pairsCarriedStaged(staged).select(col("id_a"), col("id_b"))),
+        BandedJoins.selfPairs(TextOps.minhashFamily, staged, joinBack = false)
+          .select(col("id_a"), col("id_b"))),
       _))
     assert(served(labelsRoot).isEmpty)
 
@@ -589,11 +590,12 @@ class CurationStreamSpec extends SparkTestBase {
     val served = graft.operators.IndexLayers.read(spark, root + "/" +
       graft.sources.Markers.read(spark, root, TextOps.dedupCurrentMarker) +
       "/staged")
-    val servedPairs = TextOps.pairsJoinBackStaged(served)
+    val servedPairs = BandedJoins.selfPairs(TextOps.minhashFamily, served,
+        joinBack = true)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val scratchPairs = TextOps.pairsJoinBackStaged(
-        TextOps.stageDocs(trueCorpus).localCheckpoint(true))
+    val scratchPairs = BandedJoins.selfPairs(TextOps.minhashFamily,
+        TextOps.stageDocs(trueCorpus).localCheckpoint(true), joinBack = true)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(servedPairs == scratchPairs && servedPairs.nonEmpty)
@@ -1279,7 +1281,7 @@ class CurationStreamSpec extends SparkTestBase {
     def current() = graft.sources.Markers.read(spark, root,
       TextOps.dedupCurrentMarker)
     val hotSidecar = graft.operators.BandedJoins
-      .writeHotSet(spark, _: String, "bsigs", "bhash")
+      .writeHotSet(spark, _: String, TextOps.minhashFamily)
 
     // (1) the index branch's sidecar fails — after a pause long enough
     // that an un-joined branch would still be running at return

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BandedJoins, Components, TextOps, Vectors}
+import graft.operators.{BandedJoins, Components, IndexLayers, TextOps,
+  Vectors}
 
 /** The hot-bucket guard (r8 verdict item 1): a planted mega-cluster of
   * k identical documents/vectors must emit O(k) star edges through the
@@ -14,6 +15,8 @@ import graft.operators.{BandedJoins, Components, TextOps, Vectors}
 class HotBucketSpec extends SparkTestBase {
 
   private val k = 120 // > BandedJoins.defaultHotBucketCap = 64
+  private val minhash = TextOps.minhashFamily
+  private val lsh = Vectors.lshFamily
 
   /** k identical documents (ids 0..k-1) plus mutually-dissimilar
     * fillers (ids 1000+) including one small exact-dup pair that must
@@ -34,7 +37,8 @@ class HotBucketSpec extends SparkTestBase {
   }
 
   test("mega-cluster emits O(k) star candidates, not O(k^2) pairs") {
-    val cands = TextOps.minhashCandidates(megaDocs).collect()
+    val cands = BandedJoins.candidates(minhash, TextOps.stageDocs(megaDocs))
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     // no duplicate emissions across the normal and star paths
     assert(cands.length == cands.toSet.size, "duplicate candidate pairs")
@@ -78,7 +82,7 @@ class HotBucketSpec extends SparkTestBase {
       .localCheckpoint(true)
     val newStaged = TextOps.stageDocs(docs.filter(isInc))
       .localCheckpoint(true)
-    val inc = TextOps.incrementPairs(baseStaged, newStaged,
+    val inc = BandedJoins.incrementPairs(minhash, baseStaged, newStaged,
       joinBack = false).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(inc.length == inc.toSet.size, "duplicate incremental pairs")
@@ -92,9 +96,9 @@ class HotBucketSpec extends SparkTestBase {
     // and extending the base labels with the star-reduced increment
     // pairs equals a full recompute of the cluster flags
     val baseLabels = Components.labelComponents(
-      TextOps.pairsCarriedStaged(baseStaged)
+      BandedJoins.selfPairs(minhash, baseStaged, joinBack = false)
         .select(col("id_a"), col("id_b")))
-    val incPairs = TextOps.incrementPairs(baseStaged, newStaged,
+    val incPairs = BandedJoins.incrementPairs(minhash, baseStaged, newStaged,
       joinBack = false)
     val extended = Components.flagCorpus(docs, "doc_id",
       Components.extendLabels(baseLabels, incPairs)).collect()
@@ -112,15 +116,17 @@ class HotBucketSpec extends SparkTestBase {
       .read(spark, path, "_graft_hot_buckets") == "16")
     val hotSet = BandedJoins.loadHotSet(spark, path)
     assert(hotSet.count() == 16)
-    assert(!TextOps.stagedFrame(spark, idx).columns.contains("hot_band"))
-    assert(TextOps.stagedFrame(spark, idx).count() == k + 10)
+    assert(!IndexLayers.read(spark, idx.stagedPath).columns
+      .contains("hot_band"))
+    assert(IndexLayers.read(spark, idx.stagedPath).count() == k + 10)
     // a probe with the published set star-reduces identically to the
     // inline-counting path
-    val served = TextOps.pairsCarriedStaged(
-        TextOps.stagedFrame(spark, idx), Some(hotSet))
+    val served = BandedJoins.selfPairs(minhash,
+        IndexLayers.read(spark, idx.stagedPath), joinBack = false, Some(hotSet))
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val inline = TextOps.pairsCarriedStaged(TextOps.stagedFrame(spark, idx))
+    val inline = BandedJoins.selfPairs(minhash,
+        IndexLayers.read(spark, idx.stagedPath), joinBack = false)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(served == inline)
@@ -140,10 +146,12 @@ class HotBucketSpec extends SparkTestBase {
     val path = graft.sources.TempDirs
       .scratchDir("graft_hotset_plan").toString
     val idx = TextOps.minhashFit(spark, megaDocs, path)
-    val staged = TextOps.stagedFrame(spark, idx)
+    val staged = IndexLayers.read(spark, idx.stagedPath)
     val hot = BandedJoins.loadHotSet(spark, path)
-    val served = nAggs(TextOps.pairsCarriedStaged(staged, Some(hot)))
-    val inline = nAggs(TextOps.pairsCarriedStaged(staged))
+    val served = nAggs(BandedJoins.selfPairs(minhash, staged,
+      joinBack = false, Some(hot)))
+    val inline = nAggs(BandedJoins.selfPairs(minhash, staged,
+      joinBack = false))
     assert(served < inline,
       s"served plan has $served aggregates, inline $inline — " +
         "hot-set serving did not remove the per-query count")
@@ -161,7 +169,8 @@ class HotBucketSpec extends SparkTestBase {
       (0 until 6).map(i => (1000L + i,
         Array.tabulate(64)(j => if (j == i * 9) 1.0 else 0.0).toSeq))
     val u = rows.toDF("vec_id", "u")
-    val cands = Vectors.lshCandidates(u).collect()
+    val cands = BandedJoins.candidates(lsh, Vectors.stageVectors(u))
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(cands.length == cands.toSet.size)
     val clusterCands = cands.filter(_._1 < 1000L)
@@ -192,8 +201,8 @@ class HotBucketSpec extends SparkTestBase {
       .localCheckpoint(true)
     val newBanded = newStaged
       .select(posexplode(col("bsigs")).as(Seq("band", "bhash")))
-    val hot = BandedJoins.planIncrementProbe(newBanded, newBanded, "band",
-      "bhash", bloomPrune = false)._2.get
+    val hot = BandedJoins.planIncrementProbe(newBanded, newBanded, minhash,
+      bloomPrune = false)._2.get
     assert(hot.collect().map(r => (r.getInt(0), r.getLong(1))).toSet ==
       BandedJoins.hotBuckets(newBanded, "band", "bhash").collect()
         .map(r => (r.getInt(0), r.getLong(1))).toSet)
@@ -202,11 +211,9 @@ class HotBucketSpec extends SparkTestBase {
       df.select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     Seq(false, true).foreach { joinBack =>
-      val inc = pairs(TextOps.incrementPairs(baseStaged, newStaged,
-        joinBack))
-      val inline =
-        if (joinBack) pairs(TextOps.pairsJoinBackStaged(newStaged))
-        else pairs(TextOps.pairsCarriedStaged(newStaged))
+      val inc = pairs(BandedJoins.incrementPairs(minhash, baseStaged,
+        newStaged, joinBack))
+      val inline = pairs(BandedJoins.selfPairs(minhash, newStaged, joinBack))
       // the base shares nothing with the increment: every emitted pair
       // is a within edge, and they equal the inline-counted self-join's
       assert(inc == inline, s"joinBack=$joinBack")
@@ -226,9 +233,10 @@ class HotBucketSpec extends SparkTestBase {
       .localCheckpoint(true)
     val vNew = Vectors.stageVectors(vecs.filter(col("vec_id") < 1000L))
       .localCheckpoint(true)
-    assert(pairs(Vectors.embedIncrementPairs(vBase, vNew)) ==
-      pairs(Vectors.lshVerifiedPairsStaged(vNew)))
-    assert(pairs(Vectors.embedIncrementPairs(vBase, vNew)) ==
+    val vInc = pairs(BandedJoins.incrementPairs(lsh, vBase, vNew,
+      joinBack = true))
+    assert(vInc == pairs(BandedJoins.selfPairs(lsh, vNew, joinBack = true)))
+    assert(vInc ==
       (1 until k).map(i => (0L, i.toLong)).toSet)
   }
 
@@ -240,8 +248,8 @@ class HotBucketSpec extends SparkTestBase {
       graft.sources.Tables.documents(spark, sfDir), path)
     assert(graft.sources.Markers
       .read(spark, path, "_graft_hot_buckets") == "0")
-    val staged = TextOps.stagedFrame(spark, idx)
-    val served = TextOps.pairsCarriedStaged(staged,
+    val staged = IndexLayers.read(spark, idx.stagedPath)
+    val served = BandedJoins.selfPairs(minhash, staged, joinBack = false,
       Some(BandedJoins.loadHotSet(spark, path)))
     val optimized = served.queryExecution.optimizedPlan.toString
     assert(!optimized.contains("min_by"), optimized)
@@ -249,7 +257,8 @@ class HotBucketSpec extends SparkTestBase {
     val physical = served.queryExecution.executedPlan.toString
     assert(!physical.contains("BroadcastExchange"), physical)
     // today's broadcast plan over the parquet hot set: same pairs
-    val broadcastPlan = TextOps.pairsCarriedStaged(staged,
+    val broadcastPlan = BandedJoins.selfPairs(minhash, staged,
+      joinBack = false,
       Some(graft.sources.Pq.read(spark, s"$path/${BandedJoins.hotSetDirName}")
         .select(col("hot_band"), col("hot_key"))))
     assert(broadcastPlan.queryExecution.optimizedPlan.toString

@@ -81,7 +81,8 @@ class IndexLayersSpec extends SparkTestBase {
     Streams.embedCompactSink(_, _, _, retainVersions = 2),
     (root, b) => Vectors.embedWaveState(spark, root, b)._1,
     (_, corpus) => pairSet(Components.labelComponents(
-      Vectors.lshVerifiedPairsStaged(Vectors.stageVectors(unitVecs(corpus)))
+      BandedJoins.selfPairs(Vectors.lshFamily,
+        Vectors.stageVectors(unitVecs(corpus)), joinBack = true)
         .select(col("id_a"), col("id_b")))))
 
   /** A running sink over a directory stream: each wave lands as one
@@ -195,7 +196,7 @@ class IndexLayersSpec extends SparkTestBase {
     var deltaWritten = false
     val failed = scala.util.Try(TextOps.publishWaveState(spark, r.root,
       "crashed", "staged", added, Some(batch.select("doc_id")), pairs, 2,
-      { p => BandedJoins.writeHotSet(spark, p, "bsigs", "bhash")
+      { p => BandedJoins.writeHotSet(spark, p, TextOps.minhashFamily)
         deltaWritten = new java.io.File(s"${r.root}/crashed/staged/" +
           IndexLayers.manifestMarker).exists()
         throw new IllegalStateException("sidecar failed") }))
@@ -211,7 +212,7 @@ class IndexLayersSpec extends SparkTestBase {
       bag(added2)).sorted
     TextOps.publishWaveState(spark, r.root, "crashed", "staged", added2,
       Some(batch.select("doc_id")), pairs2, 2,
-      BandedJoins.writeHotSet(spark, _, "bsigs", "bhash"))
+      BandedJoins.writeHotSet(spark, _, TextOps.minhashFamily))
     assert(current(r.root) == "crashed")
     r.corpus = r.corpus.filter(col("doc_id") =!= 15L).unionByName(batch)
       .localCheckpoint(true)

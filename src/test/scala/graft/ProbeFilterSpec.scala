@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{ProbeFilters, TextOps, Vectors}
+import graft.operators.{BandedJoins, ProbeFilters, TextOps, Vectors}
 import graft.sources.Tables
 
 /** Pins for the pre-shuffle bloom prune on the incremental index
@@ -69,14 +69,16 @@ class ProbeFilterSpec extends SparkTestBase {
     val inc = TextOps.stageDocs(docs.filter(TextOps.isIncrementDoc))
       .localCheckpoint(true)
     def pairs(prune: Boolean) =
-      TextOps.incrementPairs(base, inc, joinBack = false,
+      BandedJoins.incrementPairs(TextOps.minhashFamily, base, inc,
+        joinBack = false,
         bloomPrune = prune)
         .select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val on = pairs(prune = true)
     assert(on == pairs(prune = false))
     // the declared query's plan carries the scan-side sketch filter
-    val planned = TextOps.incrementPairs(base, inc, joinBack = false)
+    val planned = BandedJoins.incrementPairs(TextOps.minhashFamily, base, inc,
+      joinBack = false)
     assert(planned.queryExecution.executedPlan.toString
       .contains("might_contain"))
   }
@@ -115,7 +117,7 @@ class ProbeFilterSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val baseStaged = TextOps.stageDocs(base).localCheckpoint(true)
     val incStaged = TextOps.stageDocs(inc).localCheckpoint(true)
-    def probe(prune: Boolean) = TextOps.incrementPairs(
+    def probe(prune: Boolean) = BandedJoins.incrementPairs(TextOps.minhashFamily,
       baseStaged, incStaged, joinBack = false, bloomPrune = prune)
     val withPrune = shuffledRecords(probe(prune = true))
     val without = shuffledRecords(probe(prune = false))
@@ -133,7 +135,8 @@ class ProbeFilterSpec extends SparkTestBase {
     val inc = Vectors.stageVectors(vecs.filter(Vectors.isIncrementVec))
       .localCheckpoint(true)
     def pairs(prune: Boolean) =
-      Vectors.embedIncrementPairs(base, inc, bloomPrune = prune)
+      BandedJoins.incrementPairs(Vectors.lshFamily, base, inc, joinBack = true,
+        bloomPrune = prune)
         .select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs(prune = true) == pairs(prune = false))

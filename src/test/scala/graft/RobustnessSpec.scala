@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.operators.TextOps
+import graft.operators.{BandedJoins, TextOps}
 
 /** Property tests (SURVEY §5 row 4): the text operators must never throw
   * and must keep their core invariants on adversarial inputs — empty
@@ -122,15 +122,16 @@ class RobustnessSpec extends SparkTestBase {
     val docs = Seq((1L, "alpha beta gamma delta"),
       (2L, "epsilon zeta eta theta")).toDF("doc_id", "text")
     val staged = TextOps.stageDocs(docs).localCheckpoint(true)
-    val pairs = TextOps.pairsCarriedStaged(staged).localCheckpoint(true)
+    val pairs = BandedJoins.selfPairs(TextOps.minhashFamily, staged,
+      joinBack = false).localCheckpoint(true)
     val noneRecrawled = docs.filter(org.apache.spark.sql.functions
       .col("doc_id") < 0)
     // empty re-crawl set: compaction is a no-op relabel of the base
     def compactFlags(recrawled: org.apache.spark.sql.DataFrame,
         corpus: org.apache.spark.sql.DataFrame) =
       graft.operators.Components.flagCorpus(corpus, "doc_id",
-        graft.operators.Components.labelComponents(TextOps.compactState(
-          staged, pairs, recrawled.select("doc_id"),
+        graft.operators.Components.labelComponents(BandedJoins.compactState(
+          TextOps.minhashFamily, staged, pairs, recrawled.select("doc_id"),
           TextOps.stageDocs(recrawled).localCheckpoint(true),
           joinBack = false, baseHot = None)._2))
     val out = compactFlags(noneRecrawled, docs).collect()

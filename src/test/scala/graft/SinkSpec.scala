@@ -300,7 +300,7 @@ class SinkSpec extends SparkTestBase {
       val (added, ps) = TextOps.compactWaveState(spark, root, w)
       TextOps.publishWaveState(spark, root, version, "staged", added,
         Some(w.select("doc_id")), pairs(ps), 1,
-        BandedJoins.writeHotSet(spark, _, "bsigs", "bhash"))
+        BandedJoins.writeHotSet(spark, _, TextOps.minhashFamily))
     }
     val failPairs = udf { (x: Long) =>
       if (x >= 0) throw new IllegalStateException("pairs failed"); x }

@@ -191,7 +191,8 @@ class StreamingBenchSpec extends SparkTestBase {
         .createTempDirectory("graft_label_bench").toString
       graft.sources.Versions.publish(spark, root, "base")(
         graft.sources.Pq.write(graft.operators.Components.labelComponents(
-          graft.operators.TextOps.pairsCarriedStaged(staged)
+          graft.operators.BandedJoins.selfPairs(
+            graft.operators.TextOps.minhashFamily, staged, joinBack = false)
             .select(col("id_a"), col("id_b"))), _))
       val input = MemoryStream[(Long, String)](spark)
       val q = Streams.extendLabelsSink(staged, root,

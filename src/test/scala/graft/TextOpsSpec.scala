@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.TextOps
+import graft.operators.{BandedJoins, IndexLayers, TextOps}
 
 class TextOpsSpec extends SparkTestBase {
 
@@ -296,16 +296,15 @@ class TextOpsSpec extends SparkTestBase {
     // yesterday's artifacts: a published base index + its label map
     val idx = TextOps.minhashFit(spark, base, java.nio.file.Files
       .createTempDirectory("graft_inc_base_idx").toString)
-    val baseStaged = TextOps.stagedFrame(spark, idx)
+    val baseStaged = IndexLayers.read(spark, idx.stagedPath)
     val basePairs =
-      if (idx.joinBack) TextOps.pairsJoinBackStaged(baseStaged)
-      else TextOps.pairsCarriedStaged(baseStaged)
+      BandedJoins.selfPairs(TextOps.minhashFamily, baseStaged, idx.joinBack)
     val baseLabels = Components.labelComponents(
       basePairs.select(col("id_a"), col("id_b"))).localCheckpoint(true)
     // tonight: stage ONLY the increment, probe, extend
     val newStaged = TextOps.stageDocs(inc).localCheckpoint(true)
-    val incPairs = TextOps.incrementPairs(baseStaged, newStaged,
-      idx.joinBack)
+    val incPairs = BandedJoins.incrementPairs(TextOps.minhashFamily,
+      baseStaged, newStaged, idx.joinBack)
     val all = base.unionByName(inc)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
@@ -361,9 +360,9 @@ class TextOpsSpec extends SparkTestBase {
       spark.read.parquet(s"$sfDir/documents.parquet")
         .filter(TextOps.isIncrementDoc),
       java.nio.file.Files.createTempDirectory("graft_inc_probe").toString)
-    val probe = TextOps.incrementPairs(
-      TextOps.stagedFrame(spark, baseIdx),
-      TextOps.stagedFrame(spark, newIdx), baseIdx.joinBack)
+    val probe = BandedJoins.incrementPairs(TextOps.minhashFamily,
+      IndexLayers.read(spark, baseIdx.stagedPath),
+      IndexLayers.read(spark, newIdx.stagedPath), baseIdx.joinBack)
     probe.collect()
     val paths = fileScans(probe.queryExecution.executedPlan)
       .flatMap(_.relation.location.rootPaths.map(_.toString))
@@ -411,9 +410,8 @@ class TextOpsSpec extends SparkTestBase {
     val loaded = TextOps.loadMinhashIndex(spark, p)
     assert(loaded == fitted) // layout decision survives via the marker
     def pairsOf(i: TextOps.MinHashIndex) = {
-      val staged = TextOps.stagedFrame(spark, i)
-      (if (i.joinBack) TextOps.pairsJoinBackStaged(staged)
-       else TextOps.pairsCarriedStaged(staged))
+      val staged = IndexLayers.read(spark, i.stagedPath)
+      BandedJoins.selfPairs(TextOps.minhashFamily, staged, i.joinBack)
         .orderBy(col("id_a"), col("id_b")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     }
@@ -450,7 +448,8 @@ class TextOpsSpec extends SparkTestBase {
     // well under all-pairs on the real corpus
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val n = docs.count()
-    val cands = TextOps.minhashCandidates(docs).count()
+    val cands = BandedJoins.candidates(TextOps.minhashFamily,
+      TextOps.stageDocs(docs)).count()
     assert(cands < n * (n - 1) / 2 / 10,
       s"candidates=$cands vs all pairs=${n * (n - 1) / 2}")
     assert(cands > 0)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Vectors
+import graft.operators.{BandedJoins, Vectors}
 
 class VectorsSpec extends SparkTestBase {
 
@@ -500,7 +500,8 @@ class VectorsSpec extends SparkTestBase {
         transform(col("v"), x => x / col("nrm")).as("u"))
     val n = u.count()
     val allPairs = n * (n - 1) / 2
-    val cands = Vectors.lshCandidates(u).count()
+    val cands = BandedJoins.candidates(Vectors.lshFamily,
+      Vectors.stageVectors(u)).count()
     // 16 bands x 8 bits: random pairs collide in >=1 band with ~6%;
     // assert well under 10% (the round-2 4-bit geometry sat at ~64%)
     assert(cands < allPairs / 10,
@@ -625,11 +626,12 @@ class VectorsSpec extends SparkTestBase {
     Vectors.stageVectors(baseU).write.mode("overwrite").parquet(sp)
     val baseStaged = spark.read.parquet(sp)
     val baseLabels = Components.labelComponents(
-      Vectors.lshVerifiedPairsStaged(baseStaged)
+      BandedJoins.selfPairs(Vectors.lshFamily, baseStaged, joinBack = true)
         .select(col("id_a"), col("id_b"))).localCheckpoint(true)
     // tonight: stage ONLY the increment, probe, extend
     val newStaged = Vectors.stageVectors(incU).localCheckpoint(true)
-    val incPairs = Vectors.embedIncrementPairs(baseStaged, newStaged)
+    val incPairs = BandedJoins.incrementPairs(Vectors.lshFamily, baseStaged,
+      newStaged, joinBack = true)
     val allU = baseU.unionByName(incU)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
