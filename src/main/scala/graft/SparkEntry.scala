@@ -118,8 +118,8 @@ object SparkEntry {
     "q_mv_refresh"      -> (Curation.qMvRefresh _),
     "q_edit_pairs"      -> (TextOps.qEditPairs _),
     "q_edit_clusters"   -> (TextOps.qEditClusters _),
-    "q_edit_incremental" -> (TextOps.qEditIncremental _),
-    "q_edit_compact"    -> (TextOps.qEditCompact _),
+    "q_edit_incremental" -> (Lifecycle.incremental(Lifecycle.edit) _),
+    "q_edit_compact"    -> (Lifecycle.compact(Lifecycle.edit) _),
     "q_cluster_assign"  -> (Vectors.qClusterAssign _),
     "q_mix_drift"       -> (Curation.qMixDrift _),
     "q_user_journey"    -> (Events.qUserJourney _),
@@ -130,8 +130,8 @@ object SparkEntry {
     "q_dedup_minhash_carried"  -> (TextOps.qDedupMinhashCarried _),
     "q_dedup_minhash_joinback" -> (TextOps.qDedupMinhashJoinback _),
     "q_dedup_clusters"  -> (TextOps.qDedupClusters _),
-    "q_dedup_incremental" -> (TextOps.qDedupIncremental _),
-    "q_dedup_compact"   -> (TextOps.qDedupCompact _),
+    "q_dedup_incremental" -> (Lifecycle.incremental(Lifecycle.minhash) _),
+    "q_dedup_compact"   -> (Lifecycle.compact(Lifecycle.minhash) _),
     "q_dup_spans"       -> (TextOps.qDupSpans _),
     "q_span_scrub"      -> (TextOps.qSpanScrub _),
     "q_boilerplate"     -> (TextOps.qBoilerplate _),
@@ -156,8 +156,8 @@ object SparkEntry {
     "q_simhash_checked" -> (TextOps.qSimhashChecked _),
     "q_simhash_pairs"   -> (TextOps.qSimhashPairs _),
     "q_simhash_clusters" -> (TextOps.qSimhashClusters _),
-    "q_simhash_incremental" -> (TextOps.qSimhashIncremental _),
-    "q_simhash_compact" -> (TextOps.qSimhashCompact _),
+    "q_simhash_incremental" -> (Lifecycle.incremental(Lifecycle.simhash) _),
+    "q_simhash_compact" -> (Lifecycle.compact(Lifecycle.simhash) _),
     "q_fingerprint"     -> (TextOps.qFingerprint _),
     "q_fingerprint_checked" -> (TextOps.qFingerprintChecked _),
     "q_bpe_encode"      -> (Bpe.qBpeEncode _),
@@ -173,8 +173,8 @@ object SparkEntry {
     "q_dedup_embed"     -> (Vectors.qDedupEmbed _),
     "q_dedup_embed_lsh" -> (Vectors.qDedupEmbedLsh _),
     "q_dedup_embed_clusters" -> (Vectors.qDedupEmbedClusters _),
-    "q_dedup_embed_incremental" -> (Vectors.qDedupEmbedIncremental _),
-    "q_dedup_embed_compact" -> (Vectors.qDedupEmbedCompact _),
+    "q_dedup_embed_incremental" -> (Lifecycle.incremental(Lifecycle.embedding) _),
+    "q_dedup_embed_compact" -> (Lifecycle.compact(Lifecycle.embedding) _),
     "q_ann_ivf"         -> (Vectors.qAnnIvf _),
     "q_ann_ivf_full"    -> (Vectors.qAnnIvfFull _),
     "q_ann_ivf_pq"      -> (Vectors.qAnnIvfPq _),

@@ -447,125 +447,81 @@ object StreamBench {
       advEditFlags.filter(col("dup_of") === 999L && col("dist") === 0)
         .count() == 1000L
 
-    // 17. streaming RE-CRAWL COMPACTION (r15 — the nightly repair loop
-    // as a continuously-maintained artifact): seed a dedup root over a
-    // 1500-doc corpus, then stream 500 re-crawl waves; every 4th
-    // re-crawl becomes a copy of another base doc (fresh pair to
-    // verify), the rest turn unrelated (stale-row retirement). The
-    // rate prices retire + bloom-pruned probe + relabel + tri-artifact
-    // publish per micro-batch.
-    val compBase = (0 until 1500).map(i =>
-      (i.toLong, words(60, 300000 + i).mkString(" ")))
-      .toDF("doc_id", "text")
-    val compRoot = tmp("graft_sb_compact_root")
-    graft.operators.TextOps.seedDedupState(spark, compBase, compRoot)
-    val compRows: Seq[(Long, String)] = (0 until 500).map { i =>
-      if (i % 4 == 0)
-        (i.toLong, words(60, 300000 + 1000 + i).mkString(" "))
-      else (i.toLong, words(60, 400000 + i).map("x" + _).mkString(" "))
+    // 17-20. streaming RE-CRAWL COMPACTION, one leg per near-dup family
+    // (the nightly repair loop as a continuously-maintained artifact):
+    // seed a root over a base corpus, then stream re-crawl waves
+    // through the family's compaction sink. Every 4th re-crawl becomes
+    // an EXACT copy of the base doc `copy` ids later (a fresh pair the
+    // wave must verify and label), the rest turn unrelated (stale-state
+    // retirement); the check pins both outcomes. The rate prices retire
+    // + bloom-pruned probe + relabel + publish per micro-batch.
+    def compactLeg[T: org.apache.spark.sql.Encoder](leg: String,
+        check: String, tag: String, f: graft.operators.Lifecycle.Family,
+        base: DataFrame, rows: Seq[T], copy: Long, payload: T => Long,
+        cols: String*): Unit = {
+      val root = tmp(s"graft_sb_${tag}_root")
+      f.seed(spark, base, root, true)
+      runSinkLeg[T](leg, rows,
+        df => graft.streaming.Streams.compactSink(f, root, df,
+          tmp(s"graft_sb_${tag}_cp"), retainVersions = 2),
+        ds => ds.toDF(cols: _*), Some((root, payload)))
+      val labels = spark.read.parquet(Versions.current(spark, root) + "/labels")
+      // every copy re-crawl pairs (i, copy + i) into a min-i component;
+      // every unrelated re-crawl stays a singleton (absent from labels)
+      checks(check) =
+        labels.filter(col("node_id") >= copy &&
+          col("node_id") < copy + rows.size &&
+          col("cluster_id") === col("node_id") - copy)
+          .count() == rows.size / 4 &&
+          labels.filter(col("node_id") < rows.size.toLong &&
+            col("node_id") % 4 =!= 0).count() == 0L
     }
-    runSinkLeg[(Long, String)]("dedup_compact_sink", compRows,
-      df => graft.streaming.Streams.dedupCompactSink(compRoot, df,
-        tmp("graft_sb_compact_cp"), retainVersions = 2),
-      ds => ds.toDF("doc_id", "text"), Some((compRoot, r => textBytes(r._2))))
-    val compLabels = spark.read.parquet(
-      Versions.current(spark, compRoot) + "/labels")
-    // every copy re-crawl pairs (i, 1000+i) into a min-i component;
-    // every unrelated re-crawl stays a singleton (absent from labels)
-    checks("compact_sink_repairs_exact") =
-      compLabels.filter(col("node_id") >= 1000L &&
-        col("node_id") < 1500L &&
-        col("cluster_id") === col("node_id") - 1000L).count() == 125L &&
-        compLabels.filter(col("node_id") < 500L &&
-          col("node_id") % 4 =!= 0).count() == 0L
+    def text(n: Int, seed: Int): String = words(n, seed).mkString(" ")
+    def fresh(n: Int, seed: Int): String =
+      words(n, seed).map("x" + _).mkString(" ")
 
-    // 18-20. the r16 modality sweep of the streaming compaction
-    // lifecycle (r15 verdict item 3): the same seed → waves → verify
-    // shape as leg 17, through each family's own wave core. Every 4th
-    // re-crawl becomes an EXACT copy of a disjoint base doc (a fresh
-    // pair the wave must verify and label), the rest turn unrelated
-    // (stale-state retirement); the checks pin both outcomes.
+    compactLeg[(Long, String)]("dedup_compact_sink",
+      "compact_sink_repairs_exact", "compact", graft.operators.Lifecycle.minhash,
+      (0 until 1500).map(i => (i.toLong, text(60, 300000 + i)))
+        .toDF("doc_id", "text"),
+      (0 until 500).map(i => (i.toLong,
+        if (i % 4 == 0) text(60, 300000 + 1000 + i) else fresh(60, 400000 + i))),
+      1000, r => textBytes(r._2), "doc_id", "text")
 
-    // 18. SimHash compaction sink
-    val shcBase = (0 until 1500).map(i =>
-      (i.toLong, words(60, 500000 + i).mkString(" ")))
-      .toDF("doc_id", "text")
-    val shRoot = tmp("graft_sb_simhash_root")
-    graft.operators.TextOps.seedSimhashRoot(spark, shcBase, shRoot)
-    val shcRows: Seq[(Long, String)] = (0 until 400).map { i =>
-      if (i % 4 == 0) (i.toLong, words(60, 500000 + 1000 + i).mkString(" "))
-      else (i.toLong, words(60, 600000 + i).map("x" + _).mkString(" "))
-    }
-    runSinkLeg[(Long, String)]("simhash_compact_sink", shcRows,
-      df => graft.streaming.Streams.simhashCompactSink(shRoot, df,
-        tmp("graft_sb_simhash_cp"), retainVersions = 2),
-      ds => ds.toDF("doc_id", "text"), Some((shRoot, r => textBytes(r._2))))
-    val shLabels = spark.read.parquet(
-      Versions.current(spark, shRoot) + "/labels")
-    checks("simhash_compact_repairs_exact") =
-      shLabels.filter(col("node_id") >= 1000L &&
-        col("node_id") < 1400L &&
-        col("cluster_id") === col("node_id") - 1000L).count() == 100L &&
-        shLabels.filter(col("node_id") < 400L &&
-          col("node_id") % 4 =!= 0).count() == 0L
+    compactLeg[(Long, String)]("simhash_compact_sink",
+      "simhash_compact_repairs_exact", "simhash",
+      graft.operators.Lifecycle.simhash,
+      (0 until 1500).map(i => (i.toLong, text(60, 500000 + i)))
+        .toDF("doc_id", "text"),
+      (0 until 400).map(i => (i.toLong,
+        if (i % 4 == 0) text(60, 500000 + 1000 + i) else fresh(60, 600000 + i))),
+      1000, r => textBytes(r._2), "doc_id", "text")
 
-    // 19. edit-distance compaction sink (heads of distinct random
-    // words sit far above distance 3 — only the copy waves pair)
-    val edBase = (0 until 1200).map(i =>
-      (i.toLong, "en", words(8, 700000 + i).mkString(" ")))
-      .toDF("doc_id", "lang", "text")
-    val edRoot = tmp("graft_sb_editc_root")
-    graft.operators.TextOps.seedEditRoot(spark, edBase, edRoot)
-    val edCopy = (0 until 1200).map(i =>
-      words(8, 700000 + i).mkString(" "))
-    val edRows: Seq[(Long, String, String)] = (0 until 300).map { i =>
-      if (i % 4 == 0) (i.toLong, "en", edCopy(600 + i))
-      else (i.toLong, "en", words(8, 800000 + i).map("x" + _).mkString(" "))
-    }
-    runSinkLeg[(Long, String, String)]("edit_compact_sink", edRows,
-      df => graft.streaming.Streams.editCompactSink(edRoot, df,
-        tmp("graft_sb_editc_cp"), retainVersions = 2),
-      ds => ds.toDF("doc_id", "lang", "text"),
-      Some((edRoot, r => textBytes(r._3) + r._2.length)))
-    val edLabels = spark.read.parquet(
-      Versions.current(spark, edRoot) + "/labels")
-    checks("edit_compact_repairs_exact") =
-      edLabels.filter(col("node_id") >= 600L &&
-        col("node_id") < 900L &&
-        col("cluster_id") === col("node_id") - 600L).count() == 75L &&
-        edLabels.filter(col("node_id") < 300L &&
-          col("node_id") % 4 =!= 0).count() == 0L
+    // heads of distinct random words sit far above edit distance 3 —
+    // only the copy waves pair
+    compactLeg[(Long, String, String)]("edit_compact_sink",
+      "edit_compact_repairs_exact", "editc", graft.operators.Lifecycle.edit,
+      (0 until 1200).map(i => (i.toLong, "en", text(8, 700000 + i)))
+        .toDF("doc_id", "lang", "text"),
+      (0 until 300).map(i => (i.toLong, "en",
+        if (i % 4 == 0) text(8, 700000 + 600 + i) else fresh(8, 800000 + i))),
+      600, r => textBytes(r._3) + r._2.length, "doc_id", "lang", "text")
 
-    // 20. embedding compaction sink (random 64-dim directions sit far
-    // below the 0.8 cosine threshold — only the copy waves pair)
-    // bit-mixed, not a shifted sawtooth: two ramp sequences offset by
-    // a small circular shift would correlate near 1 and fabricate
-    // cross-base pairs
+    // random 64-dim directions sit far below the 0.8 cosine threshold —
+    // only the copy waves pair. Bit-mixed, not a shifted sawtooth: two
+    // ramp sequences offset by a small circular shift would correlate
+    // near 1 and fabricate cross-base pairs
     def dvec(seed: Int): Seq[Float] = (0 until 64).map { j =>
       val h = seed.toLong * 2654435761L + j.toLong * 0x9E3779B97F4A7C15L
       (((h ^ (h >>> 31)) % 1000).abs / 1000.0f) - 0.5f
     }
-    val emBase = (0 until 1200).map(i => (i.toLong, dvec(i)))
-      .toDF("vec_id", "embedding")
-    val emRoot = tmp("graft_sb_embedc_root")
-    graft.operators.Vectors.seedEmbedRoot(spark, emBase, emRoot)
-    val emRows: Seq[(Long, Seq[Float])] = (0 until 300).map { i =>
-      if (i % 4 == 0) (i.toLong, dvec(600 + i))
-      else (i.toLong, dvec(900000 + i))
-    }
-    runSinkLeg[(Long, Seq[Float])]("embed_compact_sink", emRows,
-      df => graft.streaming.Streams.embedCompactSink(emRoot, df,
-        tmp("graft_sb_embedc_cp"), retainVersions = 2),
-      ds => ds.toDF("vec_id", "embedding"),
-      Some((emRoot, r => 8L + 4L * r._2.size)))
-    val emLabels = spark.read.parquet(
-      Versions.current(spark, emRoot) + "/labels")
-    checks("embed_compact_repairs_exact") =
-      emLabels.filter(col("node_id") >= 600L &&
-        col("node_id") < 900L &&
-        col("cluster_id") === col("node_id") - 600L).count() == 75L &&
-        emLabels.filter(col("node_id") < 300L &&
-          col("node_id") % 4 =!= 0).count() == 0L
+    compactLeg[(Long, Seq[Float])]("embed_compact_sink",
+      "embed_compact_repairs_exact", "embedc",
+      graft.operators.Lifecycle.embedding,
+      (0 until 1200).map(i => (i.toLong, dvec(i))).toDF("vec_id", "embedding"),
+      (0 until 300).map(i => (i.toLong,
+        if (i % 4 == 0) dvec(600 + i) else dvec(900000 + i))),
+      600, r => 8L + 4L * r._2.size, "vec_id", "embedding")
 
     // Serialize the artifact maps only AFTER the last leg has appended
     // to `results` — building them earlier silently drops late legs

@@ -429,15 +429,16 @@ private[graft] object BandedJoins {
   /** One compaction wave over the CURRENT version of a lifecycle root:
     * [[compactState]] reading the served effective index
     * ([[IndexLayers.read]] of `<version>/staged`), its pairs and its
-    * published hot set. Returns (added staged rows, pairs) for
-    * [[TextOps.publishWaveState]] with the wave's ids, or for a batch
+    * published hot set. Returns the [[Lifecycle.Wave]] for
+    * [[Lifecycle.publishWaveState]] with the wave's ids, or for a batch
     * query's labels. */
   def waveState(spark: SparkSession, f: Family, root: String,
       ids: DataFrame, newStaged: DataFrame,
-      joinBack: Boolean): (DataFrame, DataFrame) = {
+      joinBack: Boolean): Lifecycle.Wave = {
     val cur = graft.sources.Versions.current(spark, root)
-    compactState(f, IndexLayers.read(spark, s"$cur/staged"),
-      graft.sources.Pq.read(spark, s"$cur/pairs"), ids, newStaged, joinBack,
-      Some(loadHotSet(spark, s"$cur/staged")))
+    val (added, pairs) = compactState(f, IndexLayers.read(spark,
+      s"$cur/staged"), graft.sources.Pq.read(spark, s"$cur/pairs"), ids,
+      newStaged, joinBack, Some(loadHotSet(spark, s"$cur/staged")))
+    Lifecycle.Wave(added, pairs)
   }
 }

@@ -723,7 +723,7 @@ object Curation {
     * documents — the overwhelming majority of a re-crawl — are dropped,
     * so the output is delta-sized, not corpus-sized). This is the
     * change-detection front half of the nightly re-crawl posture the
-    * compaction operator ([[TextOps.qDedupCompact]]) consumes: diff the
+    * compaction operator (the MinHash [[Lifecycle.compact]] query) consumes: diff the
     * crawls first, then re-shingle ONLY the changed/added slice instead
     * of the whole snapshot (reference nightly-sync cadence,
     * /root/reference/insights.md:169-172).

@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   * verbatim copies of this machinery had accumulated, and every copy
   * repeats the subtle parts). A lifecycle root is the SAME artifact
   * the streaming compaction sinks serve: [[FitCache.seededRoots]]
-  * seeds it with the family's `seed*` function, and the batch
+  * seeds it with the family's `seed*` function (each
+  * [[Lifecycle.Family]] holds two such caches), and the batch
   * incremental and compaction queries read it or run one wave on it.
   *
   * The subtle parts, once:

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.concurrent.duration.FiniteDuration
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -267,12 +265,17 @@ object TextOps {
     * carried layout would ship 16× full-shingle shuffle payloads with
     * no visible error. */
   private[graft] def loadMinhashIndex(spark: SparkSession,
-    path: String): MinHashIndex = {
+    path: String): MinHashIndex = MinHashIndex(joinBackAt(spark, path), path)
+
+  /** The verify layout named by the `_graft_layout` marker under `path`
+    * — a [[minhashFit]] artifact's, or a lifecycle root's, which every
+    * wave and probe of the root reads: true for join-back. */
+  private def joinBackAt(spark: SparkSession, path: String): Boolean = {
     val layout = graft.sources.Markers.read(spark, path, "_graft_layout")
     require(layout == "joinback" || layout == "carried",
       s"$path/_graft_layout holds '$layout', not a minhashFit layout " +
         "marker — not a published MinHash index?")
-    MinHashIndex(layout == "joinback", path)
+    layout == "joinback"
   }
 
   /** One fitted index per (JVM, corpus dir) — [[FitCache]] carries the
@@ -517,7 +520,8 @@ object TextOps {
     *
     * Scope contract (spec-pinned): flags NEW-vs-BASE pairs. Near-dups
     * WITHIN the intake stream are the nightly compaction's job
-    * ([[qDedupIncremental]]) — flagging them online would need
+    * (the MinHash [[Lifecycle.incremental]] query) — flagging them
+    * online would need
     * cross-micro-batch state. Output: (doc_id, dup_of, jaccard) with
     * doc_id = the arriving document, one row per flagged base match.
     */
@@ -530,223 +534,30 @@ object TextOps {
       .select(col("id_a").as("doc_id"), col("id_b").as("dup_of"),
         col("jaccard"))
 
-  /** The deterministic corpus split the declared incremental query
-    * simulates a nightly increment with: ~20% of documents (by doc_id
-    * hash — stable across partitionings) arrive as "tonight's crawl",
-    * the other ~80% are the already-indexed base. */
-  private[graft] def isIncrementDoc: Column =
-    pmod(xxhash64(col("doc_id")), lit(5)) === 0
-
-  /** The incremental base root per (JVM, corpus dir): yesterday's
-    * nightly output — the base split's published index, pairs and
-    * label map — seeded by [[seedDedupState]]. */
-  private[graft] val dedupBaseRoots =
-    FitCache.seededRoots("graft_dedup_base") { (s, d, root) =>
-      seedDedupState(s, Tables.documents(s, d).filter(!isIncrementDoc),
-        root)
-    }
-
-  /** Incremental near-dup clustering — the declared query: the ~20%
-    * increment split ([[isIncrementDoc]]) is shingled fresh (it IS the
-    * new data), probed against the base split's published index via
-    * [[BandedJoins.incrementPairs]], and the base label map is extended
-    * through star edges — the base corpus is never re-shingled and old-vs-old
-    * pairs never recomputed (fit-counter- and scan-path-pinned in
-    * TextOpsSpec). Output shape matches [[qDedupClusters]], and so
-    * does the ORACLE: increment ∪ base must equal a full recompute,
-    * so the same DuckDB recursive-CTE reachability over the whole
-    * corpus checks it — an incremental path that misses a cross pair
-    * or splits a merged component fails the hash compare loudly.
-    */
-  def qDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val cur = Versions.current(spark, dedupBaseRoots.get(spark, dir))
-    val idx = loadMinhashIndex(spark, s"$cur/staged")
-    val docs = Tables.documents(spark, dir)
-    // the increment is materialized once (localCheckpoint, the repo's
-    // standard materialize-the-invariant move): its signature frame
-    // feeds the cross probe, the within self-join, and (in join-back
-    // layout) two verify sides
-    val newStaged = stageDocs(docs.filter(isIncrementDoc))
-      .localCheckpoint(true)
-    val inc = BandedJoins.incrementPairs(minhashFamily,
-      IndexLayers.read(spark, idx.stagedPath), newStaged, idx.joinBack,
-      Some(BandedJoins.loadHotSet(spark, idx.stagedPath)))
-    Components.flagCorpus(docs, "doc_id",
-      Components.extendLabels(graft.sources.Pq.read(spark, s"$cur/labels"),
-        inc))
-  }
+  /** The MinHash increment probe of a lifecycle root ([[Lifecycle.minhash]]):
+    * the increment is shingled fresh (it IS the new data) and
+    * materialized once (localCheckpoint — its signature frame feeds
+    * the cross probe, the within self-join, and in the join-back
+    * layout two verify sides), then probed against the served
+    * version's published index via [[BandedJoins.incrementPairs]] in
+    * the root's fit-time layout with the published hot set — the base
+    * corpus is never re-shingled (fit-counter- and scan-path-pinned in
+    * TextOpsSpec). */
+  private[graft] def minhashIncrementPairs(spark: SparkSession,
+      root: String, cur: String, increment: DataFrame): DataFrame =
+    BandedJoins.incrementPairs(minhashFamily,
+      IndexLayers.read(spark, s"$cur/staged"),
+      stageDocs(increment).localCheckpoint(true), joinBackAt(spark, root),
+      Some(BandedJoins.loadHotSet(spark, s"$cur/staged")))
 
   // ── CONTINUOUSLY-MAINTAINED DEDUP ARTIFACT (r15, r14 verdict item
   // 6 — the one streaming asymmetry left: every family had streaming
   // intake but compaction ran batch-only) ──
 
-  /** Marker naming the current version of a [[publishWaveState]]
-    * root: the shared [[graft.sources.Versions]] marker. */
+  /** Marker naming the current version of a lifecycle root
+    * ([[Lifecycle.publishWaveState]]): the shared
+    * [[graft.sources.Versions]] marker. */
   private[graft] val dedupCurrentMarker = Versions.currentMarker
-
-  /** How long [[publishWaveState]] waits for its index branch. A
-    * benchmark-scale wave finishes it in well under a second; the
-    * bound turns a wedged write into a loud micro-batch failure
-    * instead of a hung stream. */
-  private[graft] val waveBranchTimeout: FiniteDuration =
-    FiniteDuration(30, "min")
-
-  /** Daemon threads for [[publishWaveState]]'s index branch, made on
-    * demand (one per concurrently publishing wave) and reclaimed when
-    * idle. */
-  private lazy val waveBranchPool =
-    java.util.concurrent.Executors.newCachedThreadPool { r =>
-      val t = new Thread(r, "graft-wave-index-branch")
-      t.setDaemon(true)
-      t
-    }
-
-  /** Transactional one-flip publication shared by every near-dup
-    * lifecycle root (MinHash, SimHash, edit distance, embedding) — the
-    * streaming compaction sinks' waves and every `seed*` function, so
-    * the roots the batch incremental and compaction queries read are
-    * published by this same call: the index layer under `indexName`
-    * ([[IndexLayers.write]]: the wave's added rows `index` as one
-    * delta, listed with its `retired` key set in a manifest that
-    * extends the served version's, a fold into a new base, or —
-    * `retired` None, a seed — a base), its `sidecar` (a hot set or
-    * edit stats, recomputed over the EFFECTIVE index so the next
-    * wave's probe set is exact, not the seed's drifting superset), the
-    * verified pair set, and the label map land under ONE version
-    * directory and ONE marker flip ([[graft.sources.Versions.publish]],
-    * whose refs are the versions the manifest lists); the marker names
-    * the version whose manifest is served, so the manifest flip IS the
-    * marker flip. Two flips would leave a crash window where the pair
-    * set reflects the wave but the index does not, and the NEXT
-    * wave's retirement would then anti-join against rows that were
-    * never republished. `labels = false` skips the label map for roots
-    * whose readers relabel the wave's pairs themselves.
-    *
-    * Cost posture: the artifacts form two independent chains, and
-    * they run CONCURRENTLY — index → sidecar on a branch thread, pairs
-    * → labels on the caller's — so a wave pays the longer chain, not
-    * the sum, on an otherwise idle executor pool. The marker flips
-    * once, after both chains finish. The wave's pair plan executes
-    * ONCE — its write — and the labels are
-    * [[Components.labelComponents]] over the PUBLISHED
-    * `<version>/pairs` (the same function over the same edge set, so
-    * the same map), never a second run of the bloom-pruned probe.
-    * Every artifact goes through [[graft.sources.Pq.write]], so no
-    * read-back pays a schema-inference job. What a wave writes is
-    * wave-sized: its index delta, the dup-set-sized pairs and labels,
-    * and the sidecar. What still reads in full per wave is the
-    * sidecar's pass over the effective index, and a fold — when the
-    * deltas since the base reach the base's bytes — rewrites it once.
-    * SimHash passes `labelEdges`: its pairs are signature-level, so its
-    * labels come from the wave's id-level edges instead. `pairs` must
-    * not read the index or sidecar this call writes: the two chains
-    * race.
-    *
-    * The branch runs with the caller's local properties (job group,
-    * streaming query and batch ids — its jobs count in the
-    * micro-batch, and a query stop cancels them with the caller's)
-    * under a job tag of its own, and it is JOINED before this call
-    * returns or throws, so no write lands in `<version>/` after an
-    * exception and a replay never races a straggler: a failing pairs
-    * chain abandons the branch — it starts no further step — and waits
-    * for its running step to end; an interrupted caller, or a branch
-    * that outlives `branchTimeout`, has its jobs cancelled by tag and
-    * is waited for the same way (the timeout fails the call with a
-    * `TimeoutException`). Every wait re-cancels a cancelled branch's
-    * tag, so a job it started after the first cancel is killed too;
-    * once the branch has ended, the abandoned version's directory is
-    * deleted by the publish (an aborted write's cleanup could
-    * otherwise still change it after the call threw). */
-  private[graft] def publishWaveState(spark: SparkSession, root: String,
-    version: String, indexName: String, index: DataFrame,
-    retired: Option[DataFrame], pairs: DataFrame, retainVersions: Int,
-    sidecar: String => Unit = _ => (),
-    labelEdges: Option[DataFrame] = None, labels: Boolean = true,
-    branchTimeout: FiniteDuration = waveBranchTimeout): Unit = {
-    import java.util.concurrent.{CancellationException, ExecutionException,
-      TimeUnit, TimeoutException}
-    val sc = spark.sparkContext
-    val tag = s"graft-wave-index-${java.util.UUID.randomUUID()}"
-    val deadline = System.nanoTime() + branchTimeout.toNanos
-    // an abandoned branch starts no further step; a cancelled one also
-    // has its running jobs killed
-    val abandoned = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val cancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
-    var layers: Seq[String] = Nil
-    Versions.publish(spark, root, version, retainVersions,
-        layers) { dir =>
-      val indexChain = org.apache.spark.sql.graft.SessionBridge
-        .withThreadLocalCaptured(spark, waveBranchPool) {
-          sc.addJobTag(tag)
-          try Seq[String => Unit](_ => layers = IndexLayers.write(spark,
-              root, version, indexName, index, retired,
-              s"${Versions.current(spark, root)}/$indexName"),
-              sidecar)
-            .foreach { step =>
-              if (abandoned.get) throw new CancellationException(
-                s"publishWaveState($root, $version): index branch abandoned")
-              step(s"$dir/$indexName")
-            }
-          finally sc.removeJobTag(tag)
-        }
-      // waits up to `nanos` for the branch to end, however it ends,
-      // re-cancelling a cancelled branch's tag every 50 ms; an interrupt
-      // (a stopping query) cancels the branch and keeps waiting for it,
-      // then re-asserts the flag. True iff the branch ended.
-      def settle(nanos: Long): Boolean = {
-        val end = System.nanoTime() + nanos
-        var interrupted = false
-        while (!indexChain.isDone && System.nanoTime() < end) {
-          if (cancelled.get) sc.cancelJobsWithTag(tag)
-          try indexChain.get(math.min(end - System.nanoTime(), 50000000L),
-            TimeUnit.NANOSECONDS)
-          catch {
-            case _: InterruptedException =>
-              interrupted = true
-              abandoned.set(true)
-              cancelled.set(true)
-            case _: Exception => ()
-          }
-        }
-        if (interrupted) Thread.currentThread().interrupt()
-        indexChain.isDone
-      }
-      // no manifest lists an abandoned version and the marker never
-      // names it: the publish deletes its directory once this returns
-      def abandon(): Boolean = {
-        abandoned.set(true)
-        cancelled.set(true)
-        settle(branchTimeout.toNanos)
-      }
-      val stillRunning = "the index branch is still running after its " +
-        "jobs were cancelled"
-      try {
-        graft.sources.Pq.write(pairs, s"$dir/pairs")
-        if (labels)
-          graft.sources.Pq.write(labelEdges.fold(Components.labelComponents(
-              graft.sources.Pq.read(spark, s"$dir/pairs"), rereadable = true))(
-              Components.labelComponents(_)), s"$dir/labels")
-      } catch {
-        case t: Throwable =>
-          // a failed pairs chain lets the branch finish its running step
-          // before the deadline instead of killing it: a killed task can
-          // still write under `<version>/` after its job reported failure
-          abandoned.set(true)
-          if (!settle(deadline - System.nanoTime()) && !abandon())
-            t.addSuppressed(new TimeoutException(stillRunning))
-          throw t
-      }
-      if (!settle(deadline - System.nanoTime())) {
-        val ended = abandon()
-        throw new TimeoutException(s"publishWaveState($root, " +
-          s"$version): the index branch did not finish within " +
-          s"$branchTimeout; its jobs were cancelled and the marker was " +
-          "not flipped" + (if (ended) "" else s"; $stillRunning"))
-      }
-      try indexChain.get()
-      catch { case e: ExecutionException => throw e.getCause }
-    }
-  }
 
   /** Seed a streaming-compaction root from a corpus: one
     * [[minhashFit]] (which also fixes the verify layout for the
@@ -772,17 +583,14 @@ object TextOps {
     * `_graft_layout` marker) — retire the wave's ids, probe their new
     * text against the retained index. The added rows carry the fit's
     * `n_sh` column, so every layer of the index shares one schema.
-    * Returns (added staged rows, pairs): the streaming sink hands both
-    * to [[publishWaveState]] with the wave's ids, which derives the
-    * labels; the batch compaction queries label the pairs. */
+    * The streaming sink publishes the [[Lifecycle.Wave]] with the
+    * wave's ids; the batch compaction query labels it. */
   private[graft] def compactWaveState(spark: SparkSession, root: String,
-    recrawled: DataFrame): (DataFrame, DataFrame) = {
-    val (added, pairs) = BandedJoins.waveState(spark, minhashFamily, root,
+    recrawled: DataFrame): Lifecycle.Wave = {
+    val w = BandedJoins.waveState(spark, minhashFamily, root,
       recrawled.select(col("doc_id")),
-      stageDocs(recrawled).localCheckpoint(true),
-      joinBack = graft.sources.Markers.read(spark, root, "_graft_layout") ==
-        "joinback")
-    (added.withColumn("n_sh", size(col("shash"))), pairs)
+      stageDocs(recrawled).localCheckpoint(true), joinBackAt(spark, root))
+    w.copy(added = w.added.withColumn("n_sh", size(col("shash"))))
   }
 
   // ── SIMHASH STREAMING COMPACTION ROOT (r16, r15 verdict item 3 —
@@ -804,8 +612,10 @@ object TextOps {
       .select(col("hi_a"), col("lo_a"), col("hi_b"), col("lo_b"))
 
   /** Seed a SimHash compaction root: per-doc signature table,
-    * SIG-level verified pair set (hi_a, lo_a, hi_b, lo_b), and label
-    * map under version `seed`, with the Hamming block plan `b` —
+    * SIG-level verified pair set (hi_a, lo_a, hi_b, lo_b), and — unless
+    * `labels` is false — the label map and the distinct-sig reps the
+    * increment probe reads ([[simhashIncrementPairs]]) under version
+    * `seed`, with the Hamming block plan `b` —
     * stats-driven over the distinct-sig reps (r14) — fixed at the root
     * level for the root's lifetime (the [[seedDedupState]] rule: waves
     * replace content, they do not re-decide plans mid-stream).
@@ -822,61 +632,91 @@ object TextOps {
     Versions.publish(spark, root, "seed") { dir =>
       graft.sources.Pq.write(simhashMd5Halves(docs), s"$dir/sigs")
       val sigs = graft.sources.Pq.read(spark, s"$dir/sigs")
-      val reps = sigs.groupBy(col("sig_hi"), col("sig_lo"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"), col("sig_hi"), col("sig_lo"))
-        .localCheckpoint(true)
+      val reps = simhashReps(sigs).localCheckpoint(true)
       val b = simhashAutoPlan(reps, reps.count())
-      graft.sources.Markers.write(spark, root, "_graft_simhash_b",
-        b.toString)
+      graft.sources.Markers.write(spark, root, simhashBMarker, b.toString)
       graft.sources.Pq.write(sigLevel(simhashSigPairs(reps, b), reps, reps),
         s"$dir/pairs")
-      val identity = sigs.join(reps
-          .select(col("sig_hi"), col("sig_lo"), col("doc_id").as("rep")),
-          Seq("sig_hi", "sig_lo"))
-        .filter(col("doc_id") =!= col("rep"))
-        .select(col("doc_id").as("id_a"), col("rep").as("id_b"))
-      if (labels)
-        graft.sources.Pq.write(Components.labelComponents(identity.unionByName(
-            graft.sources.Pq.read(spark, s"$dir/pairs")
-              .join(reps.select(col("sig_hi").as("hi_a"),
-                col("sig_lo").as("lo_a"), col("doc_id").as("id_a")),
-                Seq("hi_a", "lo_a"))
-              .join(reps.select(col("sig_hi").as("hi_b"),
-                col("sig_lo").as("lo_b"), col("doc_id").as("id_b")),
-                Seq("hi_b", "lo_b"))
+      if (labels) {
+        graft.sources.Pq.write(reps, s"$dir/reps")
+        graft.sources.Pq.write(Components.labelComponents(
+          simhashStars(sigs, reps).unionByName(
+            onReps(graft.sources.Pq.read(spark, s"$dir/pairs"), reps)
               .select(col("id_a"), col("id_b")))), s"$dir/labels")
+      }
     }
 
-  /** One re-crawl wave applied to the CURRENT state of a SimHash
-    * root — retire → re-elect → map → probe (the steps
-    * [[qSimhashCompact]] documents) reading the served artifact,
-    * returning (the wave's added per-doc sigs, sig-level pairs,
-    * id-level label edges):
-    * the streaming sink publishes all three through
-    * [[publishWaveState]], the batch query labels the edges. */
+  /** The root-level marker holding a SimHash root's block plan `b`. */
+  private val simhashBMarker = "_graft_simhash_b"
+
+  private def rootB(spark: SparkSession, root: String): Int =
+    graft.sources.Markers.read(spark, root, simhashBMarker).toInt
+
+  /** The representatives of a per-doc signature table — each
+    * signature's min doc_id, as (doc_id, sig_hi, sig_lo): the one
+    * election rule of the seed (whose reps the increment probe reads)
+    * and the wave. */
+  private def simhashReps(sigs: DataFrame): DataFrame =
+    sigs.groupBy(col("sig_hi"), col("sig_lo"))
+      .agg(min(col("doc_id")).as("doc_id"))
+      .select(col("doc_id"), col("sig_hi"), col("sig_lo"))
+
+  /** The identity stars of a signature table: every member that is not
+    * its signature's rep, to the rep, as (id_a, id_b). */
+  private def simhashStars(sigs: DataFrame, reps: DataFrame): DataFrame =
+    sigs.join(reps.select(col("sig_hi"), col("sig_lo"), col("doc_id").as("rep")),
+        Seq("sig_hi", "sig_lo"))
+      .filter(col("doc_id") =!= col("rep"))
+      .select(col("doc_id").as("id_a"), col("rep").as("id_b"))
+
+  /** Signature-level pairs mapped onto rep ids (id_a, id_b), sig columns
+    * kept: reps are unique per signature, so one inner join per side
+    * both keeps the pairs whose two signatures survive and names their
+    * reps. */
+  private def onReps(sigPairs: DataFrame, reps: DataFrame): DataFrame =
+    sigPairs
+      .join(reps.select(col("sig_hi").as("hi_a"), col("sig_lo").as("lo_a"),
+        col("doc_id").as("id_a")), Seq("hi_a", "lo_a"))
+      .join(reps.select(col("sig_hi").as("hi_b"), col("sig_lo").as("lo_b"),
+        col("doc_id").as("id_b")), Seq("hi_b", "lo_b"))
+
+  /** SimHash RE-CRAWL COMPACTION — one wave applied to the CURRENT
+    * state of a SimHash root, reading the served artifact (the batch
+    * compaction query runs it on a root seeded with STALE text for the
+    * re-crawl subset):
+    *
+    *   1. retire the wave's ids from the per-doc sig table
+    *      (broadcast anti-join — stale signature retirement);
+    *   2. RE-ELECT representatives over the retained members (one
+    *      sig-keyed aggregation) and rebuild the identity stars —
+    *      this, not an id-level pair map, is why a retired
+    *      representative cannot split its surviving group;
+    *   3. map the published SIG-level pair set onto the re-elected
+    *      reps (two sig-keyed joins — a signature with no surviving
+    *      member drops its pairs, exactly right: its only text left
+    *      with the re-crawl);
+    *   4. collapse the wave to its own distinct-sig reps (ADVICE r13:
+    *      a boilerplate cluster re-crawled in one night costs O(k)
+    *      identity edges, not O(k²) candidate rows) and probe them
+    *      against the retained reps (the exact
+    *      [[simhashSigPairsBetween]] cross join, bloom-pruned,
+    *      increment-sized) plus the within self-join;
+    *   5. relabel the repaired graph — dup-set-sized.
+    *
+    * Old-vs-old Hamming pairs are never recomputed and the corpus never
+    * re-signs. Returns the [[Lifecycle.Wave]]: the wave's per-doc sigs,
+    * the sig-level pairs, and the id-level label edges. */
   private[graft] def simhashWaveState(spark: SparkSession, root: String,
-      batch: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+      batch: DataFrame): Lifecycle.Wave = {
     val cur = Versions.current(spark, root)
-    val b = graft.sources.Markers.read(spark, root, "_graft_simhash_b")
-      .toInt
+    val b = rootB(spark, root)
     val ids = batch.select(col("doc_id"))
     val retained = IndexLayers.read(spark, s"$cur/sigs")
       .join(broadcast(ids), Seq("doc_id"), "left_anti")
-    val repMap = retained.groupBy(col("sig_hi"), col("sig_lo"))
-      .agg(min(col("doc_id")).as("rep")).localCheckpoint(true)
-    val identity = retained.join(repMap, Seq("sig_hi", "sig_lo"))
-      .filter(col("doc_id") =!= col("rep"))
-      .select(col("doc_id").as("id_a"), col("rep").as("id_b"))
-    // repMap is unique per signature, so one inner join both keeps the
-    // pairs whose two signatures survive and maps them onto the reps
-    val kept = graft.sources.Pq.read(spark, s"$cur/pairs")
-      .join(repMap.select(col("sig_hi").as("hi_a"),
-        col("sig_lo").as("lo_a"), col("rep").as("id_a")),
-        Seq("hi_a", "lo_a"))
-      .join(repMap.select(col("sig_hi").as("hi_b"),
-        col("sig_lo").as("lo_b"), col("rep").as("id_b")),
-        Seq("hi_b", "lo_b"))
+    val retainedReps = simhashReps(retained).localCheckpoint(true)
+    val identity = simhashStars(retained, retainedReps)
+    val kept = onReps(graft.sources.Pq.read(spark, s"$cur/pairs"),
+      retainedReps)
     val keptSig = kept.select(col("hi_a"), col("lo_a"), col("hi_b"),
       col("lo_b"))
     val keptIds = kept.select(col("id_a"), col("id_b"))
@@ -886,8 +726,6 @@ object TextOps {
     // execution in the publish costs less than a materialization job
     val newSigs = simhashMd5Halves(batch)
     val (newIdentity, newReps) = simhashCollapse(newSigs)
-    val retainedReps = repMap.select(col("rep").as("doc_id"),
-      col("sig_hi"), col("sig_lo"))
     val cross = simhashSigPairsBetween(retainedReps, newReps, b)
       .select(col("doc_id_a"), col("doc_id_b"))
     val within = simhashSigPairs(newReps, b)
@@ -906,7 +744,7 @@ object TextOps {
       .unionByName(sigLevel(
         within.select(col("doc_id_a"), col("doc_id_b")),
         newReps, newReps))
-    (newSigs, pairs2, edges)
+    Lifecycle.Wave(newSigs, pairs2, Some(edges))
   }
 
   // ── EDIT-DISTANCE STREAMING COMPACTION ROOT (r16 — the same shape
@@ -923,23 +761,67 @@ object TextOps {
       shortsCap: Int = BandedJoins.defaultHotBucketCap,
       labels: Boolean = true): Unit = {
     val keyed = editKeyedBase(docs, 30)
-    publishWaveState(spark, root, "seed", "index",
+    Lifecycle.publishWaveState(spark, root, "seed", "index", Lifecycle.Wave(
       editBuildRows(keyed, d, shortsCap)
         .select(col("doc_id"), col("lang"), col("head"), col("len"),
-          col("kseg.idx").as("idx"), col("kseg.seg").as("seg")), None,
+          col("kseg.idx").as("idx"), col("kseg.seg").as("seg")),
       editDistancePairsKeyed(keyed, d, shortsCap)
-        .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b")),
-      0, writeEditIndexStats(spark, _, d), labels = labels)
+        .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b"))),
+      None, 0, writeEditIndexStats(spark, _, d), labels)
   }
 
-  /** One re-crawl wave applied to the CURRENT state of an
-    * edit-distance root — [[editWaveRepair]] reading the served
-    * artifact and gated by the served version's published counts
-    * (no emptiness-probe job), returning (the wave's added index rows,
-    * repaired pairs) for [[publishWaveState]] or a batch query's
-    * labels. */
+  /** Edit-distance RE-CRAWL COMPACTION — one wave applied to the
+    * CURRENT state of an edit-distance root: [[editWaveRepair]] reading
+    * the served artifact and gated by the served version's published
+    * counts (no emptiness-probe job). Retirement is a broadcast
+    * anti-join of the wave's ids out of the published build-row index;
+    * every published pair incident to a re-crawled id drops (a stale
+    * head may have justified it); the new heads probe the RETAINED
+    * index through the cross PassJoin plus their own within self-join;
+    * and the repaired dup-set-sized graph relabels. Base heads never
+    * re-key and old-vs-old pairs never re-verify. Returns the
+    * [[Lifecycle.Wave]] (the wave's added index rows, repaired pairs).
+    *
+    * SHORTS-CHANNEL RE-ELECTION (r15, ADVICE r14): above the shorts
+    * cap the seed publishes exactly ONE shorts-keyed build row per hot
+    * lang (the cell's min id). If that doc is itself re-crawled,
+    * plain retirement would empty the channel while retained len ≤ d
+    * docs remain: re-crawl probes would lose the only build row the
+    * shorts channel can pair them with, and the retained cell members
+    * — whose published pairs were all incident to the retired min
+    * (star shape) — would splinter into singletons. The repair is
+    * exact and probe-free, because any two len ≤ d heads of one lang
+    * are within d edits BY CONSTRUCTION (ed ≤ max length ≤ d, the
+    * same argument that makes fit-time star reduction
+    * connectivity-lossless): for each lang with retained len ≤ d
+    * index rows but no surviving shorts-keyed row, (a) the minimum
+    * retained id regains the shorts key so the cross probe reaches
+    * the channel, and (b) star edges (new min ↔ each retained cell
+    * member) are emitted directly into the edge set. Both frames are
+    * len ≤ d slivers behind pushed parquet filters — empty on any
+    * healthy corpus (capped-cell fixture spec-pinned).
+    *
+    * (d, 2d]-PROBE SLIVER (r16, ADVICE r15): re-election alone still
+    * missed one mode — a re-crawled head of length in (d, 2d] within
+    * d of a retained NON-min cell member but not of the min (the
+    * emit-once shorts gate routes that pair to the member's
+    * star-reduced, absent shorts row; the full recompute finds it
+    * through the reverse build direction). [[editShortsSliverEdges]]
+    * rides alongside the cross probe and closes it with one
+    * DP-verified min-member edge per such probe doc. Scope, stated
+    * exactly: with the sliver, compact labels equal the full
+    * recompute for every pair mode involving NEW data (re-crawled vs
+    * retained, re-crawled vs re-crawled); the one residual is
+    * inherited from the capped BASE self-join's own documented star
+    * contract — a RETAINED doc of length in (d, 2d] whose only true
+    * partner is a retained non-min member was already absent from
+    * the fit-time pair set and stays absent here, exactly as in the
+    * same-cap [[qEditClusters]] recompute. An EMPTY-head doc above
+    * the cap has no published row of any kind to re-elect from — the
+    * star contract already scopes zero-content docs out of the pair
+    * stream. */
   private[graft] def editWaveState(spark: SparkSession, root: String,
-      batch: DataFrame, d: Int = 3): (DataFrame, DataFrame) = {
+      batch: DataFrame, d: Int = 3): Lifecycle.Wave = {
     val cur = Versions.current(spark, root)
     val stats = loadEditIndexStats(spark, s"$cur/index", d)
     val (edges, index2) = editWaveRepair(spark,
@@ -947,52 +829,17 @@ object TextOps {
       graft.sources.Pq.read(spark, s"$cur/pairs"),
       batch, d, stats.hotCells, Some(stats.lens),
       noShortRows = stats.shortRows == 0L)
-    (index2, edges)
+    Lifecycle.Wave(index2, edges)
   }
-
-  /** The deterministic re-crawl subset the declared compaction query
-    * simulates with (~14% of documents by id hash — disjoint in
-    * DEFINITION from nothing: a re-crawl is any id that already exists
-    * in the base, which is exactly what [[qDedupIncremental]]'s
-    * new-ids-only contract excludes). */
-  private[graft] def isRecrawlDoc: Column =
-    pmod(xxhash64(col("doc_id")), lit(7)) === 0
 
   /** The stale revision the MinHash and SimHash compaction fixtures
     * seed over: the re-crawl subset's text carries a marker the
     * crawler supersedes tonight. */
   private[graft] def staleRecrawlText(docs: DataFrame): DataFrame =
     docs.withColumn("text",
-      when(isRecrawlDoc,
+      when(Lifecycle.isRecrawl("doc_id"),
         concat(col("text"), lit(" legacyrev legacyrev stale marker")))
         .otherwise(col("text")))
-
-  /** Compaction base root: yesterday's published index and verified
-    * pair set, seeded over the corpus WITH STALE TEXT for the re-crawl
-    * subset (the revision the crawler supersedes tonight). */
-  private[graft] val dedupCompactRoots =
-    FitCache.seededRoots("graft_dedup_compact") { (s, d, root) =>
-      seedDedupState(s, staleRecrawlText(Tables.documents(s, d)), root,
-        labels = false)
-    }
-
-  /** Declared compaction query: the base root was seeded with STALE
-    * text for the ~14% re-crawl subset; tonight those documents arrive
-    * with their TRUE text as ONE [[compactWaveState]] wave on it — the
-    * streaming sink's wave, labelled instead of published. After
-    * retirement + re-pairing + relabeling, the cluster flags must
-    * equal a FULL RECOMPUTE over the true corpus — which is exactly
-    * the documents table, so the same full-corpus reachability SQL as
-    * [[qDedupClusters]] is the oracle: a stale pair that survives
-    * retirement, a missed re-pair, or an unsplit bridged component all
-    * fail the hash compare loudly.
-    */
-  def qDedupCompact(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    Components.flagCorpus(docs, "doc_id", Components.labelComponents(
-      compactWaveState(spark, dedupCompactRoots.get(spark, dir),
-        docs.filter(isRecrawlDoc))._2))
-  }
 
   /** EP6 — the UNIFIED NIGHTLY dedup job: a real crawl delivers BOTH
     * brand-new documents and re-crawls of existing ones in one batch,
@@ -1006,25 +853,28 @@ object TextOps {
     * tonight's new ids AND holds stale text for tonight's re-crawls —
     * the state an actual nightly wakes up to) and the oracle claim
     * that the whole composition equals a full recompute of the true
-    * corpus. Crawl split: ~20% new ([[isIncrementDoc]]), plus ~11% of
-    * the rest re-crawled ([[isRecrawlDoc]] on the remainder).
+    * corpus. Crawl split: ~20% new ([[Lifecycle.isIncrement]]), plus
+    * ~11% of the rest re-crawled ([[Lifecycle.isRecrawl]] on the
+    * remainder).
     */
   def qPipelineNightly(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val crawl = docs.filter(isIncrementDoc ||
-      (!isIncrementDoc && isRecrawlDoc))
+    val increment = Lifecycle.isIncrement("doc_id")
+    val crawl = docs.filter(increment ||
+      (!increment && Lifecycle.isRecrawl("doc_id")))
     Components.flagCorpus(docs, "doc_id", Components.labelComponents(
-      compactWaveState(spark, nightlyRoots.get(spark, dir), crawl)._2))
+      compactWaveState(spark, nightlyRoots.get(spark, dir), crawl).pairs))
   }
 
   /** Nightly base root: the corpus MINUS tonight's new documents, with
     * stale text for tonight's re-crawls — the published index and
-    * verified pairs yesterday's run left behind. */
+    * verified pairs yesterday's run left behind, seeded by the MinHash
+    * family's seed over its stale revision. */
   private[graft] val nightlyRoots =
     FitCache.seededRoots("graft_nightly") { (s, d, root) =>
-      seedDedupState(s,
-        staleRecrawlText(Tables.documents(s, d).filter(!isIncrementDoc)),
-        root, labels = false)
+      val f = Lifecycle.minhash
+      f.seed(s, f.stale(f.corpus(s, d).filter(!Lifecycle.isIncrement(f.id))),
+        root, false)
     }
 
   /** EXACT DUPLICATE-SPAN contamination — the substring-dedup family
@@ -2601,7 +2451,7 @@ object TextOps {
 
   /** The sidecar every published PassJoin index version carries
     * ([[seedEditRoot]] and each streaming wave, through
-    * [[publishWaveState]]), written INSIDE the version's index layer
+    * [[Lifecycle.publishWaveState]]), written INSIDE the version's index layer
     * directory over exactly the version's EFFECTIVE index
     * ([[IndexLayers.read]]: every layer its manifest lists, not just
     * the wave's delta): the (lang, blen) key-length
@@ -2734,45 +2584,19 @@ object TextOps {
         greatest(col("p_id"), col("m_id")).as("id_b"))
   }
 
-  /** Incremental edit-distance base root ([[dedupBaseRoots]]'s
-    * posture on the PassJoin family — r13 verdict item 3, the last
-    * family without nightly members): yesterday's job published the
-    * base split's BUILD-ROW segment index (the (lang, seg-idx,
-    * seg-text) keys PassJoin already builds, shorts-star-reduced at
-    * seed time), its statistics sidecar, and the finished base label
-    * map — [[seedEditRoot]]. */
-  private[graft] val editBaseRoots =
-    FitCache.seededRoots("graft_edit_base") { (s, d, root) =>
-      seedEditRoot(s, Tables.documents(s, d).filter(!isIncrementDoc), root)
-    }
-
-  /** Incremental edit-distance clustering — the PassJoin family's
-    * nightly member: the ~20% increment split ([[isIncrementDoc]])
-    * keys its heads fresh (it IS the new data), probes the published
-    * base segment index through the one-directional cross PassJoin
-    * (bloom-pruned, increment-built), self-joins within the
-    * increment, and the base label map extends through star edges —
-    * base heads are never re-keyed (fit-count-pinned) and
-    * old-vs-old pairs never re-verified. ORACLE: the full recompute —
-    * the same recursive reachability that checks [[qEditClusters]]
-    * must hash-match this path. The [[editShortsSliverEdges]] probe
-    * rides alongside the cross join (empty on every healthy corpus)
-    * so an increment head of length in (d, 2d] reaches a star-reduced
-    * capped-cell member exactly as the full recompute would. */
-  def qEditIncremental(spark: SparkSession, dir: String): DataFrame =
-    editIncrementalLabels(spark, editBaseRoots.get(spark, dir),
-      Tables.documents(spark, dir), isIncrementDoc, 3)
-
-  /** The incremental assembly behind [[qEditIncremental]] over a seeded
-    * edit root, parameterized over the corpus, increment predicate,
-    * and distance bound (r16 — factored so the capped-cell fixtures
-    * exercise the same code the declared query runs). */
-  private[graft] def editIncrementalLabels(spark: SparkSession,
-      root: String, docs: DataFrame, increment: Column,
-      d: Int): DataFrame = {
-    val cur = Versions.current(spark, root)
+  /** The PassJoin increment probe of a lifecycle root
+    * ([[Lifecycle.edit]]): the increment keys its heads fresh (it IS
+    * the new data), probes the served segment index through the
+    * one-directional cross PassJoin (bloom-pruned, increment-built),
+    * and self-joins within the increment — base heads are never
+    * re-keyed (fit-count-pinned) and old-vs-old pairs never
+    * re-verified. The [[editShortsSliverEdges]] probe rides alongside
+    * the cross join (empty on every healthy corpus) so an increment
+    * head of length in (d, 2d] reaches a star-reduced capped-cell
+    * member exactly as the full recompute would. */
+  private[graft] def editIncrementPairs(spark: SparkSession, root: String,
+      cur: String, inc: DataFrame, d: Int = 3): DataFrame = {
     val stats = loadEditIndexStats(spark, s"$cur/index", d)
-    val inc = docs.filter(increment)
     val incKeyed = editKeyedBase(inc, 30)
     // the cross probe's hot set is the PUBLISHED one (pruning only
     // shrinks cells — a superset stays correct); the within self-join
@@ -2789,13 +2613,9 @@ object TextOps {
     // path skips the branch's scans and its union outright
     val edges0 = cross.select(col("id_a"), col("id_b"))
       .unionByName(within)
-    val edges =
-      if (stats.shortRows == 0L) edges0
-      else edges0.unionByName(editShortsSliverEdges(
-        IndexLayers.read(spark, s"$cur/index"), incKeyed, d))
-    Components.flagCorpus(docs, "doc_id",
-      Components.extendLabels(graft.sources.Pq.read(spark, s"$cur/labels"),
-        edges))
+    if (stats.shortRows == 0L) edges0
+    else edges0.unionByName(editShortsSliverEdges(
+      IndexLayers.read(spark, s"$cur/index"), incKeyed, d))
   }
 
   /** The edit family's stale revision of the re-crawl subset: a PER-DOC
@@ -2811,81 +2631,13 @@ object TextOps {
     * (digits never open a true head — the corpus is alphabetic), and
     * the fit's cell profile matches the real corpus at every scale. */
   private[graft] def editStaleRecrawl(docs: DataFrame): DataFrame =
-    docs.withColumn("text", when(isRecrawlDoc,
+    docs.withColumn("text", when(Lifecycle.isRecrawl("doc_id"),
       concat(pmod(xxhash64(col("doc_id")), lit(100000L)).cast("string"),
         lit("legacyrev stale "), col("text"))).otherwise(col("text")))
 
-  /** Edit-compaction base root: [[seedEditRoot]] over the corpus with
-    * STALE heads ([[editStaleRecrawl]]) for the ~14% re-crawl subset. */
-  private[graft] val editCompactRoots =
-    FitCache.seededRoots("graft_edit_compact") { (s, d, root) =>
-      seedEditRoot(s, editStaleRecrawl(Tables.documents(s, d)), root,
-        labels = false)
-    }
-
-  /** Edit-distance RE-CRAWL COMPACTION — the family's update member
-    * (the [[qDedupCompact]] posture on PassJoin): the base root holds
-    * STALE heads for the re-crawl subset; tonight those documents
-    * arrive with their TRUE text as one [[editWaveState]] wave — the
-    * streaming sink's wave, labelled instead of published — and
-    * [[editWaveRepair]] does the work. Retirement is a broadcast anti-join
-    * of the re-crawled ids out of the published build-row index; every
-    * published pair incident to a re-crawled id drops (a stale head
-    * may have justified it); the re-crawled docs' new heads probe the
-    * RETAINED index through the cross PassJoin plus their own within
-    * self-join; and the repaired dup-set-sized graph relabels. Base
-    * heads never re-key and old-vs-old pairs never re-verify. ORACLE:
-    * a full recompute over the true corpus — [[qEditClusters]]'s
-    * reachability SQL verbatim.
-    *
-    * SHORTS-CHANNEL RE-ELECTION (r15, ADVICE r14): above the shorts
-    * cap the seed publishes exactly ONE shorts-keyed build row per hot
-    * lang (the cell's min id). If that doc is itself re-crawled,
-    * plain retirement would empty the channel while retained len ≤ d
-    * docs remain: re-crawl probes would lose the only build row the
-    * shorts channel can pair them with, and the retained cell members
-    * — whose published pairs were all incident to the retired min
-    * (star shape) — would splinter into singletons. The repair is
-    * exact and probe-free, because any two len ≤ d heads of one lang
-    * are within d edits BY CONSTRUCTION (ed ≤ max length ≤ d, the
-    * same argument that makes fit-time star reduction
-    * connectivity-lossless): for each lang with retained len ≤ d
-    * index rows but no surviving shorts-keyed row, (a) the minimum
-    * retained id regains the shorts key so the cross probe reaches
-    * the channel, and (b) star edges (new min ↔ each retained cell
-    * member) are emitted directly into the edge set. Both frames are
-    * len ≤ d slivers behind pushed parquet filters — empty on any
-    * healthy corpus (capped-cell fixture spec-pinned).
-    *
-    * (d, 2d]-PROBE SLIVER (r16, ADVICE r15): re-election alone still
-    * missed one mode — a re-crawled head of length in (d, 2d] within
-    * d of a retained NON-min cell member but not of the min (the
-    * emit-once shorts gate routes that pair to the member's
-    * star-reduced, absent shorts row; the full recompute finds it
-    * through the reverse build direction). [[editShortsSliverEdges]]
-    * rides alongside the cross probe and closes it with one
-    * DP-verified min-member edge per such probe doc. Scope, stated
-    * exactly: with the sliver, compact labels equal the full
-    * recompute for every pair mode involving NEW data (re-crawled vs
-    * retained, re-crawled vs re-crawled); the one residual is
-    * inherited from the capped BASE self-join's own documented star
-    * contract — a RETAINED doc of length in (d, 2d] whose only true
-    * partner is a retained non-min member was already absent from
-    * the fit-time pair set and stays absent here, exactly as in the
-    * same-cap [[qEditClusters]] recompute. An EMPTY-head doc above
-    * the cap has no published row of any kind to re-elect from — the
-    * star contract already scopes zero-content docs out of the pair
-    * stream. */
-  def qEditCompact(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    Components.flagCorpus(docs, "doc_id", Components.labelComponents(
-      editWaveState(spark, editCompactRoots.get(spark, dir),
-        docs.filter(isRecrawlDoc))._2))
-  }
-
   /** ONE WAVE of the edit-distance compaction — the frame-level core
     * behind [[editWaveState]], which both the streaming sink and the
-    * batch [[qEditCompact]] run (r16): retirement, shorts-channel re-election
+    * batch edit compaction query run (r16): retirement, shorts-channel re-election
     * + star repair, the cross PassJoin probe, the within self-join,
     * and the (d, 2d] sliver, over a FLAT published index frame and a
     * published (id_a, id_b) pair frame. Returns (repaired edge set,
@@ -3408,8 +3160,9 @@ object TextOps {
     // rows almost all lack a partner; a driver bloom over the
     // increment's (band, key) set drops them BEFORE the shuffle (false
     // positives only add verify work, false negatives cannot exist)
-    // (callers pass a MATERIALIZED increment sig frame — qSimhash-
-    // Incremental checkpoints it — so the bloom build's two actions
+    // (callers pass a MATERIALIZED increment sig frame — the wave and
+    // the increment probe collapse it through a checkpoint — so the
+    // bloom build's two actions
     // re-derive only a projection+posexplode, not the vote aggregation)
     val keyedR = simhashKeyed(right, b).drop("keys")
     val keyedL = ProbeFilters.bloomSemi(
@@ -3500,118 +3253,34 @@ object TextOps {
       .localCheckpoint(true), b)
   }
 
-  /** Fitted incremental-SimHash state (the [[dedupBaseRoots]] posture
-    * applied to this family): yesterday's nightly job computed the
-    * base split's signatures ONCE, collapsed them to distinct-sig
-    * representatives, published the rep table + block plan as a
-    * parquet index, and persisted the finished base label map. */
-  private[graft] case class SimhashState(repsPath: String,
-    labelsPath: String, b: Int)
-
-  private[graft] val fittedSimhashState = new FitCache[SimhashState]((s, d) => {
-    val base = Tables.documents(s, d).filter(!isIncrementDoc)
-    val (identity, reps0) = simhashCollapse(simhashMd5Halves(base))
-    val rp = graft.sources.TempDirs
-      .scratchDir("graft_simhash_base_reps").toString
-    graft.sources.Pq.write(reps0, rp)
-    val reps = graft.sources.Pq.read(s, rp)
-    // the fit measures its own index: B widens past the count-derived
-    // plan iff the published reps keep hot distinct-sig buckets there
-    // (r13 verdict item 1 — the stats-driven choice every probe then
-    // inherits through the published marker)
-    val b = simhashAutoPlan(reps, reps.count())
-    graft.sources.Markers.write(s, rp, "_graft_simhash_b", b.toString)
-    val edges = identity
-      .unionByName(simhashSigPairs(reps, b)
-        .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b")))
-    val lp = graft.sources.TempDirs
-      .scratchDir("graft_simhash_base_labels").toString
-    graft.sources.Pq.write(Components.labelComponents(edges), lp)
-    SimhashState(rp, lp, b)
-  })
-
-  /** SimHash compaction base root: [[seedSimhashRoot]] over the
-    * corpus WITH STALE TEXT for the re-crawl subset. */
-  private[graft] val simhashCompactRoots =
-    FitCache.seededRoots("graft_simhash_compact") { (s, d, root) =>
-      seedSimhashRoot(s, staleRecrawlText(Tables.documents(s, d)), root,
-        labels = false)
-    }
-
-  /** SimHash RE-CRAWL COMPACTION — the family's update member (the
-    * [[qDedupCompact]] posture): the base root was seeded with STALE
-    * text for the ~14% re-crawl subset ([[isRecrawlDoc]]); tonight
-    * those documents arrive with their TRUE text as one
-    * [[simhashWaveState]] wave — the streaming sink's wave, labelled
-    * instead of published. The wave:
-    *
-    *   1. retire the re-crawled ids from the per-doc sig table
-    *      (broadcast anti-join — stale signature retirement);
-    *   2. RE-ELECT representatives over the retained members (one
-    *      sig-keyed aggregation) and rebuild the identity stars —
-    *      this, not an id-level pair map, is why a retired
-    *      representative cannot split its surviving group;
-    *   3. map the published SIG-level pair set onto the re-elected
-    *      reps (two sig-keyed joins — a signature with no surviving
-    *      member drops its pairs, exactly right: its only text left
-    *      with the re-crawl);
-    *   4. collapse the re-crawl batch to its own distinct-sig reps
-    *      (ADVICE r13: a boilerplate cluster re-crawled in one night
-    *      costs O(k) identity edges, not O(k²) candidate rows) and
-    *      probe them against the retained reps (the exact
-    *      [[simhashSigPairsBetween]] cross join, bloom-pruned,
-    *      increment-sized) plus the within self-join;
-    *   5. relabel the repaired graph — dup-set-sized, the incremental
-    *      path's propagation cost.
-    *
-    * Old-vs-old Hamming pairs are never recomputed (no block join
-    * touches retained-vs-retained), and the corpus never re-signs.
-    * ORACLE: the repaired flags must equal a FULL RECOMPUTE over the
-    * true corpus — the same reachability SQL as [[qSimhashClusters]];
-    * a leaked stale pair, a missed re-pair, or a split surviving
-    * group all fail the hash compare loudly. */
-  def qSimhashCompact(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    Components.flagCorpus(docs, "doc_id", Components.labelComponents(
-      simhashWaveState(spark, simhashCompactRoots.get(spark, dir),
-        docs.filter(isRecrawlDoc))._3))
-  }
-
-  /** Incremental SimHash clustering — the family's nightly member
-    * (MinHash and embedding dedup each have one; family symmetry was
-    * the r12 join's point): the ~20% increment split
-    * ([[isIncrementDoc]]) computes its signatures fresh (it IS the new
-    * data), probes the published distinct-sig REP index through the
-    * exact cross block join, self-joins within the increment, and the
-    * base label map extends through star edges — base signatures are
-    * never recomputed (fit-counter-pinned) and old-vs-old pairs never
+  /** The SimHash increment probe of a lifecycle root
+    * ([[Lifecycle.simhash]]): the increment computes its signatures
+    * fresh (it IS the new data) and collapses to its own distinct-sig
+    * reps first (ADVICE r13 — a duplicate-heavy nightly batch costs
+    * O(k) identity edges instead of O(k²) within-join candidates), then
+    * probes the reps the root's seed published ([[seedSimhashRoot]]:
+    * elected from its `sigs` by the one election rule, so no query
+    * re-aggregates the corpus before the bloom prune; a base root is
+    * seeded, never waved) through the exact cross block join under the
+    * root's block plan, and self-joins within the increment; base
+    * signatures are never recomputed and old-vs-old pairs never
     * re-verified.
     *
     * Probing REPS is connectivity-EXACT, not an approximation: a new
     * document within Hamming ≤ 3 of base member m is within the same
     * distance of m's representative (identical signature), and the
     * base map already connects m to that representative — so every
-    * cross component merge survives. The ORACLE is therefore the full
-    * recompute: the same recursive reachability that checks
-    * [[qSimhashClusters]] must hash-match this incremental path. */
-  def qSimhashIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val st = fittedSimhashState.get(spark, dir)
-    val docs = Tables.documents(spark, dir)
-    // ADVICE r13: the increment collapses to its own distinct-sig reps
-    // first — a duplicate-heavy nightly batch (the boilerplate-cluster
-    // arrival) costs O(k) identity edges instead of O(k²) within-join
-    // candidates, and probing reps is connectivity-exact
-    val (incIdentity, incReps) = simhashCollapse(
-      simhashMd5Halves(docs.filter(isIncrementDoc)))
-    val reps = graft.sources.Pq.read(spark, st.repsPath)
-    val cross = simhashSigPairsBetween(reps, incReps, st.b)
-    val within = simhashSigPairs(incReps, st.b)
-    val incPairs = cross.unionByName(within)
+    * cross component merge survives, and the full recompute is the
+    * incremental query's oracle. */
+  private[graft] def simhashIncrementPairs(spark: SparkSession,
+      root: String, cur: String, increment: DataFrame): DataFrame = {
+    val b = rootB(spark, root)
+    val (incIdentity, incReps) = simhashCollapse(simhashMd5Halves(increment))
+    simhashSigPairsBetween(graft.sources.Pq.read(spark, s"$cur/reps"),
+        incReps, b)
+      .unionByName(simhashSigPairs(incReps, b))
       .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b"))
       .unionByName(incIdentity)
-    Components.flagCorpus(docs, "doc_id",
-      Components.extendLabels(graft.sources.Pq.read(spark, st.labelsPath),
-        incPairs))
   }
 
   /** DuckDB dual of [[qSimhashChecked]], kept in lockstep here: the

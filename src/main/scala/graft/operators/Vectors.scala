@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Tables, Versions}
+import graft.sources.Tables
 
 /** Embedding similarity search over the `embeddings` table (64-dim
   * float vectors) — the north-star similarity-search extension
@@ -736,64 +736,26 @@ object Vectors {
       .filter(col("cosine") >= lshCosineThreshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
 
-  /** The deterministic split the declared incremental query simulates
-    * a nightly increment with (~20% of vectors by id hash). */
-  private[graft] def isIncrementVec: Column =
-    pmod(xxhash64(col("vec_id")), lit(5)) === 0
-
-  /** Embedding-dedup base root per (JVM, corpus dir): the base
-    * split's staged signatures (+ hot set), pairs and label map —
-    * yesterday's nightly artifacts, seeded by [[seedEmbedRoot]]. */
-  private[graft] val embedBaseRoots =
-    FitCache.seededRoots("graft_embed_base") { (s, d, root) =>
-      seedEmbedRoot(s, Tables.embeddings(s, d).filter(!isIncrementVec), root)
-    }
-
-  /** Incremental embedding near-dup clustering — the declared query:
-    * the ~20% increment is normalized+signed fresh (it IS the new
-    * data), probed against the base split's published index, and the
-    * base label map extends via [[Components.extendLabels]]' star
-    * edges. Output shape and ORACLE match [[qDedupEmbedClusters]]:
-    * increment ∪ base must equal a full recompute, checked by the same
-    * exact-reachability SQL over the whole corpus (empty pair graph on
-    * the driver's testdata — planted pairs sit at cosine 0.50–0.60 —
-    * so all-kept singletons must hash-match; the populated-graph
-    * behavior is pinned on planted ≥0.9-cosine cross-split clusters in
-    * VectorsSpec). */
-  def qDedupEmbedIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val cur = Versions.current(spark, embedBaseRoots.get(spark, dir))
-    val all = unit(spark, dir)
-    val newStaged = stageVectors(all.filter(isIncrementVec))
-      .localCheckpoint(true)
-    val inc = BandedJoins.incrementPairs(lshFamily,
-      IndexLayers.read(spark, s"$cur/staged"), newStaged, joinBack = true,
+  /** The embedding increment probe of a lifecycle root
+    * ([[Lifecycle.embedding]]): the increment (raw vec_id, embedding
+    * rows) is normalized and signed fresh (it IS the new data),
+    * materialized once, and probed against the served version's
+    * published index and hot set. The populated-graph behavior is
+    * pinned on planted ≥0.9-cosine cross-split clusters in
+    * VectorsSpec; the declared testdata has an empty pair graph
+    * (planted pairs sit at cosine 0.50–0.60). */
+  private[graft] def embedIncrementPairs(spark: SparkSession, root: String,
+      cur: String, increment: DataFrame): DataFrame =
+    BandedJoins.incrementPairs(lshFamily,
+      IndexLayers.read(spark, s"$cur/staged"),
+      stageVectors(unitOf(increment)).localCheckpoint(true), joinBack = true,
       Some(BandedJoins.loadHotSet(spark, s"$cur/staged")))
-    Components.flagCorpus(all, "vec_id",
-      Components.extendLabels(graft.sources.Pq.read(spark, s"$cur/labels"),
-        inc))
-  }
-
-  /** The deterministic re-embed subset the declared query simulates
-    * (~14% of vectors by id hash — ids that EXIST in the base with a
-    * superseded vector). */
-  private[graft] def isRecrawlVec: Column =
-    pmod(xxhash64(col("vec_id")), lit(7)) === 0
-
-  /** Embedding-compaction base root: [[seedEmbedRoot]] over the
-    * corpus WITH STALE VECTORS (component-reversed — a deterministic
-    * stand-in for the previous embedding model's output) for the
-    * re-embed subset. */
-  private[graft] val embedCompactRoots =
-    FitCache.seededRoots("graft_embed_compact") { (s, d, root) =>
-      seedEmbedRoot(s, staleRecrawlVecs(Tables.embeddings(s, d)), root,
-        labels = false)
-    }
 
   /** The stale-model revision of the re-embed subset: its vectors
     * component-reversed. */
   private[graft] def staleRecrawlVecs(vectors: DataFrame): DataFrame =
     vectors.withColumn("embedding",
-      when(isRecrawlVec, reverse(col("embedding")))
+      when(Lifecycle.isRecrawl("vec_id"), reverse(col("embedding")))
         .otherwise(col("embedding")))
 
   // ── EMBEDDING COMPACTION ROOT (r16, r15 verdict item 3 — the
@@ -811,38 +773,24 @@ object Vectors {
   private[graft] def seedEmbedRoot(spark: SparkSession,
       vectors: DataFrame, root: String, labels: Boolean = true): Unit = {
     val staged = stageVectors(unitOf(vectors)).localCheckpoint(true)
-    graft.operators.TextOps.publishWaveState(spark, root, "seed", "staged",
-      staged, None,
-      BandedJoins.selfPairs(lshFamily, staged, joinBack = true)
-        .select(col("id_a"), col("id_b")),
-      0, BandedJoins.writeHotSet(spark, _, lshFamily), labels = labels)
+    Lifecycle.publishWaveState(spark, root, "seed", "staged",
+      Lifecycle.Wave(staged, BandedJoins.selfPairs(lshFamily, staged,
+        joinBack = true).select(col("id_a"), col("id_b"))),
+      None, 0, BandedJoins.writeHotSet(spark, _, lshFamily), labels)
   }
 
   /** One re-embed wave applied to the CURRENT state of an embedding
-    * root: [[BandedJoins.waveState]] over the wave's staged vectors.
-    * Returns (added staged rows, pairs) for
-    * [[graft.operators.TextOps.publishWaveState]] or a batch query's
-    * labels. `batch` is raw (vec_id, embedding); a re-embed (an
-    * embedding MODEL upgrade re-embeds a corpus slice — ids unchanged,
-    * vectors superseded) retires the stale vectors first. */
+    * root: [[BandedJoins.waveState]] over the wave's staged vectors,
+    * returning the [[Lifecycle.Wave]]. `batch` is raw (vec_id,
+    * embedding); a re-embed (an embedding MODEL upgrade re-embeds a
+    * corpus slice — ids unchanged, vectors superseded) retires the
+    * stale vectors first. The batch compaction query runs it on a root
+    * seeded with component-reversed (stale-model) vectors for the
+    * re-embed subset. */
   private[graft] def embedWaveState(spark: SparkSession, root: String,
-      batch: DataFrame): (DataFrame, DataFrame) =
+      batch: DataFrame): Lifecycle.Wave =
     BandedJoins.waveState(spark, lshFamily, root, batch.select(col("vec_id")),
       stageVectors(unitOf(batch)).localCheckpoint(true), joinBack = true)
-
-  /** Declared embedding compaction: the base root holds reversed
-    * (stale-model) vectors for the ~14% re-embed subset; tonight they
-    * arrive re-embedded with the true vectors as one [[embedWaveState]]
-    * wave — the streaming sink's wave, labelled instead of published.
-    * After retirement + re-pairing + relabeling the flags must equal a
-    * full recompute over the true corpus — the same exact-reachability
-    * oracle as [[qDedupEmbedClusters]].
-    */
-  def qDedupEmbedCompact(spark: SparkSession, dir: String): DataFrame =
-    Components.flagCorpus(unit(spark, dir), "vec_id",
-      Components.labelComponents(embedWaveState(spark,
-        embedCompactRoots.get(spark, dir),
-        Tables.embeddings(spark, dir).filter(isRecrawlVec))._2))
 
   /** LSH-bucketed embedding near-dup — the scale path for
     * [[qDedupEmbed]] (same exact-baseline / banded-scale pairing as the

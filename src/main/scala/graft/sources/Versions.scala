@@ -33,24 +33,32 @@ object Versions {
 
   /** Publish `version` of `root`: run `write` on `<root>/<version>`,
     * record `refs` (evaluated after `write`), flip the marker, then
-    * retire old versions (`retain` = 0 keeps every version). If `write`
-    * throws, `<root>/<version>` is deleted unless it is the served
-    * version, and the marker does not move. */
+    * retire old versions (`retain` = 0 keeps every version). If `write`,
+    * the refs marker or the flip throws, `<root>/<version>` is deleted
+    * unless the marker names it — so a version that was never served
+    * holds no retention slot — and the error is rethrown. A marker that
+    * cannot be read (on the local file system a rename caught half-way
+    * can leave it so) may name the version: its directory stays. */
   def publish(spark: SparkSession, root: String, version: String,
       retain: Int = 0, refs: => Iterable[String] = Nil)(
       write: String => Unit): Unit = {
     val dir = s"$root/$version"
-    try write(dir) catch {
+    try {
+      write(dir)
+      Markers.write(spark, dir, refsMarker,
+        refs.filter(_ != version).toSeq.distinct.mkString("\n"))
+      Markers.replace(spark, root, currentMarker, version)
+    } catch {
       case t: Throwable =>
-        if (!isCurrent(spark, root, version)) {
+        val served = try isCurrent(spark, root, version) catch {
+          case e: Throwable => t.addSuppressed(e); true
+        }
+        if (!served) {
           val p = new Path(dir)
           p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
         }
         throw t
     }
-    Markers.write(spark, dir, refsMarker,
-      refs.filter(_ != version).toSeq.distinct.mkString("\n"))
-    Markers.replace(spark, root, currentMarker, version)
     if (retain > 0) retire(spark, root, version, retain)
   }
 

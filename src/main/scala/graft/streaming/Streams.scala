@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode}
 
-import graft.operators.{BandedJoins, Components, Curation, TextOps, Vectors}
+import graft.operators.{Components, Curation, Lifecycle, TextOps}
 import graft.sources.{Pq, Versions}
 
 /** Input/output/state records for the custom stateful sessionizer.
@@ -853,15 +853,18 @@ object Streams {
     * one streaming asymmetry left: every dedup family had streaming
     * INTAKE, but compaction — retire stale rows, re-probe new text,
     * relabel — ran batch-only). Each micro-batch is a wave of
-    * RE-CRAWLED documents (doc_id, text): the wave retires its ids
-    * from the served index, probes the new text against the retained
-    * rows through the increment probe
+    * RE-CRAWLED entities (the family's id column and content): the
+    * wave retires their ids from the served index, probes the new
+    * content against the retained rows through the increment probe
     * ([[graft.operators.BandedJoins.incrementPairs]]), and publishes
     * its index delta (added rows + retired ids,
     * [[graft.operators.IndexLayers]]) + pairs + labels (relabelled from
     * the published dup-set-sized pair graph) under ONE version
     * directory and ONE marker flip
-    * ([[graft.operators.TextOps.publishWaveState]]).
+    * ([[graft.operators.Lifecycle.publishWaveState]]). Every near-dup
+    * family runs this one sink on its [[graft.operators.Lifecycle.Family]]
+    * value: the family's wave core, its index directory and sidecar,
+    * retired by its id column; [[dedupCompactSink]] is the MinHash one.
     *
     * Exactly-once is the [[cdcApplySink]] argument on a tri-artifact
     * state: every read is from the CURRENT version's directories and
@@ -885,15 +888,20 @@ object Streams {
     * writes wave-sized too: the index is a manifest of one base plus
     * the waves' deltas, folded into a new base only once the deltas
     * reach the base's own bytes. */
+  def compactSink(f: Lifecycle.Family, root: String, waves: DataFrame,
+    checkpointDir: String, retainVersions: Int = 0)
+    : org.apache.spark.sql.streaming.StreamingQuery =
+    versionedSink(root, waves, checkpointDir) { (s, batch, v) =>
+      Lifecycle.publishWaveState(s, root, v, f.indexName, f.wave(s, root, batch),
+        Some(batch.select(f.id)), retainVersions, f.sidecar(s, _))
+    }
+
+  /** [[compactSink]] of the MinHash family. */
   def dedupCompactSink(root: String, recrawls: DataFrame,
     checkpointDir: String, retainVersions: Int = 0)
     : org.apache.spark.sql.streaming.StreamingQuery =
-    versionedSink(root, recrawls, checkpointDir) { (s, batch, v) =>
-      val (added, pairs2) = TextOps.compactWaveState(s, root, batch)
-      TextOps.publishWaveState(s, root, v, "staged", added,
-        Some(batch.select("doc_id")), pairs2, retainVersions,
-        BandedJoins.writeHotSet(s, _, TextOps.minhashFamily))
-    }
+    compactSink(Lifecycle.minhash, root, recrawls, checkpointDir,
+      retainVersions)
 
   /** The shell of every sink that publishes one version of a
     * versioned root per micro-batch (the CDC, MV, label-extension and
@@ -924,53 +932,6 @@ object Streams {
       }
       .option("checkpointLocation", checkpointDir)
       .start()
-
-  /** Streaming re-crawl compaction, SIMHASH modality: waves of
-    * (doc_id, text) retire their stale signatures, re-elect
-    * representatives, probe the served rep set through the fixed
-    * block plan, and republish sigs + sig-level pairs + labels under
-    * one flip — [[graft.operators.TextOps.simhashWaveState]] on the
-    * [[dedupCompactSink]] lifecycle. */
-  def simhashCompactSink(root: String, recrawls: DataFrame,
-    checkpointDir: String, retainVersions: Int = 0)
-    : org.apache.spark.sql.streaming.StreamingQuery =
-    versionedSink(root, recrawls, checkpointDir) { (s, batch, v) =>
-      val (added, pairs2, edges) = TextOps.simhashWaveState(s, root, batch)
-      TextOps.publishWaveState(s, root, v, "sigs", added,
-        Some(batch.select("doc_id")), pairs2, retainVersions,
-        labelEdges = Some(edges))
-    }
-
-  /** Streaming re-crawl compaction, EDIT-DISTANCE modality: waves of
-    * (doc_id, lang, text) run the PassJoin wave core
-    * ([[graft.operators.TextOps.editWaveRepair]] — retirement,
-    * shorts re-election + star repair, cross probe, within self-join,
-    * (d, 2d] sliver) and republish index + pairs + labels under one
-    * flip. */
-  def editCompactSink(root: String, recrawls: DataFrame,
-    checkpointDir: String, retainVersions: Int = 0)
-    : org.apache.spark.sql.streaming.StreamingQuery =
-    versionedSink(root, recrawls, checkpointDir) { (s, batch, v) =>
-      val (added, pairs2) = TextOps.editWaveState(s, root, batch)
-      TextOps.publishWaveState(s, root, v, "index", added,
-        Some(batch.select("doc_id")), pairs2, retainVersions,
-        TextOps.writeEditIndexStats(s, _))
-    }
-
-  /** Streaming re-embed compaction, EMBEDDING modality: waves of
-    * (vec_id, embedding) retire superseded vectors (the
-    * model-upgrade trigger), probe the served banded index, and
-    * republish staged (+ exact hot set) + pairs + labels under one
-    * flip. */
-  def embedCompactSink(root: String, waves: DataFrame,
-    checkpointDir: String, retainVersions: Int = 0)
-    : org.apache.spark.sql.streaming.StreamingQuery =
-    versionedSink(root, waves, checkpointDir) { (s, batch, v) =>
-      val (added, pairs2) = Vectors.embedWaveState(s, root, batch)
-      TextOps.publishWaveState(s, root, v, "staged", added,
-        Some(batch.select("vec_id")), pairs2, retainVersions,
-        BandedJoins.writeHotSet(s, _, Vectors.lshFamily))
-    }
 
   /** Nightly-cadence BPE tokenizer refresh as a STREAMING leg (r12
     * verdict item 7): each micro-batch of newly-crawled documents is

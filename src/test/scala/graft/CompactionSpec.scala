@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BandedJoins, Components, TextOps, Vectors}
+import graft.operators.{BandedJoins, Components, Lifecycle, TextOps, Vectors}
 
 /** Re-crawl compaction (r8 verdict item 3): retiring a re-crawled
   * document's stale index rows, dropping its published pairs,
@@ -158,7 +158,7 @@ class CompactionSpec extends SparkTestBase {
   }
 
   test("declared q_dedup_embed_compact equals a full recompute") {
-    val got = Vectors.qDedupEmbedCompact(spark, sfDir).collect()
+    val got = Lifecycle.compact(Lifecycle.embedding)(spark, sfDir).collect()
       .map(_.toSeq)
     val want = Vectors.qDedupEmbedClusters(spark, sfDir).collect()
       .map(_.toSeq)
@@ -206,13 +206,13 @@ class CompactionSpec extends SparkTestBase {
   }
 
   test("declared q_dedup_compact equals a full recompute on the corpus") {
-    val got = TextOps.qDedupCompact(spark, sfDir).collect().map(_.toSeq)
+    val got = Lifecycle.compact(Lifecycle.minhash)(spark, sfDir).collect().map(_.toSeq)
     val want = TextOps.qDedupClusters(spark, sfDir).collect().map(_.toSeq)
     assert(got.sameElements(want))
     // the fixture is non-trivial: the re-crawl subset is non-empty
     import spark.implicits._
     val n = spark.read.parquet(s"$sfDir/documents.parquet")
-      .filter(TextOps.isRecrawlDoc).count()
+      .filter(Lifecycle.isRecrawl("doc_id")).count()
     assert(n > 0)
   }
 }

@@ -8,7 +8,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.{BandedJoins, Components, Curation, TextOps}
+import graft.operators.{BandedJoins, Components, Curation, Lifecycle,
+  TextOps}
 import graft.sources.{Pq, Versions}
 import graft.streaming.Streams
 
@@ -707,7 +708,7 @@ class CurationStreamSpec extends SparkTestBase {
     val input = tmp("graft_simhash_in")
     val cp = tmp("graft_simhash_cp")
     def run(): Unit = {
-      val q = Streams.simhashCompactSink(root,
+      val q = Streams.compactSink(Lifecycle.simhash, root,
         spark.readStream.schema(docSchema)
           .option("maxFilesPerTrigger", 1).json(input), cp,
         retainVersions = 2)
@@ -767,7 +768,7 @@ class CurationStreamSpec extends SparkTestBase {
     val input = tmp("graft_edit_in")
     val cp = tmp("graft_edit_cp")
     def run(): Unit = {
-      val q = Streams.editCompactSink(root,
+      val q = Streams.compactSink(Lifecycle.edit, root,
         spark.readStream.schema(editSchema)
           .option("maxFilesPerTrigger", 1).json(input), cp,
         retainVersions = 2)
@@ -835,7 +836,7 @@ class CurationStreamSpec extends SparkTestBase {
     val input = tmp("graft_embed_in")
     val cp = tmp("graft_embed_cp")
     def run(): Unit = {
-      val q = Streams.embedCompactSink(root,
+      val q = Streams.compactSink(Lifecycle.embedding, root,
         spark.readStream.schema(vecSchema)
           .option("maxFilesPerTrigger", 1).json(input), cp,
         retainVersions = 2)
@@ -1225,7 +1226,7 @@ class CurationStreamSpec extends SparkTestBase {
   }
 
   /** A seeded dedup root with one pending wave (doc 5 re-crawled as a
-    * near-dup of doc 1), for driving [[TextOps.publishWaveState]]
+    * near-dup of doc 1), for driving [[Lifecycle.publishWaveState]]
     * directly. */
   private def pendingWave(tag: String): (String, DataFrame) = {
     import spark.implicits._
@@ -1276,7 +1277,7 @@ class CurationStreamSpec extends SparkTestBase {
 
   test("a failing publish chain is joined: the previous version stays " +
       "current, no branch job outlives the call, the next wave publishes") {
-    import TextOps.publishWaveState
+    import Lifecycle.publishWaveState
     val (root, wave) = pendingWave("graft_wave_fail_root")
     def current() = graft.sources.Markers.read(spark, root,
       TextOps.dedupCurrentMarker)
@@ -1285,11 +1286,11 @@ class CurationStreamSpec extends SparkTestBase {
 
     // (1) the index branch's sidecar fails — after a pause long enough
     // that an un-joined branch would still be running at return
-    val (staged1, pairs1) = TextOps.compactWaveState(spark, root, wave)
+    val w1 = TextOps.compactWaveState(spark, root, wave)
     val (out1, ret1, starts1, files1, later1) =
       branchJobsAround(s"$root/v1", 1500) {
-        publishWaveState(spark, root, "v1", "staged", staged1,
-          Some(wave.select("doc_id")), pairs1, 0,
+        publishWaveState(spark, root, "v1", "staged", w1,
+          Some(wave.select("doc_id")), 0,
           { p => Thread.sleep(800); spark.range(4).count()
             throw new IllegalStateException("sidecar failed") })
       }
@@ -1301,14 +1302,14 @@ class CurationStreamSpec extends SparkTestBase {
 
     // (2) the pairs chain fails while the branch is still busy: the
     // call cancels and waits for the branch before it throws
-    val (staged2, pairs2) = TextOps.compactWaveState(spark, root, wave)
+    val w2 = TextOps.compactWaveState(spark, root, wave)
     val boom = udf { (x: Long) =>
       if (x >= 0L) throw new IllegalStateException("pairs failed"); x }
     val (out2, ret2, starts2, files2, later2) =
       branchJobsAround(s"$root/v2", 1500) {
-        publishWaveState(spark, root, "v2", "staged", staged2,
-          Some(wave.select("doc_id")),
-          pairs2.withColumn("id_a", boom(col("id_a"))), 0,
+        publishWaveState(spark, root, "v2", "staged",
+          w2.copy(pairs = w2.pairs.withColumn("id_a", boom(col("id_a")))),
+          Some(wave.select("doc_id")), 0,
           { p => hotSidecar(p); Thread.sleep(800); spark.range(4).count() })
       }
     assert(out2.isFailure)
@@ -1318,9 +1319,9 @@ class CurationStreamSpec extends SparkTestBase {
     assert(files2 == later2, "a write landed in v2/ after the call threw")
 
     // (3) the next wave, computed from the still-current seed, publishes
-    val (staged3, pairs3) = TextOps.compactWaveState(spark, root, wave)
-    publishWaveState(spark, root, "v3", "staged", staged3,
-      Some(wave.select("doc_id")), pairs3, 0, hotSidecar)
+    publishWaveState(spark, root, "v3", "staged",
+      TextOps.compactWaveState(spark, root, wave),
+      Some(wave.select("doc_id")), 0, hotSidecar)
     assert(current() == "v3")
     def set(df: DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -1350,12 +1351,12 @@ class CurationStreamSpec extends SparkTestBase {
   private def assertBranchTimesOut(tag: String, boundS: Int, maxS: Double)(
       sidecar: Long => Unit): Unit = {
     val (root, wave) = pendingWave(tag)
-    val (staged, pairs) = TextOps.compactWaveState(spark, root, wave)
+    val w = TextOps.compactWaveState(spark, root, wave)
     val t0 = System.nanoTime()
     val (out, ret, starts, atReturn, later) =
       branchJobsAround(s"$root/v1", 1000) {
-        TextOps.publishWaveState(spark, root, "v1", "staged", staged,
-          Some(wave.select("doc_id")), pairs, 0, _ => sidecar(t0),
+        Lifecycle.publishWaveState(spark, root, "v1", "staged", w,
+          Some(wave.select("doc_id")), 0, _ => sidecar(t0),
           branchTimeout = scala.concurrent.duration.FiniteDuration(boundS, "s"))
       }
     assert(out.failed.get

@@ -295,7 +295,7 @@ class HotBucketSpec extends SparkTestBase {
     val seeded = pairs(spark.read.parquet(s"$textRoot/" + graft.sources
       .Markers.read(spark, textRoot, TextOps.dedupCurrentMarker) + "/pairs"))
     assert(seeded.toSet == (2 to 100).map(i => (1L, i.toLong)).toSet)
-    val textWave = pairs(TextOps.compactWaveState(spark, textRoot, recrawl)._2)
+    val textWave = pairs(TextOps.compactWaveState(spark, textRoot, recrawl).pairs)
     assert(textWave.size == textWave.distinct.size, "duplicate pairs")
     assert(textWave.toSet == star.toSet)
     val textAfter = docs.filter(col("doc_id") =!= 1L).unionByName(recrawl)
@@ -310,7 +310,7 @@ class HotBucketSpec extends SparkTestBase {
       .toSeq)).toDF("vec_id", "embedding")
     val vecRoot = tmp("graft_recentre_vec")
     Vectors.seedEmbedRoot(spark, vecs, vecRoot)
-    val vecWave = pairs(Vectors.embedWaveState(spark, vecRoot, reembed)._2)
+    val vecWave = pairs(Vectors.embedWaveState(spark, vecRoot, reembed).pairs)
     assert(vecWave.size == vecWave.distinct.size, "duplicate pairs")
     assert(vecWave.toSet == star.toSet)
     val vecAfter = vecs.filter(col("vec_id") =!= 1L).unionByName(reembed)
@@ -320,7 +320,7 @@ class HotBucketSpec extends SparkTestBase {
     // a root whose published hot set is empty plans no re-centring
     val healthy = tmp("graft_recentre_healthy")
     TextOps.seedDedupState(spark, docs.filter(col("doc_id") <= 2L), healthy)
-    val plan = TextOps.compactWaveState(spark, healthy, recrawl)._2
+    val plan = TextOps.compactWaveState(spark, healthy, recrawl).pairs
       .queryExecution.optimizedPlan.toString
     assert(!plan.contains("min_by"), plan)
   }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{BandedJoins, Components, IndexLayers, TextOps, Vectors}
+import graft.operators.{BandedJoins, Components, IndexLayers, Lifecycle,
+  TextOps, Vectors}
 import graft.sources.Markers
 import graft.streaming.Streams
 
@@ -36,25 +37,29 @@ class IndexLayersSpec extends SparkTestBase {
   private def pairSet(df: DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  /** One family's compaction root: its sink, the wave function's added
-    * rows for a batch on the served version, and its full recompute. */
-  private final case class Family(name: String, indexName: String,
-      key: String, seed: (DataFrame, String) => Unit,
-      sink: (String, DataFrame, String) => StreamingQuery,
-      added: (String, DataFrame) => DataFrame,
-      fullLabels: (String, DataFrame) => Set[(Long, Long)])
+  /** One family's compaction root over its lifecycle value `f`: its
+    * sink, the wave's added rows for a batch on the served version, and
+    * — spec-side only — its full recompute and, where a fixture needs
+    * one, a seed with other settings. */
+  private final case class Family(f: Lifecycle.Family,
+      fullLabels: (String, DataFrame) => Set[(Long, Long)],
+      seedWith: Option[(DataFrame, String) => Unit] = None) {
+    def name: String = f.name
+    def indexName: String = f.indexName
+    def key: String = f.id
+    def seed(corpus: DataFrame, root: String): Unit =
+      seedWith.fold(f.seed(spark, corpus, root, true))(_(corpus, root))
+    def sink(root: String, df: DataFrame, cp: String): StreamingQuery =
+      Streams.compactSink(f, root, df, cp, retainVersions = 2)
+    def added(root: String, batch: DataFrame): DataFrame =
+      f.wave(spark, root, batch).added
+  }
 
-  private val minhash = Family("minhash", "staged", "doc_id",
-    TextOps.seedDedupState(spark, _, _),
-    Streams.dedupCompactSink(_, _, _, retainVersions = 2),
-    (root, b) => TextOps.compactWaveState(spark, root, b)._1,
+  private val minhash = Family(Lifecycle.minhash,
     (_, corpus) => pairSet(Components.labelComponents(
       TextOps.minhashPairs(corpus).select(col("id_a"), col("id_b")))))
 
-  private val simhash = Family("simhash", "sigs", "doc_id",
-    TextOps.seedSimhashRoot(spark, _, _),
-    Streams.simhashCompactSink(_, _, _, retainVersions = 2),
-    (root, b) => TextOps.simhashWaveState(spark, root, b)._1,
+  private val simhash = Family(Lifecycle.simhash,
     { (root, corpus) =>
       val b = Markers.read(spark, root, "_graft_simhash_b").toInt
       val (identity, reps) =
@@ -64,22 +69,17 @@ class IndexLayersSpec extends SparkTestBase {
           col("doc_id_b").as("id_b")))))
     })
 
-  private val edit = Family("edit", "index", "doc_id",
-    TextOps.seedEditRoot(spark, _, _, shortsCap = 2),
-    Streams.editCompactSink(_, _, _, retainVersions = 2),
-    (root, b) => TextOps.editWaveState(spark, root, b)._1,
+  private val edit = Family(Lifecycle.edit,
     (_, corpus) => pairSet(Components.labelComponents(
       TextOps.editDistancePairs(corpus, 30, 3)
-        .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b")))))
+        .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b")))),
+    Some(TextOps.seedEditRoot(spark, _, _, shortsCap = 2)))
 
   private def unitVecs(df: DataFrame): DataFrame =
     df.select(col("vec_id"),
       graft.functions.VectorFunctions.unitv(col("embedding")).as("u"))
 
-  private val embed = Family("embedding", "staged", "vec_id",
-    Vectors.seedEmbedRoot(spark, _, _),
-    Streams.embedCompactSink(_, _, _, retainVersions = 2),
-    (root, b) => Vectors.embedWaveState(spark, root, b)._1,
+  private val embed = Family(Lifecycle.embedding,
     (_, corpus) => pairSet(Components.labelComponents(
       BandedJoins.selfPairs(Vectors.lshFamily,
         Vectors.stageVectors(unitVecs(corpus)), joinBack = true)
@@ -192,10 +192,10 @@ class IndexLayersSpec extends SparkTestBase {
     val before = bag(r.effective())
     // a new doc 15 copying doc 4, which doc 3's re-crawl also copies
     val batch = doc(15L, words(60, 4))
-    val (added, pairs) = TextOps.compactWaveState(spark, r.root, batch)
+    val w = TextOps.compactWaveState(spark, r.root, batch)
     var deltaWritten = false
-    val failed = scala.util.Try(TextOps.publishWaveState(spark, r.root,
-      "crashed", "staged", added, Some(batch.select("doc_id")), pairs, 2,
+    val failed = scala.util.Try(Lifecycle.publishWaveState(spark, r.root,
+      "crashed", "staged", w, Some(batch.select("doc_id")), 2,
       { p => BandedJoins.writeHotSet(spark, p, TextOps.minhashFamily)
         deltaWritten = new java.io.File(s"${r.root}/crashed/staged/" +
           IndexLayers.manifestMarker).exists()
@@ -207,11 +207,11 @@ class IndexLayersSpec extends SparkTestBase {
     assert(current(r.root) == served)
     assert(bag(r.effective()) == before)
     // the replay of that wave, and the next wave, publish correctly
-    val (added2, pairs2) = TextOps.compactWaveState(spark, r.root, batch)
+    val w2 = TextOps.compactWaveState(spark, r.root, batch)
     val expected = (bag(r.effective().filter(col("doc_id") =!= 15L)) ++
-      bag(added2)).sorted
-    TextOps.publishWaveState(spark, r.root, "crashed", "staged", added2,
-      Some(batch.select("doc_id")), pairs2, 2,
+      bag(w2.added)).sorted
+    Lifecycle.publishWaveState(spark, r.root, "crashed", "staged", w2,
+      Some(batch.select("doc_id")), 2,
       BandedJoins.writeHotSet(spark, _, TextOps.minhashFamily))
     assert(current(r.root) == "crashed")
     r.corpus = r.corpus.filter(col("doc_id") =!= 15L).unionByName(batch)

@@ -2,12 +2,12 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{Components, TextOps, Vectors}
-import graft.sources.{Pq, Tables}
+import graft.operators.{Components, Lifecycle, TextOps}
+import graft.sources.Pq
 import graft.streaming.Streams
 
 /** One lifecycle per near-dup family: a batch compaction query is one
@@ -30,55 +30,39 @@ class LifecycleSpec extends SparkTestBase {
   private def served(root: String, name: String): DataFrame =
     Pq.read(spark, s"${graft.sources.Versions.current(spark, root)}/$name")
 
-  /** One family's declared compaction path and its streaming sink. */
-  private case class Family(name: String,
-      query: (SparkSession, String) => DataFrame,
-      stale: DataFrame, seed: (DataFrame, String) => Unit,
-      recrawl: DataFrame, idCol: String,
-      sink: (String, DataFrame, String) => StreamingQuery)
+  /** One family's lifecycle value and — spec-side only — the columns
+    * its streamed re-crawl waves carry. */
+  private case class Family(f: Lifecycle.Family, cols: Seq[String]) {
+    def name: String = f.name
+    def corpus: DataFrame = f.corpus(spark, sfDir)
+    def recrawl: DataFrame =
+      corpus.filter(Lifecycle.isRecrawl(f.id)).select(cols.map(col): _*)
+  }
 
   test("each family's batch compaction equals its compaction sink's " +
       "labels over the same stale seed and re-crawl set") {
-    val docs = Tables.documents(spark, sfDir)
-    val vecs = Tables.embeddings(spark, sfDir)
-    val recrawled = docs.filter(TextOps.isRecrawlDoc)
     val families = Seq(
-      Family("minhash", TextOps.qDedupCompact,
-        TextOps.staleRecrawlText(docs),
-        TextOps.seedDedupState(spark, _, _),
-        recrawled.select("doc_id", "text"), "doc_id",
-        Streams.dedupCompactSink(_, _, _)),
-      Family("simhash", TextOps.qSimhashCompact,
-        TextOps.staleRecrawlText(docs),
-        TextOps.seedSimhashRoot(spark, _, _),
-        recrawled.select("doc_id", "text"), "doc_id",
-        Streams.simhashCompactSink(_, _, _)),
-      Family("edit", TextOps.qEditCompact,
-        TextOps.editStaleRecrawl(docs),
-        TextOps.seedEditRoot(spark, _, _),
-        recrawled.select("doc_id", "lang", "text"), "doc_id",
-        Streams.editCompactSink(_, _, _)),
-      Family("embedding", Vectors.qDedupEmbedCompact,
-        Vectors.staleRecrawlVecs(vecs),
-        Vectors.seedEmbedRoot(spark, _, _),
-        vecs.filter(Vectors.isRecrawlVec).select("vec_id", "embedding"),
-        "vec_id", Streams.embedCompactSink(_, _, _)))
+      Family(Lifecycle.minhash, Seq("doc_id", "text")),
+      Family(Lifecycle.simhash, Seq("doc_id", "text")),
+      Family(Lifecycle.edit, Seq("doc_id", "lang", "text")),
+      Family(Lifecycle.embedding, Seq("vec_id", "embedding")))
     def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-    families.foreach { f =>
+    families.foreach { fam =>
+      val f = fam.f
       withClue(s"${f.name}: ") {
-        assert(f.recrawl.count() > 0, "vacuous re-crawl set")
+        assert(fam.recrawl.count() > 0, "vacuous re-crawl set")
         val root = tmp(s"graft_lifecycle_${f.name}")
-        f.seed(f.stale, root)
+        f.seed(spark, f.stale(fam.corpus), root, true)
         val input = tmp(s"graft_lifecycle_${f.name}_in")
-        drain(f.sink(root, _, tmp(s"graft_lifecycle_${f.name}_cp")),
-          f.recrawl, input)
+        drain(Streams.compactSink(f, root, _,
+            tmp(s"graft_lifecycle_${f.name}_cp")), fam.recrawl, input)
         assert(graft.sources.Markers.read(spark, root,
           TextOps.dedupCurrentMarker) != "seed", "the wave never published")
-        val streamed = Components.flagCorpus(
-          (if (f.idCol == "vec_id") vecs else docs).select(f.idCol),
-          f.idCol, served(root, "labels"))
-        assert(rows(streamed) == rows(f.query(spark, sfDir)))
+        val streamed = Components.flagCorpus(fam.corpus.select(f.id),
+          f.id, served(root, "labels"))
+        assert(rows(streamed) ==
+          rows(Lifecycle.compact(f)(spark, sfDir)))
       }
     }
   }
@@ -114,7 +98,7 @@ class LifecycleSpec extends SparkTestBase {
     val input = tmp("graft_edit_gate_in")
     val cp = tmp("graft_edit_gate_cp")
     def wave(rows: Seq[(Long, String, String)]): Unit =
-      drain(Streams.editCompactSink(root, _, cp),
+      drain(Streams.compactSink(Lifecycle.edit, root, _, cp),
         rows.toDF("doc_id", "lang", "text"), input)
     wave(shorts)
     assert(shortRows() > 0L, "wave 1 published no short-row count")
@@ -167,7 +151,7 @@ class LifecycleSpec extends SparkTestBase {
     val input = tmp("graft_simhash_cross_in")
     val cp = tmp("graft_simhash_cross_cp")
     def wave(rows: Seq[(Long, String)]): Unit =
-      drain(Streams.simhashCompactSink(root, _, cp),
+      drain(Streams.compactSink(Lifecycle.simhash, root, _, cp),
         rows.toDF("doc_id", "text"), input)
     def labels(): Set[(Long, Long)] = served(root, "labels").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -65,6 +65,10 @@ class MarkerFlipSpec extends SparkTestBase {
       val err = intercept[IOException](publish("v2"))
       assert(err.getMessage.contains("flip of"))
       FailingFlipFs.failing = false
+      // the version whose flip failed is deleted, so retention never
+      // counts it as published
+      assert(!new java.io.File(s"$dir/root/v2").exists(),
+        "v2/ outlived its failed flip")
       assert(Versions.currentVersion(spark, root).contains("v1"))
       assert(Versions.current(spark, root) == s"$root/v1")
       assert(Markers.read(spark, Versions.current(spark, root), "_value") ==

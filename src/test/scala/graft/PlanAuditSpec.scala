@@ -285,8 +285,8 @@ class PlanAuditSpec extends SparkTestBase {
     // and the corpus-sized index must not shuffle for it
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val p = plan(TextOps.compactWaveState(spark,
-      TextOps.dedupCompactRoots.get(spark, sfDir),
-      docs.filter(TextOps.isRecrawlDoc))._2)
+      Lifecycle.minhash.compactRoots.get(spark, sfDir),
+      docs.filter(Lifecycle.isRecrawl("doc_id"))).pairs)
     val anti = "BroadcastHashJoin .*LeftAnti".r.findAllIn(p).length
     assert(anti >= 3, s"expected 3 broadcast anti-joins, got $anti:\n" +
       p.take(3000))
@@ -368,5 +368,66 @@ class PlanAuditSpec extends SparkTestBase {
     assert(p.contains("HashJoin") || p.contains("SortMergeJoin"),
       s"no equi-join in the simhash pair plan:\n${p.take(3000)}")
     assert(!p.contains("NestedLoop") && !p.contains("CartesianProduct"))
+  }
+
+  test("each family's compaction wave keeps its pairs plan's exchanges " +
+      "and exchange reuse") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{Exchange,
+      ReusedExchangeExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => (p.children ++ p.subqueries).flatMap(nodes)
+    })
+    /** (exchanges, reused exchanges) of the executed plan of `df`. */
+    def exchanges(df: DataFrame): (Int, Int) = {
+      df.collect()
+      val ns = nodes(df.queryExecution.executedPlan)
+      (ns.count(_.isInstanceOf[Exchange]),
+        ns.count(_.isInstanceOf[ReusedExchangeExec]))
+    }
+    def words(n: Int, seed: Int): String =
+      (0 until n).map(i => s"w${(i * 31 + seed * 7919) % 100000}")
+        .mkString(" ")
+    // 200 documents; the wave re-crawls doc 3 into a copy of doc 4 and
+    // adds doc 5000 as a copy of doc 7
+    def docs(n: Int): DataFrame = (1 to 200)
+      .map(i => (i.toLong, "en", words(n, i))).toDF("doc_id", "lang", "text")
+    def docWave(n: Int): DataFrame = Seq((3L, "en", words(n, 4)),
+      (5000L, "en", words(n, 7))).toDF("doc_id", "lang", "text")
+    def vec(seed: Int): Seq[Float] = (0 until 64).map { j =>
+      val h = seed.toLong * 2654435761L + j.toLong * 0x9E3779B97F4A7C15L
+      (((h ^ (h >>> 31)) % 1000).abs / 1000.0f) - 0.5f
+    }
+    val vecs = (1 to 200).map(i => (i.toLong, vec(i)))
+      .toDF("vec_id", "embedding")
+    val vecWave = Seq((3L, vec(4)), (5000L, vec(7)))
+      .toDF("vec_id", "embedding")
+    def root(): String =
+      java.nio.file.Files.createTempDirectory("graft_wave_plan").toString
+    // (case, family, corpus, wave, MinHash layout, expected (exchanges,
+    // reused))
+    val cases = Seq[(String, Lifecycle.Family, DataFrame, DataFrame,
+        Option[String], (Int, Int))](
+      ("minhash join-back", Lifecycle.minhash, docs(60), docWave(60),
+        Some("joinback"), (5, 7)),
+      ("minhash carried", Lifecycle.minhash, docs(8), docWave(8),
+        Some("carried"), (3, 4)),
+      ("simhash", Lifecycle.simhash, docs(60), docWave(60), None, (5, 2)),
+      ("edit", Lifecycle.edit, docs(8), docWave(8), None, (4, 2)),
+      ("embedding", Lifecycle.embedding, vecs, vecWave, None, (5, 7)))
+    val got = cases.map { case (name, f, corpus, wave, layout, _) =>
+      val r = root()
+      f.seed(spark, corpus, r, true)
+      layout.foreach(l => assert(graft.sources.Markers.read(spark, r,
+        "_graft_layout") == l, s"$name: the fixture seeds another layout"))
+      name -> exchanges(f.wave(spark, r, wave).pairs)
+    }
+    assert(got == cases.map(c => c._1 -> c._6), got.mkString("\n"))
   }
 }

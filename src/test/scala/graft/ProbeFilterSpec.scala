@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BandedJoins, ProbeFilters, TextOps, Vectors}
+import graft.operators.{BandedJoins, Lifecycle, ProbeFilters, TextOps, Vectors}
 import graft.sources.Tables
 
 /** Pins for the pre-shuffle bloom prune on the incremental index
@@ -64,9 +64,9 @@ class ProbeFilterSpec extends SparkTestBase {
 
   test("incremental text probe: prune-on equals prune-off on the fixture") {
     val docs = Tables.documents(spark, sfDir)
-    val base = TextOps.stageDocs(docs.filter(!TextOps.isIncrementDoc))
+    val base = TextOps.stageDocs(docs.filter(!Lifecycle.isIncrement("doc_id")))
       .localCheckpoint(true)
-    val inc = TextOps.stageDocs(docs.filter(TextOps.isIncrementDoc))
+    val inc = TextOps.stageDocs(docs.filter(Lifecycle.isIncrement("doc_id")))
       .localCheckpoint(true)
     def pairs(prune: Boolean) =
       BandedJoins.incrementPairs(TextOps.minhashFamily, base, inc,
@@ -130,9 +130,9 @@ class ProbeFilterSpec extends SparkTestBase {
 
   test("incremental embed probe: prune-on equals prune-off on the fixture") {
     val vecs = Vectors.unit(spark, sfDir)
-    val base = Vectors.stageVectors(vecs.filter(!Vectors.isIncrementVec))
+    val base = Vectors.stageVectors(vecs.filter(!Lifecycle.isIncrement("vec_id")))
       .localCheckpoint(true)
-    val inc = Vectors.stageVectors(vecs.filter(Vectors.isIncrementVec))
+    val inc = Vectors.stageVectors(vecs.filter(Lifecycle.isIncrement("vec_id")))
       .localCheckpoint(true)
     def pairs(prune: Boolean) =
       BandedJoins.incrementPairs(Vectors.lshFamily, base, inc, joinBack = true,

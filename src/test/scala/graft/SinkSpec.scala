@@ -297,9 +297,9 @@ class SinkSpec extends SparkTestBase {
         pairs: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
         : Unit = {
       val w = wave(version.last.asDigit)
-      val (added, ps) = TextOps.compactWaveState(spark, root, w)
-      TextOps.publishWaveState(spark, root, version, "staged", added,
-        Some(w.select("doc_id")), pairs(ps), 1,
+      val cw = TextOps.compactWaveState(spark, root, w)
+      graft.operators.Lifecycle.publishWaveState(spark, root, version,
+        "staged", cw.copy(pairs = pairs(cw.pairs)), Some(w.select("doc_id")), 1,
         BandedJoins.writeHotSet(spark, _, TextOps.minhashFamily))
     }
     val failPairs = udf { (x: Long) =>

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BandedJoins, IndexLayers, TextOps}
+import graft.operators.{BandedJoins, IndexLayers, Lifecycle, TextOps}
 
 class TextOpsSpec extends SparkTestBase {
 
@@ -321,10 +321,10 @@ class TextOpsSpec extends SparkTestBase {
   }
 
   test("q_dedup_incremental: warm runs never re-fit; probe reads only the index") {
-    TextOps.qDedupIncremental(spark, sfDir).collect()
+    Lifecycle.incremental(Lifecycle.minhash)(spark, sfDir).collect()
     val fits = TextOps.fitInvocations.get()
     val samples = TextOps.samplingActions.get()
-    val warm = TextOps.qDedupIncremental(spark, sfDir).collect()
+    val warm = Lifecycle.incremental(Lifecycle.minhash)(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     assert(TextOps.fitInvocations.get() == fits,
       "warm incremental invocation re-fitted the base state")
@@ -355,10 +355,10 @@ class TextOpsSpec extends SparkTestBase {
     }
     val baseIdx = TextOps.loadMinhashIndex(spark,
       graft.sources.Versions.current(spark,
-        TextOps.dedupBaseRoots.get(spark, sfDir)) + "/staged")
+        Lifecycle.minhash.baseRoots.get(spark, sfDir)) + "/staged")
     val newIdx = TextOps.minhashFit(spark,
       spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(TextOps.isIncrementDoc),
+        .filter(Lifecycle.isIncrement("doc_id")),
       java.nio.file.Files.createTempDirectory("graft_inc_probe").toString)
     val probe = BandedJoins.incrementPairs(TextOps.minhashFamily,
       IndexLayers.read(spark, baseIdx.stagedPath),
@@ -1615,12 +1615,12 @@ class TextOpsSpec extends SparkTestBase {
       recrawl: org.apache.spark.sql.Column) =
     graft.operators.Components.flagCorpus(docs, "doc_id",
       graft.operators.Components.labelComponents(
-        TextOps.editWaveState(spark, root, docs.filter(recrawl))._2))
+        TextOps.editWaveState(spark, root, docs.filter(recrawl)).pairs))
 
   test("compact re-elects the shorts channel when the capped cell's " +
       "elected min is itself re-crawled") {
     import spark.implicits._
-    // ADVICE r14 (qEditCompact loss mode): fit star-reduces the capped
+    // ADVICE r14 (edit compaction loss mode): fit star-reduces the capped
     // shorts cell to its min-id row; if THAT doc is in the re-crawl
     // subset, plain retirement empties the channel and the retained
     // cell members splinter. The re-election + star repair must make
@@ -1731,8 +1731,8 @@ class TextOpsSpec extends SparkTestBase {
       Seq((50L, "en", "aaaa")).toDF("doc_id", "lang", "text"))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-    val inc = rows(graft.operators.TextOps.editIncrementalLabels(
-      spark, root, docs, col("doc_id") === 50L, 3))
+    val inc = rows(Lifecycle.extend(Lifecycle.edit, spark, root, docs,
+      docs.filter(col("doc_id") === 50L)))
     val full = rows(graft.operators.Components.flagCorpus(docs,
       "doc_id", graft.operators.Components.labelComponents(
         graft.operators.TextOps.editDistancePairs(docs, 30, 3,
@@ -1874,8 +1874,8 @@ class TextOpsSpec extends SparkTestBase {
       Seq((1000L, "en", incText)).toDF("doc_id", "lang", "text"))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-    val inc = rows(graft.operators.TextOps.editIncrementalLabels(
-      spark, root, docs, col("doc_id") === 1000L, 3))
+    val inc = rows(Lifecycle.extend(Lifecycle.edit, spark, root, docs,
+      docs.filter(col("doc_id") === 1000L)))
     val full = rows(graft.operators.Components.flagCorpus(docs,
       "doc_id", graft.operators.Components.labelComponents(
         graft.operators.TextOps.editDistancePairs(docs, 30, 3)
@@ -1898,20 +1898,20 @@ class TextOpsSpec extends SparkTestBase {
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     val full = key(graft.operators.TextOps.qEditClusters(spark, sfDir))
-    val inc = key(graft.operators.TextOps.qEditIncremental(spark, sfDir))
+    val inc = key(Lifecycle.incremental(Lifecycle.edit)(spark, sfDir))
     assert(inc == full, "edit incremental diverged from full recompute")
-    val fitsAfter = graft.operators.TextOps.editBaseRoots.buildCount
-    key(graft.operators.TextOps.qEditIncremental(spark, sfDir))
-    assert(graft.operators.TextOps.editBaseRoots.buildCount == fitsAfter,
+    val fitsAfter = Lifecycle.edit.baseRoots.buildCount
+    key(Lifecycle.incremental(Lifecycle.edit)(spark, sfDir))
+    assert(Lifecycle.edit.baseRoots.buildCount == fitsAfter,
       "edit base fit re-ran on a warm query")
-    assert(key(graft.operators.TextOps.qEditCompact(spark, sfDir))
+    assert(key(Lifecycle.compact(Lifecycle.edit)(spark, sfDir))
       == full, "edit compaction diverged from full recompute")
     // non-vacuity: the compact index holds STALE heads for re-crawled
     // ids (the prepended marker moved them), so retirement + re-probe
     // actually repaired something
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val recHeads = graft.operators.TextOps.editKeyedHeads(
-        docs.filter(graft.operators.TextOps.isRecrawlDoc), 30)
+        docs.filter(Lifecycle.isRecrawl("doc_id")), 30)
       .select("doc_id", "head").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(recHeads.nonEmpty)
@@ -1922,7 +1922,7 @@ class TextOpsSpec extends SparkTestBase {
       "true heads unexpectedly open with the stale marker's digits")
     // and the published index genuinely holds marked heads for them
     val staleHeads = spark.read.parquet(
-        graft.operators.TextOps.editCompactRoots.get(spark, sfDir) +
+        Lifecycle.edit.compactRoots.get(spark, sfDir) +
           "/seed/index")
       .select("doc_id", "head").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -2112,13 +2112,13 @@ class TextOpsSpec extends SparkTestBase {
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     val full = key(graft.operators.TextOps.qSimhashClusters(spark, sfDir))
-    val fitsBefore = graft.operators.TextOps.fittedSimhashState.buildCount
-    val inc = key(graft.operators.TextOps.qSimhashIncremental(spark, sfDir))
+    val fitsBefore = Lifecycle.simhash.baseRoots.buildCount
+    val inc = key(Lifecycle.incremental(Lifecycle.simhash)(spark, sfDir))
     assert(inc == full, "incremental path diverged from full recompute")
     // a second invocation serves from the published artifacts — the
     // base corpus is never re-signed (the minhash fitInvocations pin)
-    key(graft.operators.TextOps.qSimhashIncremental(spark, sfDir))
-    assert(graft.operators.TextOps.fittedSimhashState.buildCount <=
+    key(Lifecycle.incremental(Lifecycle.simhash)(spark, sfDir))
+    assert(Lifecycle.simhash.baseRoots.buildCount <=
       fitsBefore + 1, "base simhash fit re-ran on a warm query")
   }
 
@@ -2128,28 +2128,28 @@ class TextOpsSpec extends SparkTestBase {
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     val full = key(graft.operators.TextOps.qSimhashClusters(spark, sfDir))
-    assert(key(graft.operators.TextOps.qSimhashCompact(spark, sfDir))
+    assert(key(Lifecycle.compact(Lifecycle.simhash)(spark, sfDir))
       == full, "compaction diverged from the full recompute")
     // r13 verdict item 8: the stale-corpus sign + sig-pair build is a
     // FIT cost — a warm declared query must serve from the published
     // artifacts without re-fitting (the incremental member's
     // fitInvocations discipline, extended to compaction)
     val fitsAfterFirst =
-      graft.operators.TextOps.simhashCompactRoots.buildCount
-    key(graft.operators.TextOps.qSimhashCompact(spark, sfDir))
-    assert(graft.operators.TextOps.simhashCompactRoots.buildCount
+      Lifecycle.simhash.compactRoots.buildCount
+    key(Lifecycle.compact(Lifecycle.simhash)(spark, sfDir))
+    assert(Lifecycle.simhash.compactRoots.buildCount
       == fitsAfterFirst, "compact fit re-ran on a warm query")
     // non-vacuity: the published sig table really carries STALE
     // signatures for the re-crawl subset (otherwise retirement +
     // re-pairing tested nothing)
-    val root = graft.operators.TextOps.simhashCompactRoots.get(spark, sfDir)
+    val root = Lifecycle.simhash.compactRoots.get(spark, sfDir)
     val trueSigs = graft.operators.TextOps.simhashMd5Halves(
         graft.sources.Tables.documents(spark, sfDir)
-          .filter(graft.operators.TextOps.isRecrawlDoc))
+          .filter(Lifecycle.isRecrawl("doc_id")))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
       .toMap
     val staleSigs = spark.read.parquet(s"$root/seed/sigs")
-      .filter(graft.operators.TextOps.isRecrawlDoc)
+      .filter(Lifecycle.isRecrawl("doc_id"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
       .toMap
     assert(trueSigs.nonEmpty && trueSigs.keySet == staleSigs.keySet)

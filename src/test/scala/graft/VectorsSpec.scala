@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BandedJoins, Vectors}
+import graft.operators.{BandedJoins, Lifecycle, Vectors}
 
 class VectorsSpec extends SparkTestBase {
 
@@ -650,12 +650,12 @@ class VectorsSpec extends SparkTestBase {
   }
 
   test("q_dedup_embed_incremental: warm runs never re-fit; equals full recompute") {
-    Vectors.qDedupEmbedIncremental(spark, sfDir).collect()
-    val fits = Vectors.embedBaseRoots.buildCount
+    Lifecycle.incremental(Lifecycle.embedding)(spark, sfDir).collect()
+    val fits = Lifecycle.embedding.baseRoots.buildCount
     assert(fits >= 1)
-    val warm = Vectors.qDedupEmbedIncremental(spark, sfDir).collect()
+    val warm = Lifecycle.incremental(Lifecycle.embedding)(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-    assert(Vectors.embedBaseRoots.buildCount == fits,
+    assert(Lifecycle.embedding.baseRoots.buildCount == fits,
       "warm incremental invocation re-fitted the base state")
     // the oracle contract, asserted engine-side too: incremental ==
     // full-recompute declared clustering
